@@ -79,7 +79,11 @@ def _eager_release(result: DataFrame, *pinned: DataFrame) -> DataFrame:
         result.persist()
         # populate the cache while the pinned inputs are still cached
         # (callers identity-check the returned object: keep it `result`)
-        result.count()
+        try:
+            result.count()
+        except BaseException:
+            result.unpersist()  # the caller never gets to own it
+            raise
         return result
     finally:
         for p in pinned:

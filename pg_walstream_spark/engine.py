@@ -797,19 +797,15 @@ class ReplayEngine:
 
         # Bucket-co-located Arrow merge (lake/merge_kernel.py): one shuffle
         # of the change rows by bucket; compaction+join+write fused in the
-        # kernel and the target never shuffled. Declarative-plan merge
-        # (compact_changes + LakeTable.merge) stays as the fallback for
-        # tables with rename/column_since history and as the reference
+        # kernel and the target never shuffled. The declarative-plan merge
+        # (compact_changes + LakeTable.merge) stays as the reference
         # implementation (WALSTREAM_FASTPATH_MERGE=join forces it).
-        from .lake.merge_kernel import bucketed_merge_eligible
-
-        use_kernel = (
-            os.environ.get("WALSTREAM_FASTPATH_MERGE", "bucketed")
-            != "join" and bucketed_merge_eligible(snap)
-        )
+        use_kernel = (os.environ.get("WALSTREAM_FASTPATH_MERGE", "bucketed")
+                      != "join")
         try:
             if use_kernel:
                 images = dml_images(ev, key_cols, data_cols,
+                                    aliases=snap.get("aliases"),
                                     key_types=key_types)
                 mark("fast_plan")
                 trec = t.merge_bucketed(
@@ -1211,11 +1207,6 @@ class ReplayEngine:
                         F.col("xid"),
                     )
                 ).alias("pend_new_xids"),
-                F.count(
-                    F.when(
-                        is_dml & (F.col("txn_status") == "committed"), 1
-                    )
-                ).alias("n_committed"),
                 F.max(
                     F.when(F.col("txn_status") == "committed", F.col("end_lsn"))
                 ).alias("hi_commit"),
@@ -1241,7 +1232,6 @@ class ReplayEngine:
             pend_new_xids = {
                 int(x) for x in (m["pend_new_xids"] or []) if x is not None
             }
-            n_committed = int(m["n_committed"])
             hi_commit = m["hi_commit"]
             has_trunc = int(m["trunc"]) > 0
             tables = sorted(t for t in (m["tables"] or []) if t is not None)
@@ -1308,7 +1298,7 @@ class ReplayEngine:
             def _one(tname):
                 return self._merge_table(
                     tname, committed, truncates.get(tname), batch_idx,
-                    fence_floor, ctx, batch_hi, n_committed=n_committed,
+                    fence_floor, ctx, batch_hi,
                 )
 
             if len(merge_list) > 1:
@@ -1326,6 +1316,7 @@ class ReplayEngine:
                 if rec:
                     merged.append(rec)
                     batch_applied = max(batch_applied, rec["applied_lsn"])
+                    self._maybe_rebucket(st, batch_idx, rec)
 
             # max applied lsn this batch (even for tables with no DML)
             if batch_hi is not None:
@@ -1555,15 +1546,13 @@ class ReplayEngine:
                     out[t] = pos
         return out
 
-    # below this many committed DML rows in the batch, spend one narrow job
-    # computing the touched-bucket set so the MERGE reads only affected
-    # target files; above it, a batch touches essentially every bucket and
-    # the planning job would cost more than the pruning saves
-    PRUNE_BUCKETS_BELOW = 50_000
-
     def _merge_table(self, tname: str, committed: DataFrame,
                      truncate_pos, batch_idx: int, fence_floor: int, ctx,
-                     lsn_hi=None, n_committed: int | None = None):
+                     lsn_hi=None):
+        """One table's share of a general-path batch, applied by the
+        bucket-co-located merge kernel (``LakeTable.merge_bucketed``): it
+        reads only the buckets its change rows hash to, the old-key bucket
+        of a key-changing update included."""
         t = self.table(tname)
         ev = committed.filter(
             (F.col("table_name") == tname) & (F.col("end_lsn") > fence_floor)
@@ -1604,55 +1593,12 @@ class ReplayEngine:
             lsn_hi = max(int(lsn_hi or 0), int(truncate_pos[2]))
         if lsn_hi is None:
             return None
-        affected = None
-        if (
-            truncate_pos is None
-            and n_committed is not None
-            and n_committed <= self.PRUNE_BUCKETS_BELOW
-        ):
-            # narrow planning job: key columns only (no payloads) → distinct
-            # touched buckets, so the MERGE scans only affected target files.
-            # Both new AND old key images count: a key-changing update emits
-            # a synthetic delete of the OLD key during compaction, and its
-            # bucket must be read or the stale row would survive the merge.
-            al = snap.get("aliases", {})
-
-            def _ma(mc, nm):
-                alts = [nm] + list(al.get(nm, []))
-                if len(alts) == 1:
-                    return F.element_at(mc, nm)
-                return F.coalesce(*[F.element_at(mc, a) for a in alts])
-
-            is_del = F.col("event_type") == "delete"
-            new_keys = ev.filter(~is_del).select(*[
-                _ma("new_data", k).alias(k) for k in key_cols
-            ])
-            old_keys = ev.filter(
-                F.col("old_data").isNotNull()
-            ).select(*[
-                _ma("old_data", k).alias(k) for k in key_cols
-            ])
-            new_keys = new_keys.select(*[
-                F.col(k).cast(key_types.get(k, "string")) for k in key_cols
-            ])
-            old_keys = old_keys.select(*[
-                F.col(k).cast(key_types.get(k, "string")) for k in key_cols
-            ])
-            bucket = t._bucket_expr(key_cols, snap["n_buckets"])
-            affected = sorted(
-                r[0]
-                for r in new_keys.unionByName(old_keys)
-                .select(bucket.alias("b")).distinct().collect()
-                if r[0] is not None
-            )
-        changes = compact_changes(ev, key_cols, data_cols,
-                                  aliases=snap.get("aliases"),
-                                  key_types=key_types)
-        rec = t.merge(
-            self.spark, changes, applied_lsn=int(lsn_hi),
+        images = dml_images(ev, key_cols, data_cols,
+                            aliases=snap.get("aliases"), key_types=key_types)
+        rec = t.merge_bucketed(
+            self.spark, images, applied_lsn=int(lsn_hi),
             batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
             truncate_first=truncate_pos is not None,
-            affected_buckets=affected,
         )
         rec["table"] = tname
         return rec

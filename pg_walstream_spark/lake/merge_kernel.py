@@ -20,9 +20,12 @@ needs them laid out:
            ── collect tiny per-bucket stats rows             ── driver commit
 
 Shuffle volume is the change set only; the target moves zero bytes; buckets
-untouched by the batch are never read. Row-conservation is checked PER
-BUCKET inside the kernel (stronger than the general path's global bound)
-before any snapshot commit. Semantics are pinned differentially against
+untouched by the batch are never read (a key-changing update's old-key
+delete hashes to, and so reads, the old key's bucket). Row-conservation is
+checked PER BUCKET inside the kernel before any snapshot commit. Target
+files are conformed to the current schema the way ``LakeTable.read`` does:
+rename aliases coalesce, ``column_since`` masks apply per file version and
+widened types up-cast. Semantics are pinned differentially against
 ``compact_last_image`` + ``LakeTable.merge`` in
 tests/test_merge_kernel.py.
 
@@ -183,11 +186,8 @@ def spark_type_to_arrow(ty: str):
 
 
 def bucketed_merge_eligible(snap: dict) -> bool:
-    """The kernel reads target files with a flat conforming schema: rename
-    aliases and column_since masking need the general read path, and every
-    column type must map to Arrow."""
-    if snap.get("aliases") or snap.get("column_since"):
-        return False
+    """The kernel reads and writes target files as Arrow: every column
+    type must map to an Arrow type."""
     return all(spark_type_to_arrow(ty) is not None
                for _, ty in snap["schema"])
 
@@ -310,10 +310,16 @@ def _changelog_batch(ch_b: pa.Table, key_cols: list[str],
     return pa.table(cols)
 
 
-def _conform_target(files: list[str], schema: pa.Schema) -> pa.Table:
+def _conform_target(files: list[str], schema: pa.Schema,
+                    aliases: dict[str, list[str]] | None = None,
+                    masks: dict[str, list[str]] | None = None) -> pa.Table:
     """Read a bucket's parquet files into the current snapshot schema:
     columns a file predates read as null, widened types up-cast (the lake's
-    metadata-only ADD COLUMN / type promotion contract)."""
+    metadata-only ADD COLUMN / type promotion contract), like
+    ``LakeTable._read_files``: a file lacking a column's current name
+    serves its ``aliases`` (pre-rename names) coalesced; ``masks[file]``
+    names re-added columns whose values there belong to a dropped/renamed
+    predecessor, served as null (``column_since``)."""
     if not files:
         return schema.empty_table()
     parts = []
@@ -323,12 +329,23 @@ def _conform_target(files: list[str], schema: pa.Schema) -> pa.Table:
         # oversubscribes the box at high parallelism (local[32] = 32 workers
         # x 32-thread pools), and the reads are per-bucket-sized anyway
         t = pq.read_table(f, use_threads=False)
+        masked = masks.get(f, ()) if masks else ()
         cols = []
         for field in schema:
-            if field.name in t.column_names:
+            if field.name in masked:
+                col = pa.nulls(t.num_rows, field.type)
+            elif field.name in t.column_names:
                 col = t.column(field.name)
                 if col.type != field.type:
                     col = pc.cast(col, field.type)
+            elif aliases and field.name in aliases:
+                # a name live again in the schema is that column's own
+                live = set(schema.names) - set(masked)
+                alts = [pc.cast(t.column(a), field.type)
+                        for a in aliases[field.name]
+                        if a not in live and a in t.column_names]
+                col = (pc.coalesce(*alts) if alts
+                       else pa.nulls(t.num_rows, field.type))
             else:
                 col = pa.nulls(t.num_rows, field.type)
             cols.append(col)
@@ -410,11 +427,14 @@ def _merge_one_bucket(changes: pa.Table, target: pa.Table,
 def make_merge_kernel(bucket_files: dict[str, list[str]],
                       schema: list[tuple[str, str]], key_cols: list[str],
                       out_dir: str, codec: str,
-                      changelog: tuple[str, int, int] | None = None):
+                      changelog: tuple[str, int, int] | None = None,
+                      aliases: dict[str, list[str]] | None = None,
+                      masks: dict[str, list[str]] | None = None):
     """Build the mapInArrow fn: per partition, compact the image rows, then
     merge + write each distinct bucket present. Emits one stats row per
     bucket plus one partition row (bucket = -1) carrying the null-key
-    quarantine count.
+    quarantine count. A bucket missing from ``bucket_files`` has an empty
+    target; ``aliases`` / ``masks`` conform its files (``_conform_target``).
 
     ``changelog``: optional ``(cl_dir, commit_version, commit_lsn)`` — each
     bucket also writes its compacted change records there (change-data-feed;
@@ -452,7 +472,8 @@ def make_merge_kernel(bucket_files: dict[str, list[str]],
                                          target_schema, cl_ver, cl_lsn),
                         cl_path, compression=codec)
                 target = _conform_target(
-                    bucket_files.get(str(b), []), target_schema)
+                    bucket_files.get(str(b), []), target_schema,
+                    aliases, masks)
                 out_path = os.path.join(
                     out_dir, f"b{b}-{uuid.uuid4().hex[:8]}.parquet")
                 st = _merge_one_bucket(ch_b, target, key_cols, data_cols,

@@ -23,16 +23,18 @@ apply) are implemented directly:
 - **Lineage/metrics**: each snapshot records batch id, rows upserted/
   deleted, buckets rewritten and wall time (per-partition lineage).
 
-MERGE join strategy: the target side is scanned narrowly (only affected
-buckets) and joins against the (typically much smaller) change set are left
-to AQE, which converts them to broadcast hash joins from runtime stats — the
-big target side is never shuffled in the common case.
+MERGE strategy: ``merge_bucketed`` (lake/merge_kernel.py) shuffles only the
+change rows and merges each touched bucket with its target files in one
+Arrow task. The declarative ``merge`` is the fallback for buckets too big
+for a task and for column types without an Arrow mapping.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import threading
 import time
 import uuid
 
@@ -99,6 +101,37 @@ def _ensure_observation_safe_aqe(spark) -> None:
     rules = [r for r in cur.split(",") if r]
     if _AQE_EMPTY_RULE not in rules:
         spark.conf.set(key, ",".join(rules + [_AQE_EMPTY_RULE]))
+
+
+_AQE_KEY = "spark.sql.adaptive.enabled"
+_AQE_LOCK = threading.Lock()
+# id(session) -> [holders, session]: sessions whose AQE the kernel turned off
+_AQE_OFF: dict[int, list] = {}
+
+
+@contextlib.contextmanager
+def _kernel_aqe_off(sess):
+    """AQE off on ``sess`` for a kernel job. Concurrent kernel merges (the
+    engine's per-table threads) share one session conf, where per-call
+    save/restore can interleave into stranding AQE off or running a kernel
+    with it on: the first holder turns it off, the last one restores it."""
+    sid = id(sess)
+    with _AQE_LOCK:
+        hold = _AQE_OFF.get(sid)
+        if hold is not None:
+            hold[0] += 1
+        elif sess.conf.get(_AQE_KEY, "true") == "true":
+            sess.conf.set(_AQE_KEY, "false")
+            hold = _AQE_OFF[sid] = [1, sess]
+    try:
+        yield
+    finally:
+        if hold is not None:
+            with _AQE_LOCK:
+                hold[0] -= 1
+                if not hold[0]:
+                    del _AQE_OFF[sid]
+                    sess.conf.set(_AQE_KEY, "true")
 
 
 class LakeTable:
@@ -586,7 +619,6 @@ class LakeTable:
         batch_id: int | str = 0,
         truncate_first: bool = False,
         extra_properties: dict | None = None,
-        affected_buckets: list[int] | None = None,
         pre_commit_check=None,
         extra_lineage: dict | None = None,
     ) -> dict:
@@ -597,10 +629,8 @@ class LakeTable:
         column names whose value must be carried forward from the target —
         the unchanged-TOAST contract).
 
-        ``affected_buckets``: optional pre-computed touched-bucket set (from
-        a narrow planning pass over the keys) — prunes the target scan to
-        only those buckets' files. When None, every bucket is read and
-        rewritten (the right plan for large batches that touch everything).
+        Every bucket is read and rewritten; ``merge_bucketed`` is the path
+        that touches only the changed buckets.
 
         The whole MERGE is ONE Spark action: compaction → full-outer join →
         bucketed write, with upsert/delete counts collected as observed
@@ -696,14 +726,7 @@ class LakeTable:
             ).withColumn("_bucket", self._bucket_expr(key_cols, n_buckets))
             _mark("changelog_ms")
 
-        if truncate_first:
-            affected = list(range(n_buckets))
-        elif affected_buckets is not None:
-            affected = sorted(affected_buckets)
-        else:
-            affected = None  # read everything; all buckets rewritten
-
-        target = self.read(spark, buckets=affected).withColumn(
+        target = self.read(spark).withColumn(
             "_bucket", self._bucket_expr(key_cols, n_buckets)
         )
         # row-conservation observation on the target side. Guard against
@@ -711,13 +734,7 @@ class LakeTable:
         # would then assert): limit(0) under truncate, and an empty target
         # relation propagated through the full-outer join. Both cases have
         # a statically-known target count instead.
-        snap_files = snap["files"]
-        if affected is None:
-            n_tfiles = sum(len(fl) for fl in snap_files.values())
-        else:
-            n_tfiles = sum(
-                len(snap_files.get(str(b), [])) for b in affected
-            )
+        n_tfiles = sum(len(fl) for fl in snap["files"].values())
         obs_t = None
         static_n_target = None
         if truncate_first:
@@ -777,21 +794,6 @@ class LakeTable:
         # (the reference acks only after a verified apply,
         # /root/reference/src/stream.rs:1563-1582). Violations abort the
         # merge loudly instead of committing silent row loss.
-        if affected is not None:
-            stray = sorted(
-                int(b) for b in new_files
-                if int(b) not in {int(x) for x in affected}
-            )
-            if stray:
-                # a change row hashed to a bucket the planner did not read:
-                # committing would REPLACE that bucket's files with only the
-                # change rows, dropping every untouched row in it
-                raise RuntimeError(
-                    f"MERGE wrote buckets {stray} outside the planned read "
-                    f"set {sorted(affected)} (batch {batch_id}, table "
-                    f"{self.root}): bucket planning diverged from the "
-                    f"change-set bucketing; aborting before commit"
-                )
         if n_target is not None and n_out < n_target - int(cstats["d"]):
             raise RuntimeError(
                 f"MERGE row-conservation violated (batch {batch_id}, table "
@@ -800,11 +802,7 @@ class LakeTable:
                 f"— untouched rows would be lost; aborting before commit"
             )
 
-        files = dict(snap["files"]) if not truncate_first else {}
-        for b in (affected if affected is not None else list(snap["files"])):
-            files.pop(str(b), None)
-        for b, fl in new_files.items():
-            files[b] = fl
+        files = dict(new_files)  # every bucket was read and rewritten
 
         n_up, n_del = int(cstats["u"]), int(cstats["d"])
         record = {
@@ -870,6 +868,7 @@ class LakeTable:
         images: DataFrame,
         applied_lsn: int,
         batch_id: int | str = 0,
+        truncate_first: bool = False,
         extra_properties: dict | None = None,
         pre_commit_check=None,
     ) -> dict:
@@ -881,11 +880,18 @@ class LakeTable:
         One shuffle (change rows, by bucket); the target is read locally
         inside the kernel and never shuffled; compaction, join, TOAST
         carry and the parquet write all happen in one vectorized pass per
-        bucket. Buckets without changes are untouched. Requires
-        ``bucketed_merge_eligible(snapshot)`` — rename/column_since
-        history needs the general read path and falls back to ``merge``.
+        bucket. Buckets without changes are untouched. Target files are
+        read through the current schema (rename aliases, ``column_since``
+        masks, widened types), like ``read``. ``truncate_first``: every
+        bucket's target counts as empty and buckets without changes drop
+        out of the table.
+
+        Reroutes THIS batch to the declarative ``merge`` (stamped as
+        ``kernel_reroute`` in the lineage) when a column type has no Arrow
+        mapping or a target bucket outgrew the per-task memory cap.
         """
         from .. import ensure_shipped
+        from ..operators.compact import compact_last_image
         from .merge_kernel import (
             STATS_DDL, bucketed_merge_eligible, make_merge_kernel,
             partition_salts,
@@ -905,14 +911,24 @@ class LakeTable:
         if applied_lsn <= fence:
             return {"batch_id": batch_id, "skipped": True, "fence": fence,
                     "applied_lsn": applied_lsn}
-        if not bucketed_merge_eligible(snap):
-            raise ValueError(
-                "table has rename/column_since history or unmapped types; "
-                "use the general merge")
-
         key_cols = snap["key_columns"]
         n_buckets = snap["n_buckets"]
         schema = [(n, ty) for n, ty in snap["schema"]]
+        target_files = {} if truncate_first else snap["files"]
+
+        def _reroute(reason: dict) -> dict:
+            data_pairs = [(n, ty) for n, ty in schema if n not in key_cols]
+            return self.merge(
+                spark, compact_last_image(images, key_cols, data_pairs),
+                applied_lsn=applied_lsn, batch_id=batch_id,
+                truncate_first=truncate_first,
+                extra_properties=extra_properties,
+                pre_commit_check=pre_commit_check,
+                extra_lineage={"kernel_reroute": reason},
+            )
+
+        if not bucketed_merge_eligible(snap):
+            return _reroute({"reason": "type_without_arrow_mapping"})
 
         # Oversized-bucket guard: a kernel task materializes its bucket's
         # FULL target in memory (the copy-on-write unit). n_buckets scaling
@@ -926,9 +942,9 @@ class LakeTable:
         # syscalls, no Spark job).
         max_bucket = int(os.environ.get(
             "WALSTREAM_KERNEL_MAX_BUCKET_BYTES", str(512 << 20)))
-        if max_bucket > 0 and snap["files"]:
+        if max_bucket > 0 and target_files:
             over: dict[str, int] = {}
-            for b, fl in snap["files"].items():
+            for b, fl in target_files.items():
                 sz = 0
                 for f in fl:
                     try:
@@ -938,24 +954,13 @@ class LakeTable:
                 if sz > max_bucket:
                     over[str(b)] = sz
             if over:
-                from ..operators.compact import compact_last_image
-
-                data_pairs = [(n, ty) for n, ty in schema
-                              if n not in key_cols]
                 top = dict(sorted(over.items(), key=lambda kv: -kv[1])[:8])
-                return self.merge(
-                    spark,
-                    compact_last_image(images, key_cols, data_pairs),
-                    applied_lsn=applied_lsn, batch_id=batch_id,
-                    extra_properties=extra_properties,
-                    pre_commit_check=pre_commit_check,
-                    extra_lineage={"kernel_reroute": {
-                        "reason": "bucket_bytes_over_cap",
-                        "max_bucket_bytes": max_bucket,
-                        "n_oversized": len(over),
-                        "oversized_buckets": top,
-                    }},
-                )
+                return _reroute({
+                    "reason": "bucket_bytes_over_cap",
+                    "max_bucket_bytes": max_bucket,
+                    "n_oversized": len(over),
+                    "oversized_buckets": top,
+                })
 
         ensure_shipped(spark)
 
@@ -992,10 +997,22 @@ class LakeTable:
                 f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}")
             os.makedirs(cl_dir, exist_ok=True)
             cl_spec = (cl_dir, snap["version"] + 1, int(applied_lsn))
+        bucket_files = {str(b): [self._abs(f) for f in fl]
+                        for b, fl in target_files.items()}
+        # per-file column_since masks, by the version each file was
+        # written at (the same grouping ``read`` applies)
+        since = snap.get("column_since", {})
+        masks = {}
+        if since:
+            for f in (f for fl in bucket_files.values() for f in fl):
+                v = self._file_version(f)
+                m = [c for c, v0 in since.items() if v < int(v0)]
+                if m:
+                    masks[f] = m
         fn = make_merge_kernel(
-            {str(b): [self._abs(f) for f in fl]
-             for b, fl in snap["files"].items()},
-            schema, key_cols, out_dir, codec, changelog=cl_spec)
+            bucket_files, schema, key_cols, out_dir, codec,
+            changelog=cl_spec, aliases=snap.get("aliases") or None,
+            masks=masks or None)
         withb = images.withColumn(
             "_bucket", self._bucket_expr(key_cols, n_buckets))
         # Routing choice is WAVE-AWARE (round-7 interleaved A/B at 1024
@@ -1045,18 +1062,11 @@ class LakeTable:
         # splits the query into two jobs with a driver round trip between
         # them (~0.1 s/batch measured interleaved at local[8]). Disable it
         # for the kernel job only; WALSTREAM_KERNEL_AQE=1 restores it.
-        aqe_key = "spark.sql.adaptive.enabled"
-        spark_sess = images.sparkSession
-        aqe_prev = spark_sess.conf.get(aqe_key, "true")
-        toggle = (os.environ.get("WALSTREAM_KERNEL_AQE", "0") != "1"
-                  and aqe_prev == "true")
-        try:
-            if toggle:
-                spark_sess.conf.set(aqe_key, "false")
+        aqe = (_kernel_aqe_off(images.sparkSession)
+               if os.environ.get("WALSTREAM_KERNEL_AQE", "0") != "1"
+               else contextlib.nullcontext())
+        with aqe:
             stats = rep.mapInArrow(fn, STATS_DDL).collect()
-        finally:
-            if toggle:
-                spark_sess.conf.set(aqe_key, aqe_prev)
         _mark("join_write_ms")
 
         by_bucket = {int(r["bucket"]): r for r in stats
@@ -1076,7 +1086,7 @@ class LakeTable:
                 f"{self.root}): {n_target} target - {del_applied} deletes "
                 f"+ {ins_new} inserts != {n_out} written")
 
-        files = dict(snap["files"])
+        files = dict(target_files)
         for b, r in by_bucket.items():
             if r["file"]:
                 files[str(b)] = [self._rel(r["file"])]
@@ -1098,7 +1108,7 @@ class LakeTable:
             "target_rows": n_target,
             "rows_written": n_out,
             "buckets_rewritten": sorted(by_bucket),
-            "truncated": False,
+            "truncated": truncate_first,
             "merge_kernel": True,
             "wall_ms": sum(phase.values()),
             "phase_ms": phase,
@@ -1164,11 +1174,10 @@ class LakeTable:
         The rewrite reads through the CURRENT schema — rename aliases
         coalesced, ``column_since`` masks applied — so the new files carry
         exactly the live columns, and the commit clears the
-        aliases/column_since/dropped_names history they encoded. That also
-        re-enables the Arrow kernel merge path
-        (``bucketed_merge_eligible``) for tables that had accumulated
-        rename history. ``applied_lsn`` and all other properties carry
-        over unchanged, so replay fencing is unaffected.
+        aliases/column_since/dropped_names history they encoded, so later
+        reads (and kernel merges) stop coalescing aliases and masking.
+        ``applied_lsn`` and all other properties carry over unchanged, so
+        replay fencing is unaffected.
 
         Row conservation is enforced before commit: rows fed to the write
         job (Observation) must equal the old snapshot's row count taken

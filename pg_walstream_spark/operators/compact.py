@@ -45,7 +45,8 @@ def dml_images(events: DataFrame, key_columns: list[str],
     ``aliases``: current column name → pre-rename names (the lake table's
     rename history): events decoded before a mid-stream RENAME carry the
     old name in their tuple maps, so extraction coalesces across the
-    alias chain.
+    alias chain. An old name that is a current column again (re-added
+    after the rename) belongs to that column only.
     ``key_types``: target lake type per key column. Keys MUST be cast to
     the target's types: wire values are text, and a string-typed key would
     hash to a different bucket than the target's typed column
@@ -53,7 +54,9 @@ def dml_images(events: DataFrame, key_columns: list[str],
     wrong bucket's files and strand stale rows.
     Output: ord cols, _op, key cols, value cols, per-column _t_<c> toast flag.
     """
-    aliases = aliases or {}
+    live = set(key_columns) | {c for c, _ in data_columns}
+    aliases = {n: [a for a in olds if a not in live]
+               for n, olds in (aliases or {}).items()}
     key_types = key_types or {}
 
     # every projection is built as ONE selectExpr/filter SQL string: the

@@ -10,6 +10,7 @@ bit-identical to their original formulations.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_walstream_spark import queries as Q
@@ -123,3 +124,23 @@ def test_eager_release_over_cap_stays_distributed(spark, monkeypatch):
                 == n_before + 1)
     finally:
         res.unpersist()
+
+
+def test_eager_release_over_cap_count_failure_leaves_no_cache(
+        spark, monkeypatch):
+    """If populating the over-cap result cache fails, the persisted result
+    must be released before the error propagates (the caller never gets
+    the object to unpersist it), and the pinned inputs still are."""
+    monkeypatch.setattr(dd, "_DRIVER_RESULT_CAP", 10)
+    src = spark.range(0, 500).select(F.col("id")).persist()
+    out = src.select((F.col("id") * 2).alias("x"))
+
+    def boom():
+        raise RuntimeError("synthetic executor loss")
+
+    out.count = boom
+    with pytest.raises(RuntimeError, match="synthetic"):
+        dd._eager_release(out, src)
+    assert not out.is_cached
+    assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
+    assert not src.storageLevel.useMemory

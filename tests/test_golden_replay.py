@@ -83,6 +83,33 @@ def test_e2e_mixed_dml_two_tables(spark, tmp_path):
     assert_matches_golden(spark, eng, bases, frames, "repos_full")
 
 
+def test_e2e_split_txn_general_path_uses_merge_kernel(spark, tmp_path):
+    """batch_frames cuts transactions, so every batch takes the general
+    path (pending store): each of its per-table merges — two tables per
+    batch, merged on concurrent driver threads — must run the merge
+    kernel, and the state must match golden."""
+    base, b = wg.gen_mixed_dml(n_base=80, n_txns=12, ops_per_txn=8)
+    frames = b.to_table()
+    bases = {"repos": base.slice(0, 40), "repos_full": base.slice(40)}
+    frames_dir = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, frames_dir)
+    eng = ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
+    for name, tbl in bases.items():
+        bp = os.path.join(str(tmp_path), f"base_{name}.parquet")
+        wg.write_base(tbl, bp)
+        eng.bootstrap_table(name, spark.read.parquet(bp), ["repo", "path"],
+                            n_buckets=8)
+    res = eng.replay_frames(frames_dir, batch_frames=45)
+    general = [r for r in res["records"] if not r.get("fast_path")]
+    assert len(general) == len(res["records"]) > 2
+    trecs = [tr for r in general for tr in r["tables"]]
+    assert len({tr["table"] for tr in trecs}) == 2
+    assert all(tr["merge_kernel"] is True for tr in trecs)
+    assert any(r["pending"] for r in general)
+    assert_matches_golden(spark, eng, bases, frames, "repos")
+    assert_matches_golden(spark, eng, bases, frames, "repos_full")
+
+
 def test_e2e_toast_carry_forward(spark, tmp_path):
     base, b = wg.gen_toast(n_base=40, n_txns=5)
     frames = b.to_table()

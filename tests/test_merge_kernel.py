@@ -159,17 +159,149 @@ def test_kernel_late_added_column_reads_null(spark, tmp_path):
     assert got[("3", "a")][0] is None
 
 
-def test_kernel_rejects_schema_history(spark, tmp_path):
-    base = _base_df(spark)
-    t = LakeTable.create(spark, str(tmp_path / "t"), base, KEY_COLS,
-                         n_buckets=4)
-    t.rename_column("v_str", "v_renamed")
-    ev = _events_df(spark, [])
-    images = dml_images(ev, KEY_COLS, [("v_renamed", "string"),
-                                       ("v_num", "bigint")],
-                        key_types={"k1": "string", "k2": "string"})
-    with pytest.raises(ValueError, match="general merge"):
-        t.merge_bucketed(spark, images, applied_lsn=10_000)
+def _diff_history(spark, tmp_path, prep, batches, data_cols, base=None,
+                  truncate_first=False, n_buckets=8):
+    """Differential over schema history: ``prep`` runs the same metadata
+    operations on two tables, then every batch of ``batches`` merges into
+    one through the declarative path and into the other through the
+    kernel. Returns the kernel table, its last record and its state."""
+    kt = {"k1": "string", "k2": "string"}
+    base = base if base is not None else _base_df(spark)
+    tg = LakeTable.create(spark, str(tmp_path / "general"), base, KEY_COLS,
+                          n_buckets=n_buckets)
+    tk = LakeTable.create(spark, str(tmp_path / "kernel"), base, KEY_COLS,
+                          n_buckets=n_buckets)
+    for t in (tg, tk):
+        prep(t)
+    al = tk.snapshot().get("aliases")
+    for i, rows in enumerate(batches):
+        ev = _events_df(spark, rows)
+        lsn = 10_000 * (i + 1)
+        tg.merge(spark, compact_changes(ev, KEY_COLS, data_cols, aliases=al,
+                                        key_types=kt),
+                 applied_lsn=lsn, truncate_first=truncate_first)
+        rk = tk.merge_bucketed(
+            spark, dml_images(ev, KEY_COLS, data_cols, aliases=al,
+                              key_types=kt),
+            applied_lsn=lsn, truncate_first=truncate_first)
+        assert rk["merge_kernel"] is True
+        got = _state(spark, tk)
+        assert got == _state(spark, tg)
+    return tk, rk, got
+
+
+def test_kernel_rename_aliases_match_general(spark, tmp_path):
+    """Files written before a rename hold the column under its old name:
+    the kernel must coalesce the alias chain, also for a TOAST carry and
+    for change rows still carrying the old name (decoded pre-rename)."""
+    renamed = [("v_text", "string"), ("v_num", "bigint")]
+    batch1 = [
+        ("update", 100, 1, {"k1": "1", "k2": "a"},
+         {"k1": "1", "k2": "a", "v_num": "11"}, ["v_text"]),
+        ("update", 101, 2, {"k1": "3", "k2": "a"},
+         {"k1": "3", "k2": "a", "v_str": "pre-rename", "v_num": "33"}, None),
+        ("insert", 102, 3, None,
+         {"k1": "900", "k2": "b", "v_text": "new", "v_num": "9"}, None),
+    ]
+    batch2 = _rand_workload(4, n_ops=120)
+    for r in batch2:
+        for img in (r[3], r[4]):
+            if img and "v_str" in img:
+                img["v_text"] = img.pop("v_str")
+    tk, _, got = _diff_history(
+        spark, tmp_path, lambda t: t.rename_column("v_str", "v_text"),
+        [batch1, [(op, lsn, seq, old, new, ["v_text"] if toast else None)
+                  for op, lsn, seq, old, new, toast in batch2]], renamed)
+    assert tk.snapshot()["aliases"] == {"v_text": ["v_str"]}
+    by_key = {(r[0], r[1]): r for r in got}
+    touched = {(img["k1"], img.get("k2")) for r in batch1 + batch2
+               for img in (r[3], r[4]) if img}
+    untouched = [r for k, r in by_key.items() if k not in touched]
+    assert untouched and all(r[2] == f"base{r[0]}" for r in untouched)
+
+
+def test_kernel_rename_then_readd_old_name_match_general(spark, tmp_path):
+    """RENAME v_str→v_text then ADD v_str: pre-rename files hold v_text's
+    values under the physical name v_str, which the re-added column must
+    NOT serve (column_since mask) while v_text still reads it as alias."""
+    cols = [("v_text", "string"), ("v_num", "bigint"), ("v_str", "string")]
+
+    def prep(t):
+        t.rename_column("v_str", "v_text")
+        t.add_columns([("v_str", "string")])
+
+    rows = [
+        ("update", 100, 1, {"k1": "1", "k2": "a"},
+         {"k1": "1", "k2": "a", "v_num": "11", "v_str": "fresh"},
+         ["v_text"]),
+        ("update", 101, 2, {"k1": "3", "k2": "a"},
+         {"k1": "3", "k2": "a", "v_text": "t3", "v_num": "33"}, ["v_str"]),
+    ]
+    tk, _, got = _diff_history(spark, tmp_path, prep, [rows], cols)
+    assert tk.snapshot()["column_since"]
+    by_key = {(r[0], r[1]): r for r in got}
+    assert by_key[("1", "a")][2:] == ("base1", 11, "fresh")
+    assert by_key[("3", "a")][2:] == ("t3", 33, None)
+    assert all(r[4] is None for k, r in by_key.items() if k != ("1", "a"))
+
+
+def test_kernel_drop_then_readd_masks_old_values(spark, tmp_path):
+    """DROP v_str then ADD v_str: old files still hold the dropped
+    column's values under the same name; the re-added column reads null
+    from them (column_since, per file version) — including a TOAST carry,
+    and untouched rows in rewritten buckets."""
+    cols = [("v_num", "bigint"), ("v_str", "string")]
+
+    def prep(t):
+        t.drop_columns(["v_str"])
+        t.add_columns([("v_str", "string")])
+
+    rows = [
+        ("update", 100, 1, {"k1": "1", "k2": "a"},
+         {"k1": "1", "k2": "a", "v_num": "11", "v_str": "fresh"}, None),
+        ("update", 101, 2, {"k1": "3", "k2": "a"},
+         {"k1": "3", "k2": "a", "v_num": "33"}, ["v_str"]),
+    ]
+    for i in range(5, 40):  # TOAST carries from masked old files
+        k = {"k1": str(i), "k2": "a" if i % 2 else "b"}
+        rows.append(("update", 110 + i, 10 + i, k, {**k, "v_num": str(i)},
+                     ["v_str"]))
+    _, _, got = _diff_history(spark, tmp_path, prep, [rows], cols)
+    assert {r[3] for r in got} == {None, "fresh"}
+
+
+def test_kernel_widening_promotion_match_general(spark, tmp_path):
+    """int → bigint promotion is metadata-only: pre-promotion files hold
+    int32 and must up-cast next to values that only fit 64 bits."""
+    base = spark.createDataFrame(
+        [(str(i), "a" if i % 2 else "b", f"base{i}", i * 10)
+         for i in range(60)],
+        "k1 string, k2 string, v_str string, v_num int")
+    rows = [("update", 100 + i, i + 1, {"k1": str(i), "k2": "a"},
+             {"k1": str(i), "k2": "a", "v_str": f"u{i}",
+              "v_num": str(2**40 + i)}, None) for i in range(1, 30, 2)]
+    tk, _, got = _diff_history(
+        spark, tmp_path, lambda t: t.promote_column("v_num", "bigint"),
+        [rows], DATA_COLS, base=base)
+    assert dict(tk.snapshot()["schema"])["v_num"] == "bigint"
+    assert max(r[3] for r in got) == 2**40 + 29
+    assert min(r[3] for r in got) == 0
+
+
+def test_kernel_truncate_first_match_general(spark, tmp_path):
+    """truncate_first: every bucket's target counts as empty; buckets
+    without change rows drop out of the table."""
+    rows = [("insert", 100 + i, i + 1, None,
+             {"k1": f"t{i}", "k2": "a", "v_str": f"n{i}", "v_num": str(i)},
+             None) for i in range(5)]
+    rows.append(("delete", 200, 9, {"k1": "1", "k2": "a"}, None, None))
+    tk, rk, got = _diff_history(spark, tmp_path, lambda t: None, [rows],
+                                DATA_COLS, n_buckets=16, truncate_first=True)
+    assert rk["truncated"] is True and rk["target_rows"] == 0
+    assert sorted(r[0] for r in got) == [f"t{i}" for i in range(5)]
+    files = tk.snapshot()["files"]
+    assert 0 < len(files) < 16
+    assert set(files) <= {str(b) for b in rk["buckets_rewritten"]}
 
 
 def test_kernel_fence_skip(spark, tmp_path):
@@ -530,3 +662,58 @@ def test_wave_aware_routing_auto_selects(spark, tmp_path, monkeypatch):
     assert exprs and all(
         "CASE" not in c and "element_at" not in c
         for _, cols in exprs for c in cols)
+
+
+def test_kernel_aqe_toggle_refcounted_across_overlapping_holders(spark):
+    """Two kernel jobs overlapping without nesting (A starts, B starts, A
+    ends, B ends): AQE stays off until the LAST one ends, then returns to
+    its prior value — a per-call save/restore would run B with AQE on and
+    then strand it off for the session."""
+    from pg_walstream_spark.lake.table import _kernel_aqe_off
+
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    a, b = _kernel_aqe_off(spark), _kernel_aqe_off(spark)
+    a.__enter__()
+    b.__enter__()
+    assert spark.conf.get(key) == "false"
+    a.__exit__(None, None, None)
+    assert spark.conf.get(key) == "false"
+    b.__exit__(None, None, None)
+    assert spark.conf.get(key) == "true"
+
+
+@pytest.mark.parametrize("prior", ["true", "false"])
+def test_concurrent_kernel_merges_restore_aqe(spark, tmp_path, prior):
+    """The engine merges a batch's tables on parallel driver threads: two
+    concurrent merge_bucketed calls must leave spark.sql.adaptive.enabled
+    at its prior value and both land the general path's state."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    key = "spark.sql.adaptive.enabled"
+    kt = {"k1": "string", "k2": "string"}
+    ev = _events_df(spark, _rand_workload(11))
+    tables = [LakeTable.create(spark, str(tmp_path / f"t{i}"),
+                               _base_df(spark), KEY_COLS, n_buckets=8)
+              for i in range(3)]
+    tables[0].merge(spark, compact_changes(ev, KEY_COLS, DATA_COLS,
+                                           key_types=kt),
+                    applied_lsn=10_000)
+    want = _state(spark, tables[0])
+
+    def _one(t, lsn):
+        return t.merge_bucketed(
+            spark, dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt),
+            applied_lsn=lsn)
+
+    spark.conf.set(key, prior)
+    try:
+        # the second round re-applies the same changes (same final state)
+        for lsn in (10_000, 20_000):
+            with ThreadPoolExecutor(2) as pool:
+                recs = list(pool.map(_one, tables[1:], [lsn, lsn]))
+            assert spark.conf.get(key) == prior
+            assert all(r["merge_kernel"] for r in recs)
+    finally:
+        spark.conf.set(key, "true")
+    assert all(_state(spark, t) == want for t in tables[1:])

@@ -4,8 +4,8 @@ n_buckets is the unit of merge parallelism AND the kernel merge's
 copy-on-write memory bound; merge_bucketed's oversized-bucket guard stamps
 `kernel_reroute` lineage as the re-bucket signal, and rebucket is the
 operation that answers it. The rewrite reads through the CURRENT schema,
-so it also compacts away rename/column_since history — re-enabling the
-Arrow kernel merge path for tables that had accumulated renames.
+so it also compacts away rename/column_since history: later reads stop
+coalescing aliases and masking re-added columns.
 """
 
 from __future__ import annotations
@@ -106,14 +106,14 @@ def test_rebucket_preserves_fence_and_merges_continue(spark, tmp_path):
 
 
 def test_rebucket_clears_history_and_reenables_kernel(spark, tmp_path):
-    """A renamed column forces the general read path (alias coalesce) and
-    disqualifies the kernel merge. Rebucketing at the SAME count is a
+    """A renamed column makes every read coalesce the alias chain (the
+    kernel merge included). Rebucketing at the SAME count is a
     history-compaction rewrite: files re-carry the live schema, aliases
-    clear, the kernel path is eligible again, values identical."""
+    clear, values identical, and the kernel merge still applies."""
     t = _mk_table(spark, tmp_path / "t", n_buckets=8)
     before = _state(spark, t)
     t.rename_column("v_str", "v_text")
-    assert not bucketed_merge_eligible(t.snapshot())
+    assert bucketed_merge_eligible(t.snapshot())  # types only
 
     rec = t.rebucket(spark, 8)
     assert rec.get("skipped") is None and rec["history_cleared"] is True
@@ -122,6 +122,15 @@ def test_rebucket_clears_history_and_reenables_kernel(spark, tmp_path):
     assert bucketed_merge_eligible(snap)
     assert [n for n, _ in snap["schema"]] == ["k1", "k2", "v_text", "v_num"]
     assert _state(spark, t) == before  # values identical under the new name
+    ev = _events_df(spark, [("update", 4000, 1, {"k1": "1", "k2": "a"},
+                             {"k1": "1", "k2": "a", "v_num": "5"},
+                             ["v_text"])])
+    rk = t.merge_bucketed(spark, dml_images(
+        ev, KEY_COLS, [("v_text", "string"), ("v_num", "bigint")],
+        key_types=KT), applied_lsn=4999)
+    assert rk["merge_kernel"] is True
+    row = [r for r in _state(spark, t) if r[:2] == ("1", "a")]
+    assert row == [("1", "a", "upd1", 5)]
 
 
 def test_rebucket_row_conservation_guard(spark, tmp_path, monkeypatch):
@@ -237,6 +246,38 @@ def test_engine_auto_rebucket_answers_kernel_reroute(spark, tmp_path,
     assert trec["auto_rebucket"]["to"] == 64
     assert t.snapshot()["n_buckets"] == 64
 
+    got = sorted((r["repo"], r["path"], r["content"])
+                 for r in t.read(spark).collect())
+    grows, glsn = golden_final_state({"repos": base}, frames, "repos")
+    assert got == sorted((r["repo"], r["path"], r["content"])
+                         for r in grows)
+    assert t.applied_lsn() == glsn
+
+
+def test_engine_auto_rebucket_answers_general_path_reroute(
+        spark, tmp_path, monkeypatch):
+    """A stream whose batches all take the general path (batch_frames cuts
+    every transaction) must answer an oversized-bucket reroute too, or it
+    stays on the declarative fallback forever: one inline rebucket, and
+    the state stays golden."""
+    import pg_walstream_spark.engine as E
+    from pg_walstream_spark.golden import golden_final_state
+
+    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
+    monkeypatch.setenv("WALSTREAM_AUTO_REBUCKET_MAX", "32")
+    base, frames, fd, bp = _engine_fixture(tmp_path)
+
+    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
+    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
+    res = eng.replay_frames(fd, batch_frames=15)
+
+    assert not any(r.get("fast_path") for r in res["records"])
+    assert any(r["pending"] for r in res["records"])
+    recs = [tr for r in res["records"] for tr in r.get("tables", ())]
+    assert sum(1 for tr in recs if tr.get("auto_rebucket")) == 1
+    assert recs[0]["kernel_reroute"]["reason"] == "bucket_bytes_over_cap"
+    t = eng.table("repos")
+    assert t.snapshot()["n_buckets"] == 32
     got = sorted((r["repo"], r["path"], r["content"])
                  for r in t.read(spark).collect())
     grows, glsn = golden_final_state({"repos": base}, frames, "repos")
