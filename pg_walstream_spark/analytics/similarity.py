@@ -369,10 +369,17 @@ def ann_lsh_pairs_arrow(emb: DataFrame, threshold: float = 0.95,
     flat = np.asarray(vcol.values, dtype=np.float64)
     offs = np.asarray(vcol.offsets, dtype=np.int64)
     widths = np.diff(offs)
-    if len(widths) and (widths == widths[0]).all():
-        Vm = flat.reshape(len(b_ids), int(widths[0]))
-    else:  # ragged corpus: pad is unsafe — fall back to per-row arrays
-        Vm = np.array(vcol.to_pylist(), dtype=np.float64)
+    # the rescore needs one dense (n x dim) matrix: padding a ragged or
+    # null vector would change its cosine, so refuse it loudly
+    n_null = vcol.null_count
+    if n_null or (len(widths) and (widths != widths[0]).any()):
+        valid = ~vcol.is_null().to_numpy(zero_copy_only=False)
+        raise ValueError(
+            f"ann_lsh_pairs_arrow: column {vec_col!r} needs equal-width, "
+            f"non-null vectors; got widths "
+            f"{sorted(set(widths[valid].tolist()))} and {n_null} null "
+            "vector(s)")
+    Vm = flat.reshape(len(b_ids), int(widths[0]) if len(widths) else dim)
     norms = np.zeros(len(b_ids), np.float64)
     for d in range(Vm.shape[1]):  # sequential order == F.aggregate
         norms = norms + Vm[:, d] * Vm[:, d]

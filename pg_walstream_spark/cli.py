@@ -107,10 +107,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="one table (default: all)")
 
     p = sub.add_parser(
-        "rebucket", help="rewrite a table at a new bucket count (answers "
-                         "kernel_reroute lineage signals on grown tables; "
-                         "also compacts away rename/column history, "
-                         "re-enabling the kernel merge path)")
+        "rebucket", help="rewrite a table at a new bucket count (more merge "
+                         "parallelism, smaller copy-on-write units for a "
+                         "grown table); also compacts away rename/column "
+                         "history")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--table", required=True)
     p.add_argument("--buckets", type=int, required=True)

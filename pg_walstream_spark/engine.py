@@ -37,7 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .lake.table import LakeTable, _atomic_write
-from .operators.compact import compact_changes, dml_images
+from .operators.compact import dml_images
 from .options import ReplicationOptions
 from .operators.decode import (
     CONTROL_TAGS,
@@ -797,32 +797,17 @@ class ReplayEngine:
 
         # Bucket-co-located Arrow merge (lake/merge_kernel.py): one shuffle
         # of the change rows by bucket; compaction+join+write fused in the
-        # kernel and the target never shuffled. The declarative-plan merge
-        # (compact_changes + LakeTable.merge) stays as the reference
-        # implementation (WALSTREAM_FASTPATH_MERGE=join forces it).
-        use_kernel = (os.environ.get("WALSTREAM_FASTPATH_MERGE", "bucketed")
-                      != "join")
+        # kernel and the target never shuffled. The same kernel applies
+        # every general-path merge too.
+        images = dml_images(ev, key_cols, data_cols,
+                            aliases=snap.get("aliases"), key_types=key_types)
+        mark("fast_plan")
         try:
-            if use_kernel:
-                images = dml_images(ev, key_cols, data_cols,
-                                    aliases=snap.get("aliases"),
-                                    key_types=key_types)
-                mark("fast_plan")
-                trec = t.merge_bucketed(
-                    self.spark, images, applied_lsn=int(hi_commit),
-                    batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
-                    pre_commit_check=_check,
-                )
-            else:
-                changes = compact_changes(ev, key_cols, data_cols,
-                                          aliases=snap.get("aliases"),
-                                          key_types=key_types)
-                mark("fast_plan")
-                trec = t.merge(
-                    self.spark, changes, applied_lsn=int(hi_commit),
-                    batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
-                    pre_commit_check=_check,
-                )
+            trec = t.merge_bucketed(
+                self.spark, images, applied_lsn=int(hi_commit),
+                batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
+                pre_commit_check=_check,
+            )
         except _FastPathViolation:
             return None
         mark("fast_merge")
@@ -837,7 +822,6 @@ class ReplayEngine:
             # reprocesses the batch and the fence keeps it idempotent.
             return None
         trec["table"] = tname
-        self._maybe_rebucket(st, batch_idx, trec)
         quar = int(obs.get["m"]["quar"])
         rec = {
             "batch_idx": batch_idx,
@@ -881,75 +865,6 @@ class ReplayEngine:
         rec.setdefault("phase_ms", {})["state_save"] = int(
             (_time.monotonic() - _t0) * 1000)
         self._maybe_expire(batch_idx)
-
-    def _maybe_rebucket(self, st: dict, batch_idx: int, trec: dict) -> None:
-        """Answer a ``kernel_reroute`` signal inline: when a merge had to
-        fall back to the declarative path because a bucket outgrew
-        WALSTREAM_KERNEL_MAX_BUCKET_BYTES, rewrite the table at a larger
-        bucket count (LakeTable.rebucket — one bucketed write job, atomic
-        commit, row conservation enforced) so subsequent batches return to
-        the kernel merge. The engine is the table's single writer, so the
-        rewrite is safe to run between micro-batches; it extends THIS
-        batch by one full-table write, which is the cost of the fallback
-        path recurring forever otherwise.
-
-        Sizing reads the POST-merge snapshot's file sizes (driver-local
-        getsize, no Spark job — the reroute's own sizes are pre-merge) and
-        doubles the count until the worst bucket fits in half the cap,
-        bounded by WALSTREAM_AUTO_REBUCKET_MAX total buckets and a 64x
-        single-step factor. A cooldown (WALSTREAM_AUTO_REBUCKET_COOLDOWN
-        batches per table, persisted in engine state) prevents rewrite
-        thrash when the cap is misconfigured or a single giant row can
-        never fit. WALSTREAM_AUTO_REBUCKET=0 disables; failures are logged
-        to the table's event log and never fail the batch (the merge
-        already committed — the fallback path remains correct)."""
-        rr = trec.get("kernel_reroute")
-        if not rr or int(os.environ.get("WALSTREAM_AUTO_REBUCKET",
-                                        "1")) <= 0:
-            return
-        cap = int(rr.get("max_bucket_bytes") or 0)
-        if cap <= 0:
-            return
-        tname = trec["table"]
-        cooldown = int(os.environ.get(
-            "WALSTREAM_AUTO_REBUCKET_COOLDOWN", "8"))
-        last = (st.get("rebucket_at") or {}).get(tname)
-        if last is not None and batch_idx - int(last) < cooldown:
-            return
-        t = self.table(tname)
-        snap = t.snapshot()
-        n = int(snap["n_buckets"])
-        worst = 0
-        for fl in snap["files"].values():
-            sz = 0
-            for f in fl:
-                try:
-                    sz += os.path.getsize(t._abs(f))
-                except OSError:
-                    pass
-            worst = max(worst, sz)
-        max_total = int(os.environ.get(
-            "WALSTREAM_AUTO_REBUCKET_MAX", "65536"))
-        factor = 1
-        while (worst / factor > cap / 2 and factor < 64
-               and n * factor * 2 <= max_total):
-            factor *= 2
-        if factor == 1:
-            # post-merge sizes already fit (the rerouted batch shrank the
-            # bucket, e.g. deletes) — nothing to answer
-            return
-        try:
-            rec = t.rebucket(self.spark, n * factor,
-                             reason=f"auto:kernel_reroute b{batch_idx}")
-        except Exception as e:  # noqa: BLE001 — optimization must not
-            # fail the batch: the merge already committed correctly
-            t.log_event({"event": "auto_rebucket_failed",
-                         "error": str(e)[:500]})
-            return
-        st.setdefault("rebucket_at", {})[tname] = batch_idx
-        trec["auto_rebucket"] = {"from": n, "to": n * factor,
-                                 "rows": rec.get("rows"),
-                                 "wall_ms": rec.get("wall_ms")}
 
     EXPIRE_EVERY = int(os.environ.get("WALSTREAM_EXPIRE_EVERY", "64"))
     EXPIRE_KEEP = int(os.environ.get("WALSTREAM_EXPIRE_KEEP", "64"))
@@ -1146,19 +1061,14 @@ class ReplayEngine:
             )
 
         # Materialize the decoded batch once, then ONE global aggregate
-        # computes every batch-level statistic the apply plan needs. Two
-        # modes (WALSTREAM_EVENTS_MAT):
-        # - "persist" (default): MEMORY_AND_DISK cache whose FIRST action
-        #   is the stats aggregate itself — one job materializes + counts,
-        #   and downstream scans get InMemoryRelation column pruning;
-        #   released at batch end. Measured ~25% faster per batch than the
-        #   round-2 checkpoint variant (the checkpoint spent a dedicated
-        #   full-width materialization job before the stats agg).
-        # - "checkpoint": localCheckpoint — raw row blocks, kept as the
-        #   fallback for memory-starved executors (cache rebuild on
-        #   eviction re-runs the decode kernel; the checkpoint never does).
-        # Fewer driver round-trips per micro-batch is the main Amdahl lever
-        # at scale.
+        # computes every batch-level statistic the apply plan needs: a
+        # MEMORY_AND_DISK cache whose FIRST action is the stats aggregate
+        # itself — one job materializes + counts, and downstream scans get
+        # InMemoryRelation column pruning; released at batch end. Measured
+        # ~25% faster per batch than the round-2 localCheckpoint variant
+        # (which spent a dedicated full-width materialization job before
+        # the stats agg). Fewer driver round-trips per micro-batch is the
+        # main Amdahl lever at scale.
         is_dml = (
             F.col("event_type").isin(list(DML_TYPES)) & F.col("error").isNull()
         )
@@ -1166,18 +1076,7 @@ class ReplayEngine:
             F.col("event_type").isin(list(APPLY_TYPES))
             & F.col("error").isNull()
         )
-        mat_mode = os.environ.get("WALSTREAM_EVENTS_MAT", "persist")
-        released = None
-        if mat_mode == "checkpoint":
-            events = events.localCheckpoint()
-        else:
-            if os.environ.get("WALSTREAM_CACHE_SER") == "1":
-                from pyspark import StorageLevel
-
-                events = events.persist(StorageLevel.MEMORY_AND_DISK)
-            else:
-                events = events.persist()
-            released = events
+        events = events.persist()
         # any mid-batch failure (exactly what the retry taxonomy
         # re-enters on) must release the events cache, or each retry
         # attempt would persist a fresh copy and accumulate executor
@@ -1316,7 +1215,6 @@ class ReplayEngine:
                 if rec:
                     merged.append(rec)
                     batch_applied = max(batch_applied, rec["applied_lsn"])
-                    self._maybe_rebucket(st, batch_idx, rec)
 
             # max applied lsn this batch (even for tables with no DML)
             if batch_hi is not None:
@@ -1383,8 +1281,7 @@ class ReplayEngine:
             self._maybe_expire(batch_idx)
             return rec
         finally:
-            if released is not None:
-                released.unpersist()
+            events.unpersist()
 
     # ---------------------------------------------------------------- helpers
 

@@ -14,9 +14,11 @@ needs them laid out:
            ── repartition(P, _bucket)                        ── the ONLY shuffle
            ── mapInArrow(merge kernel)                       ── per bucket:
                  final last-image compaction (vectorized numpy reduceat)
-                 + pyarrow full-outer join with the bucket's target files
-                   (read locally — the target never enters a shuffle)
-                 + TOAST carry-forward + parquet write
+                 + the bucket's target files, read locally one parquet row
+                   group at a time, each left-outer-joined to the changes
+                   on the key columns + a row index only
+                 + matched upserts gathered by take (TOAST carry)
+                 + unmatched upserts appended; one row group per 128 MiB
            ── collect tiny per-bucket stats rows             ── driver commit
 
 Shuffle volume is the change set only; the target moves zero bytes; buckets
@@ -29,12 +31,13 @@ widened types up-cast. Semantics are pinned differentially against
 ``compact_last_image`` + ``LakeTable.merge`` in
 tests/test_merge_kernel.py.
 
-Scale notes: per-task memory is bounded by the change volume of the buckets
-hashed into that task (P = n_buckets at cluster scale → one bucket per
-task); a pathologically hot key concentrates its post-compaction single row
-like any other, and its pre-compaction row flood is bounded by the batch
-size a single WAL frame range can carry. Skew beyond that is the
-``compact_salted`` path's job.
+Scale notes: a task holds one target row group plus the change rows of
+the buckets hashed into it, whatever the bucket size (P = n_buckets at
+cluster scale → one bucket per task). Payload columns never enter the
+Acero join, so every column type Spark maps to Arrow (nested ones
+included) takes this path. A pathologically hot key concentrates its
+post-compaction single row like any other, and its pre-compaction row
+flood is bounded by the batch size a single WAL frame range can carry.
 
 Reference parity: the merge applies the same upsert/delete/unchanged-TOAST
 contract as /root/reference/src/stream.rs apply loop (ack only after a
@@ -44,8 +47,8 @@ protocol.rs:310-328 ('u' columns keep the previous image's value).
 
 from __future__ import annotations
 
+import functools
 import os
-import re
 import uuid
 
 import numpy as np
@@ -54,7 +57,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 __all__ = [
-    "STATS_DDL", "bucketed_merge_eligible", "compact_images_arrow",
+    "ROW_GROUP_BYTES", "STATS_DDL", "compact_images_arrow",
     "make_merge_kernel", "partition_salts", "spark_type_to_arrow",
 ]
 
@@ -156,40 +159,23 @@ _STATS_SCHEMA = pa.schema([
     ("cl_file", pa.string()),
 ])
 
-_DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
-
-_SIMPLE_TYPES = {
-    "string": pa.string(),
-    "bigint": pa.int64(),
-    "int": pa.int32(),
-    "smallint": pa.int16(),
-    "tinyint": pa.int8(),
-    "double": pa.float64(),
-    "float": pa.float32(),
-    "boolean": pa.bool_(),
-    "binary": pa.binary(),
-    "date": pa.date32(),
-    "timestamp": pa.timestamp("us", tz="UTC"),
-    "timestamp_ntz": pa.timestamp("us"),
-}
+# Spark's default ``parquet.block.size``: the kernel buffers a bucket's
+# output and writes one row group per this many bytes of Arrow data, so a
+# bucket below it is one row group, as Spark's own writer would leave it.
+ROW_GROUP_BYTES = 128 << 20
 
 
-def spark_type_to_arrow(ty: str):
-    """Spark simpleString type → pyarrow type, or None if unmapped."""
-    ty = ty.strip().lower()
-    if ty in _SIMPLE_TYPES:
-        return _SIMPLE_TYPES[ty]
-    m = _DECIMAL_RE.match(ty)
-    if m:
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    return None
+@functools.lru_cache(maxsize=None)
+def spark_type_to_arrow(ty: str) -> pa.DataType:
+    """Spark simpleString type → pyarrow type, the mapping Spark's own
+    Arrow transfer uses. Driver-side only: it parses through the JVM (a
+    py4j round trip per type, hence the cache — merges repeat the same
+    types every batch). Raises for a type without an Arrow mapping, which
+    ``LakeTable.create`` refuses up front."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
 
-
-def bucketed_merge_eligible(snap: dict) -> bool:
-    """The kernel reads and writes target files as Arrow: every column
-    type must map to an Arrow type."""
-    return all(spark_type_to_arrow(ty) is not None
-               for _, ty in snap["schema"])
+    return to_arrow_type(_parse_datatype_string(ty))
 
 
 def _bound_arrow_pool() -> None:
@@ -310,117 +296,176 @@ def _changelog_batch(ch_b: pa.Table, key_cols: list[str],
     return pa.table(cols)
 
 
-def _conform_target(files: list[str], schema: pa.Schema,
-                    aliases: dict[str, list[str]] | None = None,
-                    masks: dict[str, list[str]] | None = None) -> pa.Table:
-    """Read a bucket's parquet files into the current snapshot schema:
-    columns a file predates read as null, widened types up-cast (the lake's
+def _conform(t: pa.Table, schema: pa.Schema,
+             aliases: dict[str, list[str]] | None,
+             masked) -> pa.Table:
+    """One piece of a target file in the current snapshot schema: columns
+    the file predates read as null, widened types up-cast (the lake's
     metadata-only ADD COLUMN / type promotion contract), like
     ``LakeTable._read_files``: a file lacking a column's current name
-    serves its ``aliases`` (pre-rename names) coalesced; ``masks[file]``
-    names re-added columns whose values there belong to a dropped/renamed
+    serves its ``aliases`` (pre-rename names) coalesced; ``masked`` names
+    re-added columns whose values there belong to a dropped/renamed
     predecessor, served as null (``column_since``)."""
-    if not files:
-        return schema.empty_table()
-    parts = []
+    # a name live again in the schema is that column's own
+    live = set(schema.names) - set(masked)
+    cols = []
+    for field in schema:
+        if field.name in masked:
+            col = pa.nulls(t.num_rows, field.type)
+        elif field.name in t.column_names:
+            col = t.column(field.name)
+            if col.type != field.type:
+                col = pc.cast(col, field.type)
+        elif aliases and field.name in aliases:
+            alts = [pc.cast(t.column(a), field.type)
+                    for a in aliases[field.name]
+                    if a not in live and a in t.column_names]
+            col = (pc.coalesce(*alts) if alts
+                   else pa.nulls(t.num_rows, field.type))
+        else:
+            col = pa.nulls(t.num_rows, field.type)
+        cols.append(col)
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _target_row_groups(files: list[str], schema: pa.Schema,
+                       aliases: dict[str, list[str]] | None = None,
+                       masks: dict[str, list[str]] | None = None):
+    """A bucket's target rows, one parquet row group at a time, each
+    conformed to the current schema (``_conform``; ``masks[file]`` are
+    that file's ``column_since`` masks)."""
     for f in files:
-        # use_threads=False: this runs inside an executor Python worker —
-        # N concurrent tasks each spinning Arrow's default CPU-wide pool
-        # oversubscribes the box at high parallelism (local[32] = 32 workers
-        # x 32-thread pools), and the reads are per-bucket-sized anyway
-        t = pq.read_table(f, use_threads=False)
         masked = masks.get(f, ()) if masks else ()
-        cols = []
-        for field in schema:
-            if field.name in masked:
-                col = pa.nulls(t.num_rows, field.type)
-            elif field.name in t.column_names:
-                col = t.column(field.name)
-                if col.type != field.type:
-                    col = pc.cast(col, field.type)
-            elif aliases and field.name in aliases:
-                # a name live again in the schema is that column's own
-                live = set(schema.names) - set(masked)
-                alts = [pc.cast(t.column(a), field.type)
-                        for a in aliases[field.name]
-                        if a not in live and a in t.column_names]
-                col = (pc.coalesce(*alts) if alts
-                       else pa.nulls(t.num_rows, field.type))
-            else:
-                col = pa.nulls(t.num_rows, field.type)
-            cols.append(col)
-        parts.append(pa.table(dict(zip(schema.names, cols))))
-    return pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+        with pq.ParquetFile(f) as pf:
+            for i in range(pf.num_row_groups):
+                # use_threads=False: this runs inside an executor Python
+                # worker — N concurrent tasks each spinning Arrow's default
+                # CPU-wide pool oversubscribes the box at high parallelism
+                yield _conform(pf.read_row_group(i, use_threads=False),
+                               schema, aliases, masked)
 
 
-def _merge_one_bucket(changes: pa.Table, target: pa.Table,
-                      key_cols: list[str], data_cols: list[str],
-                      out_path: str, codec: str) -> dict:
-    """Full-outer merge of one bucket's compacted changes with its target
-    rows; writes the surviving rows (if any) to ``out_path``."""
-    n_target = target.num_rows
-    # explicit bool type: pa.array([True]*0) infers NULL type and Acero
-    # rejects null non-key fields — a fileless bucket (sparse bootstrap, or
-    # emptied by deletes then re-inserted) would crash the whole batch
-    marked = target.append_column(
-        "__t", pa.array(np.ones(n_target, dtype=bool), type=pa.bool_()))
-    # conform change-side KEY columns to the snapshot-declared type before
-    # the join (mirrors the __c_ data-column conform below): Spark's Arrow
+def _merge_one_bucket(changes: pa.Table, files: list[str],
+                      schema: pa.Schema, key_cols: list[str],
+                      data_cols: list[str], out_path: str, codec: str,
+                      aliases: dict[str, list[str]] | None = None,
+                      masks: dict[str, list[str]] | None = None) -> dict:
+    """Merge one bucket's compacted changes into its target ``files``,
+    streamed one row group at a time; writes the surviving rows (if any)
+    to ``out_path``, one row group per ``ROW_GROUP_BYTES``.
+
+    Only the key columns plus an int64 row index on each side enter the
+    Acero join (target row group left-outer-joined to the changes), so no
+    payload column, whatever its type, reaches Acero. Unmatched target
+    rows pass through; matched upserts gather each column with ``take``
+    from the change row or, for a TOAST ``__p_<c>`` carry, the target row
+    (``take`` serves every Arrow type; ``if_else`` has no map kernel).
+    Upserts that matched no target row are appended after the last row
+    group. A task holds one row group plus its change rows, whatever the
+    bucket size."""
+    n_ch = changes.num_rows
+
+    def _as(col, ty):
+        return pc.cast(col, ty) if col.type != ty else col
+
+    # conform the change side to the snapshot types once: Spark's Arrow
     # transfer can differ in tz annotation / width, and mismatched key
     # types fail or mis-join inside Acero
-    for k in key_cols:
-        kt = target.schema.field(k).type
-        if changes.column(k).type != kt:
-            changes = changes.set_column(
-                changes.schema.get_field_index(k), k,
-                pc.cast(changes.column(k), kt))
-    # threaded Acero scheduler (pool bounded per worker by
-    # _bound_arrow_pool): the serial scheduler (use_threads=False) has a
-    # deadlock history in Acero and was the prime suspect in a stuck
-    # 7-of-8-tasks replay stage under driver conditions; the bounded
-    # threaded pool avoids both that and CPU oversubscription
-    use_threads = os.environ.get("WALSTREAM_KERNEL_JOIN_THREADS", "1") == "1"
-    joined = marked.join(changes, keys=key_cols, join_type="full outer",
-                         use_threads=use_threads).combine_chunks()
-    m = joined.num_rows
-    t_present = _np_bool(pc.is_valid(joined.column("__t")))
-    op = joined.column("__op")
-    untouched = _np_bool(pc.is_null(op))
-    is_up = _np_bool(pc.equal(op, "upsert"))
-    is_dl = _np_bool(pc.equal(op, "delete"))
+    ch = {k: _as(changes.column(k), schema.field(k).type) for k in key_cols}
+    ch.update({c: _as(changes.column("__c_" + c), schema.field(c).type)
+               for c in data_cols})
+    pending = {c: _np_bool(changes.column("__p_" + c)) for c in data_cols}
+    is_up = _np_bool(pc.equal(changes.column("__op"), "upsert"))
+    right = pa.table({**{k: ch[k] for k in key_cols},
+                      "__ci": np.arange(n_ch, dtype=np.int64)})
+    matched = np.zeros(n_ch, dtype=bool)
+    n_target = del_applied = n_out = 0
+    buf: list[pa.Table] = []
+    buf_bytes = 0
+    writer = None
 
-    keep = untouched | is_up
-    out_cols = {k: joined.column(k) for k in key_cols}
-    for c in data_cols:
-        carry = untouched | _np_bool(joined.column("__p_" + c))
-        tcol = joined.column(c)
-        ccol = joined.column("__c_" + c)
-        if ccol.type != tcol.type:
-            # Spark→Arrow transfer may differ in tz annotation / width from
-            # the snapshot-declared type; the change side conforms
-            ccol = pc.cast(ccol, tcol.type)
-        out_cols[c] = pc.if_else(pa.array(carry), tcol, ccol)
-    out = pa.table(out_cols).filter(pa.array(keep))
+    def _flush():
+        nonlocal writer, buf, buf_bytes, n_out
+        out = pa.concat_tables(buf)
+        buf, buf_bytes = [], 0
+        if not out.num_rows:
+            return
+        if writer is None:
+            writer = pq.ParquetWriter(out_path, schema, compression=codec)
+        writer.write_table(out, row_group_size=out.num_rows)
+        n_out += out.num_rows
 
-    del_applied = int((is_dl & t_present).sum())
-    ins_new = int((is_up & ~t_present).sum())
-    n_out = out.num_rows
-    # exact per-bucket row conservation — the general path can only bound
-    # this globally; violating it means silent row loss, so fail the task
-    # (and with it the whole merge) before anything is committed
-    if n_out != n_target - del_applied + ins_new:
-        raise RuntimeError(
-            f"bucket merge row-conservation violated at {out_path}: "
-            f"{n_target} target - {del_applied} deletes + {ins_new} inserts "
-            f"!= {n_out} written")
-    if n_out:
-        pq.write_table(out, out_path, compression=codec)
+    def _emit(t: pa.Table):
+        nonlocal buf_bytes
+        buf.append(t)
+        buf_bytes += t.nbytes
+        if buf_bytes >= ROW_GROUP_BYTES:
+            _flush()
+
+    try:
+        for rg in _target_row_groups(files, schema, aliases, masks):
+            n = rg.num_rows
+            n_target += n
+            left = pa.table({**{k: rg.column(k) for k in key_cols},
+                             "__ti": np.arange(n, dtype=np.int64)})
+            j = left.join(right, keys=key_cols, join_type="left outer")
+            ci = np.full(n, -1, dtype=np.int64)
+            ci[j.column("__ti").to_numpy()] = (
+                j.column("__ci").fill_null(-1).to_numpy())
+            hit = ci >= 0
+            if not hit.any():
+                _emit(rg)
+                continue
+            matched[ci[hit]] = True
+            up = hit & is_up[np.where(hit, ci, 0)]
+            del_applied += int((hit & ~up).sum())
+            _emit(rg.filter(pa.array(~hit)))
+            t_pos = np.flatnonzero(up)
+            if not len(t_pos):
+                continue
+            # matched upserts: per column, the change value or (TOAST
+            # carry) the target's — one take over [target | change] rows
+            c_pos = ci[t_pos]
+            ar = np.arange(len(t_pos))
+            cols = []
+            for name in schema.names:
+                if name in key_cols:
+                    cols.append(ch[name].take(c_pos))
+                    continue
+                both = pa.chunked_array(
+                    rg.column(name).take(t_pos).chunks
+                    + ch[name].take(c_pos).chunks)
+                cols.append(both.take(
+                    np.where(pending[name][c_pos], ar, len(ar) + ar)))
+            _emit(pa.Table.from_arrays(cols, schema=schema))
+        ins = is_up & ~matched
+        ins_new = int(ins.sum())
+        if ins_new:
+            _emit(pa.Table.from_arrays([ch[n] for n in schema.names],
+                                       schema=schema).filter(pa.array(ins)))
+        if buf:
+            _flush()
+        # exact per-bucket row conservation, checked before the file is
+        # closed: violating it means silent row loss, so fail the task
+        # (and with it the whole merge) before anything is committed
+        if n_out != n_target - del_applied + ins_new:
+            raise RuntimeError(
+                f"bucket merge row-conservation violated at {out_path}: "
+                f"{n_target} target - {del_applied} deletes + {ins_new} "
+                f"inserts != {n_out} written")
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            os.remove(out_path)
+        raise
+    if writer is not None:
+        writer.close()
+    n_up = int(is_up.sum())
     return {
         "rows_written": n_out, "n_target": n_target,
-        "u": int(is_up.sum()), "d": int(is_dl.sum()),
+        "u": n_up, "d": n_ch - n_up,
         "del_applied": del_applied, "ins_new": ins_new,
         "file": out_path if n_out else None,
-        "joined_rows": m,
     }
 
 
@@ -434,7 +479,7 @@ def make_merge_kernel(bucket_files: dict[str, list[str]],
     merge + write each distinct bucket present. Emits one stats row per
     bucket plus one partition row (bucket = -1) carrying the null-key
     quarantine count. A bucket missing from ``bucket_files`` has an empty
-    target; ``aliases`` / ``masks`` conform its files (``_conform_target``).
+    target; ``aliases`` / ``masks`` conform its files (``_conform``).
 
     ``changelog``: optional ``(cl_dir, commit_version, commit_lsn)`` — each
     bucket also writes its compacted change records there (change-data-feed;
@@ -471,13 +516,11 @@ def make_merge_kernel(bucket_files: dict[str, list[str]],
                         _changelog_batch(ch_b, key_cols, data_cols,
                                          target_schema, cl_ver, cl_lsn),
                         cl_path, compression=codec)
-                target = _conform_target(
-                    bucket_files.get(str(b), []), target_schema,
-                    aliases, masks)
                 out_path = os.path.join(
                     out_dir, f"b{b}-{uuid.uuid4().hex[:8]}.parquet")
-                st = _merge_one_bucket(ch_b, target, key_cols, data_cols,
-                                       out_path, codec)
+                st = _merge_one_bucket(
+                    ch_b, bucket_files.get(str(b), []), target_schema,
+                    key_cols, data_cols, out_path, codec, aliases, masks)
                 rows.append({"bucket": b, **{k: st[k] for k in (
                     "file", "rows_written", "n_target", "u", "d",
                     "del_applied", "ins_new")}, "nk": 0,

@@ -25,8 +25,9 @@ apply) are implemented directly:
 
 MERGE strategy: ``merge_bucketed`` (lake/merge_kernel.py) shuffles only the
 change rows and merges each touched bucket with its target files in one
-Arrow task. The declarative ``merge`` is the fallback for buckets too big
-for a task and for column types without an Arrow mapping.
+Arrow task, streaming the target one row group at a time. The declarative
+``merge`` is the reference it is tested against and the replica-apply step
+of change-data-feed consumers.
 """
 
 from __future__ import annotations
@@ -216,6 +217,25 @@ class LakeTable:
         n_buckets: int = 16,
         properties: dict | None = None,
     ) -> "LakeTable":
+        """Bootstrap a table from ``df``. Every column needs an Arrow type
+        (the merge kernel reads and writes Arrow) and no key column may be
+        nested (the kernel hash-joins on the keys); a ValueError names the
+        offending column."""
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import ArrayType, MapType, StructType
+
+        for f in df.schema.fields:
+            if f.name in key_columns and isinstance(
+                    f.dataType, (ArrayType, MapType, StructType)):
+                raise ValueError(
+                    f"key column {f.name!r} has nested type "
+                    f"{f.dataType.simpleString()}; keys must be scalar")
+            try:
+                to_arrow_type(f.dataType)
+            except TypeError as e:
+                raise ValueError(
+                    f"column {f.name!r} has type "
+                    f"{f.dataType.simpleString()} with no Arrow mapping") from e
         t = LakeTable(root)
         os.makedirs(t.data_dir, exist_ok=True)
         schema = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
@@ -579,14 +599,10 @@ class LakeTable:
         repartition wins ~8-12% at 4-8 cores, loses ~5% at 1). Its task
         width equals n_buckets, which is NOT a cluster-scale cap because
         n_buckets scales with the table (a 100-TB table carries thousands
-        of buckets). ``WALSTREAM_WRITE_REPART=0`` selects the direct write
-        for deployments preferring fewer shuffles over file hygiene."""
+        of buckets)."""
         out_dir = os.path.join(self.data_dir, f"s{snapshot_version}-{uuid.uuid4().hex[:8]}")
-        writer = df_with_bucket
-        if os.environ.get("WALSTREAM_WRITE_REPART", "1") == "1":
-            writer = writer.repartition("_bucket")
         (
-            writer.write.partitionBy("_bucket")
+            df_with_bucket.repartition("_bucket").write.partitionBy("_bucket")
             # zstd for lake data: write volume dominates the merge tail —
             # measured 12% faster merges at 8 cores (RAM-backed dir) vs
             # snappy/uncompressed, ~4% slower at 1 core where CPU binds;
@@ -618,9 +634,6 @@ class LakeTable:
         applied_lsn: int,
         batch_id: int | str = 0,
         truncate_first: bool = False,
-        extra_properties: dict | None = None,
-        pre_commit_check=None,
-        extra_lineage: dict | None = None,
     ) -> dict:
         """Exactly-once MERGE of a compacted change set.
 
@@ -630,7 +643,9 @@ class LakeTable:
         the unchanged-TOAST contract).
 
         Every bucket is read and rewritten; ``merge_bucketed`` is the path
-        that touches only the changed buckets.
+        that touches only the changed buckets and the one the engine runs.
+        This merge is the reference the kernel is tested against and the
+        replica-apply step for a ``read_changes`` feed.
 
         The whole MERGE is ONE Spark action: compaction → full-outer join →
         bucketed write, with upsert/delete counts collected as observed
@@ -819,28 +834,6 @@ class LakeTable:
             "phase_ms": phase,
             "skipped": False,
         }
-        if extra_lineage:
-            record.update(extra_lineage)
-        if pre_commit_check is not None:
-            # caller-supplied validation BEFORE the snapshot commit (the
-            # engine's speculative fast path verifies its batch-shape
-            # assumptions from observed metrics here); on violation the
-            # written-but-uncommitted files are discarded and the error
-            # propagates — the table state is untouched
-            try:
-                pre_commit_check(record)
-            except Exception:
-                import shutil
-
-                if new_files:
-                    any_file = self._abs(next(iter(new_files.values()))[0])
-                    shutil.rmtree(os.path.dirname(os.path.dirname(any_file)),
-                                  ignore_errors=True)
-                if cl_files:
-                    shutil.rmtree(
-                        os.path.dirname(self._abs(cl_files[0])),
-                        ignore_errors=True)
-                raise
         snap2 = {
             "version": snap["version"] + 1,
             "schema": snap["schema"],
@@ -853,7 +846,6 @@ class LakeTable:
             "properties": {
                 **snap["properties"],
                 "applied_lsn": int(applied_lsn),
-                **(extra_properties or {}),
             },
             "lineage": _append_lineage(snap["lineage"], record),
         }
@@ -869,7 +861,6 @@ class LakeTable:
         applied_lsn: int,
         batch_id: int | str = 0,
         truncate_first: bool = False,
-        extra_properties: dict | None = None,
         pre_commit_check=None,
     ) -> dict:
         """Exactly-once MERGE via the bucket-co-located Arrow kernel
@@ -886,15 +877,15 @@ class LakeTable:
         bucket's target counts as empty and buckets without changes drop
         out of the table.
 
-        Reroutes THIS batch to the declarative ``merge`` (stamped as
-        ``kernel_reroute`` in the lineage) when a column type has no Arrow
-        mapping or a target bucket outgrew the per-task memory cap.
+        Every batch runs the kernel: a task streams its bucket's target one
+        parquet row group at a time and joins on the key columns only, so
+        neither bucket size nor column type needs another path.
+        ``pre_commit_check(record)`` runs before the snapshot commit; if it
+        raises, the written files are discarded and the error propagates.
         """
         from .. import ensure_shipped
-        from ..operators.compact import compact_last_image
         from .merge_kernel import (
-            STATS_DDL, bucketed_merge_eligible, make_merge_kernel,
-            partition_salts,
+            STATS_DDL, make_merge_kernel, partition_salts,
         )
 
         t0 = time.monotonic()
@@ -915,52 +906,6 @@ class LakeTable:
         n_buckets = snap["n_buckets"]
         schema = [(n, ty) for n, ty in snap["schema"]]
         target_files = {} if truncate_first else snap["files"]
-
-        def _reroute(reason: dict) -> dict:
-            data_pairs = [(n, ty) for n, ty in schema if n not in key_cols]
-            return self.merge(
-                spark, compact_last_image(images, key_cols, data_pairs),
-                applied_lsn=applied_lsn, batch_id=batch_id,
-                truncate_first=truncate_first,
-                extra_properties=extra_properties,
-                pre_commit_check=pre_commit_check,
-                extra_lineage={"kernel_reroute": reason},
-            )
-
-        if not bucketed_merge_eligible(snap):
-            return _reroute({"reason": "type_without_arrow_mapping"})
-
-        # Oversized-bucket guard: a kernel task materializes its bucket's
-        # FULL target in memory (the copy-on-write unit). n_buckets scaling
-        # with table size is the design control; this is the backstop for a
-        # bucket that outgrew it — reroute THIS batch to the declarative
-        # merge (which streams the target through the join instead of
-        # materializing it per task) and stamp the reroute into the lineage
-        # so operators see the signal to re-bucket (``rebucket`` / the
-        # `rebucket` CLI verb is the answering operation). Sizes come from the
-        # snapshot's file list via driver-local getsize (O(n_buckets)
-        # syscalls, no Spark job).
-        max_bucket = int(os.environ.get(
-            "WALSTREAM_KERNEL_MAX_BUCKET_BYTES", str(512 << 20)))
-        if max_bucket > 0 and target_files:
-            over: dict[str, int] = {}
-            for b, fl in target_files.items():
-                sz = 0
-                for f in fl:
-                    try:
-                        sz += os.path.getsize(self._abs(f))
-                    except OSError:
-                        pass
-                if sz > max_bucket:
-                    over[str(b)] = sz
-            if over:
-                top = dict(sorted(over.items(), key=lambda kv: -kv[1])[:8])
-                return _reroute({
-                    "reason": "bucket_bytes_over_cap",
-                    "max_bucket_bytes": max_bucket,
-                    "n_oversized": len(over),
-                    "oversized_buckets": top,
-                })
 
         ensure_shipped(spark)
 
@@ -1061,11 +1006,8 @@ class LakeTable:
         # repartition(n) AQE will not coalesce — but its runtime re-plan
         # splits the query into two jobs with a driver round trip between
         # them (~0.1 s/batch measured interleaved at local[8]). Disable it
-        # for the kernel job only; WALSTREAM_KERNEL_AQE=1 restores it.
-        aqe = (_kernel_aqe_off(images.sparkSession)
-               if os.environ.get("WALSTREAM_KERNEL_AQE", "0") != "1"
-               else contextlib.nullcontext())
-        with aqe:
+        # for the kernel job only.
+        with _kernel_aqe_off(images.sparkSession):
             stats = rep.mapInArrow(fn, STATS_DDL).collect()
         _mark("join_write_ms")
 
@@ -1140,7 +1082,6 @@ class LakeTable:
             "properties": {
                 **snap["properties"],
                 "applied_lsn": int(applied_lsn),
-                **(extra_properties or {}),
             },
             "lineage": _append_lineage(snap["lineage"], record),
         }
@@ -1159,12 +1100,9 @@ class LakeTable:
         """Online bucket-count change: rewrite the live rows at a new
         bucket count and commit it as one snapshot.
 
-        Why this exists at scale: ``n_buckets`` is both the unit of merge
-        parallelism and the kernel merge's copy-on-write memory bound (a
-        kernel task materializes its bucket's target; ``merge_bucketed``
-        reroutes batches past WALSTREAM_KERNEL_MAX_BUCKET_BYTES to the
-        declarative path and stamps a ``kernel_reroute`` lineage record as
-        the re-bucket signal). A growing table answers that signal here
+        Why this exists at scale: ``n_buckets`` is the unit of merge
+        parallelism and of copy-on-write (a merge rewrites every bucket its
+        changes touch, whole). An operator growing a table raises it here
         without downtime: one bucketed write job, an atomic snapshot
         commit; a crash before the commit leaves only an orphan
         ``s{N}-…`` dir (its N exceeds CURRENT so it is never confused for

@@ -418,3 +418,20 @@ def test_audio_resample_matches_formula(spark):
     # identity when out_n == n
     s = np.arange(-5, 5, dtype=np.int16)
     assert np.array_equal(mm.resample_nearest(s, 10), s)
+
+
+@pytest.mark.parametrize("vecs, detail", [
+    ([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0]], r"\[3, 4\] and 0 null"),
+    ([[1.0, 0.0, 0.0, 0.0], None], r"\[4\] and 1 null"),
+])
+def test_ann_lsh_arrow_rejects_ragged_or_null_vectors(spark, vecs, detail):
+    """The broadcast rescore needs one dense (n x dim) matrix: a ragged or
+    null embedding must raise an actionable ValueError naming the column,
+    the widths seen and the null count, not numpy's inhomogeneous-shape
+    error."""
+    from pg_walstream_spark.analytics import similarity as sim
+
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="'embedding'.*" + detail):
+        sim.ann_lsh_pairs_arrow(emb, dim=4)

@@ -301,51 +301,6 @@ def test_changes_cli_verb(spark, tmp_path, capsys):
                      "--table", "nope"]) == 1
 
 
-def test_engine_changelog_fastpath_join_variant(spark, tmp_path,
-                                                monkeypatch):
-    """WALSTREAM_FASTPATH_MERGE=join + changelog: the engine's fast-path
-    Observations ride the changelog WRITE job (the merge then re-reads the
-    written feed for its join) — obs.get must still resolve and the
-    replayed state must stay golden with a feed that round-trips."""
-    import pg_walstream_spark.engine as E
-    from pg_walstream_spark.fixtures import wal_gen as wg
-    from pg_walstream_spark.golden import golden_final_state
-
-    monkeypatch.setenv("WALSTREAM_CHANGELOG", "1")
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    monkeypatch.setenv("WALSTREAM_FASTPATH_MERGE", "join")
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    base, b = wg.gen_basic(n_base=50, n_txns=8, ops_per_txn=8, seed=21)
-    frames = b.to_table()
-    fd = os.path.join(str(tmp_path), "frames")
-    wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    res = eng.replay_frames(fd)
-    recs = [tr for r in res["records"] for tr in r.get("tables", ())]
-    assert any(not tr.get("merge_kernel") for tr in recs)  # join variant ran
-
-    t = eng.table("repos")
-    rep = LakeTable.create(spark, os.path.join(str(tmp_path), "rep"),
-                           spark.read.parquet(bp), ["repo", "path"], 4)
-    for snap in t.history():
-        if not snap.get("changelog_files"):
-            continue
-        v = snap["version"]
-        ch = t.read_changes(spark, since_version=v - 1, until_version=v)
-        rep.merge(spark, ch.drop("_commit_version", "_commit_lsn"),
-                  applied_lsn=int(snap["properties"]["applied_lsn"]),
-                  batch_id=f"replay-{v}")
-    grows, _ = golden_final_state({"repos": base}, frames, "repos")
-    got = sorted((r["repo"], r["path"], r["content"])
-                 for r in rep.read(spark).collect())
-    assert got == sorted((r["repo"], r["path"], r["content"])
-                         for r in grows)
-
-
 def test_resolve_toast_unit_semantics(spark):
     """Carry picks the last AUTHORITATIVE image; explicit nulls are
     preserved (not skipped over); deletes never contribute; base seeds

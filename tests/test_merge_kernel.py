@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import random
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pg_walstream_spark.lake.table import LakeTable
@@ -390,16 +392,9 @@ def test_kernel_salted_routing_balances_partitions(spark, tmp_path):
     images = dml_images(ev, KEY_COLS, DATA_COLS,
                         key_types={"k1": "string", "k2": "string"})
     recA = tA.merge_bucketed(spark, images, applied_lsn=10_000)
-    os.environ["WALSTREAM_FASTPATH_MERGE"] = "join"
-    try:
-        from pg_walstream_spark.operators.compact import compact_changes
-
-        changes = compact_changes(ev, KEY_COLS, DATA_COLS,
-                                  key_types={"k1": "string",
-                                             "k2": "string"})
-        tB.merge(spark, changes, applied_lsn=10_000)
-    finally:
-        os.environ.pop("WALSTREAM_FASTPATH_MERGE", None)
+    changes = compact_changes(ev, KEY_COLS, DATA_COLS,
+                              key_types={"k1": "string", "k2": "string"})
+    tB.merge(spark, changes, applied_lsn=10_000)
     a = sorted(map(tuple, tA.read(spark).collect()))
     b = sorted(map(tuple, tB.read(spark).collect()))
     assert a == b
@@ -485,60 +480,6 @@ def test_kernel_timestamp_key_conform(spark, tmp_path):
     rk = tk.merge_bucketed(spark, images, applied_lsn=10_000)
     assert rk["merge_kernel"] is True
     assert _state(spark, tg) == _state(spark, tk)
-
-
-def test_oversized_bucket_guard_reroutes_to_declarative(
-        spark, tmp_path, monkeypatch):
-    """A kernel task materializes its bucket's FULL target in memory; past
-    WALSTREAM_KERNEL_MAX_BUCKET_BYTES the batch must reroute to the
-    declarative merge (which streams the target through the join), stamp a
-    kernel_reroute lineage event, and land the exact same state. The spy
-    pins that the kernel truly never runs under the guard."""
-    import pg_walstream_spark.lake.merge_kernel as mk
-
-    rows = _rand_workload(7)
-    kt = {"k1": "string", "k2": "string"}
-
-    base = _base_df(spark, 80)
-    ref = LakeTable.create(spark, str(tmp_path / "ref"), base, KEY_COLS,
-                           n_buckets=8)
-    ref_rec = ref.merge_bucketed(
-        spark, dml_images(_events_df(spark, rows), KEY_COLS, DATA_COLS,
-                          key_types=kt),
-        applied_lsn=10_000, batch_id="b0")
-    assert ref_rec["merge_kernel"] is True  # default cap: kernel path
-
-    t = LakeTable.create(spark, str(tmp_path / "t"), base, KEY_COLS,
-                         n_buckets=8)
-
-    def _boom(*a, **k):
-        raise AssertionError("kernel must not run under the guard")
-
-    monkeypatch.setattr(mk, "make_merge_kernel", _boom)
-    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
-    rec = t.merge_bucketed(
-        spark, dml_images(_events_df(spark, rows), KEY_COLS, DATA_COLS,
-                          key_types=kt),
-        applied_lsn=10_000, batch_id="b0")
-
-    assert "merge_kernel" not in rec  # declarative record shape
-    rr = rec["kernel_reroute"]
-    assert rr["reason"] == "bucket_bytes_over_cap"
-    assert rr["n_oversized"] >= 1 and rr["oversized_buckets"]
-    assert rr["max_bucket_bytes"] == 1
-    assert _state(spark, t) == _state(spark, ref)
-    assert rec["upserts"] == ref_rec["upserts"]
-    assert rec["deletes"] == ref_rec["deletes"]
-    # the reroute is visible in the committed lineage, fence advanced once
-    lin = t.snapshot()["lineage"]
-    assert any(r.get("kernel_reroute") for r in lin)
-    assert int(t.snapshot()["properties"]["applied_lsn"]) == 10_000
-    # fence idempotency preserved through the reroute path
-    rec2 = t.merge_bucketed(
-        spark, dml_images(_events_df(spark, rows), KEY_COLS, DATA_COLS,
-                          key_types=kt),
-        applied_lsn=10_000, batch_id="b0")
-    assert rec2["skipped"] is True
 
 
 def test_salt_search_vectorized_matches_scalar():
@@ -717,3 +658,174 @@ def test_concurrent_kernel_merges_restore_aqe(spark, tmp_path, prior):
     finally:
         spark.conf.set(key, "true")
     assert all(_state(spark, t) == want for t in tables[1:])
+
+
+def _split_row_groups(t: LakeTable, rows_per_group: int = 7) -> None:
+    """Rewrite every bucket of ``t`` as two parquet files of
+    ``rows_per_group``-row row groups (the layout an outside writer could
+    leave), in place at the same snapshot version."""
+    snap = t.snapshot()
+    for b, fl in snap["files"].items():
+        tbl = pa.concat_tables([pq.read_table(t._abs(f)) for f in fl])
+        d = os.path.dirname(t._abs(fl[0]))
+        half = tbl.num_rows // 2
+        out = []
+        for i, part in enumerate((tbl.slice(0, half), tbl.slice(half))):
+            p = os.path.join(d, f"split{i}.parquet")
+            pq.write_table(part, p, row_group_size=rows_per_group)
+            out.append(t._rel(p))
+        for f in fl:
+            os.remove(t._abs(f))
+        snap["files"][b] = out
+    t._commit(snap)
+
+
+def _feed(spark, t):
+    return sorted(
+        tuple(tuple(sorted(v)) if k == "_toast" else v
+              for k, v in r.asDict().items())
+        for r in t.read_changes(spark).collect())
+
+
+def test_kernel_streams_multi_file_row_groups_match_general(spark, tmp_path):
+    """Buckets spanning two files and several row groups each, with a
+    rename alias, the changelog on, and updates, deletes, inserts, a
+    key-changing update and TOAST carries: the kernel (one row group at a
+    time) lands the declarative merge's state and change feed, and writes
+    every bucket it rewrites as one row group."""
+    cols = [("v_text", "string"), ("v_num", "bigint")]
+    kt = {"k1": "string", "k2": "string"}
+    tables = []
+    for name in ("general", "kernel"):
+        t = LakeTable.create(spark, str(tmp_path / name), _base_df(spark, 120),
+                             KEY_COLS, n_buckets=4,
+                             properties={"changelog": True})
+        _split_row_groups(t)
+        t.rename_column("v_str", "v_text")
+        tables.append(t)
+    tg, tk = tables
+    before = {b: [pq.ParquetFile(tk._abs(f)).num_row_groups for f in fl]
+              for b, fl in tk.snapshot()["files"].items()}
+    assert all(len(n) == 2 and sum(n) >= 3 for n in before.values())
+
+    rows = [
+        ("update", 100, 1, {"k1": "61", "k2": "a"},
+         {"k1": "61", "k2": "a", "v_num": "611"}, ["v_text"]),
+        ("update", 101, 2, {"k1": "63", "k2": "a"},
+         {"k1": "63", "k2": "a", "v_str": "pre-rename", "v_num": "33"}, None),
+        ("delete", 102, 3, {"k1": "64", "k2": "b"}, None, None),
+        ("insert", 103, 4, None,
+         {"k1": "900", "k2": "b", "v_text": "new", "v_num": "9"}, None),
+        ("update", 104, 5, {"k1": "65", "k2": "a"},
+         {"k1": "905", "k2": "a", "v_text": "moved", "v_num": "5"}, None),
+    ]
+    for op, lsn, seq, old, new, toast in _rand_workload(12, n_ops=150):
+        if new and "v_str" in new:
+            new["v_text"] = new.pop("v_str")
+        rows.append((op, 200 + lsn, 10 + seq, old, new,
+                     ["v_text"] if toast else None))
+    ev = _events_df(spark, rows)
+    al = tk.snapshot()["aliases"]
+    tg.merge(spark, compact_changes(ev, KEY_COLS, cols, aliases=al,
+                                    key_types=kt), applied_lsn=10_000)
+    rk = tk.merge_bucketed(spark, dml_images(ev, KEY_COLS, cols, aliases=al,
+                                             key_types=kt),
+                           applied_lsn=10_000)
+    assert rk["merge_kernel"] is True and rk["deletes"] > 0
+    got = _state(spark, tk)
+    assert got == _state(spark, tg)
+    by_key = {r[:2]: r for r in got}
+    assert by_key[("61", "a")][2:] == ("base61", 611)
+    assert ("65", "a") not in by_key and by_key[("905", "a")][2] == "moved"
+    assert _feed(spark, tk) == _feed(spark, tg)
+    written = [tk._abs(f) for b in rk["buckets_rewritten"]
+               for f in tk.snapshot()["files"].get(str(b), [])]
+    assert written and all(pq.ParquetFile(f).num_row_groups == 1
+                           for f in written)
+
+
+def test_kernel_nested_data_columns_match_general(spark, tmp_path):
+    """array<double> and map<string,int> data columns (which Acero cannot
+    carry through a join) merge through the kernel, TOAST carry included,
+    and land the declarative merge's state."""
+    ddl = ("k1 string, k2 string, v_arr array<double>, "
+           "v_map map<string,int>")
+    base = spark.createDataFrame(
+        [(str(i), "a", [float(i), 0.5], {"n": i}) for i in range(40)], ddl)
+    images = spark.createDataFrame([
+        (100, 1, "upsert", "1", "a", [9.0], {"u": 1}, False, False),
+        (101, 2, "upsert", "2", "a", None, {"t": 2}, True, False),
+        (102, 3, "upsert", "3", "a", [3.0, 3.5], None, False, True),
+        (103, 4, "delete", "4", "a", None, None, False, False),
+        (104, 5, "upsert", "900", "b", [], {}, False, False),
+        (105, 6, "upsert", "901", "b", None, {"x": 7}, True, False),
+    ], "commit_lsn bigint, seq bigint, _op string, " + ddl
+       + ", _t_v_arr boolean, _t_v_map boolean")
+    # one image per key: the compacted change set is the images themselves
+    changes = images.selectExpr(
+        "k1", "k2", "CASE WHEN NOT _t_v_arr THEN v_arr END AS v_arr",
+        "CASE WHEN NOT _t_v_map THEN v_map END AS v_map", "_op",
+        "CASE WHEN _op = 'upsert' THEN array_compact(array("
+        "CASE WHEN _t_v_arr THEN 'v_arr' END, "
+        "CASE WHEN _t_v_map THEN 'v_map' END)) "
+        "ELSE array() END AS _toast")
+    tg = LakeTable.create(spark, str(tmp_path / "g"), base, KEY_COLS,
+                          n_buckets=4)
+    tk = LakeTable.create(spark, str(tmp_path / "k"), base, KEY_COLS,
+                          n_buckets=4)
+    tg.merge(spark, changes, applied_lsn=10_000)
+    rk = tk.merge_bucketed(spark, images, applied_lsn=10_000)
+    assert rk["merge_kernel"] is True
+    got = _state(spark, tk)
+    assert got == _state(spark, tg)
+    by_key = {r[:2]: r[2:] for r in got}
+    assert by_key[("2", "a")] == ([2.0, 0.5], {"t": 2})
+    assert by_key[("3", "a")] == ([3.0, 3.5], {"n": 3})
+    assert by_key[("901", "b")] == (None, {"x": 7})
+    assert ("4", "a") not in by_key
+
+
+@pytest.mark.parametrize("key_type", ["array<string>", "map<string,int>",
+                                      "struct<a:int>"])
+def test_create_rejects_nested_key_column(spark, tmp_path, key_type):
+    df = spark.createDataFrame([], f"k_nested {key_type}, v string")
+    with pytest.raises(ValueError, match="k_nested"):
+        LakeTable.create(spark, str(tmp_path / "t"), df, ["k_nested"])
+    assert not os.path.exists(tmp_path / "t")
+
+
+def test_create_rejects_column_without_arrow_type(spark, tmp_path):
+    df = spark.range(1).selectExpr("'a' AS k", "make_interval(1) AS v_iv")
+    with pytest.raises(ValueError, match="v_iv"):
+        LakeTable.create(spark, str(tmp_path / "t"), df, ["k"])
+    assert not os.path.exists(tmp_path / "t")
+
+
+def test_merge_one_bucket_writes_a_row_group_per_byte_cap(tmp_path,
+                                                          monkeypatch):
+    """The per-bucket step buffers output and writes one row group each
+    time the buffer reaches ROW_GROUP_BYTES; at a 1-byte cap every emitted
+    piece becomes its own row group, and the file still holds exactly the
+    merged rows (update, delete, insert, untouched row groups)."""
+    import pg_walstream_spark.lake.merge_kernel as mk
+
+    schema = pa.schema([("k1", pa.string()), ("v", pa.int64())])
+    src = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k1": [str(i) for i in range(100)],
+                             "v": list(range(100))}, schema=schema),
+                   src, row_group_size=10)
+    changes = pa.table({"k1": ["5", "7", "500"],
+                        "__op": ["upsert", "delete", "upsert"],
+                        "__c_v": [50, None, 5000],
+                        "__p_v": [False, False, False]})
+    monkeypatch.setattr(mk, "ROW_GROUP_BYTES", 1)
+    out = str(tmp_path / "out.parquet")
+    st = mk._merge_one_bucket(changes, [src], schema, ["k1"], ["v"], out,
+                              "zstd")
+    assert (st["n_target"], st["del_applied"], st["ins_new"],
+            st["rows_written"]) == (100, 1, 1, 100)
+    assert pq.ParquetFile(out).num_row_groups > 10
+    got = pq.read_table(out).to_pydict()
+    got = dict(zip(got["k1"], got["v"]))
+    assert len(got) == 100 and "7" not in got
+    assert got["5"] == 50 and got["500"] == 5000 and got["99"] == 99

@@ -1,11 +1,9 @@
 """Online bucket-count change (LakeTable.rebucket).
 
-n_buckets is the unit of merge parallelism AND the kernel merge's
-copy-on-write memory bound; merge_bucketed's oversized-bucket guard stamps
-`kernel_reroute` lineage as the re-bucket signal, and rebucket is the
-operation that answers it. The rewrite reads through the CURRENT schema,
-so it also compacts away rename/column_since history: later reads stop
-coalescing aliases and masking re-added columns.
+n_buckets is the unit of merge parallelism and of copy-on-write; rebucket
+is the operator's way to change it online. The rewrite reads through the
+CURRENT schema, so it also compacts away rename/column_since history:
+later reads stop coalescing aliases and masking re-added columns.
 """
 
 from __future__ import annotations
@@ -15,7 +13,6 @@ import os
 
 import pytest
 
-from pg_walstream_spark.lake.merge_kernel import bucketed_merge_eligible
 from pg_walstream_spark.lake.table import LakeTable
 from pg_walstream_spark.operators.compact import compact_changes, dml_images
 
@@ -113,13 +110,11 @@ def test_rebucket_clears_history_and_reenables_kernel(spark, tmp_path):
     t = _mk_table(spark, tmp_path / "t", n_buckets=8)
     before = _state(spark, t)
     t.rename_column("v_str", "v_text")
-    assert bucketed_merge_eligible(t.snapshot())  # types only
 
     rec = t.rebucket(spark, 8)
     assert rec.get("skipped") is None and rec["history_cleared"] is True
     snap = t.snapshot()
     assert not snap.get("aliases") and not snap.get("column_since")
-    assert bucketed_merge_eligible(snap)
     assert [n for n, _ in snap["schema"]] == ["k1", "k2", "v_text", "v_num"]
     assert _state(spark, t) == before  # values identical under the new name
     ev = _events_df(spark, [("update", 4000, 1, {"k1": "1", "k2": "a"},
@@ -187,150 +182,3 @@ def test_rebucket_cli_verb(spark, tmp_path):
     assert _state(spark, t) == before
     assert cli_main(["rebucket", "--warehouse", str(tmp_path / "wh"),
                      "--table", "nope", "--buckets", "4"]) == 1
-
-
-def _engine_fixture(tmp_path, n_txns=6):
-    from pg_walstream_spark.fixtures import wal_gen as wg
-
-    base, b = wg.gen_basic(n_base=60, n_txns=n_txns, ops_per_txn=8, seed=5)
-    frames = b.to_table()
-    fd = os.path.join(str(tmp_path), "frames")
-    wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-    return base, frames, fd, bp
-
-
-def test_engine_auto_rebucket_answers_kernel_reroute(spark, tmp_path,
-                                                     monkeypatch):
-    """A fast-path merge that reroutes past the oversized-bucket cap must
-    be ANSWERED: the engine rebuckets the table inline (doubling until the
-    worst bucket fits half the cap, bounded by AUTO_REBUCKET_MAX), records
-    it in lineage + engine state, and the replayed state stays golden. A
-    second reroute inside the cooldown window must NOT rewrite again."""
-    import pg_walstream_spark.engine as E
-    from pg_walstream_spark.golden import golden_final_state
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
-    monkeypatch.setenv("WALSTREAM_AUTO_REBUCKET_MAX", "32")
-    base, frames, fd, bp = _engine_fixture(tmp_path)
-
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    res = eng.replay_frames(fd)
-
-    t = eng.table("repos")
-    snap = t.snapshot()
-    assert snap["n_buckets"] == 32  # 8 doubled until capped by MAX=32
-    lin = snap["lineage"]
-    rb = [r for r in lin if r.get("event") == "rebucket"]
-    assert len(rb) == 1 and rb[0]["reason"].startswith("auto:kernel_reroute")
-    assert any(r.get("kernel_reroute") for r in lin)
-    recs = [tr for r in res["records"] for tr in r.get("tables", ())]
-    assert sum(1 for tr in recs if tr.get("auto_rebucket")) == 1
-    st = eng._load_state()
-    rb_batch = (st.get("rebucket_at") or {}).get("repos")
-    assert rb_batch is not None
-
-    # cooldown: a reroute within the window is NOT answered again
-    trec = {"table": "repos", "kernel_reroute": {"max_bucket_bytes": 1}}
-    eng._maybe_rebucket(st, rb_batch + 1, trec)
-    assert "auto_rebucket" not in trec
-    assert t.snapshot()["n_buckets"] == 32
-    # past the window (and with MAX raised) it answers again
-    monkeypatch.setenv("WALSTREAM_AUTO_REBUCKET_MAX", "64")
-    eng._maybe_rebucket(st, rb_batch + 8, trec)
-    assert trec["auto_rebucket"]["from"] == 32
-    assert trec["auto_rebucket"]["to"] == 64
-    assert t.snapshot()["n_buckets"] == 64
-
-    got = sorted((r["repo"], r["path"], r["content"])
-                 for r in t.read(spark).collect())
-    grows, glsn = golden_final_state({"repos": base}, frames, "repos")
-    assert got == sorted((r["repo"], r["path"], r["content"])
-                         for r in grows)
-    assert t.applied_lsn() == glsn
-
-
-def test_engine_auto_rebucket_answers_general_path_reroute(
-        spark, tmp_path, monkeypatch):
-    """A stream whose batches all take the general path (batch_frames cuts
-    every transaction) must answer an oversized-bucket reroute too, or it
-    stays on the declarative fallback forever: one inline rebucket, and
-    the state stays golden."""
-    import pg_walstream_spark.engine as E
-    from pg_walstream_spark.golden import golden_final_state
-
-    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
-    monkeypatch.setenv("WALSTREAM_AUTO_REBUCKET_MAX", "32")
-    base, frames, fd, bp = _engine_fixture(tmp_path)
-
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    res = eng.replay_frames(fd, batch_frames=15)
-
-    assert not any(r.get("fast_path") for r in res["records"])
-    assert any(r["pending"] for r in res["records"])
-    recs = [tr for r in res["records"] for tr in r.get("tables", ())]
-    assert sum(1 for tr in recs if tr.get("auto_rebucket")) == 1
-    assert recs[0]["kernel_reroute"]["reason"] == "bucket_bytes_over_cap"
-    t = eng.table("repos")
-    assert t.snapshot()["n_buckets"] == 32
-    got = sorted((r["repo"], r["path"], r["content"])
-                 for r in t.read(spark).collect())
-    grows, glsn = golden_final_state({"repos": base}, frames, "repos")
-    assert got == sorted((r["repo"], r["path"], r["content"])
-                         for r in grows)
-    assert t.applied_lsn() == glsn
-
-
-def test_engine_auto_rebucket_disabled_by_env(spark, tmp_path, monkeypatch):
-    import pg_walstream_spark.engine as E
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
-    monkeypatch.setenv("WALSTREAM_AUTO_REBUCKET", "0")
-    base, frames, fd, bp = _engine_fixture(tmp_path, n_txns=3)
-
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    eng.replay_frames(fd)
-    snap = eng.table("repos").snapshot()
-    assert snap["n_buckets"] == 8
-    assert not [r for r in snap["lineage"] if r.get("event") == "rebucket"]
-    assert any(r.get("kernel_reroute") for r in snap["lineage"])
-
-
-def test_engine_auto_rebucket_failure_never_fails_batch(spark, tmp_path,
-                                                        monkeypatch):
-    """rebucket raising (e.g. a transient executor loss mid-rewrite) must
-    not fail the batch — the merge already committed; the event lands in
-    the table event log and the stream continues."""
-    import pg_walstream_spark.engine as E
-    from pg_walstream_spark.golden import golden_final_state
-    from pg_walstream_spark.lake.table import LakeTable
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    monkeypatch.setenv("WALSTREAM_KERNEL_MAX_BUCKET_BYTES", "1")
-    base, frames, fd, bp = _engine_fixture(tmp_path, n_txns=3)
-
-    def boom(self, spark_, n, reason=None):
-        raise RuntimeError("synthetic rebucket failure")
-
-    monkeypatch.setattr(LakeTable, "rebucket", boom)
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    eng.replay_frames(fd)
-
-    t = eng.table("repos")
-    assert t.snapshot()["n_buckets"] == 8
-    got = sorted((r["repo"], r["path"], r["content"])
-                 for r in t.read(spark).collect())
-    grows, _ = golden_final_state({"repos": base}, frames, "repos")
-    assert got == sorted((r["repo"], r["path"], r["content"]) for r in grows)
-    events = [e.get("event") for e in t.snapshot()["lineage"]]
-    assert "auto_rebucket_failed" in events
