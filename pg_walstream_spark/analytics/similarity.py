@@ -302,11 +302,15 @@ def lsh_buckets_arrow(emb: DataFrame, n_planes: int = 12, bands: int = 16,
             # directly — no per-row Python object churn (to_pylist built
             # len(ids) lists of dim floats per batch)
             la = b.column(vec_col)
-            flat = la.flatten()
-            if la.null_count == 0 and len(flat) == len(ids) * dim:
-                vecs = np.asarray(flat, dtype=np.float64).reshape(-1, dim)
-            else:  # ragged/null rows: slow path keeps semantics
-                vecs = np.array(la.to_pylist(), dtype=np.float64)
+            widths = np.diff(np.asarray(la.offsets))
+            if la.null_count or (widths != dim).any():
+                valid = ~la.is_null().to_numpy(zero_copy_only=False)
+                raise ValueError(
+                    f"lsh_buckets_arrow: column {vec_col!r} needs non-null "
+                    f"vectors of width dim={dim}; got widths "
+                    f"{sorted(set(widths[valid].tolist()))} and "
+                    f"{la.null_count} null vector(s)")
+            vecs = np.asarray(la.flatten(), dtype=np.float64).reshape(-1, dim)
             bits = (vecs @ P) > 0                       # n x (planes*bands)
             bits = bits.reshape(len(ids), bands, n_planes)
             buckets = (bits * weights).sum(axis=2)      # n x bands
@@ -372,14 +376,14 @@ def ann_lsh_pairs_arrow(emb: DataFrame, threshold: float = 0.95,
     # the rescore needs one dense (n x dim) matrix: padding a ragged or
     # null vector would change its cosine, so refuse it loudly
     n_null = vcol.null_count
-    if n_null or (len(widths) and (widths != widths[0]).any()):
+    if n_null or (widths != dim).any():
         valid = ~vcol.is_null().to_numpy(zero_copy_only=False)
         raise ValueError(
-            f"ann_lsh_pairs_arrow: column {vec_col!r} needs equal-width, "
-            f"non-null vectors; got widths "
+            f"ann_lsh_pairs_arrow: column {vec_col!r} needs non-null "
+            f"vectors of width dim={dim}; got widths "
             f"{sorted(set(widths[valid].tolist()))} and {n_null} null "
             "vector(s)")
-    Vm = flat.reshape(len(b_ids), int(widths[0]) if len(widths) else dim)
+    Vm = flat.reshape(len(b_ids), dim)
     norms = np.zeros(len(b_ids), np.float64)
     for d in range(Vm.shape[1]):  # sequential order == F.aggregate
         norms = norms + Vm[:, d] * Vm[:, d]

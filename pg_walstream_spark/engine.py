@@ -1,27 +1,35 @@
 """Replay engine: WAL frames → decoded events → txn gating → compaction →
 exactly-once LakeTable MERGE (SURVEY.md §7 stages 0-6, end-to-end).
 
-Micro-batch loop (same contract whether driven by bounded replay or
-Structured Streaming's foreachBatch — see ``streaming.py``):
+One micro-batch pipeline (same contract whether driven by bounded replay
+or Structured Streaming's foreachBatch — see ``streaming.py``):
 
 1. **Control scan** — read only control-tag frames of the batch (parquet
-   predicate pushdown on the tiny ``tag`` column), replay them sequentially
-   on the driver → DecodeContext (relation catalog timeline, stream spans,
-   txn index). Control frames are a small fraction of the stream (2 per
-   transaction), so this is broadcast-sized by construction.
-2. **Vectorized decode** — mapInArrow kernel over the full batch (narrow).
-3. **Transaction gating** — events stamped committed are applied; open /
-   prepared transactions spill to a pending store (parquet) and are
-   re-stamped when a later batch resolves their xid (commit → apply,
-   abort/rollback → discard). This is the reference's
-   transaction-buffered consumer (examples/safe-transaction-consumer).
-4. **Schema evolution** — relation-diff events → LakeTable.add_columns
-   before the merge (Iceberg ADD COLUMN analog,
+   predicate pushdown on the tiny ``tag`` column, or the frame pump's
+   control sidecar), replay them sequentially on the driver →
+   DecodeContext (relation catalog timeline, stream spans, txn
+   dispositions, TRUNCATE frames). Control frames are a small fraction of
+   the stream (2 per transaction), so this is broadcast-sized.
+2. **Batch facts on the driver** — the commit high-water mark, the
+   bounded-replay crossing commit and committed truncate positions come
+   from the context (plus the pending store's truncate rows), no job.
+3. **Schema evolution** — relation-diff events → LakeTable.add_columns
+   etc. before the merge (Iceberg ADD COLUMN analog,
    /root/reference/src/protocol.rs:1430-1483).
-5. **Compaction** — salted-free max-by last-image reduce (see compact.py).
-6. **MERGE** — LSN-fenced idempotent commit per target table. A replayed
-   or duplicate batch is skipped by the fence, giving exactly-once end to
-   end under at-least-once batch delivery.
+4. **Events** — the vectorized mapInArrow decode kernel (narrow) plus the
+   pending store's rows re-stamped with this batch's dispositions:
+   committed transactions apply, open / prepared ones stay pending,
+   aborted ones drop. This is the reference's transaction-buffered
+   consumer (examples/safe-transaction-consumer).
+5. **Tables** — a catalog naming one existing table merges it straight
+   from the decode; otherwise the events are cached once and one
+   aggregate finds the tables with committed DML.
+6. **MERGE** — per table, the bucket-co-located merge kernel
+   (``LakeTable.merge_bucketed``: compaction + join + write in one job),
+   LSN-fenced. A replayed or duplicate batch is skipped by the fence,
+   giving exactly-once end to end under at-least-once batch delivery.
+7. **Pending spill** — if a transaction is still open or prepared, one
+   job appends the newly-pending rows as a delta of the pending store.
 
 Resume: engine state (batch index, catalog, open-txn carry) is persisted
 atomically per batch; restart replays from the checkpoint and the fence
@@ -34,14 +42,20 @@ import json
 import os
 import uuid
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .lake.table import LakeTable, _atomic_write
-from .operators.compact import dml_images
+from .operators.compact import _qs, dml_images
 from .options import ReplicationOptions
 from .operators.decode import (
     CONTROL_TAGS,
     EVENT_SPARK_DDL,
+    ST_ABORTED,
+    ST_COMMITTED,
+    ST_OPEN,
+    _STATUS_NAMES,
     build_context,
     decode_frames_df,
 )
@@ -142,7 +156,7 @@ def tune_input_splits(spark: SparkSession, paths) -> None:
 # Engine state is re-read/rewritten every batch: an unbounded per-batch
 # metrics list would make the state file itself a serial cost at 10^6
 # batches. Keep the last N rows; older ones roll into aggregate counters.
-METRICS_CAP = int(os.environ.get("WALSTREAM_METRICS_CAP", "200"))
+METRICS_CAP = 200
 
 
 def seq_spans_from_footers(paths) -> list[dict] | None:
@@ -215,25 +229,16 @@ def _append_metrics(st: dict, rec: dict) -> None:
         tot["quarantined"] += int(old.get("quarantined") or 0)
 
 
-class _FastPathViolation(Exception):
-    """A speculative fast-path batch observed a shape it cannot handle
-    (pending txn rows, truncates, DML on an unexpected table); the merge
-    is aborted before commit and the general path re-processes the batch."""
-
-
-# Minimum estimated DML rows for the one-job speculative merge; below it
-# the general cached path (with its bucket-pruning planning job) is the
-# better plan anyway
-FASTPATH_MIN_DML = int(os.environ.get("WALSTREAM_FASTPATH_MIN_DML",
-                                      "50000"))
-
-
-DML_TYPES = ("insert", "update", "delete")
+# batch plans are built from SQL strings, not Column objects: every Column
+# construction is a py4j round trip, a per-batch driver-serial cost
+_DML_SQL = "event_type IN ('insert', 'update', 'delete') AND error IS NULL"
 # everything the apply path consumes: DML plus truncate — truncates of a
 # still-open transaction must survive a micro-batch boundary in the pending
 # spill exactly like DML, or a batch split between TRUNCATE and its COMMIT
 # silently drops the truncate
-APPLY_TYPES = DML_TYPES + ("truncate",)
+_APPLY_SQL = ("event_type IN ('insert', 'update', 'delete', 'truncate') "
+              "AND error IS NULL")
+_QUAR_SQL = "count(CASE WHEN error IS NOT NULL THEN 1 END)"
 
 
 # Engine-state / warehouse layout version. Bump whenever the persisted
@@ -488,9 +493,16 @@ class ReplayEngine:
         if os.path.exists(self.pending_dir):
             shutil.rmtree(self.pending_dir)
 
-    def _pending_append(self, new_df: DataFrame | None, new_xids: set[int],
-                        resolved_xids: set[int], batch_idx: int) -> None:
+    def _pending_append(self, events: DataFrame, resolved_xids: set[int],
+                        batch_idx: int):
+        """Spill the batch's newly-pending rows (``events`` rows not
+        ``_carried``) as ONE fresh delta and commit the store meta. The
+        write carries an Observation: the batch's pending rows, the newly
+        pending xids and the reject count (returned as a Row).
+        A store left without pending rows is cleared."""
         import shutil
+
+        from pyspark.sql import Observation
 
         meta = self._pending_meta() or {
             "order": [], "deltas": {}, "dead_xids": [],
@@ -506,9 +518,25 @@ class ReplayEngine:
         gen = int(meta.get("gen", 0)) + 1
         meta["gen"] = gen
         name = f"delta_b{batch_idx}_g{gen}"
+        pend = f"{_APPLY_SQL} AND txn_status IN ('open', 'prepared')"
+        new = f"{pend} AND NOT _carried"
+        obs = Observation()
+        (events.observe(obs, F.expr(
+            f"named_struct('quar', {_QUAR_SQL}, "
+            f"'pend', count(CASE WHEN {pend} THEN 1 END), "
+            f"'new_xids', collect_set(CASE WHEN {new} THEN xid END))"
+        ).alias("m"))
+            .filter(new).drop("_carried")
+            .write.mode("overwrite")
+            .parquet(os.path.join(self.pending_dir, name)))
+        m = obs.get["m"]
+        if not m["pend"]:
+            self._pending_clear()
+            return m
+        new_xids = {int(x) for x in m["new_xids"] or [] if x is not None}
         # bounded-replay stop / in-place batch retry → the batch
         # reprocesses: drop the prior attempt's delta from meta (its dir
-        # survives until the post-commit sweep) and write a fresh one
+        # survives until the post-commit sweep)
         prefix = f"delta_b{batch_idx}"
         for d in [d for d in meta["order"]
                   if d == prefix or d.startswith(prefix + "_g")]:
@@ -525,12 +553,9 @@ class ReplayEngine:
             else:
                 keep.append(d)
         meta["order"] = keep
-        if new_df is not None and new_xids:
-            new_df.write.mode("overwrite").parquet(
-                os.path.join(self.pending_dir, name)
-            )
+        if new_xids:
             meta["order"].append(name)
-            meta["deltas"][name] = sorted(int(x) for x in new_xids)
+            meta["deltas"][name] = sorted(new_xids)
         live = {int(x) for d in meta["order"] for x in meta["deltas"][d]}
         # keep only tombstones that still mask physical rows
         meta["dead_xids"] = sorted(dead & live)
@@ -558,6 +583,7 @@ class ReplayEngine:
             p = os.path.join(self.pending_dir, entry)
             if os.path.isdir(p) and entry not in referenced:
                 shutil.rmtree(p, ignore_errors=True)
+        return m
 
     # ----------------------------------------------------------------- replay
 
@@ -679,7 +705,6 @@ class ReplayEngine:
                 lambda: self.process_batch(
                     batch, batch_idx, st, stop_at_lsn=stop_at_lsn,
                     control_rows=control_rows,
-                    est_frames=min(end, hi) - start + 1,
                 ),
                 self.retry_config,
                 on_retry=lambda attempt, delay, exc: retries.append(
@@ -695,176 +720,6 @@ class ReplayEngine:
                 break
         return {"batches": len(summary), "applied_lsn": st["applied_lsn"],
                 "records": summary, "setup_ms": setup_ms}
-
-    # -------------------------------------------------- speculative fast path
-
-    def _process_batch_fast(self, frames: DataFrame, ctx, batch_idx: int,
-                            st: dict, tname: str, phase_t: dict, mark,
-                            seq_range) -> dict | None:
-        """ONE-job merge for a batch whose shape the control channel proves
-        simple: all transactions resolved (committed/aborted), nothing
-        carried or pending, one known table, no truncates/schema changes.
-
-        decode → committed-DML filter → compaction → MERGE run as a single
-        Spark action; quarantine/pending/truncate/foreign-table statistics
-        ride as Observations on the decode output and are verified in the
-        merge's pre-commit hook — a violated assumption discards the
-        written files and returns None so the general cached path
-        re-processes the batch (the untouched LSN fence keeps that
-        exactly-once). The general path's events-cache materialization job
-        (the single largest non-merge cost per batch) never runs."""
-        names = ("open", "committed", "aborted", "prepared")
-        hi_commit = max(
-            (int(el) for el, s in zip(ctx.xid_end_lsn, ctx.xid_status)
-             if names[int(s)] == "committed" and el is not None),
-            default=None,
-        )
-        fence_floor = int(st.get("applied_lsn", 0))
-        if hi_commit is None or hi_commit <= fence_floor:
-            # nothing new commits in this batch (all aborted, or an
-            # at-least-once redelivery): no merge job needed at all
-            rec = {
-                "batch_idx": batch_idx, "applied_lsn": fence_floor,
-                "tables": [], "pending": 0, "quarantined": 0,
-                "schema_changes": 0, "stopped": False, "fast_path": True,
-                "phase_ms": phase_t,
-            }
-            self._finish_fast(st, ctx, batch_idx, fence_floor, seq_range,
-                              rec)
-            return rec
-
-        events = decode_frames_df(frames, ctx)
-        if not self.options.messages:
-            events = events.filter("event_type != 'message'")
-        if self.options.origin == "none" and getattr(ctx, "has_origin",
-                                                     False):
-            from .operators.raw import filter_origin
-
-            events = filter_origin(
-                events, "none",
-                foreign_xids=sorted(getattr(ctx, "origin_xids", ())),
-            )
-        # plan built from SQL strings, not Column objects: the fast path
-        # runs once per micro-batch and every Column construction is a
-        # py4j round trip — ~25 of them here measured as a visible slice
-        # of the per-batch driver-serial tail (same reason as the r3
-        # selectExpr conversion in compact/merge)
-        from .operators.compact import _qs
-
-        dml_sql = ("event_type IN ("
-                   + ",".join(f"'{t}'" for t in DML_TYPES)
-                   + ") AND error IS NULL")
-        apply_sql = ("event_type IN ("
-                     + ",".join(f"'{t}'" for t in APPLY_TYPES)
-                     + ") AND error IS NULL")
-        tq = _qs(tname)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        # ONE struct-valued metric instead of four scalar ones: at this
-        # box's py4j latency every extra Column is ~10 ms of per-batch
-        # driver-serial time
-        ev = events.observe(
-            obs,
-            F.expr(
-                "named_struct("
-                "'quar', count(CASE WHEN error IS NOT NULL THEN 1 END), "
-                f"'pend', count(CASE WHEN {apply_sql} AND txn_status IN "
-                "('open','prepared') THEN 1 END), "
-                "'trunc', count(CASE WHEN event_type = 'truncate' AND "
-                "txn_status = 'committed' THEN 1 END), "
-                f"'other_tables', count(CASE WHEN {dml_sql} AND txn_status"
-                f" = 'committed' AND table_name != {tq} THEN 1 END))"
-            ).alias("m"),
-        ).filter(
-            f"{dml_sql} AND txn_status = 'committed' AND table_name = "
-            f"{tq} AND end_lsn > {int(fence_floor)}"
-        )
-        t = self.table(tname)
-        snap = t.snapshot()
-        key_cols = snap["key_columns"]
-        key_types = {n: ty for n, ty in snap["schema"] if n in key_cols}
-        data_cols = [(n, ty) for n, ty in snap["schema"]
-                     if n not in key_cols]
-
-        def _check(_record):
-            m = obs.get["m"]
-            if int(m["pend"]) or int(m["trunc"]) or int(m["other_tables"]):
-                raise _FastPathViolation(
-                    f"pend={int(m['pend'])} trunc={int(m['trunc'])} "
-                    f"other_tables={int(m['other_tables'])}"
-                )
-
-        # Bucket-co-located Arrow merge (lake/merge_kernel.py): one shuffle
-        # of the change rows by bucket; compaction+join+write fused in the
-        # kernel and the target never shuffled. The same kernel applies
-        # every general-path merge too.
-        images = dml_images(ev, key_cols, data_cols,
-                            aliases=snap.get("aliases"), key_types=key_types)
-        mark("fast_plan")
-        try:
-            trec = t.merge_bucketed(
-                self.spark, images, applied_lsn=int(hi_commit),
-                batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
-                pre_commit_check=_check,
-            )
-        except _FastPathViolation:
-            return None
-        mark("fast_merge")
-        if trec.get("skipped"):
-            # table-level fence skipped the merge (duplicate batch against
-            # an already-advanced table, e.g. fresh engine state over an
-            # existing lake): NO job ran, so the speculative-shape
-            # observations were never verified — reading obs.get here
-            # would block forever, and committing engine state on the
-            # unverified assumptions could silently discard pending /
-            # truncate / other-table rows. Fall back: the general path
-            # reprocesses the batch and the fence keeps it idempotent.
-            return None
-        trec["table"] = tname
-        quar = int(obs.get["m"]["quar"])
-        rec = {
-            "batch_idx": batch_idx,
-            "applied_lsn": max(fence_floor, int(hi_commit)),
-            "tables": [trec], "pending": 0, "quarantined": quar,
-            "schema_changes": 0, "stopped": False, "fast_path": True,
-            "phase_ms": phase_t,
-        }
-        if quar:
-            # rare error batch: one extra decode pass for just the rejects
-            # (the fast path never persists, by design)
-            qd = self._write_quarantine(events, batch_idx)
-            if qd:
-                rec["quarantine_dir"] = qd
-        self._finish_fast(st, ctx, batch_idx, rec["applied_lsn"],
-                          seq_range, rec)
-        return rec
-
-    def _finish_fast(self, st: dict, ctx, batch_idx: int, applied: int,
-                     seq_range, rec: dict) -> None:
-        st["batch_idx"] = batch_idx + 1
-        st["catalog"] = {
-            str(oid): [list(v) for v in versions]
-            for oid, versions in ctx.catalog.items()
-        }
-        st["open_xid"] = None
-        st["open_stream_xid"] = None
-        st["aborted_subxids"] = []
-        st["origin_xids"] = sorted(
-            int(x) for x in getattr(ctx, "origin_carry", ())
-        )
-        st["applied_lsn"] = applied
-        if seq_range is not None:
-            st["max_seq"] = max(int(st.get("max_seq") or -1),
-                                int(seq_range[1]))
-        import time as _time
-
-        _t0 = _time.monotonic()
-        _append_metrics(st, rec)
-        self._save_state(st)
-        rec.setdefault("phase_ms", {})["state_save"] = int(
-            (_time.monotonic() - _t0) * 1000)
-        self._maybe_expire(batch_idx)
 
     EXPIRE_EVERY = int(os.environ.get("WALSTREAM_EXPIRE_EVERY", "64"))
     EXPIRE_KEEP = int(os.environ.get("WALSTREAM_EXPIRE_KEEP", "64"))
@@ -893,9 +748,10 @@ class ReplayEngine:
     def process_batch(self, frames: DataFrame, batch_idx: int, st: dict,
                       stop_at_lsn: int | None = None,
                       control_rows: list[dict] | None = None,
-                      seq_range: tuple[int, int] | None = None,
-                      est_frames: int | None = None) -> dict:
+                      seq_range: tuple[int, int] | None = None) -> dict:
         import time as _time
+
+        from pyspark.sql import Observation
 
         phase_t = {}
         _t0 = _time.monotonic()
@@ -917,9 +773,6 @@ class ReplayEngine:
                     f"The frame transport must preserve WAL order "
                     f"(file-based pumps: non-decreasing mtimes in seq order)."
                 )
-
-        if est_frames is None and seq_range is not None:
-            est_frames = int(seq_range[1]) - int(seq_range[0]) + 1
 
         def _mark(name):
             nonlocal _t0
@@ -969,76 +822,61 @@ class ReplayEngine:
             carry_aborted_subxids=st.get("aborted_subxids"),
             carry_origin_xids=st.get("origin_xids"),
         )
-
         _mark("control_scan")
 
-        # Speculative fast path for the dominant batch shape: every
-        # transaction completes inside the batch, nothing pending or
-        # carried, one known target table, no truncates/schema changes —
-        # then decode → compact → MERGE fuses into ONE job with the batch
-        # statistics riding as Observations, and the events-cache
-        # materialization job disappears entirely. The assumptions are
-        # VERIFIED from the observed metrics before the snapshot commit;
-        # on violation the written files are discarded and the general
-        # path below re-processes the batch (exactly-once preserved by
-        # the untouched fence).
-        names4 = ("open", "committed", "aborted", "prepared")
-        fast_ok = (
-            os.environ.get("WALSTREAM_FASTPATH", "1") == "1"
-            and stop_at_lsn is None
-            and self._pending_meta() is None
-            and getattr(ctx, "open_xid_carry", None) is None
-            and getattr(ctx, "open_stream_carry", None) is None
-            # len(), not truthiness: aborted_subxids may be a numpy array,
-            # whose bool() raises for size >= 2
-            and len(getattr(ctx, "aborted_subxids", ())) == 0
-            and not ctx.schema_changes
-            # origin-marked batches keep the general path: the fence there
-            # advances over the origin-filtered event set, and the two
-            # paths must agree on applied_lsn
-            and not getattr(ctx, "has_origin", False)
-            and all(names4[int(s)] in ("committed", "aborted")
-                    for s in ctx.xid_status)
-        )
-        if fast_ok and est_frames is not None \
-                and est_frames - len(control) >= FASTPATH_MIN_DML:
-            tnames = {v.relname for vs in ctx.catalog.values() for v in vs}
-            if len(tnames) == 1:
-                tname = next(iter(tnames))
-                if self.table(tname).exists:
-                    rec = self._process_batch_fast(
-                        frames, ctx, batch_idx, st, tname, phase_t, _mark,
-                        seq_range,
-                    )
-                    if rec is not None:
-                        return rec
-                    _mark("fast_path_fallback")
+        # 2. batch facts from the control channel, on the driver. Every
+        # committed event carries its transaction's end_lsn, so the commit
+        # high-water mark and the bounded-replay crossing commit are the
+        # committed dispositions' end_lsns. (Origin filtering drops a
+        # foreign transaction's changes, not its commit, so it still
+        # advances the fence.)
+        fence_floor = int(st.get("applied_lsn", 0))
+        commit_ends = [int(el) for el, s in zip(ctx.xid_end_lsn,
+                                                ctx.xid_status)
+                       if s == ST_COMMITTED]
+        hi_commit = max(commit_ends, default=None)
+        # bounded replay: apply only transactions whose commit end_lsn is at
+        # or before the crossing commit (commit-boundary rule)
+        effective_stop = None
+        if stop_at_lsn is not None:
+            effective_stop = min(
+                (el for el in commit_ends if el >= stop_at_lsn), default=None)
+        batch_hi = effective_stop if effective_stop is not None else hi_commit
+        resolved = {int(x) for x, s in zip(ctx.xid_sorted, ctx.xid_status)
+                    if s in (ST_COMMITTED, ST_ABORTED)}
+        meta = self._pending_meta()
+        carried = {int(x) for d in (meta or {}).get("order", [])
+                   for x in meta["deltas"][d]} - {
+            int(x) for x in (meta or {}).get("dead_xids", [])}
+        truncates = self._committed_truncates(ctx, meta, carried,
+                                              effective_stop, fence_floor)
+        # xids whose rows stay pending past this batch: open or prepared
+        # transactions of this batch (plain, streamed, truncate-only) plus
+        # carried ones this batch does not resolve
+        unresolved = ({int(x) for x in ctx.begin_xids}
+                      | {int(x) for x in ctx.span_xids}
+                      | {x for _, x, _ in ctx.truncates}
+                      | carried) - resolved - {-1}
 
-        # 2. vectorized decode (narrow); materialized ONCE — every downstream
-        # consumer (committed set, pending spill, quarantine count, truncate
-        # scan) reads the checkpointed result instead of re-running the
-        # kernel. ``_carried`` marks rows re-read from the pending store so
-        # the spill step appends only THIS batch's newly-pending rows
-        # (append-delta store — see _pending_append).
-        events = decode_frames_df(frames, ctx).withColumn(
-            "_carried", F.lit(False)
-        )
+        # 3. schema evolution before merge
+        for change in ctx.schema_changes:
+            self._apply_schema_change(change)
 
-        # 3. pending resolution: re-stamp prior open/prepared events with this
-        # batch's dispositions
+        # 4. the batch's events: the decode kernel's rows plus the pending
+        # store's rows re-stamped with this batch's dispositions.
+        # ``_carried`` marks the re-read rows so the spill appends only THIS
+        # batch's newly-pending rows (append-delta store, _pending_append).
+        # Rejects come only from the decode: count and dead-letter them
+        # from ``decoded``, which never reads the store the spill sweeps.
+        decoded = decode_frames_df(frames, ctx)
+        events = decoded.withColumn("_carried", F.lit(False))
         pending = self._load_pending()
         if pending is not None:
-            resolution = self._dispo_df(ctx)
-            pending = (
-                pending.withColumn("_carried", F.lit(True))
-                .drop("txn_status", "commit_lsn", "end_lsn", "commit_ts_us")
-                .join(F.broadcast(resolution), on="xid", how="left")
-                .withColumn("txn_status", F.coalesce("txn_status", F.lit("open")))
-                .select(*events.columns)
-            )
+            pending = pending.selectExpr(
+                *self._restamp_sql(ctx, carried, events.columns))
             # spilled rows of a since-stream-aborted SUBtransaction must not
             # apply when their top-level txn commits
-            aborted_subs = [int(x) for x in getattr(ctx, "aborted_subxids", [])]
+            aborted_subs = [int(x) for x in ctx.aborted_subxids]
             if aborted_subs:
                 pending = pending.filter(
                     F.col("sub_xid").isNull()
@@ -1049,151 +887,61 @@ class ReplayEngine:
         # option-driven event shaping (the replay analog of the reference's
         # START_REPLICATION options, src/stream.rs:1377-1446)
         if not self.options.messages:
-            events = events.filter(F.col("event_type") != "message")
-        if self.options.origin == "none" and getattr(ctx, "has_origin", False):
+            events = events.filter("event_type != 'message'")
+        if self.options.origin == "none" and ctx.has_origin:
             from .operators.raw import filter_origin
 
             # the context's xid set includes carried marks, so a foreign
             # transaction split across micro-batches stays poisoned
-            events = filter_origin(
-                events, "none",
-                foreign_xids=sorted(getattr(ctx, "origin_xids", ())),
-            )
+            events = filter_origin(events, "none",
+                                   foreign_xids=sorted(ctx.origin_xids))
 
-        # Materialize the decoded batch once, then ONE global aggregate
-        # computes every batch-level statistic the apply plan needs: a
-        # MEMORY_AND_DISK cache whose FIRST action is the stats aggregate
-        # itself — one job materializes + counts, and downstream scans get
-        # InMemoryRelation column pruning; released at batch end. Measured
-        # ~25% faster per batch than the round-2 localCheckpoint variant
-        # (which spent a dedicated full-width materialization job before
-        # the stats agg). Fewer driver round-trips per micro-batch is the
-        # main Amdahl lever at scale.
-        is_dml = (
-            F.col("event_type").isin(list(DML_TYPES)) & F.col("error").isNull()
-        )
-        is_apply = (
-            F.col("event_type").isin(list(APPLY_TYPES))
-            & F.col("error").isNull()
-        )
-        events = events.persist()
-        # any mid-batch failure (exactly what the retry taxonomy
-        # re-enters on) must release the events cache, or each retry
-        # attempt would persist a fresh copy and accumulate executor
-        # cache pressure across attempts
+        # 5. which tables. A catalog naming one existing table needs no
+        # batch statistics: its merge job decodes the batch itself and
+        # counts the rejects as an Observation. Otherwise the events are
+        # cached and ONE aggregate finds the tables with committed DML.
+        committed_sql = f"{_DML_SQL} AND txn_status = 'committed'"
+        if effective_stop is not None:
+            committed_sql += f" AND end_lsn <= {effective_stop}"
+        relnames = {v.relname for vs in ctx.catalog.values() for v in vs}
+        single = next(iter(relnames)) if len(relnames) == 1 else None
+        if single is not None and not self.table(single).exists:
+            single = None
+        quarantined = None
+        obs_q = None
+        if single is not None:
+            tables = ([single] if batch_hi is not None
+                      and batch_hi > fence_floor else [])
+            obs_q = Observation()
+            source = events.observe(obs_q, F.expr(_QUAR_SQL).alias("quar"))
+        else:
+            # the cache's FIRST action is the aggregate itself: one job
+            # materializes and counts; merges, spill and quarantine read
+            # the cache
+            events = source = events.persist()
+        # any mid-batch failure (exactly what the retry taxonomy re-enters
+        # on) must release the events cache, or each retry attempt would
+        # persist a fresh copy and accumulate executor cache pressure
         try:
-            m = events.agg(
-                F.count(F.when(F.col("error").isNotNull(), 1)).alias("quar"),
-                F.count(
-                    F.when(
-                        is_apply & F.col("txn_status").isin(["open", "prepared"]),
-                        1,
-                    )
-                ).alias("pend"),
-                F.count(
-                    F.when(
-                        is_apply
-                        & F.col("txn_status").isin(["open", "prepared"])
-                        & ~F.col("_carried"),
-                        1,
-                    )
-                ).alias("pend_new"),
-                F.collect_set(
-                    F.when(
-                        is_apply
-                        & F.col("txn_status").isin(["open", "prepared"])
-                        & ~F.col("_carried"),
-                        F.col("xid"),
-                    )
-                ).alias("pend_new_xids"),
-                F.max(
-                    F.when(F.col("txn_status") == "committed", F.col("end_lsn"))
-                ).alias("hi_commit"),
-                F.count(
-                    F.when(
-                        (F.col("event_type") == "truncate")
-                        & (F.col("txn_status") == "committed"),
-                        1,
-                    )
-                ).alias("trunc"),
-                F.collect_set(
-                    F.when(
-                        is_dml & (F.col("txn_status") == "committed"),
-                        F.col("table_name"),
-                    )
-                ).alias("tables"),
-            ).collect()[0]
-            _mark("decode_ckpt")
-
-            quarantined = int(m["quar"])
-            n_pending = int(m["pend"])
-            n_pending_new = int(m["pend_new"])
-            pend_new_xids = {
-                int(x) for x in (m["pend_new_xids"] or []) if x is not None
-            }
-            hi_commit = m["hi_commit"]
-            has_trunc = int(m["trunc"]) > 0
-            tables = sorted(t for t in (m["tables"] or []) if t is not None)
-
-            dml = events.filter(is_dml)
-            committed = dml.filter(F.col("txn_status") == "committed")
-
-            # bounded replay: apply only transactions whose commit end_lsn is at
-            # or before the crossing commit (commit-boundary rule)
-            effective_stop = None
-            if stop_at_lsn is not None:
-                crossing = (
-                    events.filter(
-                        (F.col("txn_status") == "committed")
-                        & F.col("end_lsn").isNotNull()
-                        & (F.col("end_lsn") >= stop_at_lsn)
-                    )
-                    .agg(F.min("end_lsn"))
-                    .collect()[0][0]
-                )
-                if crossing is not None:
-                    effective_stop = int(crossing)
-                    committed = committed.filter(F.col("end_lsn") <= effective_stop)
-                    tables = sorted(
-                        r["table_name"]
-                        for r in committed.select("table_name").distinct().collect()
-                    )
+            if single is None:
+                m = events.agg(
+                    F.expr(_QUAR_SQL).alias("quar"),
+                    F.expr(f"collect_set(CASE WHEN {committed_sql} "
+                           "THEN table_name END)").alias("tables"),
+                ).collect()[0]
+                quarantined = int(m["quar"])
+                tables = sorted(t for t in m["tables"] if t is not None)
             _mark("batch_stats")
-
-            # next-batch pending delta: ONLY rows newly pending from this
-            # batch's frames (carried rows already live in the store); spills
-            # every apply-relevant type (DML + truncate) so open-txn truncates
-            # survive batch boundaries
-            nxt = events.filter(
-                is_apply
-                & F.col("txn_status").isin(["open", "prepared"])
-                & ~F.col("_carried")
-            ).drop("_carried")
-
-            # 4. schema evolution before merge
-            for change in ctx.schema_changes:
-                self._apply_schema_change(change)
-
-            # 5+6. per-table compaction + fenced merge. Every table merged this
-            # batch is fenced at the batch's global committed high-water mark —
-            # the engine applies batches in sequence against one global fence
-            # floor, so per-table fences only need to be monotonic with it, and
-            # the global hi makes duplicate-batch skips exact for all tables.
-            fence_floor = int(st.get("applied_lsn", 0))
-            batch_applied = fence_floor
-            merged = []
-            truncates = (
-                self._committed_truncates(events, effective_stop, fence_floor)
-                if has_trunc
-                else {}
-            )
-            batch_hi = (
-                effective_stop if effective_stop is not None
-                else (int(hi_commit) if hi_commit is not None else None)
-            )
-            _mark("plan_tables")
+            committed = source.filter(committed_sql)
             merge_list = sorted(set(tables) | set(truncates))
+            _mark("plan_tables")
 
+            # 6. per-table fenced merges. Every table merged this batch is
+            # fenced at the batch's global committed high-water mark — the
+            # engine applies batches in sequence against one global fence
+            # floor, so per-table fences only need to be monotonic with it,
+            # and the global hi makes duplicate-batch skips exact for all
+            # tables.
             def _one(tname):
                 return self._merge_table(
                     tname, committed, truncates.get(tname), batch_idx,
@@ -1203,65 +951,45 @@ class ReplayEngine:
             if len(merge_list) > 1:
                 # per-table merges are independent (distinct table dirs,
                 # distinct snapshot logs) — run them as concurrent driver
-                # threads so their Spark jobs interleave instead of serializing
-                # one table's write behind another's
+                # threads so their Spark jobs interleave instead of
+                # serializing one table's write behind another's
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(min(len(merge_list), 8)) as pool:
                     recs = list(pool.map(_one, merge_list))
             else:
                 recs = [_one(t) for t in merge_list]
-            for rec in recs:
-                if rec:
-                    merged.append(rec)
-                    batch_applied = max(batch_applied, rec["applied_lsn"])
-
+            merged = [r for r in recs if r]
+            batch_applied = max([fence_floor] + [r["applied_lsn"]
+                                                 for r in merged])
             # max applied lsn this batch (even for tables with no DML)
             if batch_hi is not None:
                 batch_applied = max(batch_applied, int(batch_hi))
-
+            # a merge the table fence skipped ran no job: its Observation
+            # never fires and must not be read
+            if obs_q is not None and any(not r["skipped"] for r in merged):
+                quarantined = int(obs_q.get["quar"])
             _mark("merges")
 
-            # 7. carry-over: newly-pending rows append one delta; resolved xids
-            # tombstone; store cleared outright once nothing is pending
-            if n_pending:
-                names = ("open", "committed", "aborted", "prepared")
-                resolved = {
-                    int(x) for x, i in zip(ctx.xid_sorted, ctx.xid_status)
-                    if names[i] in ("committed", "aborted")
-                }
-                self._pending_append(
-                    nxt if n_pending_new else None, pend_new_xids,
-                    resolved, batch_idx,
-                )
+            # 7. carry-over: newly-pending rows append one delta; resolved
+            # xids tombstone; store cleared outright once nothing is pending
+            n_pending = 0
+            if unresolved:
+                m = self._pending_append(events, resolved, batch_idx)
+                n_pending = int(m["pend"])
+                if quarantined is None:
+                    quarantined = int(m["quar"])
             else:
                 self._pending_clear()
             _mark("pending_spill")
 
-            # 8. persist engine state (atomic). A bounded-replay stop leaves the
-            # batch NOT fully applied — keep the cursor on it so a later resume
-            # reprocesses it (the LSN fence makes that idempotent), exactly the
-            # reference's restart-from-confirmed-LSN contract.
-            st["batch_idx"] = batch_idx + (0 if effective_stop is not None else 1)
-            st["catalog"] = {
-                str(oid): [list(v) for v in versions]
-                for oid, versions in ctx.catalog.items()
-            }
-            st["open_xid"] = getattr(ctx, "open_xid_carry", None)
-            st["open_stream_xid"] = getattr(ctx, "open_stream_carry", None)
-            # sub-abort markers must outlive the batch while their top-level
-            # txns are still pending; once nothing is pending they are spent
-            st["aborted_subxids"] = (
-                [int(x) for x in getattr(ctx, "aborted_subxids", [])]
-                if n_pending else []
-            )
-            # origin marks of still-unresolved foreign txns survive the batch
-            st["origin_xids"] = sorted(
-                int(x) for x in getattr(ctx, "origin_carry", ())
-            )
-            st["applied_lsn"] = batch_applied
-            if seq_range is not None:
-                st["max_seq"] = max(int(st.get("max_seq") or -1), int(seq_range[1]))
+            # 8. quarantine, metrics, engine state (atomic). A bounded-replay
+            # stop leaves the batch NOT fully applied — keep the cursor on
+            # it so a later resume reprocesses it (the LSN fence makes that
+            # idempotent), exactly the reference's restart-from-confirmed-
+            # LSN contract.
+            if quarantined is None:
+                quarantined = decoded.filter("error IS NOT NULL").count()
             rec = {
                 "batch_idx": batch_idx,
                 "applied_lsn": batch_applied,
@@ -1273,15 +1001,35 @@ class ReplayEngine:
                 "phase_ms": phase_t,
             }
             if quarantined:
-                qd = self._write_quarantine(events, batch_idx)
+                qd = self._write_quarantine(decoded, batch_idx)
                 if qd:
                     rec["quarantine_dir"] = qd
+            st["batch_idx"] = batch_idx + (0 if effective_stop is not None else 1)
+            st["catalog"] = {
+                str(oid): [list(v) for v in versions]
+                for oid, versions in ctx.catalog.items()
+            }
+            st["open_xid"] = ctx.open_xid_carry
+            st["open_stream_xid"] = ctx.open_stream_carry
+            # sub-abort markers must outlive the batch while their top-level
+            # txns are still pending; once nothing is pending they are spent
+            st["aborted_subxids"] = (
+                [int(x) for x in ctx.aborted_subxids] if n_pending else []
+            )
+            # origin marks of still-unresolved foreign txns survive the batch
+            st["origin_xids"] = sorted(int(x) for x in ctx.origin_carry)
+            st["applied_lsn"] = batch_applied
+            if seq_range is not None:
+                st["max_seq"] = max(int(st.get("max_seq") or -1),
+                                    int(seq_range[1]))
             _append_metrics(st, rec)
             self._save_state(st)
             self._maybe_expire(batch_idx)
+            _mark("state_save")
             return rec
         finally:
-            events.unpersist()
+            if single is None:
+                events.unpersist()
 
     # ---------------------------------------------------------------- helpers
 
@@ -1294,8 +1042,8 @@ class ReplayEngine:
         decode error string — under <warehouse>/quarantine/, so an operator
         can inspect, fix the producer, and re-extract the raw frames from
         the retained WAL files by seq. Runs only when the reject count is
-        already known non-zero (zero cost on clean batches; on the general
-        path the events cache makes it one cheap filtered scan). The
+        already known non-zero (zero cost on clean batches; one more decode
+        pass on error batches). The
         reference's analog is the error event surfaced to the consumer
         (decode error path); here the consumer is the lake, so rejects get
         a durable side channel instead. Never fails the batch."""
@@ -1316,22 +1064,37 @@ class ReplayEngine:
                 "quarantine write failed: %s", e)
             return None
 
-    def _dispo_df(self, ctx) -> DataFrame:
-        names = ["open", "committed", "aborted", "prepared"]
-        rows = [
-            (int(x), names[i], int(cl) if names[i] == "committed" else None,
-             int(el) if names[i] == "committed" else None,
-             int(ts) if names[i] == "committed" else None)
-            for x, i, cl, el, ts in zip(
-                ctx.xid_sorted, ctx.xid_status,
-                ctx.xid_commit_lsn, ctx.xid_end_lsn, ctx.xid_ts,
-            )
-        ]
-        return self.spark.createDataFrame(
-            rows,
-            "xid long, txn_status string, commit_lsn long, end_lsn long, "
-            "commit_ts_us long",
-        )
+    @staticmethod
+    def _restamp_sql(ctx, xids, columns) -> list[str]:
+        """Select list re-stamping carried pending rows with this batch's
+        dispositions (xids it does not resolve stay open). Literal maps
+        over the carried xids, not a join with a side relation, so the
+        re-stamp adds no broadcast job to the batch."""
+        xids = sorted(xids)
+        status, cl, el, ts = ctx.disposition(np.array(xids, np.int64))
+        done = status == ST_COMMITTED
+
+        def lookup(keep, vals, ty):
+            pairs = [f"{x}L, {v}" for x, k, v in zip(xids, keep, vals) if k]
+            if not pairs:
+                return f"CAST(NULL AS {ty})"
+            return f"element_at(map({', '.join(pairs)}), xid)"
+
+        def lsns(vals):
+            return lookup(done, [f"CAST({v} AS BIGINT)" for v in vals],
+                          "BIGINT")
+
+        sub = {
+            "txn_status": "coalesce({}, 'open')".format(lookup(
+                status != ST_OPEN, [f"'{n}'" for n in _STATUS_NAMES[status]],
+                "STRING")),
+            "commit_lsn": lsns(cl),
+            "end_lsn": lsns(el),
+            "commit_ts_us": lsns(ts),
+            "_carried": "true",
+        }
+        return [f"{sub[c]} AS {c}" if c in sub else f"`{c}`"
+                for c in columns]
 
     # widening PG type promotions the lake applies as metadata-only schema
     # updates (parquet up-casts old files at read time); anything else is
@@ -1424,21 +1187,49 @@ class ReplayEngine:
                 "lsn": lsn,
             })
 
-    def _committed_truncates(self, events: DataFrame, effective_stop,
-                             fence_floor: int) -> dict:
-        tr = events.filter(
-            (F.col("event_type") == "truncate")
-            & (F.col("txn_status") == "committed")
-            & (F.col("end_lsn") > fence_floor)
-        )
-        if effective_stop is not None:
-            tr = tr.filter(F.col("end_lsn") <= effective_stop)
+    def _committed_truncates(self, ctx, meta, carried: set[int],
+                             effective_stop, fence_floor: int) -> dict:
+        """{table: (commit_lsn, seq, end_lsn)} of each table's last truncate
+        committed past the fence, on the driver: this batch's TRUNCATE
+        frames from the control channel, plus the truncate rows of the
+        ``carried`` (live pending) transactions this batch commits, read
+        from the pending store with pyarrow."""
+        import pyarrow.parquet as pq
+
+        found = list(ctx.truncates)
+        now = carried & {int(x) for x, s in zip(ctx.xid_sorted,
+                                                ctx.xid_status)
+                         if s == ST_COMMITTED}
+        for d in (meta or {}).get("order", []):
+            if not now.intersection(meta["deltas"][d]):
+                continue
+            ddir = os.path.join(self.pending_dir, d)
+            for f in sorted(os.listdir(ddir)):
+                if not f.endswith(".parquet"):
+                    continue
+                for r in pq.read_table(
+                    os.path.join(ddir, f),
+                    columns=["seq", "xid", "truncate_tables"],
+                    filters=[("event_type", "=", "truncate")],
+                ).to_pylist():
+                    if r["xid"] in now:
+                        found.append((r["seq"], r["xid"],
+                                      r["truncate_tables"] or ()))
+        # origin 'none' drops a foreign transaction's truncates with its DML
+        foreign = ctx.origin_xids if self.options.origin == "none" else ()
         out: dict[str, tuple] = {}
-        for r in tr.select("truncate_tables", "commit_lsn", "seq",
-                           "end_lsn").collect():
-            for t in r["truncate_tables"] or []:
+        if not found:
+            return out
+        status, cl, el, _ = ctx.disposition(
+            np.array([x for _, x, _ in found], np.int64))
+        for (seq, xid, names), s_, c_, e_ in zip(found, status, cl, el):
+            if (xid < 0 or s_ != ST_COMMITTED or xid in foreign
+                    or e_ <= fence_floor
+                    or (effective_stop is not None and e_ > effective_stop)):
+                continue
+            pos = (int(c_), int(seq), int(e_))
+            for t in names:
                 cur = out.get(t)
-                pos = (r["commit_lsn"], r["seq"], r["end_lsn"])
                 if cur is None or pos[:2] > cur[:2]:
                     out[t] = pos
         return out
@@ -1446,21 +1237,18 @@ class ReplayEngine:
     def _merge_table(self, tname: str, committed: DataFrame,
                      truncate_pos, batch_idx: int, fence_floor: int, ctx,
                      lsn_hi=None):
-        """One table's share of a general-path batch, applied by the
+        """One table's share of a batch, applied by the
         bucket-co-located merge kernel (``LakeTable.merge_bucketed``): it
         reads only the buckets its change rows hash to, the old-key bucket
         of a key-changing update included."""
         t = self.table(tname)
-        ev = committed.filter(
-            (F.col("table_name") == tname) & (F.col("end_lsn") > fence_floor)
-        )
+        cond = f"table_name = {_qs(tname)} AND end_lsn > {int(fence_floor)}"
         if truncate_pos is not None:
             # discard images at or before the truncate position
             tc, tseq, _ = truncate_pos
-            ev = ev.filter(
-                (F.col("commit_lsn") > tc)
-                | ((F.col("commit_lsn") == tc) & (F.col("seq") > tseq))
-            )
+            cond += (f" AND (commit_lsn > {tc} OR (commit_lsn = {tc} "
+                     f"AND seq > {tseq}))")
+        ev = committed.filter(cond)
         if not t.exists:
             # table appeared mid-stream: create empty from the relation
             # catalog's announced schema (name + type oids + key flags)

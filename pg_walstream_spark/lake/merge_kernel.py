@@ -178,15 +178,16 @@ def spark_type_to_arrow(ty: str) -> pa.DataType:
     return to_arrow_type(_parse_datatype_string(ty))
 
 
+# Arrow's global thread pool inside executor Python workers: the default
+# pool is CPU-wide, so N concurrent tasks x N-thread pools oversubscribes
+# quadratically at high parallelism (the local[32] driver condition). 2
+# threads keep the Acero task queue draining without a scheduler stall.
+KERNEL_ARROW_CPUS = 2
+
+
 def _bound_arrow_pool() -> None:
-    """Cap Arrow's global thread pool inside executor Python workers: the
-    default pool is CPU-wide, so N concurrent tasks x N-thread pools
-    oversubscribes quadratically at high parallelism (the local[32] driver
-    condition). 2 threads is enough to keep the Acero task queue draining
-    without a dedicated scheduler stall."""
-    want = int(os.environ.get("WALSTREAM_KERNEL_ARROW_CPUS", "2"))
-    if pa.cpu_count() != want:
-        pa.set_cpu_count(want)
+    if pa.cpu_count() != KERNEL_ARROW_CPUS:
+        pa.set_cpu_count(KERNEL_ARROW_CPUS)
 
 
 def _np_bool(arr: pa.ChunkedArray | pa.Array) -> np.ndarray:
@@ -201,7 +202,8 @@ def compact_images_arrow(tbl: pa.Table, key_cols: list[str],
     ``compact_last_image`` (operators/compact.py): per key, last ``_op`` by
     (commit_lsn, seq); per column, the value of the latest non-TOAST upsert
     image; columns never materialized in-batch become carry-forward flags
-    (``__p_<c>`` true ≅ membership in the general path's ``_toast`` array).
+    (``__p_<c>`` true ≅ membership in the declarative merge's ``_toast``
+    array).
 
     Returns (compacted table, null-key quarantined count). Output columns:
     key cols, ``_bucket``, ``__op`` ('upsert'/'delete'), and per data column

@@ -44,6 +44,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.compact import _qi, _qs
 
 
+# zstd for lake data: write volume dominates the merge tail — measured 12%
+# faster merges at 8 cores (RAM-backed dir) vs snappy/uncompressed, ~4%
+# slower at 1 core where CPU binds; at cluster scale storage IO is the
+# constraint and the smaller files also cut every subsequent target scan
+LAKE_CODEC = "zstd"
+
+
 def _atomic_write(path: str, payload: str) -> None:
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
@@ -55,7 +62,7 @@ def _atomic_write(path: str, payload: str) -> None:
 # lineage log would make commit cost grow with table age (at 10^6 batches
 # the snapshot itself becomes a per-batch serial cost). Keep the last N
 # records verbatim and roll older ones into one aggregate summary row.
-LINEAGE_CAP = int(os.environ.get("WALSTREAM_LINEAGE_CAP", "256"))
+LINEAGE_CAP = 256
 
 
 def _append_lineage(lineage: list[dict], record: dict,
@@ -603,13 +610,7 @@ class LakeTable:
         out_dir = os.path.join(self.data_dir, f"s{snapshot_version}-{uuid.uuid4().hex[:8]}")
         (
             df_with_bucket.repartition("_bucket").write.partitionBy("_bucket")
-            # zstd for lake data: write volume dominates the merge tail —
-            # measured 12% faster merges at 8 cores (RAM-backed dir) vs
-            # snappy/uncompressed, ~4% slower at 1 core where CPU binds;
-            # at cluster scale storage IO is the constraint and the
-            # smaller files also cut every subsequent target scan
-            .option("compression",
-                    os.environ.get("WALSTREAM_LAKE_CODEC", "zstd"))
+            .option("compression", LAKE_CODEC)
             .mode("overwrite")
             .parquet(out_dir)
         )
@@ -729,8 +730,7 @@ class LakeTable:
             ]
             cl_df = changes.selectExpr(*sel_cl)
             (cl_df.write.mode("overwrite")
-             .option("compression",
-                     os.environ.get("WALSTREAM_LAKE_CODEC", "zstd"))
+             .option("compression", LAKE_CODEC)
              .parquet(cl_dir))
             cl_files = sorted(
                 self._rel(os.path.join(cl_dir, f))
@@ -861,7 +861,6 @@ class LakeTable:
         applied_lsn: int,
         batch_id: int | str = 0,
         truncate_first: bool = False,
-        pre_commit_check=None,
     ) -> dict:
         """Exactly-once MERGE via the bucket-co-located Arrow kernel
         (lake/merge_kernel.py) — same contract and lineage record shape as
@@ -880,8 +879,6 @@ class LakeTable:
         Every batch runs the kernel: a task streams its bucket's target one
         parquet row group at a time and joins on the key columns only, so
         neither bucket size nor column type needs another path.
-        ``pre_commit_check(record)`` runs before the snapshot commit; if it
-        raises, the written files are discarded and the error propagates.
         """
         from .. import ensure_shipped
         from .merge_kernel import (
@@ -931,7 +928,6 @@ class LakeTable:
         out_dir = os.path.join(
             self.data_dir, f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}")
         os.makedirs(out_dir, exist_ok=True)
-        codec = os.environ.get("WALSTREAM_LAKE_CODEC", "zstd")
         # change-data-feed: the kernel task writes its bucket's compacted
         # change records alongside the merge (same pass, zero extra jobs);
         # only files named in winning stats rows are committed
@@ -955,7 +951,7 @@ class LakeTable:
                 if m:
                     masks[f] = m
         fn = make_merge_kernel(
-            bucket_files, schema, key_cols, out_dir, codec,
+            bucket_files, schema, key_cols, out_dir, LAKE_CODEC,
             changelog=cl_spec, aliases=snap.get("aliases") or None,
             masks=masks or None)
         withb = images.withColumn(
@@ -1057,19 +1053,6 @@ class LakeTable:
             "skipped": False,
         }
         _mark("stats_ms")
-        if pre_commit_check is not None:
-            try:
-                pre_commit_check(record)
-            except Exception:
-                import shutil
-
-                shutil.rmtree(out_dir, ignore_errors=True)
-                if cl_spec is not None:
-                    shutil.rmtree(cl_spec[0], ignore_errors=True)
-                raise
-        # post-job listener wait: Observation.get blocks on the async
-        # QueryExecutionListener bus, a fixed driver-serial cost
-        _mark("precommit_ms")
         snap2 = {
             "version": snap["version"] + 1,
             "schema": snap["schema"],

@@ -131,6 +131,10 @@ class DecodeContext:
         # not just the batch holding the ORIGIN frame
         self.origin_xids: set[int] = set()
         self.origin_carry: set[int] = set()
+        # TRUNCATE frames of the batch: (seq, xid, relation names), stamped
+        # exactly as the decode kernel stamps the truncate row, so the
+        # engine reads truncate positions here instead of from the events
+        self.truncates: list[tuple[int, int, tuple]] = []
 
     # -- lookups (all vectorized) ------------------------------------------
 
@@ -264,6 +268,7 @@ def build_context(
     span_s, span_e, span_x = [], [], []
     beg_s, beg_x, beg_e = [], [], []
     dispo: dict[int, tuple] = {}
+    truncs: list[tuple[int, int, tuple]] = []
     open_begin_idx: int | None = None
 
     if carry_open_xid is not None:
@@ -367,6 +372,10 @@ def build_context(
             )
             if enclosing is not None:
                 origin_xids.add(int(enclosing))
+        elif et == "truncate":
+            rvs = (ctx.relation_version(o, seq) for o in m["oids"])
+            truncs.append((seq, m.get("xid") or -1,
+                           tuple(rv.relname for rv in rvs if rv is not None)))
         elif et == "stream_abort":
             # subxid == xid → the whole streamed transaction aborts;
             # subxid != xid → ONLY the subtransaction's span of changes is
@@ -376,7 +385,7 @@ def build_context(
                 dispo[m["xid"]] = (ST_ABORTED, 0, 0, 0)
             else:
                 aborted_subxids.add(m["subxid"])
-        # origin/type/message/truncate: no context effect
+        # type/message: no context effect
 
     ctx.span_starts = np.array(span_s, np.int64)
     ctx.span_stops = np.array(span_e, np.int64)
@@ -394,6 +403,14 @@ def build_context(
             [_i64(dispo[x][2]) for x in xids], np.int64)
         ctx.xid_ts = np.array([dispo[x][3] for x in xids], np.int64)
     ctx.open_xid_carry = beg_x[open_begin_idx] if open_begin_idx is not None else None
+    if truncs:
+        # an xid-less truncate belongs to its enclosing begin..commit span
+        # (_stamp_txn), known only once every span is closed
+        seqs = np.array([t[0] for t in truncs], np.int64)
+        txids = np.array([t[1] for t in truncs], np.int64)
+        txids = np.where(txids >= 0, txids, ctx.txn_of(seqs))
+        ctx.truncates = [(int(sq), int(x), names) for (sq, _, names), x
+                         in zip(truncs, txids)]
     open_spans = [x for s_, e_, x in zip(span_s, span_e, span_x)
                   if e_ == 1 << 62]
     ctx.open_stream_carry = open_spans[-1] if open_spans else None

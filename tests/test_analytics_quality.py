@@ -423,15 +423,22 @@ def test_audio_resample_matches_formula(spark):
 @pytest.mark.parametrize("vecs, detail", [
     ([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0]], r"\[3, 4\] and 0 null"),
     ([[1.0, 0.0, 0.0, 0.0], None], r"\[4\] and 1 null"),
+    ([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], r"\[3\] and 0 null"),
 ])
 def test_ann_lsh_arrow_rejects_ragged_or_null_vectors(spark, vecs, detail):
-    """The broadcast rescore needs one dense (n x dim) matrix: a ragged or
-    null embedding must raise an actionable ValueError naming the column,
-    the widths seen and the null count, not numpy's inhomogeneous-shape
-    error."""
+    """Both Arrow LSH kernels need one dense (n x dim) matrix: a ragged,
+    null or wrong-width embedding must raise an actionable ValueError
+    naming the column, the expected dim, the widths seen and the null
+    count, not numpy's inhomogeneous-shape or matmul error. The bucket
+    kernel checks each Arrow batch inside its task (one partition here, so
+    one batch) and Spark re-raises the task's error."""
     from pg_walstream_spark.analytics import similarity as sim
 
     emb = spark.createDataFrame(list(enumerate(vecs)),
                                 "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="'embedding'.*" + detail):
+    want = "'embedding'.*dim=4.*" + detail
+    with pytest.raises(ValueError, match=want):
         sim.ann_lsh_pairs_arrow(emb, dim=4)
+    with pytest.raises(Exception, match="ValueError: lsh_buckets_arrow: "
+                                        "column " + want):
+        sim.lsh_buckets_arrow(emb.coalesce(1), dim=4).collect()

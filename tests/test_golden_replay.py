@@ -84,10 +84,10 @@ def test_e2e_mixed_dml_two_tables(spark, tmp_path):
 
 
 def test_e2e_split_txn_general_path_uses_merge_kernel(spark, tmp_path):
-    """batch_frames cuts transactions, so every batch takes the general
-    path (pending store): each of its per-table merges — two tables per
-    batch, merged on concurrent driver threads — must run the merge
-    kernel, and the state must match golden."""
+    """batch_frames cuts transactions, so batches spill to and resolve
+    from the pending store: each per-table merge — two tables per batch,
+    merged on concurrent driver threads — must run the merge kernel, and
+    the state must match golden."""
     base, b = wg.gen_mixed_dml(n_base=80, n_txns=12, ops_per_txn=8)
     frames = b.to_table()
     bases = {"repos": base.slice(0, 40), "repos_full": base.slice(40)}
@@ -100,12 +100,12 @@ def test_e2e_split_txn_general_path_uses_merge_kernel(spark, tmp_path):
         eng.bootstrap_table(name, spark.read.parquet(bp), ["repo", "path"],
                             n_buckets=8)
     res = eng.replay_frames(frames_dir, batch_frames=45)
-    general = [r for r in res["records"] if not r.get("fast_path")]
-    assert len(general) == len(res["records"]) > 2
-    trecs = [tr for r in general for tr in r["tables"]]
+    recs = res["records"]
+    assert len(recs) > 2
+    trecs = [tr for r in recs for tr in r["tables"]]
     assert len({tr["table"] for tr in trecs}) == 2
     assert all(tr["merge_kernel"] is True for tr in trecs)
-    assert any(r["pending"] for r in general)
+    assert any(r["pending"] for r in recs)
     assert_matches_golden(spark, eng, bases, frames, "repos")
     assert_matches_golden(spark, eng, bases, frames, "repos_full")
 
@@ -388,6 +388,10 @@ def test_e2e_origin_option(spark, tmp_path, origin_mode, expect_foreign):
     assert lake.read(spark).filter("repo = 'orgF/foreign'").count() == \
         expect_foreign
     assert lake.read(spark).count() == 20 + 4 + expect_foreign
+    # the foreign transaction commits last: origin filtering drops its
+    # changes, not its commit, so the fence still advances past it
+    assert eng._load_state()["applied_lsn"] == b.commit_lsns[-1]
+    assert lake.applied_lsn() == b.commit_lsns[-1]
 
 
 @pytest.mark.parametrize("batch_frames", [3, 10])
@@ -540,6 +544,34 @@ def test_quarantine_dead_letter_rows_persisted(spark, tmp_path):
     assert all(r["seq"] is not None for r in rows)
     recs = eng._load_state()["metrics"]
     assert any("quarantine_dir" in m for m in recs)
+
+    # a single-table batch that commits nothing (its one transaction is
+    # prepared, then rolled back) still counts and persists its reject —
+    # also after resolving the carried transaction clears the pending store
+    from pg_walstream_spark.protocol import encoder as e
+
+    b2 = wg.WalBuilder(7)
+    b2.relation(wg.REPOS_OID, "repos", wg.REPOS_COLUMNS)
+    xid, p = b2.alloc_xid(), b2.lsn
+    b2.emit(e.encode_begin_prepare(p, p + 1, 0, xid, "gid-q"))
+    b2.emit(e.encode_insert(wg.REPOS_OID, wg.row_tuple({
+        "repo": "orgQ/rolled", "path": "q.py", "commit": "3" * 40,
+        "lang": "python", "content": "rolled back"})))
+    b2.emit(b"Z\x01\x02\x03")
+    b2.emit(e.encode_prepare(p, b2.lsn + 30, 0, xid, "gid-q"))
+    b2.emit(e.encode_rollback_prepared(p, b2.lsn + 20, 0, 0, xid, "gid-q"))
+    frames2 = b2.to_table()
+    tmp2 = os.path.join(str(tmp_path), "aborted")
+    os.makedirs(tmp2)
+    eng2 = run_engine(spark, tmp2, {"repos": base}, frames2, batch_frames=3)
+    first, rec = eng2._load_state()["metrics"]
+    assert (first["quarantined"], first["pending"]) == (0, 1)
+    assert rec["quarantined"] == 1
+    assert rec["pending"] == 0
+    assert eng2._pending_meta() is None
+    rows2 = spark.read.parquet(rec["quarantine_dir"]).collect()
+    assert [r["seq"] for r in rows2] == [3]
+    assert_matches_golden(spark, eng2, {"repos": base}, frames2)
 
 
 def test_quarantine_disabled_by_env(spark, tmp_path, monkeypatch):

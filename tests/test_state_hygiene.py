@@ -121,141 +121,138 @@ def test_metrics_and_lineage_bounded_at_1000_batches():
     assert len(json.dumps(lin)) < 128_000
 
 
-def test_fast_path_merge_matches_general_path_and_golden(spark, tmp_path,
-                                                         monkeypatch):
-    """The speculative one-job fast path (complete-txn single-table batch)
-    must land byte-identical lake state and fence as the general cached
-    path and the sequential golden applier."""
-    import pg_walstream_spark.engine as E
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    base, b = wg.gen_basic(n_base=50, n_txns=8, ops_per_txn=6)
-    frames = b.to_table()
+def _stage(spark, tmp_path, bases: dict, frames):
+    """Write ``frames`` and bootstrap one lake table per ``bases`` entry."""
     fd = os.path.join(str(tmp_path), "frames")
     wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-
-    def run(flag):
-        monkeypatch.setenv("WALSTREAM_FASTPATH", flag)
-        wh = os.path.join(str(tmp_path), f"wh_{flag}")
-        eng = E.ReplayEngine(spark, wh)
-        eng.bootstrap_table("repos", spark.read.parquet(bp),
-                            ["repo", "path"], 8)
-        res = eng.replay_frames(fd, batch_frames=100_000)
-        lake = eng.table("repos")
-        rows = sorted((r["repo"], r["path"], r["content"])
-                      for r in lake.read(spark).collect())
-        return res["records"][0], rows, lake.applied_lsn()
-
-    rec_fast, rows_fast, lsn_fast = run("1")
-    rec_gen, rows_gen, lsn_gen = run("0")
-    assert rec_fast.get("fast_path") is True
-    assert "fast_path" not in rec_gen
-    assert rows_fast == rows_gen and lsn_fast == lsn_gen
-    golden_rows, glsn = golden_final_state({"repos": base}, frames, "repos")
-    want = sorted((r["repo"], r["path"], r["content"])
-                  for r in golden_rows)
-    assert rows_fast == want and lsn_fast == glsn
+    wh = os.path.join(str(tmp_path), "wh")
+    eng = ReplayEngine(spark, wh)
+    for name, tbl in bases.items():
+        bp = os.path.join(str(tmp_path), f"base_{name}.parquet")
+        wg.write_base(tbl, bp)
+        eng.bootstrap_table(name, spark.read.parquet(bp), ["repo", "path"], 8)
+    return fd, wh
 
 
-def test_fast_path_speculation_discards_on_truncate(spark, tmp_path,
-                                                    monkeypatch):
-    """A truncate inside an otherwise fast-eligible batch is only visible
-    AFTER decode: the fast path must observe it, discard the written
-    files without committing, and the general-path fallback must land the
-    exact golden state (exactly-once preserved by the untouched fence)."""
-    import pg_walstream_spark.engine as E
+class _JobCounter(ReplayEngine):
+    """Runs each ``process_batch`` under its own Spark job group and
+    records the DataFrame persist/unpersist calls it makes."""
 
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    base, b = wg.gen_truncate(n_base=40)
-    frames = b.to_table()
-    fd = os.path.join(str(tmp_path), "frames")
-    wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
-    res = eng.replay_frames(fd, batch_frames=100_000)
-    rec = res["records"][0]
-    assert "fast_path" not in rec  # fell back
-    assert "fast_path_fallback" in rec["phase_ms"]  # ...after speculating
-    _assert_golden(spark, eng, base, frames)
-    # the discarded speculative write left no file referenced by the
-    # committed snapshot pointing at a nonexistent path
-    lake = eng.table("repos")
-    for fl in lake.snapshot()["files"].values():
-        for f in fl:
-            assert os.path.exists(lake._abs(f))
+    def __init__(self, spark, warehouse, monkeypatch):
+        super().__init__(spark, warehouse)
+        self.groups: dict[int, str] = {}
+        self.calls: list[tuple] = []
+        # the session's concrete DataFrame class: it overrides the
+        # methods of the public pyspark.sql.DataFrame
+        cls = type(spark.range(0))
+        for name in ("persist", "unpersist"):
+            orig = getattr(cls, name)
+
+            def spy(df, *a, _orig=orig, _name=name, **k):
+                self.calls.append((_name,))
+                return _orig(df, *a, **k)
+
+            monkeypatch.setattr(cls, name, spy)
+
+    def process_batch(self, frames, batch_idx, st, **k):
+        sc = self.spark.sparkContext
+        group = self.groups[batch_idx] = f"pb-{id(self)}-{batch_idx}"
+        sc.setJobGroup(group, "process_batch")
+        try:
+            rec = super().process_batch(frames, batch_idx, st, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        self.calls.append(("end", batch_idx))
+        return rec
+
+    def jobs(self) -> dict[int, int]:
+        """Spark jobs per batch. Job events reach the status store through
+        the asynchronous listener bus: read it once the bus is drained."""
+        sc = self.spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {i: len(sc.statusTracker().getJobIdsForGroup(g))
+                for i, g in self.groups.items()}
 
 
-def test_fast_path_duplicate_batch_fence_skip_no_deadlock(spark, tmp_path,
-                                                          monkeypatch):
-    """Fresh engine state over an already-applied lake: the fast path's
-    merge is skipped by the TABLE fence without running any Spark job —
-    the batch observation must then not be read (obs.get on a never-run
-    plan blocks forever; the original hang). Since no job verified the
-    speculative shape, the fast path must FALL BACK to the general path
-    (not commit state on unverified assumptions) and the replay must stay
-    idempotent."""
-    import pg_walstream_spark.engine as E
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
+def test_fast_path_duplicate_batch_fence_skip_no_deadlock(spark, tmp_path):
+    """Fresh engine state over an already-applied lake: the single-table
+    merge is skipped by the TABLE fence without running any Spark job, so
+    the reject-count Observation riding on that merge never fires and
+    must not be read (obs.get on a never-run plan blocks forever; the
+    original hang). The batch still reports its reject count and the
+    replay stays idempotent."""
     base, b = wg.gen_basic(n_base=40, n_txns=5, ops_per_txn=5)
     frames = b.to_table()
-    fd = os.path.join(str(tmp_path), "frames")
-    wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-    wh = os.path.join(str(tmp_path), "wh")
-    eng = E.ReplayEngine(spark, wh)
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    eng = ReplayEngine(spark, wh)
     res1 = eng.replay_frames(fd, batch_frames=100_000)
-    assert res1["records"][0].get("fast_path") is True
+    assert res1["records"][0]["tables"][0]["skipped"] is False
     lsn1 = eng.table("repos").applied_lsn()
     os.remove(eng.state_path)  # engine state lost; the lake fence survives
-    eng2 = E.ReplayEngine(spark, wh)
+    eng2 = ReplayEngine(spark, wh)
     res2 = eng2.replay_frames(fd, batch_frames=100_000)  # hung before fix
     rec = res2["records"][0]
-    assert "fast_path" not in rec  # fence skip ⇒ unverified ⇒ fell back
-    assert "fast_path_fallback" in rec["phase_ms"]
-    assert rec["tables"] == [] or rec["tables"][0].get("skipped")
+    assert [t["skipped"] for t in rec["tables"]] == [True]
+    assert rec["quarantined"] == 0
+    assert rec["applied_lsn"] == lsn1
     assert eng2.table("repos").applied_lsn() == lsn1
     _assert_golden(spark, eng2, base, frames)
 
 
 def test_fast_path_materializes_no_cache(spark, tmp_path, monkeypatch):
-    """The point of the fused fast path is eliminating the full-batch
-    events-cache materialization: a fast-path replay must complete without
-    a single DataFrame.persist call."""
-    from pyspark.sql import DataFrame
-
-    import pg_walstream_spark.engine as E
-
-    monkeypatch.setattr(E, "FASTPATH_MIN_DML", 10)
-    monkeypatch.setenv("WALSTREAM_FASTPATH", "1")
-    calls = []
-    orig = DataFrame.persist
-
-    def spy(self, *a, **k):
-        calls.append(1)
-        return orig(self, *a, **k)
-
-    monkeypatch.setattr(DataFrame, "persist", spy)
+    """A single-table batch of complete transactions is ONE Spark job —
+    decode, compaction and merge fused, the reject count riding as an
+    Observation — and never caches the decoded events."""
     base, b = wg.gen_basic(n_base=40, n_txns=5, ops_per_txn=5)
     frames = b.to_table()
-    fd = os.path.join(str(tmp_path), "frames")
-    wg.write_frames(frames, fd, rows_per_file=500_000)
-    bp = os.path.join(str(tmp_path), "base.parquet")
-    wg.write_base(base, bp)
-    eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    eng = _JobCounter(spark, wh, monkeypatch)
     res = eng.replay_frames(fd, batch_frames=100_000)
-    assert res["records"][0].get("fast_path") is True
-    assert not calls, f"fast path persisted {len(calls)} DataFrame(s)"
+    assert len(res["records"]) == 1
+    assert res["records"][0]["tables"][0]["merge_kernel"] is True
+    assert eng.jobs() == {0: 1}
+    assert eng.calls == [("end", 0)], "single-table batch persisted"
     _assert_golden(spark, eng, base, frames)
+
+
+def test_single_table_split_txn_batches_two_jobs_no_cache(spark, tmp_path,
+                                                         monkeypatch):
+    """Batches cut inside a transaction, with pending rows carried in from
+    the previous batch: each runs at most two Spark jobs (the merge and
+    the pending spill, both decoding the batch) and never caches."""
+    base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    eng = _JobCounter(spark, wh, monkeypatch)
+    res = eng.replay_frames(fd, batch_frames=25)
+    recs = res["records"]
+    assert len(recs) > 3
+    # a batch that carried pending rows in and leaves some out
+    both = [r["batch_idx"] for prev, r in zip(recs, recs[1:])
+            if prev["pending"] and r["pending"]]
+    assert both, "fixture never carried a transaction across a batch"
+    jobs = eng.jobs()
+    assert all(jobs[i] <= 2 for i in both), jobs
+    assert max(jobs.values()) <= 2, jobs
+    assert not [c for c in eng.calls if c[0] != "end"]
+    _assert_golden(spark, eng, base, frames)
+
+
+def test_two_table_batch_persists_once_and_releases(spark, tmp_path,
+                                                    monkeypatch):
+    """A catalog naming two tables caches the decoded events once per
+    batch (stats aggregate, per-table merges and spill read the cache)
+    and releases the cache before the batch returns."""
+    base, b = wg.gen_mixed_dml(n_base=80, n_txns=12, ops_per_txn=8)
+    frames = b.to_table()
+    bases = {"repos": base.slice(0, 40), "repos_full": base.slice(40)}
+    fd, wh = _stage(spark, tmp_path, bases, frames)
+    eng = _JobCounter(spark, wh, monkeypatch)
+    res = eng.replay_frames(fd, batch_frames=45)
+    n = len(res["records"])
+    assert n > 2
+    assert eng.calls == [c for i in range(n) for c in
+                         (("persist",), ("unpersist",), ("end", i))]
 
 
 def test_append_metrics_replaces_same_batch_on_retry():
@@ -282,12 +279,14 @@ def test_pending_store_replace_never_deletes_referenced_delta(
 
     eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
     empty = spark.createDataFrame([], E.EVENT_SPARK_DDL)
+    # one newly-pending row of open transaction 7
+    vals = {"xid": F.lit(7), "event_type": F.lit("insert"),
+            "txn_status": F.lit("open")}
     row = spark.range(1).select(*[
-        (F.lit(7) if f.name == "xid" else F.lit(None)).cast(f.dataType)
-        .alias(f.name)
+        vals.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
         for f in empty.schema.fields
-    ])
-    eng._pending_append(row, {7}, set(), batch_idx=3)
+    ]).withColumn("_carried", F.lit(False))
+    eng._pending_append(row, set(), batch_idx=3)
     meta1 = eng._pending_meta()
     (d1,) = meta1["order"]
 
@@ -298,14 +297,14 @@ def test_pending_store_replace_never_deletes_referenced_delta(
 
     monkeypatch.setattr(E, "_atomic_write", boom)
     with pytest.raises(OSError):
-        eng._pending_append(row, {7}, set(), batch_idx=3)  # retry, killed
+        eng._pending_append(row, set(), batch_idx=3)  # retry, killed
     monkeypatch.setattr(E, "_atomic_write", orig)
     # committed meta survives AND the dir it references still exists
     assert eng._pending_meta() == meta1
     assert os.path.isdir(os.path.join(eng.pending_dir, d1))
     assert eng._load_pending().count() == 1  # store loads fine
     # a successful retry lands a fresh dir and sweeps the old one
-    eng._pending_append(row, {7}, set(), batch_idx=3)
+    eng._pending_append(row, set(), batch_idx=3)
     meta2 = eng._pending_meta()
     (d2,) = meta2["order"]
     assert d2 != d1
