@@ -753,6 +753,54 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     )
 
 
+# codes gathered per merge-intersect pass of the jaccard rescore: bounds
+# the pass's working set (int64 codes, pair tags, gather and sort indices,
+# sorted copies: ~48 B per code) to ~100 MB
+_RESCORE_CHUNK_CODES = 1 << 21
+
+
+def _pair_jaccard(ra, rb, off, flat):
+    """(|A∩B|, jaccard) per pair i of code sets A = flat[off[ra[i]]:
+    off[ra[i]+1]] and B likewise from ``rb``; each set holds unique codes.
+    One merge-intersect per chunk of pairs instead of a per-pair
+    ``np.intersect1d``: tag every code with its pair index, sort by (pair,
+    code), and count adjacent equal entries per pair. The jaccard is the
+    same IEEE double division as ``inter / (|A| + |B| - inter)``; a pair of
+    two empty sets reads NaN (no shared code, never kept)."""
+    import numpy as np
+
+    la = off[ra + 1] - off[ra]
+    lb = off[rb + 1] - off[rb]
+    inter = np.zeros(len(ra), np.int64)
+
+    def gather(starts, lens):
+        ex = np.cumsum(lens) - lens
+        return flat[np.arange(int(lens.sum())) - np.repeat(ex - starts, lens)]
+
+    # chunk boundaries: whole pairs, at most _RESCORE_CHUNK_CODES codes
+    # each (a single larger pair gets a chunk of its own)
+    csum = np.cumsum(la + lb)
+    lo = 0
+    while lo < len(ra):
+        base = csum[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(
+            csum, base + _RESCORE_CHUNK_CODES, side="right")))
+        sl = slice(lo, hi)
+        pid = np.arange(hi - lo)
+        tags = np.concatenate((np.repeat(pid, la[sl]),
+                               np.repeat(pid, lb[sl])))
+        codes = np.concatenate((gather(off[ra[sl]], la[sl]),
+                                gather(off[rb[sl]], lb[sl])))
+        o = np.lexsort((codes, tags))
+        tags, codes = tags[o], codes[o]
+        dup = (tags[1:] == tags[:-1]) & (codes[1:] == codes[:-1])
+        inter[sl] = np.bincount(tags[1:][dup], minlength=hi - lo)
+        lo = hi
+    with np.errstate(invalid="ignore"):
+        jac = inter / (la + lb - inter)
+    return inter, jac
+
+
 # above this many docs the per-doc shingle-set + signature table stops
 # being broadcast-sized (≈ n_docs × (avg_set × 8 + k × 8) B ≈ 3.3 KB/doc
 # at k=128 and 300-shingle docs → ~330 MB at the cap, the
@@ -852,24 +900,14 @@ def ngram_jaccard_lsh_pairs(docs: DataFrame, threshold: float = 0.65,
                 rb = perm[_np.searchsorted(ids_sorted, ib)]
                 keep = _np.count_nonzero(H[ra] == H[rb], axis=1) >= est_min
                 ia, ib, ra, rb = ia[keep], ib[keep], ra[keep], rb[keep]
-                out_a, out_b, out_j = [], [], []
-                for i in range(len(ra)):
-                    a_i, b_i = ra[i], rb[i]
-                    sa_ = flat[off[a_i]:off[a_i + 1]]
-                    sb_ = flat[off[b_i]:off[b_i + 1]]
-                    inter = _np.intersect1d(
-                        sa_, sb_, assume_unique=True).size
-                    jac = inter / (len(sa_) + len(sb_) - inter)
-                    if jac >= threshold:
-                        out_a.append(int(ia[i]))
-                        out_b.append(int(ib[i]))
-                        out_j.append(jac)
-                if not out_a:
+                _, jac = _pair_jaccard(ra, rb, off, flat)
+                hit = jac >= threshold
+                if not hit.any():
                     continue
                 yield _pa.RecordBatch.from_pydict({
-                    "id_a": _pa.array(out_a, _pa.int64()),
-                    "id_b": _pa.array(out_b, _pa.int64()),
-                    "jaccard": _pa.array(out_j, _pa.float64()),
+                    "id_a": _pa.array(ia[hit], _pa.int64()),
+                    "id_b": _pa.array(ib[hit], _pa.int64()),
+                    "jaccard": _pa.array(jac[hit], _pa.float64()),
                 })
 
         out = (

@@ -28,8 +28,11 @@ or Structured Streaming's foreachBatch — see ``streaming.py``):
    (``LakeTable.merge_bucketed``: compaction + join + write in one job),
    LSN-fenced. A replayed or duplicate batch is skipped by the fence,
    giving exactly-once end to end under at-least-once batch delivery.
-7. **Pending spill** — if a transaction is still open or prepared, one
-   job appends the newly-pending rows as a delta of the pending store.
+7. **Pending spill** — if a transaction is still open or prepared, the
+   decode tasks of the job that decodes the batch (the merge, or the
+   stats aggregate when nothing merges) also write the newly-pending
+   rows into a fresh delta dir of the pending store; the driver then
+   commits the store meta. Every batch stays one Spark job.
 
 Resume: engine state (batch index, catalog, open-txn carry) is persisted
 atomically per batch; restart replays from the checkpoint and the fence
@@ -40,13 +43,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .lake.table import LakeTable, _atomic_write
+from .lake.table import LakeTable, _atomic_write, _kernel_aqe_off
 from .operators.compact import _qs, dml_images
 from .options import ReplicationOptions
 from .operators.decode import (
@@ -488,22 +492,31 @@ class ReplayEngine:
         return df
 
     def _pending_clear(self) -> None:
-        import shutil
-
         if os.path.exists(self.pending_dir):
             shutil.rmtree(self.pending_dir)
 
-    def _pending_append(self, events: DataFrame, resolved_xids: set[int],
-                        batch_idx: int):
-        """Spill the batch's newly-pending rows (``events`` rows not
-        ``_carried``) as ONE fresh delta and commit the store meta. The
-        write carries an Observation: the batch's pending rows, the newly
-        pending xids and the reject count (returned as a Row).
-        A store left without pending rows is cleared."""
-        import shutil
+    def _pending_delta_name(self, meta: dict | None, batch_idx: int) -> str:
+        """The fresh delta dir a batch's pending rows land in. Its
+        generation is one past the committed meta's, so the committed meta
+        never references it: files a crashed attempt left there are
+        garbage, safe to delete and never loaded."""
+        gen = int((meta or {}).get("gen", 0)) + 1
+        return f"delta_b{batch_idx}_g{gen}"
 
-        from pyspark.sql import Observation
+    def _pending_append(self, m, resolved_xids: set[int], batch_idx: int,
+                        name: str) -> None:
+        """Commit the batch's pending delta ``name`` to the store meta.
 
+        The batch's decode tasks already wrote its newly-pending rows into
+        the fresh dir ``name`` (``decode_frames_df(spill=...)``, a side
+        output of the job that decodes the batch); ``m`` is that job's
+        stats row: ``pend`` (pending rows, carried ones included) and
+        ``new_xids`` (xids of the newly-pending rows). Runs no Spark job
+        except the compaction past PENDING_COMPACT_DELTAS. A store left
+        without pending rows is cleared."""
+        if not m["pend"]:
+            self._pending_clear()
+            return
         meta = self._pending_meta() or {
             "order": [], "deltas": {}, "dead_xids": [],
         }
@@ -517,22 +530,6 @@ class ReplayEngine:
         # dirs, removed by the next sweep.
         gen = int(meta.get("gen", 0)) + 1
         meta["gen"] = gen
-        name = f"delta_b{batch_idx}_g{gen}"
-        pend = f"{_APPLY_SQL} AND txn_status IN ('open', 'prepared')"
-        new = f"{pend} AND NOT _carried"
-        obs = Observation()
-        (events.observe(obs, F.expr(
-            f"named_struct('quar', {_QUAR_SQL}, "
-            f"'pend', count(CASE WHEN {pend} THEN 1 END), "
-            f"'new_xids', collect_set(CASE WHEN {new} THEN xid END))"
-        ).alias("m"))
-            .filter(new).drop("_carried")
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.pending_dir, name)))
-        m = obs.get["m"]
-        if not m["pend"]:
-            self._pending_clear()
-            return m
         new_xids = {int(x) for x in m["new_xids"] or [] if x is not None}
         # bounded-replay stop / in-place batch retry → the batch
         # reprocesses: drop the prior attempt's delta from meta (its dir
@@ -583,7 +580,6 @@ class ReplayEngine:
             p = os.path.join(self.pending_dir, entry)
             if os.path.isdir(p) and entry not in referenced:
                 shutil.rmtree(p, ignore_errors=True)
-        return m
 
     # ----------------------------------------------------------------- replay
 
@@ -857,6 +853,19 @@ class ReplayEngine:
                       | {int(x) for x in ctx.span_xids}
                       | {x for _, x, _ in ctx.truncates}
                       | carried) - resolved - {-1}
+        # the pending delta of a batch cut inside a transaction: its decode
+        # tasks write the newly-pending rows there (step 7 commits it).
+        # Clear what a crashed attempt left in the fresh dir first.
+        spill = delta = None
+        if unresolved:
+            delta = self._pending_delta_name(meta, batch_idx)
+            spill_dir = os.path.join(self.pending_dir, delta)
+            if os.path.isdir(spill_dir):
+                shutil.rmtree(spill_dir)
+            # origin 'none' keeps foreign transactions out of the store,
+            # as filter_origin keeps them out of the events below
+            spill = (spill_dir, sorted(ctx.origin_xids)
+                     if self.options.origin == "none" else [])
 
         # 3. schema evolution before merge
         for change in ctx.schema_changes:
@@ -864,11 +873,11 @@ class ReplayEngine:
 
         # 4. the batch's events: the decode kernel's rows plus the pending
         # store's rows re-stamped with this batch's dispositions.
-        # ``_carried`` marks the re-read rows so the spill appends only THIS
-        # batch's newly-pending rows (append-delta store, _pending_append).
+        # ``_carried`` marks the re-read rows so the stats count only THIS
+        # batch's newly-pending xids (append-delta store, _pending_append).
         # Rejects come only from the decode: count and dead-letter them
-        # from ``decoded``, which never reads the store the spill sweeps.
-        decoded = decode_frames_df(frames, ctx)
+        # from ``decoded``, which never reads the store the sweep deletes.
+        decoded = decode_frames_df(frames, ctx, spill=spill)
         events = decoded.withColumn("_carried", F.lit(False))
         pending = self._load_pending()
         if pending is not None:
@@ -898,25 +907,44 @@ class ReplayEngine:
 
         # 5. which tables. A catalog naming one existing table needs no
         # batch statistics: its merge job decodes the batch itself and
-        # counts the rejects as an Observation. Otherwise the events are
+        # carries the stats as an Observation. Otherwise the events are
         # cached and ONE aggregate finds the tables with committed DML.
+        # The stats: the reject count and, when the decode spills, the
+        # pending row count and the newly-pending xids.
         committed_sql = f"{_DML_SQL} AND txn_status = 'committed'"
         if effective_stop is not None:
             committed_sql += f" AND end_lsn <= {effective_stop}"
+        stats_sql = f"named_struct('quar', {_QUAR_SQL}"
+        if spill is not None:
+            pend = f"{_APPLY_SQL} AND txn_status IN ('open', 'prepared')"
+            stats_sql += (
+                f", 'pend', count(CASE WHEN {pend} THEN 1 END), "
+                f"'new_xids', collect_set(CASE WHEN {pend} AND NOT _carried "
+                "THEN xid END)")
+        stats_sql += ")"
+
+        def _stats():
+            # AQE would split the aggregate at its exchange into two jobs
+            with _kernel_aqe_off(self.spark):
+                return events.agg(
+                    F.expr(stats_sql).alias("m"),
+                    F.expr(f"collect_set(CASE WHEN {committed_sql} "
+                           "THEN table_name END)").alias("tables"),
+                ).collect()[0]
+
         relnames = {v.relname for vs in ctx.catalog.values() for v in vs}
         single = next(iter(relnames)) if len(relnames) == 1 else None
         if single is not None and not self.table(single).exists:
             single = None
-        quarantined = None
-        obs_q = None
+        m = obs_q = None
         if single is not None:
             tables = ([single] if batch_hi is not None
                       and batch_hi > fence_floor else [])
             obs_q = Observation()
-            source = events.observe(obs_q, F.expr(_QUAR_SQL).alias("quar"))
+            source = events.observe(obs_q, F.expr(stats_sql).alias("m"))
         else:
             # the cache's FIRST action is the aggregate itself: one job
-            # materializes and counts; merges, spill and quarantine read
+            # materializes, counts and spills; merges and quarantine read
             # the cache
             events = source = events.persist()
         # any mid-batch failure (exactly what the retry taxonomy re-enters
@@ -924,13 +952,9 @@ class ReplayEngine:
         # persist a fresh copy and accumulate executor cache pressure
         try:
             if single is None:
-                m = events.agg(
-                    F.expr(_QUAR_SQL).alias("quar"),
-                    F.expr(f"collect_set(CASE WHEN {committed_sql} "
-                           "THEN table_name END)").alias("tables"),
-                ).collect()[0]
-                quarantined = int(m["quar"])
-                tables = sorted(t for t in m["tables"] if t is not None)
+                r = _stats()
+                m = r["m"]
+                tables = sorted(t for t in r["tables"] if t is not None)
             _mark("batch_stats")
             committed = source.filter(committed_sql)
             merge_list = sorted(set(tables) | set(truncates))
@@ -968,17 +992,21 @@ class ReplayEngine:
             # a merge the table fence skipped ran no job: its Observation
             # never fires and must not be read
             if obs_q is not None and any(not r["skipped"] for r in merged):
-                quarantined = int(obs_q.get["quar"])
+                m = obs_q.get["m"]
+            elif m is None and spill is not None:
+                # no merge job decoded the batch: the stats aggregate is
+                # its one job, and it writes the spill
+                m = _stats()["m"]
+            quarantined = None if m is None else int(m["quar"])
             _mark("merges")
 
-            # 7. carry-over: newly-pending rows append one delta; resolved
-            # xids tombstone; store cleared outright once nothing is pending
+            # 7. carry-over: the decode tasks wrote the newly-pending rows
+            # as a fresh delta; commit it to the store meta (resolved xids
+            # tombstone). The store is cleared once nothing is pending.
             n_pending = 0
-            if unresolved:
-                m = self._pending_append(events, resolved, batch_idx)
+            if spill is not None:
+                self._pending_append(m, resolved, batch_idx, delta)
                 n_pending = int(m["pend"])
-                if quarantined is None:
-                    quarantined = int(m["quar"])
             else:
                 self._pending_clear()
             _mark("pending_spill")
@@ -988,7 +1016,7 @@ class ReplayEngine:
             # it so a later resume reprocesses it (the LSN fence makes that
             # idempotent), exactly the reference's restart-from-confirmed-
             # LSN contract.
-            if quarantined is None:
+            if quarantined is None:  # no job ran; nothing spills here
                 quarantined = decoded.filter("error IS NOT NULL").count()
             rec = {
                 "batch_idx": batch_idx,
@@ -1001,7 +1029,9 @@ class ReplayEngine:
                 "phase_ms": phase_t,
             }
             if quarantined:
-                qd = self._write_quarantine(decoded, batch_idx)
+                # a plain decode: the dead-letter job must not respill
+                qd = self._write_quarantine(decode_frames_df(frames, ctx),
+                                            batch_idx)
                 if qd:
                     rec["quarantine_dir"] = qd
             st["batch_idx"] = batch_idx + (0 if effective_stop is not None else 1)

@@ -1112,16 +1112,83 @@ def _decode_control_rows(
 # Spark integration
 # ---------------------------------------------------------------------------
 
-def decode_frames_df(frames_df, ctx: DecodeContext):
+# The pending-store spill predicate: the apply path's event types (DML and
+# truncate) of transactions still open or prepared at the batch's end.
+_SPILL_TYPES = pa.array(["insert", "update", "delete", "truncate"])
+_SPILL_STATUS = pa.array(["open", "prepared"])
+
+
+def _pending_rows(t: pa.Table, drop_xids=()) -> pa.Table:
+    """The rows of decoded events ``t`` the pending store keeps: apply-path
+    events without a decode error whose transaction is open or prepared.
+    ``drop_xids`` (origin 'none' foreign transactions) drops those xids'
+    rows, null xids included, as ``raw.filter_origin`` does."""
+    import pyarrow.compute as pc
+
+    keep = pc.and_(
+        pc.and_(pc.is_in(t.column("event_type"), value_set=_SPILL_TYPES),
+                pc.is_null(t.column("error"))),
+        pc.is_in(t.column("txn_status"), value_set=_SPILL_STATUS))
+    if len(drop_xids):
+        xid = t.column("xid")
+        keep = pc.and_(keep, pc.and_(
+            pc.is_valid(xid),
+            pc.invert(pc.is_in(xid, value_set=pa.array(
+                drop_xids, pa.int64())))))
+    return t.filter(keep)
+
+
+def write_spill_part(t: pa.Table, spill_dir: str, part: int) -> str:
+    """Write one decode task's pending rows as ``part-{part}.parquet`` in
+    ``spill_dir``. The file lands under a dot-prefixed temp name (ignored
+    by Spark and by ``*.parquet`` listings) and is renamed into place, so
+    a retried or recomputed attempt of the same partition replaces it with
+    the same bytes."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(spill_dir, exist_ok=True)
+    path = os.path.join(spill_dir, f"part-{part}.parquet")
+    tmp = os.path.join(spill_dir, f".part-{part}.{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        pq.write_table(t, tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return path
+
+
+def decode_frames_df(frames_df, ctx: DecodeContext, spill=None):
     """frames DataFrame → ChangeEvent DataFrame via mapInArrow (narrow,
-    no shuffle; whole-stage codegen resumes on the other side)."""
+    no shuffle; whole-stage codegen resumes on the other side).
+
+    ``spill``: optional ``(dir, drop_xids)``, the pending-store delta of a
+    batch cut inside a transaction. Each decode task then also keeps its
+    ``_pending_rows`` and, once its input is exhausted, writes them with
+    ``write_spill_part`` — a side output of whichever job decodes the
+    batch, so the store costs no second decode. All rows still stream on
+    downstream."""
     from .. import ensure_shipped
 
     ensure_shipped(frames_df.sparkSession)
 
     def fn(batches):
+        held = []
         for b in batches:
             t = decode_batch(b, ctx)
+            if spill is not None:
+                p = _pending_rows(t, spill[1])
+                if p.num_rows:
+                    held.append(p)
             yield from t.to_batches()
+        if held:
+            from pyspark import TaskContext
+
+            write_spill_part(
+                pa.concat_tables(held).cast(EVENT_ARROW_SCHEMA), spill[0],
+                TaskContext.get().partitionId())
 
     return frames_df.mapInArrow(fn, EVENT_SPARK_DDL)

@@ -144,3 +144,40 @@ def test_eager_release_over_cap_count_failure_leaves_no_cache(
     assert not out.is_cached
     assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
     assert not src.storageLevel.useMemory
+
+
+@pytest.mark.parametrize("chunk", [None, 7])
+def test_pair_jaccard_matches_per_pair_intersect(monkeypatch, chunk):
+    """The jaccard rescore's batch merge-intersect equals the per-pair
+    ``np.intersect1d`` loop it replaced, bit for bit — random sets plus
+    empty, identical and disjoint ones, with and without chunking."""
+    import numpy as np
+
+    if chunk is not None:
+        monkeypatch.setattr(dd, "_RESCORE_CHUNK_CODES", chunk)
+    rng = np.random.default_rng(7)
+    sets = [rng.choice(60, size=int(rng.integers(0, 25)), replace=False)
+            for _ in range(40)]
+    sets += [np.array([], np.int64), np.array([3, 9, 27]),
+             np.array([27, 3, 9]), np.array([100, 200])]
+    off = np.concatenate(([0], np.cumsum([len(x) for x in sets])))
+    flat = np.concatenate(sets).astype(np.int64)
+    n = len(sets)
+    pairs = [(a, b) for a in range(n) for b in range(n)
+             if len(sets[a]) + len(sets[b])]
+    ra = np.array([a for a, _ in pairs])
+    rb = np.array([b for _, b in pairs])
+    inter, jac = dd._pair_jaccard(ra, rb, off, flat)
+    for i, (a, b) in enumerate(pairs):
+        want = np.intersect1d(sets[a], sets[b], assume_unique=True).size
+        assert inter[i] == want
+        assert jac[i] == want / (len(sets[a]) + len(sets[b]) - want)
+    # identical, permuted and disjoint sets among the pairs
+    e, p, q, d = n - 4, n - 3, n - 2, n - 1
+    k = pairs.index((p, q))
+    assert (inter[k], jac[k]) == (3, 1.0)
+    assert jac[pairs.index((e, p))] == 0.0
+    assert jac[pairs.index((p, d))] == 0.0
+    # two empty sets share no code: never at or above a threshold
+    _, jj = dd._pair_jaccard(np.array([e]), np.array([e]), off, flat)
+    assert not jj >= 0.0

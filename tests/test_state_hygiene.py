@@ -14,6 +14,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from pg_walstream_spark.engine import (
     METRICS_CAP,
     ReplayEngine,
@@ -174,7 +176,7 @@ class _JobCounter(ReplayEngine):
                 for i, g in self.groups.items()}
 
 
-def test_fast_path_duplicate_batch_fence_skip_no_deadlock(spark, tmp_path):
+def test_fence_skipped_batch_no_deadlock(spark, tmp_path):
     """Fresh engine state over an already-applied lake: the single-table
     merge is skipped by the TABLE fence without running any Spark job, so
     the reject-count Observation riding on that merge never fires and
@@ -199,7 +201,7 @@ def test_fast_path_duplicate_batch_fence_skip_no_deadlock(spark, tmp_path):
     _assert_golden(spark, eng2, base, frames)
 
 
-def test_fast_path_materializes_no_cache(spark, tmp_path, monkeypatch):
+def test_single_table_batch_one_job_no_cache(spark, tmp_path, monkeypatch):
     """A single-table batch of complete transactions is ONE Spark job —
     decode, compaction and merge fused, the reject count riding as an
     Observation — and never caches the decoded events."""
@@ -215,11 +217,12 @@ def test_fast_path_materializes_no_cache(spark, tmp_path, monkeypatch):
     _assert_golden(spark, eng, base, frames)
 
 
-def test_single_table_split_txn_batches_two_jobs_no_cache(spark, tmp_path,
-                                                         monkeypatch):
+def test_single_table_split_txn_batches_one_job_no_cache(spark, tmp_path,
+                                                        monkeypatch):
     """Batches cut inside a transaction, with pending rows carried in from
-    the previous batch: each runs at most two Spark jobs (the merge and
-    the pending spill, both decoding the batch) and never caches."""
+    the previous batch: each runs exactly ONE Spark job — the decode task
+    writes the newly-pending rows as a side output of the merge job, or of
+    the stats aggregate when nothing merges — and never caches."""
     base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
     frames = b.to_table()
     fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
@@ -231,9 +234,12 @@ def test_single_table_split_txn_batches_two_jobs_no_cache(spark, tmp_path,
     both = [r["batch_idx"] for prev, r in zip(recs, recs[1:])
             if prev["pending"] and r["pending"]]
     assert both, "fixture never carried a transaction across a batch"
-    jobs = eng.jobs()
-    assert all(jobs[i] <= 2 for i in both), jobs
-    assert max(jobs.values()) <= 2, jobs
+    merges = [r["batch_idx"] for r in recs
+              if r["pending"] and any(not t["skipped"] for t in r["tables"])]
+    spills_only = [r["batch_idx"] for r in recs
+                   if r["pending"] and not r["tables"]]
+    assert merges and spills_only, recs
+    assert eng.jobs() == {r["batch_idx"]: 1 for r in recs}
     assert not [c for c in eng.calls if c[0] != "end"]
     _assert_golden(spark, eng, base, frames)
 
@@ -265,6 +271,39 @@ def test_append_metrics_replaces_same_batch_on_retry():
     assert len(st["metrics"]) == 1
 
 
+def _spill_and_commit(eng, rows, batch_idx: int) -> None:
+    """One batch's pending-store steps: clear and write the fresh delta
+    (the decode task's side output), then the driver's meta commit."""
+    import shutil
+
+    from pg_walstream_spark.operators.decode import write_spill_part
+
+    name = eng._pending_delta_name(eng._pending_meta(), batch_idx)
+    spill_dir = os.path.join(eng.pending_dir, name)
+    shutil.rmtree(spill_dir, ignore_errors=True)
+    write_spill_part(rows, spill_dir, 0)
+    xids = sorted(set(rows.column("xid").to_pylist()))
+    eng._pending_append({"pend": rows.num_rows, "new_xids": xids}, set(),
+                        batch_idx, name)
+
+
+def _pending_event_rows(xids, key_prefix="p"):
+    """Open-transaction insert events of ``xids`` on the repos table."""
+    import pyarrow as pa
+
+    from pg_walstream_spark.operators.decode import EVENT_ARROW_SCHEMA
+
+    null = {f.name: None for f in EVENT_ARROW_SCHEMA}
+    return pa.Table.from_pylist([{
+        **null, "seq": i, "lsn": i, "event_type": "insert", "xid": x,
+        "schema_name": "public", "table_name": "repos",
+        "relation_oid": wg.REPOS_OID, "key_columns": ["repo", "path"],
+        "new_data": [("repo", f"orgZ/{key_prefix}"), ("path", f"{x}.py"),
+                     ("content", "garbage")],
+        "txn_status": "open",
+    } for i, x in enumerate(xids)], schema=EVENT_ARROW_SCHEMA)
+
+
 def test_pending_store_replace_never_deletes_referenced_delta(
         spark, tmp_path, monkeypatch):
     """In-place batch retry / stop-resume replaces a batch's delta: the
@@ -273,20 +312,13 @@ def test_pending_store_replace_never_deletes_referenced_delta(
     the meta commit must leave the store loadable (ADVICE r4: overwrite of
     the referenced dir deletes it first, bricking every restart)."""
     import pytest
-    from pyspark.sql import functions as F
 
     import pg_walstream_spark.engine as E
 
     eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    empty = spark.createDataFrame([], E.EVENT_SPARK_DDL)
     # one newly-pending row of open transaction 7
-    vals = {"xid": F.lit(7), "event_type": F.lit("insert"),
-            "txn_status": F.lit("open")}
-    row = spark.range(1).select(*[
-        vals.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
-        for f in empty.schema.fields
-    ]).withColumn("_carried", F.lit(False))
-    eng._pending_append(row, set(), batch_idx=3)
+    row = _pending_event_rows([7])
+    _spill_and_commit(eng, row, batch_idx=3)
     meta1 = eng._pending_meta()
     (d1,) = meta1["order"]
 
@@ -297,19 +329,210 @@ def test_pending_store_replace_never_deletes_referenced_delta(
 
     monkeypatch.setattr(E, "_atomic_write", boom)
     with pytest.raises(OSError):
-        eng._pending_append(row, set(), batch_idx=3)  # retry, killed
+        _spill_and_commit(eng, row, batch_idx=3)  # retry, killed
     monkeypatch.setattr(E, "_atomic_write", orig)
     # committed meta survives AND the dir it references still exists
     assert eng._pending_meta() == meta1
     assert os.path.isdir(os.path.join(eng.pending_dir, d1))
     assert eng._load_pending().count() == 1  # store loads fine
     # a successful retry lands a fresh dir and sweeps the old one
-    eng._pending_append(row, set(), batch_idx=3)
+    _spill_and_commit(eng, row, batch_idx=3)
     meta2 = eng._pending_meta()
     (d2,) = meta2["order"]
     assert d2 != d1
     assert not os.path.isdir(os.path.join(eng.pending_dir, d1))
     assert eng._load_pending().count() == 1
+
+
+def test_spill_writer_retry_rewrites_identical_bytes(tmp_path):
+    """A retried or recomputed decode task rewrites its partition's spill
+    file in place: one file, the same bytes, no temp file left behind."""
+    from pg_walstream_spark.operators.decode import write_spill_part
+
+    rows = _pending_event_rows([11, 12, 12])
+    d = os.path.join(str(tmp_path), "delta_b0_g1")
+    p = write_spill_part(rows, d, 3)
+    first = open(p, "rb").read()
+    assert write_spill_part(rows, d, 3) == p
+    assert os.listdir(d) == ["part-3.parquet"]
+    assert open(p, "rb").read() == first
+
+
+class _Killed(RuntimeError):
+    """A process kill: permanent to the batch retry, so the batch dies."""
+
+
+def test_kill_between_table_commit_and_pending_meta(spark, tmp_path,
+                                                    monkeypatch):
+    """The pending rows land in the fresh delta BEFORE the table commit.
+    Kill the batch after its table commit but before ``pending/meta.json``:
+    the restarted engine re-runs the batch, the table fence skips its
+    merge, and its one job (the stats aggregate) rewrites the delta; the
+    store loads and the final state is golden."""
+    import pytest
+
+    import pg_walstream_spark.engine as E
+
+    base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    kill_at = 1  # commits txn 0 and leaves txn 1 open
+    current = []
+
+    class Tracking(ReplayEngine):
+        def process_batch(self, frames, batch_idx, st, **k):
+            current[:] = [batch_idx]
+            return super().process_batch(frames, batch_idx, st, **k)
+
+    eng = Tracking(spark, wh)
+    orig = E._atomic_write
+
+    def boom(path, data):
+        if path == eng._pending_meta_path() and current == [kill_at]:
+            raise _Killed("killed before the pending meta commit")
+        orig(path, data)
+
+    monkeypatch.setattr(E, "_atomic_write", boom)
+    with pytest.raises(_Killed):
+        eng.replay_frames(fd, batch_frames=25)
+    monkeypatch.setattr(E, "_atomic_write", orig)
+    lsn_killed = eng.table("repos").applied_lsn()
+    assert lsn_killed > 0  # the table committed before the kill
+    assert eng._load_state()["batch_idx"] == kill_at
+
+    loads = {}
+
+    class Restarted(_JobCounter):
+        def process_batch(self, frames, batch_idx, st, **k):
+            rec = super().process_batch(frames, batch_idx, st, **k)
+            pend = self._load_pending()
+            loads[batch_idx] = None if pend is None else pend.count()
+            return rec
+
+    eng2 = Restarted(spark, wh, monkeypatch)
+    res = eng2.replay_frames(fd, batch_frames=25)
+    rec = res["records"][0]
+    assert rec["batch_idx"] == kill_at
+    assert [t["skipped"] for t in rec["tables"]] == [True]
+    assert rec["pending"] > 0
+    assert eng2.jobs()[kill_at] == 1
+    assert loads[kill_at] == rec["pending"]
+    _assert_golden(spark, eng2, base, frames)
+
+
+def test_garbage_in_fresh_delta_dir_never_loads(spark, tmp_path):
+    """Files left in a batch's would-be fresh delta dir (a crashed
+    attempt's output) are cleared before the batch's job; a planted
+    ``part-99.parquet`` of wrong rows is never loaded."""
+    from pg_walstream_spark.operators.decode import write_spill_part
+
+    base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    garbage = _pending_event_rows(range(1000, 1010), key_prefix="garbage")
+    seen = []
+
+    class Planting(ReplayEngine):
+        def process_batch(self, frames, batch_idx, st, **k):
+            name = self._pending_delta_name(self._pending_meta(), batch_idx)
+            write_spill_part(garbage, os.path.join(self.pending_dir, name),
+                             99)
+            rec = super().process_batch(frames, batch_idx, st, **k)
+            for d in (self._pending_meta() or {}).get("order", []):
+                seen.append(d)
+                assert "part-99.parquet" not in os.listdir(
+                    os.path.join(self.pending_dir, d))
+            return rec
+
+    eng = Planting(spark, wh)
+    eng.replay_frames(fd, batch_frames=25)
+    assert seen, "no batch committed a pending delta"
+    assert eng.table("repos").read(spark).filter(
+        "repo = 'orgZ/garbage'").count() == 0
+    _assert_golden(spark, eng, base, frames)
+
+
+def _row_keys(rows) -> list[str]:
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True,
+                             default=str) for r in rows)
+
+
+@pytest.mark.parametrize("case", ["two_phase", "stream_subabort",
+                                  "truncate_open", "origin_none"])
+def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
+                                                      monkeypatch, case):
+    """After every batch cut inside a transaction, the delta its decode
+    tasks wrote holds exactly the batch's decoded rows under the spill
+    predicate — apply-path events of open or prepared transactions, minus
+    origin 'none' foreign transactions — computed here with Spark."""
+    import pg_walstream_spark.engine as E
+    from pg_walstream_spark.operators.decode import (
+        EVENT_SPARK_DDL, decode_frames_df,
+    )
+    from pg_walstream_spark.operators.raw import filter_origin
+    from pg_walstream_spark.options import ReplicationOptions
+
+    gen, batch_frames, options = {
+        # prepared at the cut; commit_prepared in the next batch
+        "two_phase": (wg.gen_two_phase, 9, None),
+        # the sub rows and their stream abort land in different batches
+        "stream_subabort": (wg.gen_streaming_subabort, 7, None),
+        # a batch ends between TRUNCATE and its COMMIT
+        "truncate_open": (wg.gen_truncate, 20, None),
+        # the ORIGIN frame and the foreign DML straddle a boundary
+        "origin_none": (wg.gen_origin, 3, ReplicationOptions(origin="none")),
+    }[case]
+    base, b = gen(n_base=30)
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    spilled = []
+    orig_decode = E.decode_frames_df
+
+    def recording_decode(frames_df, ctx, spill=None):
+        if spill is not None:
+            spilled.append((frames_df, ctx))
+        return orig_decode(frames_df, ctx, spill=spill)
+
+    monkeypatch.setattr(E, "decode_frames_df", recording_decode)
+    checked = []
+
+    class Checking(ReplayEngine):
+        def _pending_append(self, m, resolved, batch_idx, name):
+            frames_df, ctx = spilled[-1]
+            pend = decode_frames_df(frames_df, ctx).filter(
+                f"{E._APPLY_SQL} AND txn_status IN ('open', 'prepared')")
+            want = pend
+            if self.options.origin == "none" and ctx.has_origin:
+                want = filter_origin(pend, "none",
+                                     foreign_xids=sorted(ctx.origin_xids))
+            ddir = os.path.join(self.pending_dir, name)
+            got = (self.spark.read.schema(EVENT_SPARK_DDL).parquet(ddir)
+                   .collect() if os.path.isdir(ddir) else [])
+            want = want.collect()
+            if pend.count() > len(want):
+                checked.append({"foreign_dropped"})
+            assert _row_keys(got) == _row_keys(want), batch_idx
+            assert sorted({r["xid"] for r in want}) == sorted(
+                m["new_xids"] or [])
+            checked.append({r["txn_status"] for r in want}
+                           | {r["event_type"] for r in want}
+                           | {"streamed" for r in want if r["sub_xid"]})
+            return super()._pending_append(m, resolved, batch_idx, name)
+
+    eng = Checking(spark, wh, options=options)
+    eng.replay_frames(fd, batch_frames=batch_frames)
+    assert checked, "no batch was cut inside a transaction"
+    seen = set().union(*checked)
+    if case == "origin_none":
+        # the foreign transaction's rows never reach the store
+        assert "foreign_dropped" in seen, checked
+        lake = eng.table("repos").read(spark)
+        assert lake.filter("repo = 'orgF/foreign'").count() == 0
+        assert lake.count() == 30 + 4
+        return
+    assert {"two_phase": "prepared", "stream_subabort": "streamed",
+            "truncate_open": "truncate"}[case] in seen, checked
+    _assert_golden(spark, eng, base, frames)
 
 
 def test_version_preflight_rejects_stale_state_dir(spark, tmp_path):
