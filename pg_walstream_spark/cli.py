@@ -22,6 +22,10 @@ import json
 import os
 import sys
 
+# idle timeout for executor Python workers; a legitimately longer-silent
+# worker needs it raised
+PY_IDLE_TIMEOUT_S = 300
+
 
 def _session(app: str, master: str | None):
     from pyspark.sql import SparkSession
@@ -33,8 +37,7 @@ def _session(app: str, master: str | None):
     # killed idle worker fails the task, Spark retries it, and the LSN
     # fence keeps the replayed batch idempotent
     b = b.config(
-        "spark.python.worker.idleTimeoutSeconds",
-        os.environ.get("WALSTREAM_PY_IDLE_TIMEOUT", "300"),
+        "spark.python.worker.idleTimeoutSeconds", str(PY_IDLE_TIMEOUT_S),
     ).config("spark.python.worker.killOnIdleTimeout", "true")
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

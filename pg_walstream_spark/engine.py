@@ -717,15 +717,15 @@ class ReplayEngine:
         return {"batches": len(summary), "applied_lsn": st["applied_lsn"],
                 "records": summary, "setup_ms": setup_ms}
 
-    EXPIRE_EVERY = int(os.environ.get("WALSTREAM_EXPIRE_EVERY", "64"))
-    EXPIRE_KEEP = int(os.environ.get("WALSTREAM_EXPIRE_KEEP", "64"))
+    EXPIRE_EVERY = 64
+    EXPIRE_KEEP = 64
 
     def _maybe_expire(self, batch_idx: int) -> None:
         """Periodic snapshot expiry: without it every merge's superseded
         bucket files stay on disk forever and a long-running stream grows
         the warehouse without bound. Runs every EXPIRE_EVERY batches,
-        keeping EXPIRE_KEEP versions per table (WALSTREAM_EXPIRE_EVERY=0
-        disables for deployments wanting unbounded time travel). Driver-
+        keeping EXPIRE_KEEP versions per table (EXPIRE_EVERY = 0 disables
+        it, for deployments wanting unbounded time travel). Driver-
         local file ops; cost is proportional to the retained window, which
         expiry itself keeps bounded."""
         if self.EXPIRE_EVERY <= 0 or (batch_idx + 1) % self.EXPIRE_EVERY:

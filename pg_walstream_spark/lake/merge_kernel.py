@@ -1,17 +1,19 @@
 """Bucket-co-located MERGE kernel (Arrow/numpy, one shuffle total).
 
-The general ``LakeTable.merge`` expresses compaction + full-outer join +
-bucketed write declaratively and lets Catalyst plan it: struct-typed
-``max``/``max_by`` buffers force SortAggregate (partial AND final, each with
-its own sort of the full change set), the join shuffles the TARGET side, and
-the bucketed write adds a third exchange. Correct, but three shuffles and two
-sorts of data that is already perfectly bucketable.
+A declarative MERGE (compaction + full-outer join + bucketed write planned
+by Catalyst) pays for struct-typed ``max``/``max_by`` buffers that force
+SortAggregate (partial AND final, each with its own sort of the full change
+set), a join that shuffles the TARGET side, and a third exchange for the
+bucketed write: three shuffles and two sorts of data that is already
+perfectly bucketable. That formulation survives only as the test oracle
+(tests/merge_oracle.py).
 
-This module re-expresses the same semantics the way a 100 TB deployment
-needs them laid out:
+This module lays the same semantics out the way a 100 TB deployment needs
+them, and is the package's only MERGE (``LakeTable.merge`` and
+``LakeTable.merge_bucketed`` both run it):
 
     images ── withColumn(_bucket = pmod(xxhash64(keys), n)) ── JVM, codegen
-           ── repartition(P, _bucket)                        ── the ONLY shuffle
+           ── repartition(P, salt(_bucket))                  ── the ONLY shuffle
            ── mapInArrow(merge kernel)                       ── per bucket:
                  final last-image compaction (vectorized numpy reduceat)
                  + the bucket's target files, read locally one parquet row
@@ -27,9 +29,9 @@ delete hashes to, and so reads, the old key's bucket). Row-conservation is
 checked PER BUCKET inside the kernel before any snapshot commit. Target
 files are conformed to the current schema the way ``LakeTable.read`` does:
 rename aliases coalesce, ``column_since`` masks apply per file version and
-widened types up-cast. Semantics are pinned differentially against
-``compact_last_image`` + ``LakeTable.merge`` in
-tests/test_merge_kernel.py.
+widened types up-cast. Semantics are pinned differentially against the
+declarative oracle (tests/merge_oracle.py: ``compact_last_image`` +
+full-outer join) in tests/test_merge_kernel.py.
 
 Scale notes: a task holds one target row group plus the change rows of
 the buckets hashed into it, whatever the bucket size (P = n_buckets at
@@ -120,9 +122,8 @@ def partition_salts(n_parts: int) -> list[int] | None:
     buckets → 8 partitions: reduce tasks of 0.16 s to 2.37 s — a ~20% stage
     stretch from pure hash luck); the salted residue map is an exact
     bijection, so per-partition load is the bucket sizes themselves. The
-    lookup ships as a CASE expression at small P and a constant-folded
-    array literal above (LakeTable.merge_bucketed); None only past
-    SALT_MAX_PARTS."""
+    lookup ships as a constant-folded array literal indexed by the residue
+    (LakeTable.merge_bucketed); None only past SALT_MAX_PARTS."""
     if n_parts in _SALT_CACHE:
         return _SALT_CACHE[n_parts]
     if n_parts > SALT_MAX_PARTS:
@@ -198,12 +199,12 @@ def _np_bool(arr: pa.ChunkedArray | pa.Array) -> np.ndarray:
 
 def compact_images_arrow(tbl: pa.Table, key_cols: list[str],
                          data_cols: list[str]) -> tuple[pa.Table, int]:
-    """Last-image compaction of ``dml_images`` rows, exact semantics of
-    ``compact_last_image`` (operators/compact.py): per key, last ``_op`` by
-    (commit_lsn, seq); per column, the value of the latest non-TOAST upsert
-    image; columns never materialized in-batch become carry-forward flags
-    (``__p_<c>`` true ≅ membership in the declarative merge's ``_toast``
-    array).
+    """Last-image compaction of ``dml_images`` rows, exact semantics of the
+    oracle's ``compact_last_image`` (tests/merge_oracle.py): per key, last
+    ``_op`` by (commit_lsn, seq); per column, the value of the latest
+    non-TOAST upsert image; columns never materialized in-batch become
+    carry-forward flags (``__p_<c>`` true ≅ membership in a compacted change
+    set's ``_toast`` array).
 
     Returns (compacted table, null-key quarantined count). Output columns:
     key cols, ``_bucket``, ``__op`` ('upsert'/'delete'), and per data column
@@ -212,7 +213,7 @@ def compact_images_arrow(tbl: pa.Table, key_cols: list[str],
     n0 = tbl.num_rows
     if n0 == 0:
         return tbl, 0
-    # null-key quarantine (matches the general merge's pre-join filter)
+    # null-key quarantine: a null key can never match a target row
     valid = np.ones(n0, dtype=bool)
     for k in key_cols:
         valid &= ~_np_bool(pc.is_null(tbl.column(k)))
@@ -266,8 +267,8 @@ def compact_images_arrow(tbl: pa.Table, key_cols: list[str],
 def _changelog_batch(ch_b: pa.Table, key_cols: list[str],
                      data_cols: list[str], target_schema: pa.Schema,
                      version: int, lsn: int) -> pa.Table:
-    """One bucket's compacted changes → change-data-feed records matching
-    the general merge's changelog contract (LakeTable.read_changes): key +
+    """One bucket's compacted changes → change-data-feed records in the
+    changelog contract of ``LakeTable.read_changes``: key +
     data columns in snapshot types, ``_op``, ``_toast`` (carry-forward
     column names, from the kernel's ``__p_<c>`` pending flags),
     ``_commit_version``, ``_commit_lsn``."""

@@ -25,9 +25,9 @@ apply) are implemented directly:
 
 MERGE strategy: ``merge_bucketed`` (lake/merge_kernel.py) shuffles only the
 change rows and merges each touched bucket with its target files in one
-Arrow task, streaming the target one row group at a time. The declarative
-``merge`` is the reference it is tested against and the replica-apply step
-of change-data-feed consumers.
+Arrow task, streaming the target one row group at a time. It is the only
+MERGE: ``merge``, the replica-apply step of change-data-feed consumers,
+projects a compacted change set onto the kernel's input shape.
 """
 
 from __future__ import annotations
@@ -101,9 +101,8 @@ def _ensure_observation_safe_aqe(spark) -> None:
     stage with an empty LocalRelation, ERASING CollectMetrics nodes — an
     Observation on such a plan never fires and ``obs.get`` asserts. A
     delete-everything merge batch hits exactly this (written set empty at
-    runtime), so every session driving Observation-guarded merges excludes
-    the rule. Pinned by test_merge_kernel.py::
-    test_kernel_bucket_emptied_then_reinserted (general-path leg)."""
+    runtime), so every session driving Observation-guarded jobs (the
+    engine's batch stats, ``rebucket``'s row count) excludes the rule."""
     key = "spark.sql.adaptive.optimizer.excludedRules"
     cur = spark.conf.get(key, None) or ""
     rules = [r for r in cur.split(",") if r]
@@ -495,9 +494,11 @@ class LakeTable:
         names whose value the consumer carries forward from its previous
         image — the pgoutput unchanged-TOAST contract,
         /root/reference/src/protocol.rs:310-328), ``_commit_version`` and
-        ``_commit_lsn``. Applying the feed in version order onto a copy of
-        the table at ``since_version`` via ``merge`` reproduces the table
-        at ``until_version`` exactly (pinned in tests/test_changelog.py).
+        ``_commit_lsn``. One version holds at most one record per key, so
+        applying the feed one version at a time, in version order, onto a
+        copy of the table at ``since_version`` via ``merge`` reproduces the
+        table at ``until_version`` exactly (pinned in
+        tests/test_changelog.py).
         Commits straddling a schema change union by name with missing
         columns null; replicas must mirror DDL commits (rename/add/drop —
         recorded in the lineage) at the matching version boundary, exactly
@@ -552,9 +553,10 @@ class LakeTable:
         (no ``changelog`` property needed): rows present only at
         ``from_version`` emit ``_op='delete'`` (their last image), rows new
         or changed at ``to_version`` emit ``_op='upsert'`` (the new image);
-        ``_toast`` is always empty (images are complete). Applying the diff
-        onto a copy of the table at ``from_version`` via ``merge``
-        reproduces ``to_version`` exactly (pinned in tests).
+        ``_toast`` is always empty (images are complete). The diff holds
+        at most one row per key, so applying it onto a copy of the table
+        at ``from_version`` via ``merge`` reproduces ``to_version`` exactly
+        (pinned in tests).
 
         This is the BACKFILL tool: one full-outer join shuffling both
         snapshots — cost scales with table size, unlike ``read_changes``
@@ -636,223 +638,35 @@ class LakeTable:
         batch_id: int | str = 0,
         truncate_first: bool = False,
     ) -> dict:
-        """Exactly-once MERGE of a compacted change set.
+        """Exactly-once MERGE of a compacted change set: the replica-apply
+        step for a ``read_changes`` version or a ``diff_versions`` diff.
 
         ``changes`` schema: key columns + data columns (current snapshot
         schema) + ``_op`` ('upsert'|'delete') + ``_toast`` (array<string> of
-        column names whose value must be carried forward from the target —
-        the unchanged-TOAST contract).
+        column names whose value is carried forward from the target — the
+        unchanged-TOAST contract), at most one row per key. Extra columns
+        are ignored.
 
-        Every bucket is read and rewritten; ``merge_bucketed`` is the path
-        that touches only the changed buckets and the one the engine runs.
-        This merge is the reference the kernel is tested against and the
-        replica-apply step for a ``read_changes`` feed.
-
-        The whole MERGE is ONE Spark action: compaction → full-outer join →
-        bucketed write, with upsert/delete counts collected as observed
-        metrics of the same job. The change set is never cached — for
-        payload-heavy CDC rows, building a columnar cache of the changes
-        costs more than the single fused pipeline saves.
+        The change set is projected onto the ``dml_images`` shape (constant
+        ord columns, a ``_t_<c>`` flag per ``_toast`` member, columns cast
+        to the snapshot types — a key typed otherwise would hash to another
+        bucket) and applied by ``merge_bucketed``, so only the buckets it
+        touches are rewritten.
 
         Returns the lineage record (skipped=True if fenced off).
         """
-        from pyspark.sql import Observation
-
-        _ensure_observation_safe_aqe(spark)
-        t0 = time.monotonic()
-        phase = {}
-
-        def _mark(name):
-            nonlocal t0
-            now = time.monotonic()
-            phase[name] = int((now - t0) * 1000)
-            t0 = now
-
         snap = self.snapshot()
-        fence = int(snap["properties"].get("applied_lsn", 0))
-        if applied_lsn <= fence:
-            return {"batch_id": batch_id, "skipped": True, "fence": fence,
-                    "applied_lsn": applied_lsn}
-
-        key_cols = snap["key_columns"]
-        n_buckets = snap["n_buckets"]
-        data_cols = [n for n, _ in snap["schema"]]
-
-        # a change row with a null key column can never match a target row:
-        # its delete would silently no-op and its upsert would insert an
-        # unmatchable null-key row (e.g. a wire-text key that failed the
-        # cast to the lake key type). Quarantine them — counted in the
-        # lineage record — instead of letting them into the join.
-        # SQL-string expressions throughout the merge plan build: the
-        # Column-object equivalents cost hundreds of py4j round trips
-        # (~0.5-1 s of driver time per batch), a core-count-independent
-        # serial tail on the micro-batch path
-        null_key = "(" + " OR ".join(
-            f"{_qi(k)} IS NULL" for k in key_cols
-        ) + ")"
-        obs = Observation()
-        changes = changes.withColumn(
-            "_bucket", self._bucket_expr(key_cols, n_buckets)
-        ).observe(
-            obs,
-            F.expr(
-                f"count(CASE WHEN _op = 'upsert' AND NOT {null_key} "
-                "THEN 1 END)"
-            ).alias("u"),
-            F.expr(
-                f"count(CASE WHEN _op = 'delete' AND NOT {null_key} "
-                "THEN 1 END)"
-            ).alias("d"),
-            F.expr(f"count(CASE WHEN {null_key} THEN 1 END)").alias("nk"),
-        ).filter(f"NOT {null_key}")
-
-        # Changelog (change-data-feed) emission: when the table property
-        # ``changelog`` is set, persist the compacted change set this MERGE
-        # applies — replica-apply records (key+data cols, _op, _toast column
-        # names to carry forward) + commit version/lsn — under
-        # changelog/s{N}-{hex}/ and record the file list in the snapshot.
-        # Downstream consumers read increments via ``read_changes`` instead
-        # of diffing snapshots (Delta CDF / Iceberg changelog-scan analog;
-        # the same role the reference's typed event stream plays for its
-        # consumers, /root/reference/src/stream.rs delivery loop). The MERGE
-        # then reads the change set BACK from the written files, so the
-        # decode→compact lineage still runs exactly once (the changelog
-        # write is the materialization job, not an extra recompute).
-        cl_files: list[str] | None = None
-        if snap["properties"].get("changelog"):
-            cl_dir = os.path.join(
-                self.changelog_dir,
-                f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}")
-            sel_cl = [_qi(n) for n, _ in snap["schema"]] + [
-                "_op", "_toast",
-                f"CAST({snap['version'] + 1} AS BIGINT) AS _commit_version",
-                f"CAST({int(applied_lsn)} AS BIGINT) AS _commit_lsn",
-            ]
-            cl_df = changes.selectExpr(*sel_cl)
-            (cl_df.write.mode("overwrite")
-             .option("compression", LAKE_CODEC)
-             .parquet(cl_dir))
-            cl_files = sorted(
-                self._rel(os.path.join(cl_dir, f))
-                for f in os.listdir(cl_dir) if f.endswith(".parquet")
-            )
-            changes = spark.read.schema(cl_df.schema).parquet(cl_dir).drop(
-                "_commit_version", "_commit_lsn"
-            ).withColumn("_bucket", self._bucket_expr(key_cols, n_buckets))
-            _mark("changelog_ms")
-
-        target = self.read(spark).withColumn(
-            "_bucket", self._bucket_expr(key_cols, n_buckets)
-        )
-        # row-conservation observation on the target side. Guard against
-        # plans where the optimizer ELIMINATES the observe node (and .get
-        # would then assert): limit(0) under truncate, and an empty target
-        # relation propagated through the full-outer join. Both cases have
-        # a statically-known target count instead.
-        n_tfiles = sum(len(fl) for fl in snap["files"].values())
-        obs_t = None
-        static_n_target = None
-        if truncate_first:
-            target = target.limit(0)
-        elif n_tfiles == 0:
-            static_n_target = 0
-        else:
-            obs_t = Observation()
-            target = target.observe(obs_t, F.count(F.lit(1)).alias("nt"))
-
-        # Single full-outer join resolves everything in one shuffle each side
-        # (the pruned target is the only big input): untouched target rows
-        # pass through, deletes drop, upserts take new values except
-        # TOAST-marked columns which carry the target's value forward.
-        t = target.alias("t")
-        c = changes.alias("c")
-        # plain equality, not eqNullSafe: PostgreSQL replica-identity /
-        # primary-key columns are NOT NULL, and null-safe join keys
-        # (coalesce(k,'')+isnull(k)) defeat exchange reuse — the join would
-        # re-shuffle the change set the compaction aggregate just hash
-        # partitioned by these exact columns
-        cond = F.expr(
-            " AND ".join(f"t.{_qi(k)} = c.{_qi(k)}" for k in key_cols)
-        )
-        j = t.join(c, cond, "full_outer")
-        untouched = "c._op IS NULL"
-        sel = [
-            f"coalesce(c.{_qi(k)}, t.{_qi(k)}) AS {_qi(k)}"
-            for k in key_cols
-        ]
-        for cn in data_cols:
-            if cn in key_cols:
-                continue
-            q = _qi(cn)
-            sel.append(
-                f"CASE WHEN {untouched} THEN t.{q} "
-                f"WHEN array_contains(coalesce(c._toast, array()), "
-                f"{_qs(cn)}) THEN t.{q} "
-                f"ELSE c.{q} END AS {q}"
-            )
-        sel.append("coalesce(c._bucket, t._bucket) AS _bucket")
-        obs_out = Observation()
-        new_data = j.filter(
-            f"({untouched}) OR c._op = 'upsert'"
-        ).selectExpr(*sel).observe(obs_out, F.count(F.lit(1)).alias("no"))
-
-        _mark("plan_build_ms")  # driver-side: expression/plan construction
-        new_files = self._write_buckets(new_data, snap["version"] + 1)
-        cstats = obs.get
-        n_target = (
-            int(obs_t.get["nt"]) if obs_t is not None else static_n_target
-        )
-        n_out = int(obs_out.get["no"])
-        _mark("join_write_ms")
-
-        # delivery-contract invariants, checked BEFORE the snapshot commit
-        # (the reference acks only after a verified apply,
-        # /root/reference/src/stream.rs:1563-1582). Violations abort the
-        # merge loudly instead of committing silent row loss.
-        if n_target is not None and n_out < n_target - int(cstats["d"]):
-            raise RuntimeError(
-                f"MERGE row-conservation violated (batch {batch_id}, table "
-                f"{self.root}): {n_target} target rows read, "
-                f"{int(cstats['d'])} deletes, but only {n_out} rows written "
-                f"— untouched rows would be lost; aborting before commit"
-            )
-
-        files = dict(new_files)  # every bucket was read and rewritten
-
-        n_up, n_del = int(cstats["u"]), int(cstats["d"])
-        record = {
-            "batch_id": batch_id,
-            "applied_lsn": applied_lsn,
-            "upserts": n_up,
-            "deletes": n_del,
-            "null_key_quarantined": int(cstats["nk"]),
-            "target_rows": n_target,
-            "rows_written": n_out,
-            "buckets_rewritten": sorted(int(b) for b in new_files),
-            "truncated": truncate_first,
-            "wall_ms": sum(phase.values()),
-            "phase_ms": phase,
-            "skipped": False,
-        }
-        snap2 = {
-            "version": snap["version"] + 1,
-            "schema": snap["schema"],
-            "key_columns": key_cols,
-            "n_buckets": n_buckets,
-            "aliases": snap.get("aliases", {}),
-            "dropped_names": snap.get("dropped_names", []),
-            "column_since": snap.get("column_since", {}),
-            "files": files,
-            "properties": {
-                **snap["properties"],
-                "applied_lsn": int(applied_lsn),
-            },
-            "lineage": _append_lineage(snap["lineage"], record),
-        }
-        if cl_files is not None:
-            snap2["changelog_files"] = cl_files
-        self._commit(snap2)
-        return record
+        keys = snap["key_columns"]
+        sel = [f"CAST({int(applied_lsn)} AS BIGINT) AS commit_lsn",
+               "CAST(0 AS BIGINT) AS seq", "_op"]
+        for n, ty in snap["schema"]:
+            sel.append(f"CAST({_qi(n)} AS {ty}) AS {_qi(n)}")
+            if n not in keys:
+                sel.append(
+                    f"array_contains(coalesce(_toast, array()), {_qs(n)}) "
+                    f"AS {_qi('_t_' + n)}")
+        return self.merge_bucketed(spark, changes.selectExpr(*sel),
+                                   applied_lsn, batch_id, truncate_first)
 
     def merge_bucketed(
         self,
@@ -863,9 +677,10 @@ class LakeTable:
         truncate_first: bool = False,
     ) -> dict:
         """Exactly-once MERGE via the bucket-co-located Arrow kernel
-        (lake/merge_kernel.py) — same contract and lineage record shape as
-        ``merge``, but takes the PRE-compaction ``dml_images`` rows (key
-        cols + value cols + per-column ``_t_<c>`` toast flags + ord cols).
+        (lake/merge_kernel.py). Takes the PRE-compaction ``dml_images``
+        rows (key cols + value cols + per-column ``_t_<c>`` toast flags +
+        ord cols ``commit_lsn``/``seq``); ``merge`` feeds it a compacted
+        change set in the same shape.
 
         One shuffle (change rows, by bucket); the target is read locally
         inside the kernel and never shuffled; compaction, join, TOAST
@@ -908,22 +723,17 @@ class LakeTable:
 
         # partition count: one bucket per task at cluster scale; locally a
         # couple of tasks per core keeps per-task kernel overhead bounded
-        p_env = os.environ.get("WALSTREAM_MERGE_TASKS")
-        if p_env:
-            n_parts = max(1, int(p_env))
-        else:
-            par = spark.sparkContext.defaultParallelism
-            n0 = max(1, min(n_buckets, par * 2))
-            # prefer a divisor of n_buckets so the salted routing below
-            # spreads buckets exactly evenly over partitions — but never
-            # at the cost of real parallelism (a prime bucket count would
-            # walk down to 1 task): outside 2/3 of the target, keep the
-            # target and let the plain hash route
+        n0 = max(1, min(n_buckets, spark.sparkContext.defaultParallelism * 2))
+        # prefer a divisor of n_buckets so the salted routing below spreads
+        # buckets exactly evenly over partitions — but never at the cost of
+        # real parallelism (a prime bucket count would walk down to 1
+        # task): outside 2/3 of the target, keep the target and let the
+        # plain hash route
+        n_parts = n0
+        while n_buckets % n_parts:
+            n_parts -= 1
+        if n_parts * 3 < n0 * 2:
             n_parts = n0
-            while n_buckets % n_parts:
-                n_parts -= 1
-            if n_parts * 3 < n0 * 2:
-                n_parts = n0
 
         out_dir = os.path.join(
             self.data_dir, f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}")
@@ -956,45 +766,19 @@ class LakeTable:
             masks=masks or None)
         withb = images.withColumn(
             "_bucket", self._bucket_expr(key_cols, n_buckets))
-        # Routing choice is WAVE-AWARE (round-7 interleaved A/B at 1024
-        # buckets/1024 parts, EVIDENCE_r7.md §8): exact salted routing
-        # wins when tasks ≈ waves×cores is small (a collided task carrying
-        # 6 buckets stretches a 1-2-wave stage ~3-6×; measured ~20% at 2
-        # waves), but at many waves the collisions amortize across the
-        # wave schedule and salting only pays 1024 non-empty task
-        # overheads — plain hash measured ~13% FASTER at 32 waves (385 of
-        # 1024 tasks empty, finishing instantly). Cluster configs
-        # (P = n_buckets ≈ 2×cores) sit in the few-wave regime where
-        # exact routing matters.
-        routing = os.environ.get("WALSTREAM_MERGE_ROUTING", "auto")
-        if routing == "auto":
-            par = max(1, spark.sparkContext.defaultParallelism)
-            waves = -(-n_parts // par)
-            max_waves = int(os.environ.get("WALSTREAM_SALT_MAX_WAVES", "4"))
-            routing = "salted" if waves <= max_waves else "hash"
-        salts = (partition_salts(n_parts) if routing != "hash" else None)
+        salts = partition_salts(n_parts)
         if salts is not None and n_buckets % n_parts == 0:
             # exact bucket→partition routing: residue class p of _bucket
             # repartitions on a salt whose murmur3 lands in partition p,
             # so every partition carries exactly n_buckets/n_parts buckets
             # (plain hash-of-_bucket collides classes: measured 0.16-2.37 s
-            # reduce tasks at 16→8, a ~20% stage stretch)
-            if n_parts <= 512:
-                case = ("CASE pmod(_bucket, {P}) ".format(P=n_parts)
-                        + " ".join(f"WHEN {p} THEN {s}"
-                                   for p, s in enumerate(salts))
-                        + " END")
-                expr = f"CAST(({case}) AS INT)"
-            else:
-                # past the CASE practicality bound (cluster-scale partition
-                # counts: P = 2×cores on a 512-core cluster already
-                # overflows it) the same bijection ships as a constant-
-                # folded array literal indexed by the residue — O(1) per
-                # row, one Literal in the plan
-                arr = ",".join(str(s) for s in salts)
-                expr = (f"element_at(array({arr}), "
-                        f"CAST(pmod(_bucket, {n_parts}) AS INT) + 1)")
-            rep = withb.repartition(n_parts, F.expr(expr))
+            # reduce tasks at 16→8, a ~20% stage stretch). The bijection
+            # ships as a constant-folded array literal indexed by the
+            # residue: O(1) per row, one Literal in the plan at any P
+            arr = ",".join(str(s) for s in salts)
+            rep = withb.repartition(n_parts, F.expr(
+                f"element_at(array({arr}), "
+                f"CAST(pmod(_bucket, {n_parts}) AS INT) + 1)"))
         else:
             rep = withb.repartition(n_parts, "_bucket")
         _mark("plan_build_ms")

@@ -1,13 +1,16 @@
-"""Pre-MERGE last-image compaction (classic CDC reduce, SURVEY.md §2f).
+"""Change-set shaping for the lake MERGE (classic CDC reduce, SURVEY.md §2f).
 
-Reduces a batch of committed change events to at most one row per key before
-the sink MERGE. Deliberately built on **hash aggregation with max-by**, not a
-ranking window: max/max_by are algebraic, so Spark performs map-side partial
-aggregation before the shuffle — a Zipf-hot key collapses to one row per
-input partition *before* any data moves, which neutralizes key skew where a
-``row_number() over (partition by key)`` window would funnel the entire hot
-key through one reducer. (This is the explicit skew-handling strategy of the
-north rule; the MERGE join's residual skew is handled by AQE skew-join.)
+``dml_images`` projects committed DML events of one table onto flat
+key/value images: the input of the merge kernel (``LakeTable.merge_bucketed``),
+which performs the last-image compaction per bucket in Arrow.
+
+``compact_salted`` is the same last-image reduce expressed in Spark, as an
+explicit two-level salted aggregation for pathologically hot keys. It is
+built on **hash aggregation with max-by**, not a ranking window: max/max_by
+are algebraic, so Spark performs map-side partial aggregation before the
+shuffle — a Zipf-hot key collapses to one row per input partition *before*
+any data moves, where a ``row_number() over (partition by key)`` window
+would funnel the entire hot key through one reducer.
 
 Unchanged-TOAST semantics: a column sent as ``'u'`` carries the *previous*
 value forward. Within a batch that resolves to "the latest non-toast image's
@@ -129,38 +132,6 @@ def dml_images(events: DataFrame, key_columns: list[str],
     )
 
 
-def compact_last_image(images: DataFrame, key_columns: list[str],
-                       data_columns: list[tuple[str, str]]) -> DataFrame:
-    """One row per key: last op wins; each column takes the latest non-toast
-    value; columns never materialized in-batch surface in ``_toast``.
-
-    Built from SQL-string expressions (one py4j call per agg, one for the
-    final projection) — see the plan-build note in ``dml_images``."""
-    ord_s = f"struct({', '.join(ORD)})"
-    aggs = [F.expr(f"max_by(_op, {ord_s})").alias("_op")]
-    for c, _ in data_columns:
-        tc, qc = _qi("_t_" + c), _qi(c)
-        aggs.append(
-            F.expr(
-                f"max(CASE WHEN _op = 'upsert' AND NOT {tc} THEN "
-                f"named_struct('commit_lsn', commit_lsn, 'seq', seq, "
-                f"'v', {qc}) END)"
-            ).alias(f"_last_{c}")
-        )
-    out = images.groupBy(*key_columns).agg(*aggs)
-    sel = [*[_qi(k) for k in key_columns], "_op"]
-    for c, _ in data_columns:
-        sel.append(f"{_qi('_last_' + c)}.v AS {_qi(c)}")
-    cases = ", ".join(
-        f"CASE WHEN _op = 'upsert' AND {_qi('_last_' + c)} IS NULL "
-        f"THEN {_qs(c)} END"
-        for c, _ in data_columns
-    )
-    return out.selectExpr(
-        *sel, f"array_compact(array({cases})) AS _toast"
-    )
-
-
 def compact_salted(images: DataFrame, key_columns: list[str],
                    data_columns: list[tuple[str, str]],
                    n_salt: int = 16) -> DataFrame:
@@ -171,11 +142,12 @@ def compact_salted(images: DataFrame, key_columns: list[str],
     combines the n_salt partial winners. All aggregates here are algebraic
     (max / max_by), so the two-level split is exact.
 
-    Note: Spark's map-side partial aggregation already gives hot keys this
-    treatment implicitly (see compact_last_image), so the salted path is
-    only worth its extra shuffle when single keys overflow executor memory
-    during the final merge — wire it in via ``compact_changes(n_salt=...)``
-    at that scale."""
+    Spark's map-side partial aggregation already gives hot keys this
+    treatment implicitly in a one-level reduce, so the salted split is only
+    worth its extra shuffle when single keys overflow executor memory
+    during the final combine. Output: one row per key with key cols,
+    ``_op``, data cols and ``_toast`` (the compacted change-set shape
+    ``LakeTable.merge`` applies)."""
     salted = images.withColumn(
         "_salt", F.pmod(F.xxhash64("seq"), F.lit(n_salt)).cast("int")
     )
@@ -212,19 +184,3 @@ def compact_salted(images: DataFrame, key_columns: list[str],
         ])
     ).alias("_toast")
     return out.select(*sel, toast)
-
-
-def compact_changes(events: DataFrame, key_columns: list[str],
-                    data_columns: list[tuple[str, str]],
-                    n_salt: int = 0,
-                    aliases: dict[str, list[str]] | None = None,
-                    key_types: dict[str, str] | None = None) -> DataFrame:
-    """events (one table, committed DML only) → MERGE-ready change set.
-    ``n_salt > 0`` selects the explicit two-level salted reduce;
-    ``aliases`` maps renamed columns to their pre-rename names;
-    ``key_types`` casts wire-text keys to the lake's key column types."""
-    images = dml_images(events, key_columns, data_columns, aliases=aliases,
-                        key_types=key_types)
-    if n_salt > 0:
-        return compact_salted(images, key_columns, data_columns, n_salt)
-    return compact_last_image(images, key_columns, data_columns)

@@ -488,9 +488,9 @@ def minhash_signatures(spark, sf_dir):
 
 
 def _minhash_sig_ctes(shingle_sql: str, k: int) -> str:
-    """dim + sig CTE bodies: 60-bit md5-derived integer minhashes (see
-    dedup.minhash_signature — one md5 per DISTINCT shingle per function,
-    integer min aggregation)."""
+    """dim + sig CTE bodies: 60-bit md5-derived integer minhashes (the
+    definition dedup.minhash_signature_arrow reproduces — one md5 per
+    DISTINCT shingle per function, integer min aggregation)."""
     dim_cols = ",\n".join(
         f"         CAST('0x' || substr(md5('{i}:' || sh), 1, 15) AS BIGINT)"
         f" AS h{i}"
@@ -1399,7 +1399,8 @@ def cdc_changelog_roundtrip(spark, sf_dir):
     """Engine replay of the wal_replay_final_state fixture with the
     change-data-feed enabled (WALSTREAM_CHANGELOG=1), then the feed is
     applied commit-by-commit onto a FRESH copy of the bootstrap base
-    (LakeTable.read_changes → merge) and the REPLICA is fingerprinted.
+    (LakeTable.read_changes → merge, which runs the same merge kernel as
+    the engine) and the REPLICA is fingerprinted.
     The oracle pins the SAME constant as wal_replay_final_state: the feed
     must reproduce the exact table the engine materialized, which the
     golden applier independently derives — so a feed that loses a record,

@@ -6,7 +6,8 @@ analog — and the lake-side counterpart of the reference's typed event
 delivery to consumers, /root/reference/src/stream.rs delivery loop).
 Contract under test:
 
-- every MERGE (declarative AND Arrow-kernel path) with the table property
+- every MERGE (``merge`` of a compacted change set AND ``merge_bucketed``
+  of images; both run the Arrow kernel) with the table property
   ``changelog`` persists its compacted change records: key+data columns,
   ``_op``, ``_toast`` carry-forward names, ``_commit_version``/``_commit_lsn``;
 - ``read_changes(since, until]`` returns exactly those records;
@@ -27,10 +28,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg_walstream_spark.lake.table import LakeTable
-from pg_walstream_spark.operators.compact import compact_changes, dml_images
+from pg_walstream_spark.operators.compact import dml_images
 
+from merge_oracle import compact_changes, oracle_feed
 from test_merge_kernel import (
-    DATA_COLS, KEY_COLS, _base_df, _events_df, _rand_workload, _state,
+    DATA_COLS, KEY_COLS, _base_df, _events_df, _oracle_state,
+    _rand_workload, _state,
 )
 
 KT = {"k1": "string", "k2": "string"}
@@ -42,16 +45,21 @@ def _mk(spark, path, n_rows=40, n_buckets=8):
                             KEY_COLS, n_buckets=n_buckets, properties=PROPS)
 
 
-def _norm_feed(spark, t, **kw):
+def _norm_rows(rows):
     return sorted(
         (r["k1"], r["k2"], r["v_str"], r["v_num"], r["_op"],
          tuple(sorted(r["_toast"] or [])),
          r["_commit_version"], r["_commit_lsn"])
-        for r in t.read_changes(spark, **kw).collect()
+        for r in rows
     )
 
 
+def _norm_feed(spark, t, **kw):
+    return _norm_rows(t.read_changes(spark, **kw).collect())
+
+
 def test_declarative_merge_emits_feed(spark, tmp_path):
+    """``merge`` of a compacted change set persists its records."""
     t = _mk(spark, tmp_path / "t")
     rows = [
         ("insert", 100, 1, None,
@@ -75,23 +83,67 @@ def test_declarative_merge_emits_feed(spark, tmp_path):
 
 
 def test_kernel_feed_matches_declarative(spark, tmp_path):
+    """The kernel's feed is the declarative oracle's compacted change set,
+    stamped with the commit's version and lsn."""
     rows = _rand_workload(7)
-    tg = _mk(spark, tmp_path / "g", n_rows=80)
     tk = _mk(spark, tmp_path / "k", n_rows=80)
     ev = _events_df(spark, rows)
-    tg.merge(spark, compact_changes(ev, KEY_COLS, DATA_COLS, key_types=KT),
-             applied_lsn=10_000, batch_id="b0")
+    changes = compact_changes(ev, KEY_COLS, DATA_COLS, key_types=KT)
+    want, _ = _oracle_state(tk.read(spark), changes)
+    want_feed = _norm_rows(oracle_feed(
+        changes, KEY_COLS, [c for c, _ in DATA_COLS], 2, 10_000).collect())
     rk = tk.merge_bucketed(spark, dml_images(ev, KEY_COLS, DATA_COLS,
                                              key_types=KT),
                            applied_lsn=10_000, batch_id="b0")
     assert rk["merge_kernel"] is True
-    assert _norm_feed(spark, tg) == _norm_feed(spark, tk)
-    assert _state(spark, tg) == _state(spark, tk)
+    assert _norm_feed(spark, tk) == want_feed
+    assert _state(spark, tk) == want
+
+
+def test_merge_applies_feed_through_kernel(spark, tmp_path):
+    """``merge`` (the replica-apply step) runs the merge kernel on a
+    compacted change set and lands the declarative oracle's state: TOAST
+    carry on an existing key and on a new key, the old-key delete of a
+    key-changing update, a quarantined null-key row; buckets the change
+    set does not touch keep their files. Then ``truncate_first``."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), _base_df(spark, 200),
+                         KEY_COLS, n_buckets=16)
+    before = t.snapshot()["files"]
+    changes = spark.createDataFrame([
+        ("1", "a", None, 111, "upsert", ["v_str"]),   # carry base1
+        ("900", "a", None, 5, "upsert", ["v_str"]),   # new key: null
+        ("3", "a", None, None, "delete", []),         # old key of ...
+        ("903", "a", "moved", 33, "upsert", []),      # ... its new key
+        (None, "b", "ghost", 0, "upsert", []),        # quarantined
+    ], "k1 string, k2 string, v_str string, v_num bigint, _op string, "
+       "_toast array<string>")
+    want, counts = _oracle_state(t.read(spark), changes)
+    rec = t.merge(spark, changes, applied_lsn=100, batch_id="feed")
+    assert rec["merge_kernel"] is True
+    assert rec["null_key_quarantined"] == counts["null_key_quarantined"] == 1
+    assert (rec["upserts"], rec["deletes"]) == (3, 1)
+    got = _state(spark, t)
+    assert got == want
+    by_key = {r[:2]: r[2:] for r in got}
+    assert by_key[("1", "a")] == ("base1", 111)
+    assert by_key[("900", "a")] == (None, 5)
+    assert ("3", "a") not in by_key and by_key[("903", "a")] == ("moved", 33)
+    after = t.snapshot()["files"]
+    touched = {str(b) for b in rec["buckets_rewritten"]}
+    assert 0 < len(touched) < 16
+    assert all(after[b] == fl for b, fl in before.items() if b not in touched)
+
+    want, _ = _oracle_state(t.read(spark), changes, truncate_first=True)
+    rec = t.merge(spark, changes, applied_lsn=200, truncate_first=True)
+    assert rec["merge_kernel"] is True and rec["truncated"] is True
+    assert rec["target_rows"] == 0
+    assert _state(spark, t) == want and len(want) == 3
 
 
 def test_feed_replay_reproduces_table(spark, tmp_path):
     """The replica-apply differential: table at v1 + feed == table at vN,
-    across alternating declarative/kernel merges."""
+    across alternating ``merge`` (compacted change set) and
+    ``merge_bucketed`` (images) commits."""
     t = _mk(spark, tmp_path / "src", n_rows=60)
     rng = random.Random(3)
     seq = 0

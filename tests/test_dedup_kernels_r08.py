@@ -3,9 +3,10 @@ bit-identical to their original formulations.
 
 - minhash_signature_arrow gained a uint16 rank-compression fast path for
   the per-doc minimum (4x less memory traffic than reducing raw int64
-  hashes); pinned here against the Column-expression definition.
-- simhash_pieces became an Arrow kernel; pinned against the retained
-  expression formulation (simhash_pieces_expr).
+  hashes); pinned here against the Column-expression definition
+  (dedup_oracles.minhash_signature).
+- simhash_pieces became an Arrow kernel; pinned against the original
+  expression formulation (dedup_oracles.simhash_pieces_expr).
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from pyspark.sql import functions as F
 from pg_walstream_spark import queries as Q
 from pg_walstream_spark.analytics import dedup as dd
 
+from dedup_oracles import minhash_signature, simhash_pieces_expr
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -24,7 +27,7 @@ def test_minhash_rank_path_matches_expression_definition(spark):
     k = 16
     arrow = sorted(
         map(tuple, dd.minhash_signature_arrow(docs, k=k).collect()))
-    expr = sorted(map(tuple, dd.minhash_signature(docs, k=k).collect()))
+    expr = sorted(map(tuple, minhash_signature(docs, k=k).collect()))
     assert len(arrow) > 0
     assert arrow == expr
 
@@ -50,7 +53,7 @@ def test_minhash_sparse_rank_path_matches_expression_definition(spark):
     k = 8
     arrow = sorted(
         map(tuple, dd.minhash_signature_arrow(docs, k=k).collect()))
-    expr = sorted(map(tuple, dd.minhash_signature(docs, k=k).collect()))
+    expr = sorted(map(tuple, minhash_signature(docs, k=k).collect()))
     assert len(arrow) == 300
     assert arrow == expr
 
@@ -58,7 +61,7 @@ def test_minhash_sparse_rank_path_matches_expression_definition(spark):
 def test_simhash_kernel_matches_expression_definition(spark):
     docs = Q._neardup_docs(spark, SF)
     arrow = sorted(map(tuple, dd.simhash_pieces(docs).collect()))
-    expr = sorted(map(tuple, dd.simhash_pieces_expr(docs).collect()))
+    expr = sorted(map(tuple, simhash_pieces_expr(docs).collect()))
     assert len(arrow) > 0
     assert arrow == expr
 
@@ -69,7 +72,7 @@ def test_simhash_kernel_drops_tokenless_docs(spark):
         "doc_id long, text string",
     )
     got = {r["doc_id"] for r in dd.simhash_pieces(docs).collect()}
-    expr = {r["doc_id"] for r in dd.simhash_pieces_expr(docs).collect()}
+    expr = {r["doc_id"] for r in simhash_pieces_expr(docs).collect()}
     assert got == expr == {1}
 
 
@@ -83,7 +86,7 @@ def test_simhash_kernel_mixed_case_and_digits(spark):
     # lowercasing happens before tokenization: both docs hash identically
     assert rows[1] == rows[2]
     expr = {r["doc_id"]: (r["p0"], r["p1"], r["p2"], r["p3"])
-            for r in dd.simhash_pieces_expr(docs).collect()}
+            for r in simhash_pieces_expr(docs).collect()}
     assert rows == expr
 
 

@@ -1,7 +1,7 @@
 """Differential tests: the bucket-co-located Arrow merge kernel
-(lake/merge_kernel.py) must produce byte-identical lake state to the
-general declarative path (compact_last_image + LakeTable.merge) on the
-same inputs."""
+(lake/merge_kernel.py) must produce the lake state the declarative oracle
+(tests/merge_oracle.py: compact_last_image + full-outer join) derives from
+the same inputs."""
 
 from __future__ import annotations
 
@@ -13,9 +13,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from pg_walstream_spark.lake.table import LakeTable
-from pg_walstream_spark.operators.compact import (
-    compact_changes, dml_images,
-)
+from pg_walstream_spark.operators.compact import dml_images
+
+from merge_oracle import compact_changes, merge_oracle, oracle_feed
 
 KEY_COLS = ["k1", "k2"]
 DATA_COLS = [("v_str", "string"), ("v_num", "bigint")]
@@ -76,20 +76,28 @@ def _state(spark, table: LakeTable):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _oracle_state(target_df, changes, key_cols=KEY_COLS,
+                  data_cols=DATA_COLS, truncate_first=False):
+    """Sorted rows and counts of the declarative oracle's MERGE."""
+    merged, counts = merge_oracle(target_df, changes, key_cols,
+                                  [c for c, _ in data_cols], truncate_first)
+    return sorted(tuple(r) for r in merged.collect()), counts
+
+
 def _run_both(spark, tmp_path, rows, n_buckets=8, base_rows=80):
-    base = _base_df(spark, base_rows)
-    tg = LakeTable.create(spark, str(tmp_path / "general"), base,
-                          KEY_COLS, n_buckets=n_buckets)
-    tk = LakeTable.create(spark, str(tmp_path / "kernel"), base,
-                          KEY_COLS, n_buckets=n_buckets)
+    """Merge ``rows`` through the kernel and through the oracle from the
+    same base; returns (oracle counts, kernel record)."""
+    tk = LakeTable.create(spark, str(tmp_path / "kernel"),
+                          _base_df(spark, base_rows), KEY_COLS,
+                          n_buckets=n_buckets)
     ev = _events_df(spark, rows)
     kt = {"k1": "string", "k2": "string"}
-    changes = compact_changes(ev, KEY_COLS, DATA_COLS, key_types=kt)
-    rg = tg.merge(spark, changes, applied_lsn=10_000, batch_id="b0")
+    want, rg = _oracle_state(
+        tk.read(spark), compact_changes(ev, KEY_COLS, DATA_COLS, key_types=kt))
     images = dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt)
     rk = tk.merge_bucketed(spark, images, applied_lsn=10_000,
                            batch_id="b0")
-    assert _state(spark, tg) == _state(spark, tk)
+    assert _state(spark, tk) == want
     return rg, rk
 
 
@@ -163,32 +171,33 @@ def test_kernel_late_added_column_reads_null(spark, tmp_path):
 
 def _diff_history(spark, tmp_path, prep, batches, data_cols, base=None,
                   truncate_first=False, n_buckets=8):
-    """Differential over schema history: ``prep`` runs the same metadata
-    operations on two tables, then every batch of ``batches`` merges into
-    one through the declarative path and into the other through the
-    kernel. Returns the kernel table, its last record and its state."""
+    """Differential over schema history: ``prep`` runs metadata operations
+    on a table, then every batch of ``batches`` merges into it through the
+    kernel and into the oracle's running state, which starts from the
+    table's read through that history. Returns the kernel table, its last
+    record and its state."""
     kt = {"k1": "string", "k2": "string"}
     base = base if base is not None else _base_df(spark)
-    tg = LakeTable.create(spark, str(tmp_path / "general"), base, KEY_COLS,
-                          n_buckets=n_buckets)
     tk = LakeTable.create(spark, str(tmp_path / "kernel"), base, KEY_COLS,
                           n_buckets=n_buckets)
-    for t in (tg, tk):
-        prep(t)
+    prep(tk)
     al = tk.snapshot().get("aliases")
+    want_df = tk.read(spark)
     for i, rows in enumerate(batches):
         ev = _events_df(spark, rows)
-        lsn = 10_000 * (i + 1)
-        tg.merge(spark, compact_changes(ev, KEY_COLS, data_cols, aliases=al,
-                                        key_types=kt),
-                 applied_lsn=lsn, truncate_first=truncate_first)
+        merged, _ = merge_oracle(
+            want_df, compact_changes(ev, KEY_COLS, data_cols, aliases=al,
+                                     key_types=kt),
+            KEY_COLS, [c for c, _ in data_cols], truncate_first)
+        want = merged.collect()
+        want_df = spark.createDataFrame(want, merged.schema)
         rk = tk.merge_bucketed(
             spark, dml_images(ev, KEY_COLS, data_cols, aliases=al,
                               key_types=kt),
-            applied_lsn=lsn, truncate_first=truncate_first)
+            applied_lsn=10_000 * (i + 1), truncate_first=truncate_first)
         assert rk["merge_kernel"] is True
         got = _state(spark, tk)
-        assert got == _state(spark, tg)
+        assert got == sorted(tuple(r) for r in want)
     return tk, rk, got
 
 
@@ -378,26 +387,20 @@ def test_murmur3_salts_predict_spark_partitions(spark):
 def test_kernel_salted_routing_balances_partitions(spark, tmp_path):
     """With 16 buckets into 8 partitions the salted routing must place
     exactly 2 buckets per reduce partition (plain hash collides them);
-    verified through the real merge path by checking every bucket was
-    rewritten and the merge output matches the general path."""
-    base = _base_df(spark, 400)
-    tA = LakeTable.create(spark, str(tmp_path / "a"), base, KEY_COLS,
-                          n_buckets=16)
-    tB = LakeTable.create(spark, str(tmp_path / "b"), base, KEY_COLS,
-                          n_buckets=16)
+    verified through the real merge path: the merge output matches the
+    declarative oracle."""
+    tA = LakeTable.create(spark, str(tmp_path / "a"), _base_df(spark, 400),
+                          KEY_COLS, n_buckets=16)
     rows = [("update", 100 + i, i, {"k1": str(i % 97), "k2": "a"},
              {"k1": str(i % 97), "k2": "a", "v_str": f"u{i}",
               "v_num": str(i)}, None) for i in range(300)]
     ev = _events_df(spark, rows)
-    images = dml_images(ev, KEY_COLS, DATA_COLS,
-                        key_types={"k1": "string", "k2": "string"})
-    recA = tA.merge_bucketed(spark, images, applied_lsn=10_000)
-    changes = compact_changes(ev, KEY_COLS, DATA_COLS,
-                              key_types={"k1": "string", "k2": "string"})
-    tB.merge(spark, changes, applied_lsn=10_000)
-    a = sorted(map(tuple, tA.read(spark).collect()))
-    b = sorted(map(tuple, tB.read(spark).collect()))
-    assert a == b
+    kt = {"k1": "string", "k2": "string"}
+    want, _ = _oracle_state(
+        tA.read(spark), compact_changes(ev, KEY_COLS, DATA_COLS, key_types=kt))
+    tA.merge_bucketed(spark, dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt),
+                      applied_lsn=10_000)
+    assert _state(spark, tA) == want
 
 
 def test_kernel_fileless_bucket_sparse_bootstrap(spark, tmp_path):
@@ -405,7 +408,7 @@ def test_kernel_fileless_bucket_sparse_bootstrap(spark, tmp_path):
     buckets than base keys) receiving inserts must merge cleanly — the
     kernel's __t marker must be typed bool even at n_target==0
     (pa.array([True]*0) infers null and Acero rejects null non-key
-    fields). Differential vs the general path."""
+    fields). Differential vs the declarative oracle."""
     rows = [("insert", 100 + i, i + 1, None,
              {"k1": str(1000 + i), "k2": "a" if i % 2 else "b",
               "v_str": f"n{i}", "v_num": str(i)}, None)
@@ -418,13 +421,10 @@ def test_kernel_fileless_bucket_sparse_bootstrap(spark, tmp_path):
 def test_kernel_bucket_emptied_then_reinserted(spark, tmp_path):
     """Delete every row of a table (all buckets drop their files), then
     insert fresh keys: the second merge joins against fileless buckets.
-    Differential vs the general path across both merges."""
+    Differential vs the declarative oracle across both merges."""
     kt = {"k1": "string", "k2": "string"}
-    base = _base_df(spark, 8)
-    tg = LakeTable.create(spark, str(tmp_path / "g"), base, KEY_COLS,
-                          n_buckets=4)
-    tk = LakeTable.create(spark, str(tmp_path / "k"), base, KEY_COLS,
-                          n_buckets=4)
+    tk = LakeTable.create(spark, str(tmp_path / "k"), _base_df(spark, 8),
+                          KEY_COLS, n_buckets=4)
     dels = [("delete", 100 + i, i + 1,
              {"k1": str(i), "k2": "a" if i % 2 else "b"}, None, None)
             for i in range(8)]
@@ -434,12 +434,13 @@ def test_kernel_bucket_emptied_then_reinserted(spark, tmp_path):
            for i in range(6)]
     for lsn, rows in ((10_000, dels), (20_000, ins)):
         ev = _events_df(spark, rows)
-        changes = compact_changes(ev, KEY_COLS, DATA_COLS, key_types=kt)
+        want, _ = _oracle_state(
+            tk.read(spark),
+            compact_changes(ev, KEY_COLS, DATA_COLS, key_types=kt))
         images = dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt)
-        tg.merge(spark, changes, applied_lsn=lsn)
         rk = tk.merge_bucketed(spark, images, applied_lsn=lsn)
         assert rk["merge_kernel"] is True
-        assert _state(spark, tg) == _state(spark, tk)
+        assert _state(spark, tk) == want
     assert len(_state(spark, tk)) == 6
 
 
@@ -447,10 +448,8 @@ def test_kernel_timestamp_key_conform(spark, tmp_path):
     """A timestamp key column: Spark's Arrow transfer carries its own tz
     annotation, which must be conformed to the snapshot-declared Arrow
     type before the kernel join (a mismatch fails or mis-joins in Acero).
-    Differential vs the general path."""
+    Differential vs the declarative oracle."""
     import datetime as dt
-
-    from pg_walstream_spark.operators.compact import compact_changes
 
     key_cols = ["k_ts", "k2"]
     data_cols = [("v_str", "string"), ("v_num", "bigint")]
@@ -459,8 +458,6 @@ def test_kernel_timestamp_key_conform(spark, tmp_path):
         [(dt.datetime(2024, 1, 1, 0, 0, i), "a", f"base{i}", i)
          for i in range(20)],
         "k_ts timestamp, k2 string, v_str string, v_num bigint")
-    tg = LakeTable.create(spark, str(tmp_path / "g"), base, key_cols,
-                          n_buckets=4)
     tk = LakeTable.create(spark, str(tmp_path / "k"), base, key_cols,
                           n_buckets=4)
     rows = []
@@ -474,19 +471,21 @@ def test_kernel_timestamp_key_conform(spark, tmp_path):
         rows.append(("insert", 200 + i, 50 + i, None,
                      {**k, "v_str": f"n{i}", "v_num": str(i)}, None))
     ev = _events_df(spark, rows)
-    changes = compact_changes(ev, key_cols, data_cols, key_types=kt)
+    want, _ = _oracle_state(
+        tk.read(spark),
+        compact_changes(ev, key_cols, data_cols, key_types=kt),
+        key_cols, data_cols)
     images = dml_images(ev, key_cols, data_cols, key_types=kt)
-    tg.merge(spark, changes, applied_lsn=10_000)
     rk = tk.merge_bucketed(spark, images, applied_lsn=10_000)
     assert rk["merge_kernel"] is True
-    assert _state(spark, tg) == _state(spark, tk)
+    assert _state(spark, tk) == want
 
 
 def test_salt_search_vectorized_matches_scalar():
     """partition_salts now coupon-collects with the numpy murmur3; the
     vectorized hash must stay bit-exact with the scalar pinned against
-    Spark above, and the salts found past the CASE bound (>512) must
-    still be the identity on residue classes."""
+    Spark above, and the salts found at cluster-scale partition counts
+    must still be the identity on residue classes."""
     import numpy as np
 
     from pg_walstream_spark.lake.merge_kernel import (
@@ -506,10 +505,10 @@ def test_salt_search_vectorized_matches_scalar():
 
 
 def test_salted_routing_array_literal_past_512(spark):
-    """Past 512 partitions the salt bijection ships as a constant-folded
-    array literal instead of a CASE; pin the whole chain (salt search →
-    element_at expression → real shuffle) by routing every residue class
-    at P=1024 and asserting each lands in its own partition."""
+    """The salt bijection ships as a constant-folded array literal at every
+    partition count; pin the whole chain (salt search → element_at
+    expression → real shuffle) at a cluster-scale P=1024 by routing every
+    residue class and asserting each lands in its own partition."""
     from pyspark.sql import functions as F
 
     from pg_walstream_spark.lake.merge_kernel import partition_salts
@@ -529,80 +528,6 @@ def test_salted_routing_array_literal_past_512(spark):
     assert len(got) == P
     for r in got:
         assert r["p"] == r["_bucket"] % P, (r["_bucket"], r["p"])
-
-
-def test_kernel_array_routing_merge_matches_general(spark, tmp_path):
-    """e2e: a merge forced onto >512 partitions (the array-literal salt
-    path) stays byte-identical to the general declarative merge. Salted
-    routing is forced — the wave-aware auto mode would pick plain hash
-    at 129 waves on the 4-core test session."""
-    rows = _rand_workload(99, n_ops=300, n_keys=50)
-    os.environ["WALSTREAM_MERGE_TASKS"] = "513"
-    os.environ["WALSTREAM_MERGE_ROUTING"] = "salted"
-    try:
-        _run_both(spark, tmp_path, rows, n_buckets=513)
-    finally:
-        os.environ.pop("WALSTREAM_MERGE_TASKS", None)
-        os.environ.pop("WALSTREAM_MERGE_ROUTING", None)
-
-
-def test_merge_routing_hash_knob_forces_plain_hash(spark, tmp_path):
-    """WALSTREAM_MERGE_ROUTING=hash (the A/B lever for routing
-    measurements) must keep results identical while skipping the salted
-    expression."""
-    rows = _rand_workload(7, n_ops=200, n_keys=40)
-    os.environ["WALSTREAM_MERGE_ROUTING"] = "hash"
-    try:
-        _run_both(spark, tmp_path, rows, n_buckets=16)
-    finally:
-        os.environ.pop("WALSTREAM_MERGE_ROUTING", None)
-
-
-def test_wave_aware_routing_auto_selects(spark, tmp_path, monkeypatch):
-    """Auto routing picks salted in the few-wave regime and plain hash
-    past WALSTREAM_SALT_MAX_WAVES (round-7 A/B: hash ~13% faster at 32
-    waves, salted ~20% faster at 2 — EVIDENCE_r7.md §8). Pinned through
-    the real merge by spying the repartition expression."""
-    try:  # Spark 4: instances are the classic class, not the sql shim
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pragma: no cover
-        from pyspark.sql import DataFrame
-
-    exprs = []
-    orig = DataFrame.repartition
-
-    def spy(self, n, *cols):
-        exprs.append((n, [str(c) for c in cols]))
-        return orig(self, n, *cols)
-
-    monkeypatch.setattr(DataFrame, "repartition", spy)
-    rows = _rand_workload(11, n_ops=120, n_keys=30)
-    base = _base_df(spark, 80)
-    kt = {"k1": "string", "k2": "string"}
-
-    # few waves (16 parts / 4 cores = 4 waves ≤ default 4) → salted CASE
-    t1 = LakeTable.create(spark, str(tmp_path / "few"), base, KEY_COLS,
-                          n_buckets=16)
-    ev = _events_df(spark, rows)
-    t1.merge_bucketed(
-        spark, dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt),
-        applied_lsn=10_000)
-    assert any("CASE" in c for _, cols in exprs for c in cols)
-
-    # many waves (64 parts / 4 cores = 16 waves) → plain hash on _bucket
-    exprs.clear()
-    os.environ["WALSTREAM_MERGE_TASKS"] = "64"
-    try:
-        t2 = LakeTable.create(spark, str(tmp_path / "many"), base,
-                              KEY_COLS, n_buckets=64)
-        t2.merge_bucketed(
-            spark, dml_images(ev, KEY_COLS, DATA_COLS, key_types=kt),
-            applied_lsn=10_000)
-    finally:
-        os.environ.pop("WALSTREAM_MERGE_TASKS", None)
-    assert exprs and all(
-        "CASE" not in c and "element_at" not in c
-        for _, cols in exprs for c in cols)
 
 
 def test_kernel_aqe_toggle_refcounted_across_overlapping_holders(spark):
@@ -628,7 +553,7 @@ def test_kernel_aqe_toggle_refcounted_across_overlapping_holders(spark):
 def test_concurrent_kernel_merges_restore_aqe(spark, tmp_path, prior):
     """The engine merges a batch's tables on parallel driver threads: two
     concurrent merge_bucketed calls must leave spark.sql.adaptive.enabled
-    at its prior value and both land the general path's state."""
+    at its prior value and both land the declarative oracle's state."""
     from concurrent.futures import ThreadPoolExecutor
 
     key = "spark.sql.adaptive.enabled"
@@ -636,11 +561,10 @@ def test_concurrent_kernel_merges_restore_aqe(spark, tmp_path, prior):
     ev = _events_df(spark, _rand_workload(11))
     tables = [LakeTable.create(spark, str(tmp_path / f"t{i}"),
                                _base_df(spark), KEY_COLS, n_buckets=8)
-              for i in range(3)]
-    tables[0].merge(spark, compact_changes(ev, KEY_COLS, DATA_COLS,
-                                           key_types=kt),
-                    applied_lsn=10_000)
-    want = _state(spark, tables[0])
+              for i in range(2)]
+    want, _ = _oracle_state(
+        _base_df(spark), compact_changes(ev, KEY_COLS, DATA_COLS,
+                                         key_types=kt))
 
     def _one(t, lsn):
         return t.merge_bucketed(
@@ -652,12 +576,12 @@ def test_concurrent_kernel_merges_restore_aqe(spark, tmp_path, prior):
         # the second round re-applies the same changes (same final state)
         for lsn in (10_000, 20_000):
             with ThreadPoolExecutor(2) as pool:
-                recs = list(pool.map(_one, tables[1:], [lsn, lsn]))
+                recs = list(pool.map(_one, tables, [lsn, lsn]))
             assert spark.conf.get(key) == prior
             assert all(r["merge_kernel"] for r in recs)
     finally:
         spark.conf.set(key, "true")
-    assert all(_state(spark, t) == want for t in tables[1:])
+    assert all(_state(spark, t) == want for t in tables)
 
 
 def _split_row_groups(t: LakeTable, rows_per_group: int = 7) -> None:
@@ -680,30 +604,26 @@ def _split_row_groups(t: LakeTable, rows_per_group: int = 7) -> None:
     t._commit(snap)
 
 
-def _feed(spark, t):
+def _norm(rows):
     return sorted(
         tuple(tuple(sorted(v)) if k == "_toast" else v
               for k, v in r.asDict().items())
-        for r in t.read_changes(spark).collect())
+        for r in rows)
 
 
 def test_kernel_streams_multi_file_row_groups_match_general(spark, tmp_path):
     """Buckets spanning two files and several row groups each, with a
     rename alias, the changelog on, and updates, deletes, inserts, a
     key-changing update and TOAST carries: the kernel (one row group at a
-    time) lands the declarative merge's state and change feed, and writes
+    time) lands the declarative oracle's state and change feed, and writes
     every bucket it rewrites as one row group."""
     cols = [("v_text", "string"), ("v_num", "bigint")]
     kt = {"k1": "string", "k2": "string"}
-    tables = []
-    for name in ("general", "kernel"):
-        t = LakeTable.create(spark, str(tmp_path / name), _base_df(spark, 120),
-                             KEY_COLS, n_buckets=4,
-                             properties={"changelog": True})
-        _split_row_groups(t)
-        t.rename_column("v_str", "v_text")
-        tables.append(t)
-    tg, tk = tables
+    tk = LakeTable.create(spark, str(tmp_path / "kernel"), _base_df(spark, 120),
+                          KEY_COLS, n_buckets=4,
+                          properties={"changelog": True})
+    _split_row_groups(tk)
+    tk.rename_column("v_str", "v_text")
     before = {b: [pq.ParquetFile(tk._abs(f)).num_row_groups for f in fl]
               for b, fl in tk.snapshot()["files"].items()}
     assert all(len(n) == 2 and sum(n) >= 3 for n in before.values())
@@ -726,18 +646,21 @@ def test_kernel_streams_multi_file_row_groups_match_general(spark, tmp_path):
                      ["v_text"] if toast else None))
     ev = _events_df(spark, rows)
     al = tk.snapshot()["aliases"]
-    tg.merge(spark, compact_changes(ev, KEY_COLS, cols, aliases=al,
-                                    key_types=kt), applied_lsn=10_000)
+    changes = compact_changes(ev, KEY_COLS, cols, aliases=al, key_types=kt)
+    want, _ = _oracle_state(tk.read(spark), changes, data_cols=cols)
+    want_feed = _norm(oracle_feed(changes, KEY_COLS, [c for c, _ in cols],
+                                  tk.snapshot()["version"] + 1,
+                                  10_000).collect())
     rk = tk.merge_bucketed(spark, dml_images(ev, KEY_COLS, cols, aliases=al,
                                              key_types=kt),
                            applied_lsn=10_000)
     assert rk["merge_kernel"] is True and rk["deletes"] > 0
     got = _state(spark, tk)
-    assert got == _state(spark, tg)
+    assert got == want
     by_key = {r[:2]: r for r in got}
     assert by_key[("61", "a")][2:] == ("base61", 611)
     assert ("65", "a") not in by_key and by_key[("905", "a")][2] == "moved"
-    assert _feed(spark, tk) == _feed(spark, tg)
+    assert _norm(tk.read_changes(spark).collect()) == want_feed
     written = [tk._abs(f) for b in rk["buckets_rewritten"]
                for f in tk.snapshot()["files"].get(str(b), [])]
     assert written and all(pq.ParquetFile(f).num_row_groups == 1
@@ -747,7 +670,7 @@ def test_kernel_streams_multi_file_row_groups_match_general(spark, tmp_path):
 def test_kernel_nested_data_columns_match_general(spark, tmp_path):
     """array<double> and map<string,int> data columns (which Acero cannot
     carry through a join) merge through the kernel, TOAST carry included,
-    and land the declarative merge's state."""
+    and land the declarative oracle's state."""
     ddl = ("k1 string, k2 string, v_arr array<double>, "
            "v_map map<string,int>")
     base = spark.createDataFrame(
@@ -769,15 +692,15 @@ def test_kernel_nested_data_columns_match_general(spark, tmp_path):
         "CASE WHEN _t_v_arr THEN 'v_arr' END, "
         "CASE WHEN _t_v_map THEN 'v_map' END)) "
         "ELSE array() END AS _toast")
-    tg = LakeTable.create(spark, str(tmp_path / "g"), base, KEY_COLS,
-                          n_buckets=4)
     tk = LakeTable.create(spark, str(tmp_path / "k"), base, KEY_COLS,
                           n_buckets=4)
-    tg.merge(spark, changes, applied_lsn=10_000)
+    want, _ = _oracle_state(tk.read(spark), changes,
+                            data_cols=[("v_arr", "array<double>"),
+                                       ("v_map", "map<string,int>")])
     rk = tk.merge_bucketed(spark, images, applied_lsn=10_000)
     assert rk["merge_kernel"] is True
     got = _state(spark, tk)
-    assert got == _state(spark, tg)
+    assert got == want
     by_key = {r[:2]: r[2:] for r in got}
     assert by_key[("2", "a")] == ([2.0, 0.5], {"t": 2})
     assert by_key[("3", "a")] == ([3.0, 3.5], {"n": 3})

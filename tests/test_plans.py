@@ -15,10 +15,11 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from pg_walstream_spark.fixtures import wal_gen as wg
-from pg_walstream_spark.operators.compact import compact_changes, dml_images
 from pg_walstream_spark.operators.decode import (
     CONTROL_TAGS, build_context, decode_frames_df,
 )
+
+from merge_oracle import compact_changes
 
 
 def plan_of(df) -> str:

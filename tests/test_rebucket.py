@@ -14,9 +14,12 @@ import os
 import pytest
 
 from pg_walstream_spark.lake.table import LakeTable
-from pg_walstream_spark.operators.compact import compact_changes, dml_images
+from pg_walstream_spark.operators.compact import dml_images
 
-from test_merge_kernel import DATA_COLS, KEY_COLS, _base_df, _events_df, _state
+from merge_oracle import compact_changes
+from test_merge_kernel import (
+    DATA_COLS, KEY_COLS, _base_df, _events_df, _oracle_state, _state,
+)
 
 KT = {"k1": "string", "k2": "string"}
 
@@ -73,7 +76,7 @@ def test_rebucket_same_count_is_skipped_without_history(spark, tmp_path):
 def test_rebucket_preserves_fence_and_merges_continue(spark, tmp_path):
     """applied_lsn carries over: a replayed (duplicate) batch is still
     fenced off after the rebucket, and the next batch merges normally on
-    the new bucket layout — via BOTH merge paths."""
+    the new bucket layout, landing the declarative oracle's state."""
     t = _mk_table(spark, tmp_path / "t", n_buckets=8)
     assert t.applied_lsn() == 2999
     t.rebucket(spark, 16)
@@ -90,15 +93,13 @@ def test_rebucket_preserves_fence_and_merges_continue(spark, tmp_path):
              {"k1": f"n{j}", "k2": "z", "v_str": "new", "v_num": str(j)},
              None) for j in range(12)]
     ev = _events_df(spark, rows)
+    want, _ = _oracle_state(
+        t.read(spark), compact_changes(ev, KEY_COLS, DATA_COLS, key_types=KT))
     t.merge_bucketed(spark, dml_images(ev, KEY_COLS, DATA_COLS,
                                        key_types=KT),
                      applied_lsn=4999, batch_id="post-k")
-    t2 = _mk_table(spark, tmp_path / "t2", n_buckets=8)
-    t2.rebucket(spark, 16)
-    t2.merge(spark, compact_changes(ev, KEY_COLS, DATA_COLS, key_types=KT),
-             applied_lsn=4999, batch_id="post-g")
     got = _state(spark, t)
-    assert got == _state(spark, t2)
+    assert got == want
     assert sum(1 for r in got if r[1] == "z") == 12
 
 
