@@ -257,9 +257,13 @@ def main(argv: list[str] | None = None) -> int:
         ))
         out = eng.replay_frames(args.frames, batch_frames=args.batch_frames,
                                 stop_at_lsn=args.stop_at_lsn)
-        print(json.dumps({"batches": out["batches"],
-                          "applied_lsn": out["applied_lsn"]}))
-        return 0
+        res = {"batches": out["batches"], "applied_lsn": out["applied_lsn"]}
+        if out["held_frames"]:
+            # a seq gap stopped the replay: name the files past it
+            res["held_frames"] = [{k: h[k] for k in ("path", "lo", "hi")}
+                                  for h in out["held_frames"]]
+        print(json.dumps(res))
+        return 1 if out["held_frames"] else 0
 
     if args.cmd == "stream":
         spark = _session("walstream-stream", args.master)

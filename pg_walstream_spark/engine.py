@@ -34,13 +34,18 @@ or Structured Streaming's foreachBatch — see ``streaming.py``):
    rows into a fresh delta dir of the pending store; the driver then
    commits the store meta. Every batch stays one Spark job.
 
-Resume: engine state (batch index, catalog, open-txn carry) is persisted
-atomically per batch; restart replays from the checkpoint and the fence
-makes reprocessing idempotent.
+Both front ends drive batches through the same two steps here:
+``frame_spans`` + ``admit_spans`` plan the contiguous run of frame files
+after the consumed seq (files past a seq gap are held, not applied), and
+``run_batches`` applies that run batch by batch. Resume: engine state
+(consumed seq ``max_seq``, batch index, catalog, open-txn carry) is
+persisted atomically per batch; a restart resumes at ``max_seq + 1``
+whatever the batch size, and the LSN fence makes reprocessing idempotent.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
@@ -78,6 +83,10 @@ FRAME_SPARK_DDL = (
     "data binary"
 )
 
+def _local_path(p: str) -> str:
+    return p[7:] if p.startswith("file://") else p
+
+
 def tune_input_splits(spark: SparkSession, paths) -> None:
     """Size parquet input splits to the replay input so the decode scan
     gets ~2 tasks per core.
@@ -93,8 +102,7 @@ def tune_input_splits(spark: SparkSession, paths) -> None:
 
     sizes = []
     try:
-        for p in paths:
-            p = p[7:] if p.startswith("file://") else p
+        for p in map(_local_path, paths):
             if os.path.isdir(p):
                 for f in _glob.glob(os.path.join(p, "*.parquet")):
                     sizes.append(os.path.getsize(f))
@@ -167,15 +175,14 @@ def seq_spans_from_footers(paths) -> list[dict] | None:
     """Per-file ``{path, lo, hi, n}`` for the frame files' ``seq`` column,
     read from parquet FOOTER statistics on the driver — no Spark job.
 
-    Replaces a full-scan min/max aggregation (bounded replay) and a
-    per-file groupBy (streaming ingest): each burned a fixed ~0.2-0.4 s
-    Spark job per call purely on scheduling + a scan whose answer already
-    sits in the footers — a core-count-independent serial tail paid by
-    every micro-batch. int64 min/max footer statistics are exact (no
-    truncation, unlike strings); ``n`` is the footer row count, so the
-    in-file gap check keeps working. Files without usable statistics
-    (foreign producers, stats disabled) return None and the callers fall
-    back to the Spark aggregation — as does a batch larger than
+    Replaces the per-file groupBy of ``ReplayEngine.frame_spans``: a
+    fixed ~0.2-0.4 s Spark job per call purely on scheduling + a scan
+    whose answer already sits in the footers — a core-count-independent
+    serial tail paid by every micro-batch. int64 min/max footer statistics
+    are exact (no truncation, unlike strings); ``n`` is the footer row
+    count, so the in-file gap check keeps working. Files without usable
+    statistics (foreign producers, stats disabled) return None and
+    ``frame_spans`` falls back to the groupBy — as does a batch larger than
     WALSTREAM_FOOTER_SPAN_MAX_FILES (default 4096): footer reads are
     ~1 ms each but SERIAL on the driver, so past a few thousand files
     the parallel Spark scan is the better plan.
@@ -187,9 +194,8 @@ def seq_spans_from_footers(paths) -> list[dict] | None:
         return None
     spans: list[dict] = []
     for p in paths:
-        local = p[7:] if p.startswith("file://") else p
         try:
-            md = pq.ParquetFile(local).metadata
+            md = pq.ParquetFile(_local_path(p)).metadata
         except Exception:
             return None
         names = [md.schema.column(i).name for i in range(md.num_columns)]
@@ -247,9 +253,11 @@ _QUAR_SQL = "count(CASE WHEN error IS NOT NULL THEN 1 END)"
 
 # Engine-state / warehouse layout version. Bump whenever the persisted
 # layout changes incompatibly (events schema columns, pending-store delta
-# format, metrics rollup shape). v3 = sub_xid/message_content events schema
-# + generation-suffixed append-delta pending store + capped metrics rollup.
-ENGINE_STATE_VERSION = 3
+# format, metrics rollup shape, resume cursor). v4 = resume from the
+# consumed seq ``max_seq`` in every front end (v3 bounded replays resumed
+# by batch position, which v4 cannot translate). Unstamped states are v3
+# or older.
+ENGINE_STATE_VERSION = 4
 
 
 class StateVersionError(RuntimeError):
@@ -283,11 +291,12 @@ class ReplayEngine:
                           None) in (None, "10000"):
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                            "20000")
-        # smaller AQE target partitions keep the compaction/merge shuffle at
-        # ~per-core parallelism for micro-batch-sized inputs (the default
-        # 64 MB advisory coalesces a ~150 MB change set to 2-3 partitions,
-        # serializing the join+write on small executors); measured -20% on
-        # the flagship replay at 4 cores
+        # smaller AQE target partitions keep the AQE-on bucketed writes of
+        # LakeTable.create / rebucket at ~per-core parallelism (the default
+        # 64 MB advisory coalesces their bucket shuffle to a few partitions,
+        # serializing the write on small executors; bootstrap counts toward
+        # setup time). The merge kernel runs with AQE off and an explicit
+        # repartition, so this does not reach it.
         if spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", None
         ) in (None, "64MB", "67108864", "67108864b"):
@@ -315,15 +324,6 @@ class ReplayEngine:
             with open(self.state_path) as f:
                 st = json.load(f)
             found = st.get("state_version")
-            if found is None and self._pre_version_layout_compatible():
-                # state files written just before versioning was introduced
-                # ARE the v3 layout (the stamp, not the layout, is what was
-                # missing) — stamp and continue rather than refusing a
-                # perfectly compatible warehouse. Only a pending store in
-                # the pre-append-delta format (parquet deltas without a
-                # meta.json manifest) marks a genuinely older layout.
-                st["state_version"] = ENGINE_STATE_VERSION
-                found = ENGINE_STATE_VERSION
             if found is None or int(found) != ENGINE_STATE_VERSION:
                 raise StateVersionError(
                     f"warehouse {self.warehouse!r} was written by engine "
@@ -338,20 +338,6 @@ class ReplayEngine:
         return {"batch_idx": 0, "catalog": {}, "open_xid": None,
                 "applied_lsn": 0, "metrics": [],
                 "state_version": ENGINE_STATE_VERSION}
-
-    def _pre_version_layout_compatible(self) -> bool:
-        """Is an unstamped (pre-version-field) warehouse actually the
-        current layout? The only persisted structure that changed across
-        the unstamped era is the pending store: the append-delta format
-        always carries a ``meta.json`` manifest; delta/parquet content
-        WITHOUT one is the older full-rewrite store and must be refused."""
-        if not os.path.isdir(self.pending_dir):
-            return True
-        entries = [e for e in os.listdir(self.pending_dir)
-                   if not e.startswith(".")]
-        if not entries:
-            return True
-        return os.path.exists(os.path.join(self.pending_dir, "meta.json"))
 
     def _save_state(self, st: dict) -> None:
         st.setdefault("state_version", ENGINE_STATE_VERSION)
@@ -400,9 +386,9 @@ class ReplayEngine:
                 None, None, None, None, None,
                 f"batch pending={m.get('pending')} quarantined={m.get('quarantined')}",
             ))
-        # frame files held behind a WAL-order gap (streaming hold-and-
-        # release): a non-empty set that never drains means a seq range was
-        # lost in transport — surface it as a health row
+        # frame files held behind a WAL-order gap (admit_spans): a
+        # non-empty set that never drains means a seq range was lost in
+        # transport — surface it as a health row
         if st.get("held_frames"):
             spans = ", ".join(
                 f"[{h['lo']},{h['hi']}]" for h in st["held_frames"]
@@ -581,17 +567,140 @@ class ReplayEngine:
             if os.path.isdir(p) and entry not in referenced:
                 shutil.rmtree(p, ignore_errors=True)
 
+    # --------------------------------------------------------------- planning
+
+    def frame_spans(self, frames: DataFrame, paths) -> list[dict]:
+        """Per-file ``{path, lo, hi, n}`` seq spans of the frame files:
+        parquet footers of ``paths`` on the driver (no Spark job), else
+        one ``groupBy(input_file_name())`` over ``frames`` — the fallback
+        for foreign files without statistics or an unknown file list. A
+        gap INSIDE one file is corruption, not reordering: no later
+        delivery can heal it, so it fails loudly."""
+        spans = seq_spans_from_footers(paths) if paths else None
+        if spans is None:
+            spans = [
+                {"path": r["path"], "lo": int(r["lo"]), "hi": int(r["hi"]),
+                 "n": int(r["n"])}
+                for r in frames.groupBy(F.input_file_name().alias("path"))
+                .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+                     F.count("seq").alias("n")).collect()
+            ]
+        for s in spans:
+            if s["n"] != s["hi"] - s["lo"] + 1:
+                raise RuntimeError(
+                    f"WAL frame gap inside file {s['path']}: seq span "
+                    f"[{s['lo']}, {s['hi']}] but only {s['n']} frames "
+                    "present — frame file is corrupt.")
+        return spans
+
+    @staticmethod
+    def admit_spans(st: dict, spans: list[dict]) -> list[dict]:
+        """Hold-and-release admission: the spans that extend the consumed
+        seq ``st["max_seq"]`` contiguously, in seq order. Spans entirely at
+        or behind it are at-least-once redeliveries and drop out; spans
+        past a seq gap are recorded in ``st["held_frames"]`` (the health
+        row of ``metrics_df``) until a later call fills the gap. Frames
+        carry dense 0-based seqs, so a fresh state expects seq 0."""
+        consumed = st.get("max_seq")
+        expected = int(consumed) + 1 if consumed is not None else 0
+        process, held = [], []
+        for s in sorted(spans, key=lambda s: s["lo"]):
+            if s["hi"] < expected:
+                continue
+            if s["lo"] <= expected:
+                process.append(s)
+                expected = s["hi"] + 1
+            else:
+                held.append(s)
+        if [h["path"] for h in held] != [
+                h["path"] for h in st.get("held_frames", [])]:
+            st["reorder_events"] = int(st.get("reorder_events", 0)) + 1
+        st["held_frames"] = held
+        return process
+
+    # ------------------------------------------------------------ batch loop
+
+    def run_batches(self, st: dict, batches, control_dir: str,
+                    stop_at_lsn: int | None = None) -> list[dict]:
+        """Apply ``(frames, lo, hi)`` batches in seq order — the one batch
+        loop of bounded replay and streaming ingest. ``st["max_seq"]`` is
+        its only cursor: a batch at or behind it is skipped, one straddling
+        it is clamped to start just past it, so a resume continues at the
+        consumed seq whatever the batch size. If the frame pump wrote the
+        sidecar ``control_dir`` (see fixtures/wal_gen.write_frames), each
+        batch reads its control rows there with the seq range pushed into
+        the parquet read, so a growing sidecar costs only the rows in range.
+        Stops after a batch that ``stop_at_lsn`` stopped."""
+        import pyarrow.parquet as pq
+
+        from .retry import retry_call
+
+        sidecar = os.path.isdir(control_dir)
+        records = []
+        for frames, lo, hi in batches:
+            consumed = st.get("max_seq")
+            if consumed is not None:
+                if hi <= consumed:
+                    continue
+                lo = max(lo, int(consumed) + 1)
+            batch = frames.filter(f"seq BETWEEN {int(lo)} AND {int(hi)}")
+            control_rows = None
+            if sidecar:
+                control_rows = pq.read_table(
+                    control_dir, columns=["seq", "wal_start", "data"],
+                    filters=[("seq", ">=", lo), ("seq", "<=", hi)],
+                ).sort_by("seq").to_pylist()
+            # transient failures (FS hiccups, executor loss surfacing as a
+            # job failure) retry the WHOLE batch under a backoff budget —
+            # safe because the LSN fence makes partial re-application a
+            # no-op; permanent ones (ProtocolError floods, schema
+            # hard-miss) raise immediately with their diagnostics
+            # (the reference's src/retry.rs:36-62 + src/error.rs:221-245)
+            idx = int(st["batch_idx"])
+            before = copy.deepcopy(st)
+            retries: list[dict] = []
+
+            def attempt():
+                # a failed attempt may already have advanced the in-memory
+                # state (catalog, open-txn carry, cursor: all set just
+                # before the state save); retrying on top of it would
+                # replay the batch against its own end state
+                st.clear()
+                st.update(copy.deepcopy(before))
+                return self.process_batch(
+                    batch, idx, st, seq_range=(lo, hi),
+                    stop_at_lsn=stop_at_lsn, control_rows=control_rows,
+                )
+
+            rec = retry_call(
+                attempt,
+                self.retry_config,
+                on_retry=lambda n, delay, exc: retries.append(
+                    {"attempt": n, "delay_s": round(delay, 3),
+                     "error": f"{type(exc).__name__}: {exc}"[:200]}
+                ),
+            )
+            if retries:
+                rec["retries"] = retries
+            records.append(rec)
+            if rec["stopped"]:
+                break
+        return records
+
     # ----------------------------------------------------------------- replay
 
     def replay_frames(self, frames_path: str, batch_frames: int = 500_000,
                       stop_at_lsn: int | None = None) -> dict:
         """Bounded replay of a frame directory in micro-batches of
-        ``batch_frames`` frames (seq order). Returns summary metrics.
+        ``batch_frames`` frames (seq order), resuming at the consumed seq.
+        Returns summary metrics.
 
-        If the frame pump wrote a ``<frames>_control`` sidecar (see
-        fixtures/wal_gen.write_frames), the per-batch control scan reads it
-        instead of re-scanning the full WAL payload column — the control
-        channel is a few thousand tiny rows per million frames."""
+        Applies the contiguous run of frames after the consumed seq; at a
+        seq gap (a missing frame file) it stops and returns the frame
+        files past the gap as ``held_frames``, which also stay in engine
+        state. If the frame pump wrote a ``<frames>_control`` sidecar, the
+        per-batch control scan reads it instead of re-scanning the full
+        WAL payload column."""
         import time as _time
 
         setup_ms = {}
@@ -603,31 +712,17 @@ class ReplayEngine:
             frames_path)
         setup_ms["read_plan"] = int((_time.monotonic() - _t) * 1000)
         _t = _time.monotonic()
-        ctrl_path = frames_path.rstrip("/") + "_control"
-        control_table = None
-        if os.path.isdir(ctrl_path):
-            # the control channel is a few thousand tiny local rows — read
-            # it once with pyarrow on the driver; spending a Spark job (and
-            # its fixed scheduling cost) per batch on it is pure overhead
-            import pyarrow.parquet as _pq
-
-            control_table = _pq.read_table(
-                ctrl_path, columns=["seq", "wal_start", "data"]
-            ).sort_by("seq")
-        setup_ms["control_read"] = int((_time.monotonic() - _t) * 1000)
-        _t = _time.monotonic()
-        # seq bounds from parquet footers (driver-side, no Spark job);
-        # Spark full-scan agg only as the fallback for foreign files
-        # without statistics. Two layout hazards around the flat
-        # *.parquet listing:
+        # seq spans from parquet footers (driver-side, no Spark job);
+        # the Spark groupBy only as the fallback for foreign files without
+        # statistics. Two layout hazards around the flat *.parquet listing:
         # - a top-level frame file WITHOUT a .parquet suffix is still read
         #   by spark.read.parquet (the listing is not suffix-filtered) —
-        #   a footer walk over *.parquet alone would cap `hi` below it and
-        #   silently never replay its frames ⇒ abandon the fast path, let
-        #   the Spark agg (same file set Spark reads) bound the replay;
+        #   a footer walk over *.parquet alone would miss its span and
+        #   see a gap ⇒ abandon the fast path, let the Spark groupBy
+        #   (same file set Spark reads) plan the replay;
         # - a MIXED flat+nested layout is incoherent in Spark itself
         #   (plain subdirs are ignored; partition-style subdirs shadow the
-        #   flat files) — ANY lo/hi source silently replays a subset, so
+        #   flat files) — ANY span source silently replays a subset, so
         #   refuse loudly instead (pinned by tests/test_footer_spans.py::
         #   test_replay_refuses_mixed_flat_nested_layout).
         local_files: list | None = []
@@ -640,7 +735,7 @@ class ReplayEngine:
                 if os.path.isdir(p):
                     subdirs.append(f)
                 elif not f.endswith(".parquet"):
-                    local_files = None  # foreign suffix: Spark-agg bounds
+                    local_files = None  # foreign suffix: Spark groupBy
                 elif local_files is not None:
                     local_files.append(p)
             if subdirs and (local_files is None or local_files):
@@ -651,71 +746,29 @@ class ReplayEngine:
                     "such a tree, so the replay would silently skip "
                     "frames. Keep frame files flat in one directory."
                 )
-        spans = seq_spans_from_footers(local_files) if local_files else None
-        setup_ms["spans"] = int((_time.monotonic() - _t) * 1000)
-        if spans is not None:
-            if not spans:
-                return {"batches": 0,
-                        "applied_lsn": self._load_state()["applied_lsn"]}
-            lo = min(s["lo"] for s in spans)
-            hi = max(s["hi"] for s in spans)
-        else:
-            bounds = all_frames.agg(
-                F.min("seq").alias("lo"), F.max("seq").alias("hi")
-            ).collect()[0]
-            if bounds["lo"] is None:
-                return {"batches": 0,
-                        "applied_lsn": self._load_state()["applied_lsn"]}
-            lo = int(bounds["lo"])
-            hi = int(bounds["hi"])
         st = self._load_state()
-        batch_idx = 0
-        summary = []
-        for start in range(lo, hi + 1, batch_frames):
-            end = start + batch_frames - 1
-            if batch_idx < st["batch_idx"]:
-                batch_idx += 1
-                continue  # already applied (checkpoint resume)
-            in_range = (F.col("seq") >= start) & (F.col("seq") <= end)
-            batch = all_frames.filter(in_range)
-            control_rows = None
-            if control_table is not None:
-                import pyarrow.compute as _pc
-
-                control_rows = control_table.filter(
-                    _pc.and_(
-                        _pc.greater_equal(control_table.column("seq"), start),
-                        _pc.less_equal(control_table.column("seq"), end),
-                    )
-                ).to_pylist()
-            # transient failures (FS hiccups, executor loss surfacing as a
-            # job failure) retry the WHOLE batch under a backoff budget —
-            # safe because the LSN fence makes partial re-application a
-            # no-op; permanent ones (ProtocolError floods, schema
-            # hard-miss) raise immediately with their diagnostics
-            # (/root/reference/src/retry.rs:36-62 + error.rs:221-245)
-            from .retry import retry_call
-
-            retries: list[dict] = []
-            rec = retry_call(
-                lambda: self.process_batch(
-                    batch, batch_idx, st, stop_at_lsn=stop_at_lsn,
-                    control_rows=control_rows,
-                ),
-                self.retry_config,
-                on_retry=lambda attempt, delay, exc: retries.append(
-                    {"attempt": attempt, "delay_s": round(delay, 3),
-                     "error": f"{type(exc).__name__}: {exc}"[:200]}
-                ),
+        spans = self.frame_spans(all_frames, local_files)
+        process = self.admit_spans(st, spans)
+        setup_ms["spans"] = int((_time.monotonic() - _t) * 1000)
+        records = []
+        if process:
+            # cut on the directory's own grid, so a resume with the same
+            # batch size repeats the batches an uninterrupted run would
+            # have applied; run_batches skips and clamps at the cursor
+            end = max(s["hi"] for s in process)
+            batches = (
+                (all_frames, a, min(a + batch_frames - 1, end))
+                for a in range(min(s["lo"] for s in spans), end + 1,
+                               batch_frames)
             )
-            if retries:
-                rec["retries"] = retries
-            summary.append(rec)
-            batch_idx += 1
-            if rec.get("stopped"):
-                break
-        return {"batches": len(summary), "applied_lsn": st["applied_lsn"],
-                "records": summary, "setup_ms": setup_ms}
+            records = self.run_batches(
+                st, batches, frames_path.rstrip("/") + "_control",
+                stop_at_lsn=stop_at_lsn)
+        if not records:  # nothing applied: persist the held set here
+            self._save_state(st)
+        return {"batches": len(records), "applied_lsn": st["applied_lsn"],
+                "records": records, "setup_ms": setup_ms,
+                "held_frames": st["held_frames"]}
 
     EXPIRE_EVERY = 64
     EXPIRE_KEEP = 64
@@ -741,10 +794,10 @@ class ReplayEngine:
 
     # ------------------------------------------------------------- one batch
 
-    def process_batch(self, frames: DataFrame, batch_idx: int, st: dict,
+    def process_batch(self, frames: DataFrame, batch_idx: int, st: dict, *,
+                      seq_range: tuple[int, int],
                       stop_at_lsn: int | None = None,
-                      control_rows: list[dict] | None = None,
-                      seq_range: tuple[int, int] | None = None) -> dict:
+                      control_rows: list[dict] | None = None) -> dict:
         import time as _time
 
         from pyspark.sql import Observation
@@ -758,17 +811,16 @@ class ReplayEngine:
         # data must extend the consumed range contiguously; a batch
         # entirely at-or-behind the high-water mark is an at-least-once
         # redelivery and proceeds (the LSN fence makes it a no-op).
-        if seq_range is not None:
-            lo, hi = seq_range
-            last = st.get("max_seq")
-            if last is not None and hi > last and lo != last + 1:
-                raise RuntimeError(
-                    f"WAL frames delivered out of order: batch covers seq "
-                    f"[{lo}, {hi}] but frames through {last} were already "
-                    f"consumed and the batch does not start at {last + 1}. "
-                    f"The frame transport must preserve WAL order "
-                    f"(file-based pumps: non-decreasing mtimes in seq order)."
-                )
+        lo, hi = seq_range
+        last = st.get("max_seq")
+        if last is not None and hi > last and lo != last + 1:
+            raise RuntimeError(
+                f"WAL frames delivered out of order: batch covers seq "
+                f"[{lo}, {hi}] but frames through {last} were already "
+                f"consumed and the batch does not start at {last + 1}. "
+                f"The frame transport must preserve WAL order "
+                f"(file-based pumps: non-decreasing mtimes in seq order)."
+            )
 
         def _mark(name):
             nonlocal _t0
@@ -1012,10 +1064,10 @@ class ReplayEngine:
             _mark("pending_spill")
 
             # 8. quarantine, metrics, engine state (atomic). A bounded-replay
-            # stop leaves the batch NOT fully applied — keep the cursor on
-            # it so a later resume reprocesses it (the LSN fence makes that
-            # idempotent), exactly the reference's restart-from-confirmed-
-            # LSN contract.
+            # stop leaves the batch NOT fully applied — keep the cursors
+            # (consumed seq, batch index) on it so a later resume
+            # reprocesses it (the LSN fence makes that idempotent), exactly
+            # the reference's restart-from-confirmed-LSN contract.
             if quarantined is None:  # no job ran; nothing spills here
                 quarantined = decoded.filter("error IS NOT NULL").count()
             rec = {
@@ -1034,7 +1086,7 @@ class ReplayEngine:
                                             batch_idx)
                 if qd:
                     rec["quarantine_dir"] = qd
-            st["batch_idx"] = batch_idx + (0 if effective_stop is not None else 1)
+            st["batch_idx"] = batch_idx + (0 if rec["stopped"] else 1)
             st["catalog"] = {
                 str(oid): [list(v) for v in versions]
                 for oid, versions in ctx.catalog.items()
@@ -1049,9 +1101,9 @@ class ReplayEngine:
             # origin marks of still-unresolved foreign txns survive the batch
             st["origin_xids"] = sorted(int(x) for x in ctx.origin_carry)
             st["applied_lsn"] = batch_applied
-            if seq_range is not None:
-                st["max_seq"] = max(int(st.get("max_seq") or -1),
-                                    int(seq_range[1]))
+            if not rec["stopped"]:
+                st["max_seq"] = int(hi) if last is None else max(int(last),
+                                                                  int(hi))
             _append_metrics(st, rec)
             self._save_state(st)
             self._maybe_expire(batch_idx)

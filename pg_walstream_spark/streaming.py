@@ -1,23 +1,22 @@
 """Structured Streaming front-end: readStream over a growing frame directory
-→ the same micro-batch apply function the bounded replay uses.
+→ the engine's batch loop, the same one the bounded replay drives.
 
 Maps the reference's live-tail lifecycle onto Spark's streaming runtime:
 - the frame directory is the replication slot (files = COPY frames);
 - ``maxFilesPerTrigger`` is the frame pump's batch drain
   (/root/reference/src/stream.rs:646-694);
-- the checkpointLocation is the slot's restart cursor (received LSN);
+- the engine state's consumed seq (``max_seq``) is the slot's restart
+  cursor; the checkpointLocation only decides what Spark redelivers;
 - the LakeTable LSN fence is the applied-LSN feedback — a batch replayed
   after a crash is skipped by the fence, so delivery is exactly-once end to
   end (the contract of /root/reference/src/stream.rs:1563-1582: ack only
   after successful apply).
 
-Delivery-order independence: the ingest does NOT trust the file source's
-listing order. Files beyond a seq gap are held (by path, in engine state)
-and released once the gap fills — see ``ingest_frames_batch``. This is the
-fix for the round-1/2 exactly-once flake: Spark's file source occasionally
-delivered frame files out of mtime order, the engine applied the later
-segment's commits, and the LSN fence then silently discarded the middle
-segment's transactions as "duplicates" when they finally arrived.
+This module keeps only file discovery (the stream's source log) and the
+rate-limit chunking. Span planning, hold-and-release, the batch loop, the
+control sidecar read and the retry are the engine's, shared with the
+bounded replay (``ReplayEngine.frame_spans`` / ``admit_spans`` /
+``run_batches``).
 """
 
 from __future__ import annotations
@@ -27,13 +26,9 @@ from time import monotonic as _monotonic
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import FRAME_SPARK_DDL, ReplayEngine
+from .engine import FRAME_SPARK_DDL, ReplayEngine, _local_path
 
 __all__ = ["FRAME_SPARK_DDL", "ingest_frames_batch", "start_stream"]
-
-
-def _local_path(p: str) -> str:
-    return p[7:] if p.startswith("file://") else p
 
 
 def _chunk_by_rate(process: list[dict], max_frames: int | None,
@@ -113,20 +108,13 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
     mtimes): a batch of files {1,3} would apply file 3's commits, advance
     the LSN fence past them, and then silently fence off file 2's
     transactions when it arrived "behind" the high-water mark. Instead of
-    trusting delivery order, each batch:
-
-    - skips files entirely at-or-behind the consumed seq (at-least-once
-      redelivery — the LSN fence would no-op them anyway),
-    - processes the files extending the consumed range contiguously,
-    - HOLDS files beyond a gap (by path, in engine state) until a later
-      batch fills the gap.
-
-    Delivery order no longer matters; only a seq that never arrives (real
-    WAL loss) blocks progress, and it stays visible as ``held_frames`` in
-    the engine state / health report.
+    trusting delivery order, ``ReplayEngine.admit_spans`` skips files at
+    or behind the consumed seq, admits the files extending it
+    contiguously, and HOLDS files beyond a gap (by path, in engine state)
+    until a later trigger fills the gap. Only a seq that never arrives
+    (real WAL loss) blocks progress, and it stays visible as
+    ``held_frames`` in the engine state / health report.
     """
-    from pyspark.sql import functions as F
-
     # foreachBatch hands a DataFrame bound to a CLONED SparkSession;
     # re-root the engine on it so every DataFrame the batch touches
     # (pending reads, dispo frames, target scans, the MERGE write) lives on
@@ -137,14 +125,10 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
     engine.spark = df.sparkSession
     st = engine._load_state()
 
-    # per-file seq spans from parquet footers on the driver (no Spark
-    # job; engine.seq_spans_from_footers), file list from the stream's
-    # own source log — the groupBy below is the fallback for unknown
-    # sources, missing logs, or files without statistics. Spans keep the
-    # source-log URI spelling (same as input_file_name()) so held_frames
-    # state stays comparable across checkpoints.
-    from .engine import seq_spans_from_footers
-
+    # the file list from the stream's own source log feeds the footer
+    # spans; without it frame_spans falls back to a groupBy over the df.
+    # Spans keep the source-log URI spelling (same as input_file_name())
+    # so held_frames state stays comparable across checkpoints.
     in_files = _batch_files_from_source_log(checkpoint_dir, epoch_id)
     if in_files is not None:
         # the file source lists files regardless of name, so a frame file
@@ -152,46 +136,13 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
         # micro-batch's df; dropping it from the spans would fabricate a
         # permanent seq gap that holds every later file forever. If any
         # source-log entry would be filtered, abandon the footer fast path
-        # for this batch and let the df groupBy below cover every file.
+        # for this batch and let the df groupBy cover every file.
         flt = sorted(p for p in in_files if p.endswith(".parquet"))
         in_files = flt if len(flt) == len(in_files) else None
-    spans = seq_spans_from_footers(in_files) if in_files else None
-    if spans is None:
-        spans = [
-            {"path": r["path"], "lo": int(r["lo"]), "hi": int(r["hi"]),
-             "n": int(r["n"])}
-            for r in df.groupBy(F.input_file_name().alias("path"))
-            .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"),
-                 F.count("seq").alias("n")).collect()
-        ]
-    for s in spans:
-        # a gap INSIDE one file is corruption, not reordering — no later
-        # delivery can heal it, so fail loudly
-        if s["n"] != s["hi"] - s["lo"] + 1:
-            raise RuntimeError(
-                f"WAL frame gap inside file {s['path']} (micro-batch "
-                f"{epoch_id}): seq span [{s['lo']}, {s['hi']}] but only "
-                f"{s['n']} frames present — frame file is corrupt."
-            )
-    held = list(st.get("held_frames", []))
+    spans = engine.frame_spans(df, in_files)
     known = {s["path"] for s in spans}
-    candidates = spans + [h for h in held if h["path"] not in known]
-    if not candidates:
-        return None
-    consumed = st.get("max_seq")
-    expected = int(consumed) + 1 if consumed is not None else 0
-    process, new_held = [], []
-    for s in sorted(candidates, key=lambda s: s["lo"]):
-        if s["hi"] < expected:
-            continue  # fully consumed already (at-least-once redelivery)
-        if s["lo"] <= expected:
-            process.append(s)
-            expected = s["hi"] + 1
-        else:
-            new_held.append(s)
-    if [h["path"] for h in new_held] != [h["path"] for h in held]:
-        st["reorder_events"] = int(st.get("reorder_events", 0)) + 1
-    st["held_frames"] = new_held
+    process = engine.admit_spans(st, spans + [
+        h for h in st.get("held_frames", []) if h["path"] not in known])
     if not process:
         engine._save_state(st)
         return None
@@ -215,69 +166,24 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
                 s["bytes"] = 0
     chunks = _chunk_by_rate(process, max_frames_per_batch,
                             max_bytes_per_batch)
-    hi_all = max(s["hi"] for s in process)
 
-    # control sidecar: if the frame pump wrote a ``<frames>_control`` dir
-    # (fixtures/wal_gen.write_frames), read the batch's control rows with
-    # pyarrow on the driver — skipping the per-batch Spark control-scan
-    # job, the same core-count-independent serial tail the bounded replay
-    # already avoids
-    control_all = None
-    first_path = process[0]["path"]
-    ctrl_dir = os.path.dirname(
-        _local_path(first_path)).rstrip("/") + "_control"
-    if os.path.isdir(ctrl_dir):
-        import pyarrow.parquet as _pq
-
-        # push the seq range into the parquet read: a live stream's
-        # sidecar grows without bound, and re-reading the full history
-        # every micro-batch would be an O(stream age) driver-serial cost —
-        # row groups outside the range are pruned by their seq statistics
-        file_lo = min(s["lo"] for s in process)
-        control_all = _pq.read_table(
-            ctrl_dir, columns=["seq", "wal_start", "data"],
-            filters=[("seq", ">=", file_lo), ("seq", "<=", hi_all)],
-        ).sort_by("seq").to_pylist()
-
-    # a transient failure inside foreachBatch (FS hiccup, executor loss)
-    # retries the chunk in place under the taxonomy's backoff budget —
-    # Spark's query restart would also recover, but at whole-restart cost
-    # (the reference retries inside the consume loop for the same reason,
-    # /root/reference/src/stream.rs:957-1044); the LSN fence makes the
-    # partial re-application idempotent
-    from .retry import retry_call
+    def batches():
+        for chunk in chunks:
+            paths = [s["path"] for s in chunk]
+            engine._tune_input_splits(paths)
+            if len(chunks) == 1 and set(paths) == known:
+                batch_df = df  # common in-order case: the source's batch
+            else:
+                batch_df = df.sparkSession.read.schema(
+                    FRAME_SPARK_DDL).parquet(*paths)
+            yield (batch_df, min(s["lo"] for s in chunk),
+                   max(s["hi"] for s in chunk))
 
     t_start = _monotonic()
-    result = None
-    for chunk in chunks:
-        paths = [s["path"] for s in chunk]
-        engine._tune_input_splits(paths)
-        if len(chunks) == 1 and set(paths) == known and not held:
-            batch_df = df  # common in-order case: reuse the source's batch
-        else:
-            batch_df = df.sparkSession.read.schema(FRAME_SPARK_DDL).parquet(
-                *paths
-            )
-        # clamp lo: a file straddling the consumed boundary (partial
-        # redelivery) still EXTENDS the range contiguously — the LSN
-        # fence no-ops its already-applied prefix
-        consumed_now = st.get("max_seq")
-        start = int(consumed_now) + 1 if consumed_now is not None else 0
-        c_file_lo = min(s["lo"] for s in chunk)
-        lo = max(c_file_lo, start)
-        hi = max(s["hi"] for s in chunk)
-        control_rows = None
-        if control_all is not None:
-            control_rows = [r for r in control_all
-                            if c_file_lo <= r["seq"] <= hi]
-        result = retry_call(
-            lambda: engine.process_batch(
-                batch_df, int(epoch_id), st,
-                seq_range=(lo, hi),
-                control_rows=control_rows,
-            ),
-            engine.retry_config,
-        )
+    records = engine.run_batches(
+        st, batches(),
+        os.path.dirname(_local_path(process[0]["path"])).rstrip("/")
+        + "_control")
 
     # ingest health: applied-vs-seen lag (non-zero only while frames are
     # gap-held) and this trigger's drain rate — the consumer-side
@@ -290,10 +196,11 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
         "frames": n_frames,
         "bytes": sum(s.get("bytes") or 0 for s in process),
         "frames_per_sec": round(n_frames / elapsed, 1),
-        "lag_frames": sum(h["n"] for h in new_held),
-        "lag_spans": len(new_held),
+        "lag_frames": sum(h["n"] for h in st["held_frames"]),
+        "lag_spans": len(st["held_frames"]),
     }
     engine._save_state(st)
+    result = records[-1] if records else None
     if result is not None and len(chunks) > 1:
         result["chunks"] = len(chunks)
     return result

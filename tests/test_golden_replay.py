@@ -289,13 +289,120 @@ def test_e2e_restart_resume_mid_replay(spark, tmp_path):
         batch = all_frames.filter(
             (F.col("seq") >= start) & (F.col("seq") < start + 30)
         )
-        eng.process_batch(batch, i, st)
+        eng.process_batch(batch, i, st, seq_range=(start, start + 29))
 
     # resume: fresh engine object, same warehouse/checkpoint
     eng2 = ReplayEngine(spark, eng.warehouse)
     eng2.replay_frames(frames_dir, batch_frames=30)
     assert_matches_golden(spark, eng2, bases, frames, "repos")
     assert_matches_golden(spark, eng2, bases, frames, "repos_full")
+
+
+def _stage_two_tables(spark, tmp_path, base, frames, rows_per_file):
+    """Frames in ``rows_per_file``-row files and a warehouse whose base is
+    split across ``repos`` and ``repos_full``."""
+    bases = {"repos": base.slice(0, 30), "repos_full": base.slice(30)}
+    frames_dir = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, frames_dir, rows_per_file=rows_per_file)
+    eng = ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
+    for name, tbl in bases.items():
+        p = os.path.join(str(tmp_path), f"b_{name}.parquet")
+        wg.write_base(tbl, p)
+        eng.bootstrap_table(name, spark.read.parquet(p), ["repo", "path"], 8)
+    return eng, bases, frames_dir
+
+
+class _Killed(RuntimeError):
+    """A process kill: permanent to the batch retry, so the replay dies."""
+
+
+def test_resume_with_different_batch_frames(spark, tmp_path):
+    """Kill after two 20-frame batches, resume with 30-frame batches: the
+    resume continues at the consumed seq (40), not at batch position 2 of
+    the new size (seq 60), so frames 40-59 are applied."""
+    base, b = wg.gen_mixed_dml(n_base=60, n_txns=10, ops_per_txn=6)
+    frames = b.to_table()
+    eng, bases, frames_dir = _stage_two_tables(spark, tmp_path, base,
+                                               frames, 50_000)
+
+    class Dying(ReplayEngine):
+        def process_batch(self, frames, batch_idx, st, **k):
+            if batch_idx == 2:
+                raise _Killed("killed after batch 2")
+            return super().process_batch(frames, batch_idx, st, **k)
+
+    with pytest.raises(_Killed):
+        Dying(spark, eng.warehouse).replay_frames(frames_dir, batch_frames=20)
+    assert eng._load_state()["batch_idx"] == 2
+
+    eng2 = ReplayEngine(spark, eng.warehouse)
+    res = eng2.replay_frames(frames_dir, batch_frames=30)
+    assert_matches_golden(spark, eng2, bases, frames, "repos")
+    assert_matches_golden(spark, eng2, bases, frames, "repos_full")
+    # the first resumed batch is [30, 59] clamped to start at seq 40
+    assert res["records"][0]["batch_idx"] == 2
+    assert eng2._load_state()["max_seq"] == frames.num_rows - 1
+
+
+def test_replay_stops_at_missing_frame_file(spark, tmp_path, capsys):
+    """A bounded replay over a directory missing a middle frame file
+    applies the frames before the gap and nothing past it. It reports the
+    files past the gap as ``held_frames`` (CLI: printed, exit 1), keeps
+    them in engine state and shows the health row in ``metrics_df``. Once
+    the file is back, the replay releases them and reaches golden."""
+    import json
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from pg_walstream_spark.cli import main as cli_main
+
+    base, b = wg.gen_mixed_dml(n_base=60, n_txns=8, ops_per_txn=6)
+    frames = b.to_table()
+    eng, bases, frames_dir = _stage_two_tables(spark, tmp_path, base,
+                                               frames, 20)
+    files = sorted(os.path.join(frames_dir, f)
+                   for f in os.listdir(frames_dir))
+    assert len(files) >= 4
+    victim = files[len(files) // 2]
+    gap_lo = pq.read_table(victim, columns=["seq"]).column("seq")[0].as_py()
+    after = [pq.read_table(f, columns=["seq"]).column("seq")[0].as_py()
+             for f in files[len(files) // 2 + 1:]]
+    parked = os.path.join(str(tmp_path), "parked.parquet")
+    shutil.move(victim, parked)
+
+    rc = cli_main(["replay", "--warehouse", eng.warehouse,
+                   "--frames", frames_dir, "--batch-frames", "15"])
+    assert rc == 1
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert [h["lo"] for h in out["held_frames"]] == after
+
+    st = eng._load_state()
+    assert st["max_seq"] == gap_lo - 1
+    assert [h["lo"] for h in st["held_frames"]] == after
+    # nothing past the gap: the lake is the golden state of the prefix
+    for tname in bases:
+        golden_rows, _ = golden_final_state(bases, frames.slice(0, gap_lo),
+                                            tname)
+        got = sorted((r["repo"], r["path"], r["content"])
+                     for r in eng.table(tname).read(spark).collect())
+        assert got == sorted((r["repo"], r["path"], r["content"])
+                             for r in golden_rows), tname
+    kinds = [r["kind"] for r in eng.metrics_df().collect()]
+    assert any(k.startswith(f"held_frames={len(after)} ")
+               and f"waiting for seq {gap_lo}" in k for k in kinds), kinds
+
+    # a second replay over the same hole applies nothing and says so
+    res = eng.replay_frames(frames_dir, batch_frames=15)
+    assert res["batches"] == 0
+    assert [h["lo"] for h in res["held_frames"]] == after
+
+    shutil.move(parked, victim)
+    res = eng.replay_frames(frames_dir, batch_frames=15)
+    assert res["held_frames"] == []
+    assert eng._load_state()["held_frames"] == []
+    assert_matches_golden(spark, eng, bases, frames, "repos")
+    assert_matches_golden(spark, eng, bases, frames, "repos_full")
 
 
 def test_schema_unsupported_type_change_logged(spark, tmp_path):

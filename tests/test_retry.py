@@ -130,6 +130,47 @@ def test_engine_replay_retries_transient_batches(spark, tmp_path,
     assert eng.table("repos").applied_lsn() == glsn
 
 
+def test_retry_after_state_update_restarts_from_batch_start(spark, tmp_path):
+    """A transient failure after a batch has updated the in-memory engine
+    state (here: snapshot expiry, which runs after the state save) must
+    retry the batch from the state it began with. Retrying on top of the
+    batch's end state replays its frames against their own open-txn carry
+    and loses the rows of the transaction the batch cut."""
+    from pg_walstream_spark.engine import ReplayEngine
+    from pg_walstream_spark.fixtures import wal_gen as wg
+    from pg_walstream_spark.golden import golden_final_state
+
+    base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
+    frames = b.to_table()
+    fd = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, fd)
+    calls = {"n": 0}
+
+    class FlakyExpiry(ReplayEngine):
+        def _maybe_expire(self, batch_idx):
+            calls["n"] += 1
+            if calls["n"] == 2:
+                raise OSError("simulated fs hiccup after the state save")
+
+    eng = FlakyExpiry(
+        spark, os.path.join(str(tmp_path), "wh"),
+        retry_config=RetryConfig(max_attempts=3, initial_delay_s=0.001,
+                                 jitter=False),
+    )
+    bp = os.path.join(str(tmp_path), "base.parquet")
+    wg.write_base(base, bp)
+    eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
+    out = eng.replay_frames(fd, batch_frames=25)
+    assert [bool(r.get("retries")) for r in out["records"]][:2] == [
+        False, True]
+    grows, glsn = golden_final_state({"repos": base}, frames, "repos")
+    got = sorted((r["repo"], r["path"], r["content"])
+                 for r in eng.table("repos").read(spark).collect())
+    want = sorted((r["repo"], r["path"], r["content"]) for r in grows)
+    assert got == want
+    assert eng.table("repos").applied_lsn() == glsn
+
+
 def test_engine_replay_fails_fast_on_permanent(spark, tmp_path, monkeypatch):
     from pg_walstream_spark.engine import ReplayEngine
     from pg_walstream_spark.fixtures import wal_gen as wg

@@ -558,17 +558,15 @@ def test_version_preflight_rejects_stale_state_dir(spark, tmp_path):
     with pytest.raises(E.StateVersionError, match="state version"):
         E.ReplayEngine(spark, wh)._load_state()
 
-    # pre-versioning (missing stamp) state with a compatible layout is the
-    # v3 layout minus the stamp: accepted and stamped on load (a round-4
-    # warehouse must not be refused)
+    # a missing stamp is v3 or older (v3 replays resumed by batch
+    # position, a cursor v4 cannot translate): rejected as version 0
     del st["state_version"]
     E._atomic_write(eng.state_path, json.dumps(st))
-    st2 = E.ReplayEngine(spark, wh)._load_state()
-    assert st2["state_version"] == E.ENGINE_STATE_VERSION
+    with pytest.raises(E.StateVersionError, match="version 0"):
+        E.ReplayEngine(spark, wh)._load_state()
 
-    # ...but a missing stamp PLUS a genuinely older pending layout
-    # (delta content without the append-delta meta.json manifest) is
-    # rejected as version 0
+    # ...also with an older pending layout (delta content without the
+    # append-delta meta.json manifest) next to it
     pend = os.path.join(wh, "pending")
     os.makedirs(os.path.join(pend, "delta-000"), exist_ok=True)
     with open(os.path.join(pend, "delta-000", "part-0.parquet"), "wb") as f:

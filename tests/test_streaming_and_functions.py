@@ -438,11 +438,12 @@ def test_rate_limited_ingest_matches_golden_and_reports_lag(spark, tmp_path):
         wg.write_base(t, p)
         eng.bootstrap_table(n, spark.read.parquet(p), ["repo", "path"], 8)
 
-    seen_ranges = []
+    seen_ranges, seen_idx = [], []
     orig = eng.process_batch
 
     def spy(frames_df, batch_idx, st, **kw):
         seen_ranges.append(kw.get("seq_range"))
+        seen_idx.append(batch_idx)
         return orig(frames_df, batch_idx, st, **kw)
 
     eng.process_batch = spy
@@ -472,9 +473,50 @@ def test_rate_limited_ingest_matches_golden_and_reports_lag(spark, tmp_path):
     assert ing["frames"] == frames.num_rows
     assert ing["lag_frames"] == 0 and ing["lag_spans"] == 0
     assert ing["frames_per_sec"] > 0
-    kinds = [r["kind"] for r in eng.metrics_df().collect()]
+    # every chunk is its own batch: its own index and its own batch row
+    assert seen_idx == list(range(len(seen_ranges)))
+    rows = eng.metrics_df().collect()
+    kinds = [r["kind"] for r in rows]
     assert any(k.startswith("ingest frames=") for k in kinds)
+    assert sorted(r["batch_id"] for r in rows
+                  if r["kind"].startswith("batch pending=")) == sorted(
+        f"b{i}" for i in seen_idx)
     assert n_files >= 2
+
+
+def test_rate_limited_chunks_carry_open_txn_across_chunks(spark, tmp_path):
+    """One trigger cut into 8 rate-limited chunks with transactions that
+    each span at least 3 chunks. Every chunk is a batch of its own, so the
+    pending delta an earlier chunk left for a still-open transaction
+    survives the later chunks' pending commits, and both tables end at
+    golden."""
+    from pg_walstream_spark.streaming import ingest_frames_batch
+
+    base, b = wg.gen_mixed_dml(n_base=60, n_txns=3, ops_per_txn=60)
+    frames = b.to_table()
+    frames_dir = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, frames_dir, rows_per_file=25)
+    wh = os.path.join(str(tmp_path), "wh")
+    eng = ReplayEngine(spark, wh)
+    bases = {"repos": base.slice(0, 30), "repos_full": base.slice(30)}
+    for n, t in bases.items():
+        p = os.path.join(str(tmp_path), f"{n}.parquet")
+        wg.write_base(t, p)
+        eng.bootstrap_table(n, spark.read.parquet(p), ["repo", "path"], 8)
+
+    rec = ingest_frames_batch(eng, spark.read.parquet(frames_dir), 0,
+                              max_frames_per_batch=30)
+    assert rec["chunks"] == 8
+    for tname in ("repos", "repos_full"):
+        golden_rows, glsn = golden_final_state(bases, frames, tname)
+        got = sorted((r["repo"], r["path"], r["content"])
+                     for r in eng.table(tname).read(spark).collect())
+        assert got == sorted(
+            (r["repo"], r["path"], r["content"]) for r in golden_rows), tname
+        assert eng.table(tname).applied_lsn() == glsn
+    st = eng._load_state()
+    assert st["batch_idx"] == 8
+    assert int(st["max_seq"]) == frames.num_rows - 1
 
 
 def test_rate_limited_stream_e2e_bytes_cap(spark, tmp_path):
