@@ -16,7 +16,7 @@ Scale notes (100 TB corpus):
 - simhash: 64-bit signature as 4x16-bit pieces; hamming-≤3 pairs via
   pigeonhole piece banding + exact verification.
 - n-gram jaccard: exact Jaccard over minhash-LSH candidates — precision
-  exact, recall = band recall; the raw inverted-index variant (kept below)
+  exact, recall = band recall; a raw inverted-index join over shingles
   blows up through hot shingles at corpus scale.
 - embedding cosine: brute pairwise only for bounded n; the sign-LSH +
   exact-rescore paths in similarity.py are the scale answer.
@@ -389,45 +389,6 @@ def _band_candidates(sig: DataFrame, k: int, bands: int,
     )
 
 
-def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
-    """bits-wide simhash over word tokens: bit j = sign of Σ_tokens
-    (bit_j(md5(token)) ? +1 : -1). Bits drawn from the first bits/4 hex
-    chars of md5 — portable to the SQL oracle."""
-    tok = docs.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("t")
-    ).withColumn("h", F.md5("t"))
-    bit_sums = []
-    for j in range(bits):
-        hex_pos = j // 4 + 1
-        shift = j % 4
-        bit = (
-            F.shiftright(
-                F.conv(F.substring("h", hex_pos, 1), 16, 10).cast("int"),
-                shift,
-            ).bitwiseAND(F.lit(1))
-        )
-        bit_sums.append(F.sum(bit * 2 - 1).alias(f"s{j}"))
-    sums = tok.groupBy(id_col).agg(*bit_sums)
-    sig = None
-    for j in range(bits):
-        term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return sums.select(F.col(id_col), sig.cast("long").alias("simhash"))
-
-
-def simhash_dup_groups(docs: DataFrame, bits: int = 16,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Hamming-0 near-dup groups: docs sharing an identical simhash."""
-    return (
-        simhash(docs, bits, text_col, id_col)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def simhash_pieces(docs: DataFrame, n_pieces: int = 4, piece_bits: int = 16,
                    text_col: str = "text",
                    id_col: str = "doc_id") -> DataFrame:
@@ -640,48 +601,6 @@ def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
         return res  # distributed result may recompute — keep the bundle
     bundle.destroy()
     return res
-
-
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
-                        n: int = 3, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        max_shingle_freq: int = 1000) -> DataFrame:
-    """All candidate pairs with char-n-gram Jaccard ≥ threshold.
-
-    Inverted-index join on distinct shingles; shingles appearing in more
-    than ``max_shingle_freq`` docs are dropped (stop-shingle guard) to
-    bound the hot-key blowup at corpus scale."""
-    ex = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(text_col, n))).alias("sh"),
-    )
-    freq_ok = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= max_shingle_freq
-    )
-    ex = ex.join(freq_ok.select("sh"), on="sh")
-    # sizes AFTER the stop-shingle filter: Jaccard is defined over the
-    # indexed (surviving) shingle space. Mixing filtered intersections with
-    # unfiltered set sizes biases scores toward 0 for docs dominated by
-    # corpus-common shingles — on a small-vocabulary corpus that zeroed out
-    # even true 90%-prefix near-dups.
-    sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        ex.alias("a")
-        .join(ex.alias("b"), on="sh")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
 
 
 # codes gathered per merge-intersect pass of the jaccard rescore: bounds

@@ -23,16 +23,21 @@ or Structured Streaming's foreachBatch — see ``streaming.py``):
    consumer (examples/safe-transaction-consumer).
 5. **Tables** — a catalog naming one existing table merges it straight
    from the decode; otherwise the events are cached once and one
-   aggregate finds the tables with committed DML.
+   aggregate (``collect_set(table_name)``) finds the tables with
+   committed DML.
 6. **MERGE** — per table, the bucket-co-located merge kernel
    (``LakeTable.merge_bucketed``: compaction + join + write in one job),
    LSN-fenced. A replayed or duplicate batch is skipped by the fence,
    giving exactly-once end to end under at-least-once batch delivery.
-7. **Pending spill** — if a transaction is still open or prepared, the
-   decode tasks of the job that decodes the batch (the merge, or the
-   stats aggregate when nothing merges) also write the newly-pending
-   rows into a fresh delta dir of the pending store; the driver then
-   commits the store meta. Every batch stays one Spark job.
+7. **Side outputs** — the decode tasks of the job that decodes the
+   batch (the merge, the tables aggregate, or a drain job when neither
+   ran) also write the batch's rejected rows into its dead-letter dir
+   ``quarantine/b{batch_idx}-s{lo}-{hi}`` and, if a transaction is still
+   open or prepared, the newly-pending rows into a fresh delta dir of the
+   pending store. The driver reads the batch's counts from those files
+   with pyarrow (``quarantined`` from the dead-letter footers, the new
+   pending xids from the delta's ``xid`` column) and commits the store
+   meta. A single-table batch stays one Spark job.
 
 Both front ends drive batches through the same two steps here:
 ``frame_spans`` + ``admit_spans`` plan the contiguous run of frame files
@@ -65,6 +70,7 @@ from .operators.decode import (
     ST_COMMITTED,
     ST_OPEN,
     _STATUS_NAMES,
+    SideOutputs,
     build_context,
     decode_frames_df,
 )
@@ -85,6 +91,14 @@ FRAME_SPARK_DDL = (
 
 def _local_path(p: str) -> str:
     return p[7:] if p.startswith("file://") else p
+
+
+def _part_files(d: str) -> list[str]:
+    """The ``*.parquet`` files of side-output dir ``d`` (none if absent)."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(os.path.join(d, f) for f in os.listdir(d)
+                  if f.endswith(".parquet"))
 
 
 def tune_input_splits(spark: SparkSession, paths) -> None:
@@ -242,22 +256,16 @@ def _append_metrics(st: dict, rec: dict) -> None:
 # batch plans are built from SQL strings, not Column objects: every Column
 # construction is a py4j round trip, a per-batch driver-serial cost
 _DML_SQL = "event_type IN ('insert', 'update', 'delete') AND error IS NULL"
-# everything the apply path consumes: DML plus truncate — truncates of a
-# still-open transaction must survive a micro-batch boundary in the pending
-# spill exactly like DML, or a batch split between TRUNCATE and its COMMIT
-# silently drops the truncate
-_APPLY_SQL = ("event_type IN ('insert', 'update', 'delete', 'truncate') "
-              "AND error IS NULL")
-_QUAR_SQL = "count(CASE WHEN error IS NOT NULL THEN 1 END)"
 
 
 # Engine-state / warehouse layout version. Bump whenever the persisted
 # layout changes incompatibly (events schema columns, pending-store delta
 # format, metrics rollup shape, resume cursor). v4 = resume from the
 # consumed seq ``max_seq`` in every front end (v3 bounded replays resumed
-# by batch position, which v4 cannot translate). Unstamped states are v3
-# or older.
-ENGINE_STATE_VERSION = 4
+# by batch position, which v4 cannot translate). v5 = the pending meta
+# keeps per-xid row counts per delta (v4 kept xid lists). Unstamped
+# states are v3 or older.
+ENGINE_STATE_VERSION = 5
 
 
 class StateVersionError(RuntimeError):
@@ -303,19 +311,10 @@ class ReplayEngine:
             spark.conf.set(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m"
             )
-        # Observations guard merge invariants; AQE empty-relation
-        # propagation can erase CollectMetrics on runtime-empty writes
-        # (delete-everything batches) — see lake/table.py
-        from .lake.table import _ensure_observation_safe_aqe
-
-        _ensure_observation_safe_aqe(spark)
         self.tables_dir = os.path.join(warehouse, "tables")
         self.state_path = os.path.join(warehouse, "engine_state.json")
         self.pending_dir = os.path.join(warehouse, "pending")
         os.makedirs(self.tables_dir, exist_ok=True)
-
-    def _tune_input_splits(self, paths) -> None:
-        tune_input_splits(self.spark, paths)
 
     # ------------------------------------------------------------------ state
 
@@ -489,20 +488,21 @@ class ReplayEngine:
         gen = int((meta or {}).get("gen", 0)) + 1
         return f"delta_b{batch_idx}_g{gen}"
 
-    def _pending_append(self, m, resolved_xids: set[int], batch_idx: int,
-                        name: str) -> None:
-        """Commit the batch's pending delta ``name`` to the store meta.
+    def _pending_append(self, resolved_xids: set[int], batch_idx: int,
+                        name: str) -> int:
+        """Commit the batch's pending delta ``name`` to the store meta and
+        return the store's pending row count.
 
         The batch's decode tasks already wrote its newly-pending rows into
-        the fresh dir ``name`` (``decode_frames_df(spill=...)``, a side
-        output of the job that decodes the batch); ``m`` is that job's
-        stats row: ``pend`` (pending rows, carried ones included) and
-        ``new_xids`` (xids of the newly-pending rows). Runs no Spark job
-        except the compaction past PENDING_COMPACT_DELTAS. A store left
+        the fresh dir ``name`` (``SideOutputs.pending``, a side output of
+        the job that decodes the batch). The meta keeps each delta's
+        per-xid row counts, read here from the delta's ``xid`` column with
+        pyarrow, so the pending count is the live xids' rows. Runs no Spark
+        job except the compaction past PENDING_COMPACT_DELTAS. A store left
         without pending rows is cleared."""
-        if not m["pend"]:
-            self._pending_clear()
-            return
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         meta = self._pending_meta() or {
             "order": [], "deltas": {}, "dead_xids": [],
         }
@@ -516,7 +516,14 @@ class ReplayEngine:
         # dirs, removed by the next sweep.
         gen = int(meta.get("gen", 0)) + 1
         meta["gen"] = gen
-        new_xids = {int(x) for x in m["new_xids"] or [] if x is not None}
+        new_rows: dict[str, int] = {}
+        files = _part_files(os.path.join(self.pending_dir, name))
+        if files:
+            vc = pc.value_counts(pq.read_table(files, columns=["xid"])
+                                 .column("xid"))
+            new_rows = {str(x): int(n) for x, n in zip(
+                vc.field("values").to_pylist(),
+                vc.field("counts").to_pylist()) if x is not None}
         # bounded-replay stop / in-place batch retry → the batch
         # reprocesses: drop the prior attempt's delta from meta (its dir
         # survives until the post-commit sweep)
@@ -531,14 +538,22 @@ class ReplayEngine:
         }
         keep = []
         for d in meta["order"]:
-            if set(meta["deltas"][d]) <= dead:
+            if {int(x) for x in meta["deltas"][d]} <= dead:
                 del meta["deltas"][d]
             else:
                 keep.append(d)
         meta["order"] = keep
-        if new_xids:
+        if new_rows:
             meta["order"].append(name)
-            meta["deltas"][name] = sorted(new_xids)
+            meta["deltas"][name] = new_rows
+        live_rows: dict[str, int] = {}
+        for d in meta["order"]:
+            for x, n in meta["deltas"][d].items():
+                if int(x) not in dead:
+                    live_rows[x] = live_rows.get(x, 0) + n
+        if not live_rows:
+            self._pending_clear()
+            return 0
         live = {int(x) for d in meta["order"] for x in meta["deltas"][d]}
         # keep only tombstones that still mask physical rows
         meta["dead_xids"] = sorted(dead & live)
@@ -553,8 +568,7 @@ class ReplayEngine:
             df.write.mode("overwrite").parquet(
                 os.path.join(self.pending_dir, cname)
             )
-            meta = {"order": [cname],
-                    "deltas": {cname: sorted(live - dead)},
+            meta = {"order": [cname], "deltas": {cname: live_rows},
                     "dead_xids": [], "gen": gen}
         os.makedirs(self.pending_dir, exist_ok=True)
         _atomic_write(self._pending_meta_path(), json.dumps(meta))
@@ -566,6 +580,7 @@ class ReplayEngine:
             p = os.path.join(self.pending_dir, entry)
             if os.path.isdir(p) and entry not in referenced:
                 shutil.rmtree(p, ignore_errors=True)
+        return sum(live_rows.values())
 
     # --------------------------------------------------------------- planning
 
@@ -705,7 +720,7 @@ class ReplayEngine:
 
         setup_ms = {}
         _t = _time.monotonic()
-        self._tune_input_splits([frames_path])
+        tune_input_splits(self.spark, [frames_path])
         setup_ms["tune"] = int((_time.monotonic() - _t) * 1000)
         _t = _time.monotonic()
         all_frames = self.spark.read.schema(FRAME_SPARK_DDL).parquet(
@@ -800,7 +815,7 @@ class ReplayEngine:
                       control_rows: list[dict] | None = None) -> dict:
         import time as _time
 
-        from pyspark.sql import Observation
+        import pyarrow.parquet as pq
 
         phase_t = {}
         _t0 = _time.monotonic()
@@ -905,19 +920,33 @@ class ReplayEngine:
                       | {int(x) for x in ctx.span_xids}
                       | {x for _, x, _ in ctx.truncates}
                       | carried) - resolved - {-1}
-        # the pending delta of a batch cut inside a transaction: its decode
-        # tasks write the newly-pending rows there (step 7 commits it).
-        # Clear what a crashed attempt left in the fresh dir first.
-        spill = delta = None
+        # the side outputs of the job that decodes the batch: the dead
+        # letters, and the pending delta of a batch cut inside a
+        # transaction (step 7). Both dirs are named before the job and
+        # cleared of what an earlier attempt left there. A batch index is
+        # reused only by a batch that supersedes its earlier attempts (a
+        # retry, a crash before the state save, a bounded-replay stop
+        # resumed with another batch size), so every dead-letter dir of
+        # this index goes.
+        qroot = os.path.join(self.warehouse, "quarantine")
+        dead_dir = os.path.join(qroot, f"b{batch_idx}-s{int(lo)}-{int(hi)}")
+        stale = []
+        if os.path.isdir(qroot):
+            stale = [os.path.join(qroot, d) for d in os.listdir(qroot)
+                     if d.startswith(f"b{batch_idx}-")]
+        delta = spill_dir = None
         if unresolved:
             delta = self._pending_delta_name(meta, batch_idx)
             spill_dir = os.path.join(self.pending_dir, delta)
-            if os.path.isdir(spill_dir):
-                shutil.rmtree(spill_dir)
-            # origin 'none' keeps foreign transactions out of the store,
-            # as filter_origin keeps them out of the events below
-            spill = (spill_dir, sorted(ctx.origin_xids)
-                     if self.options.origin == "none" else [])
+            stale.append(spill_dir)
+        for d in stale:
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+        # origin 'none' keeps foreign transactions out of the store, as
+        # filter_origin keeps them out of the events below
+        foreign = (tuple(sorted(ctx.origin_xids))
+                   if self.options.origin == "none" else ())
+        side = SideOutputs(dead_dir, spill_dir, foreign)
 
         # 3. schema evolution before merge
         for change in ctx.schema_changes:
@@ -925,12 +954,7 @@ class ReplayEngine:
 
         # 4. the batch's events: the decode kernel's rows plus the pending
         # store's rows re-stamped with this batch's dispositions.
-        # ``_carried`` marks the re-read rows so the stats count only THIS
-        # batch's newly-pending xids (append-delta store, _pending_append).
-        # Rejects come only from the decode: count and dead-letter them
-        # from ``decoded``, which never reads the store the sweep deletes.
-        decoded = decode_frames_df(frames, ctx, spill=spill)
-        events = decoded.withColumn("_carried", F.lit(False))
+        events = decoded = decode_frames_df(frames, ctx, side=side)
         pending = self._load_pending()
         if pending is not None:
             pending = pending.selectExpr(
@@ -957,58 +981,36 @@ class ReplayEngine:
             events = filter_origin(events, "none",
                                    foreign_xids=sorted(ctx.origin_xids))
 
-        # 5. which tables. A catalog naming one existing table needs no
-        # batch statistics: its merge job decodes the batch itself and
-        # carries the stats as an Observation. Otherwise the events are
-        # cached and ONE aggregate finds the tables with committed DML.
-        # The stats: the reject count and, when the decode spills, the
-        # pending row count and the newly-pending xids.
+        # 5. which tables. A catalog naming one existing table merges it
+        # straight from the decode. Otherwise the events are cached and ONE
+        # aggregate finds the tables with committed DML.
         committed_sql = f"{_DML_SQL} AND txn_status = 'committed'"
         if effective_stop is not None:
             committed_sql += f" AND end_lsn <= {effective_stop}"
-        stats_sql = f"named_struct('quar', {_QUAR_SQL}"
-        if spill is not None:
-            pend = f"{_APPLY_SQL} AND txn_status IN ('open', 'prepared')"
-            stats_sql += (
-                f", 'pend', count(CASE WHEN {pend} THEN 1 END), "
-                f"'new_xids', collect_set(CASE WHEN {pend} AND NOT _carried "
-                "THEN xid END)")
-        stats_sql += ")"
-
-        def _stats():
-            # AQE would split the aggregate at its exchange into two jobs
-            with _kernel_aqe_off(self.spark):
-                return events.agg(
-                    F.expr(stats_sql).alias("m"),
-                    F.expr(f"collect_set(CASE WHEN {committed_sql} "
-                           "THEN table_name END)").alias("tables"),
-                ).collect()[0]
-
         relnames = {v.relname for vs in ctx.catalog.values() for v in vs}
         single = next(iter(relnames)) if len(relnames) == 1 else None
         if single is not None and not self.table(single).exists:
             single = None
-        m = obs_q = None
-        if single is not None:
-            tables = ([single] if batch_hi is not None
-                      and batch_hi > fence_floor else [])
-            obs_q = Observation()
-            source = events.observe(obs_q, F.expr(stats_sql).alias("m"))
-        else:
+        if single is None:
             # the cache's FIRST action is the aggregate itself: one job
-            # materializes, counts and spills; merges and quarantine read
-            # the cache
-            events = source = events.persist()
+            # materializes the events and writes the side outputs; the
+            # merges read the cache
+            events = events.persist()
         # any mid-batch failure (exactly what the retry taxonomy re-enters
         # on) must release the events cache, or each retry attempt would
         # persist a fresh copy and accumulate executor cache pressure
         try:
             if single is None:
-                r = _stats()
-                m = r["m"]
-                tables = sorted(t for t in r["tables"] if t is not None)
+                # AQE would split the aggregate at its exchange into two jobs
+                with _kernel_aqe_off(self.spark):
+                    tables = sorted(events.agg(F.expr(
+                        f"collect_set(CASE WHEN {committed_sql} "
+                        "THEN table_name END)")).first()[0])
+            else:
+                tables = ([single] if batch_hi is not None
+                          and batch_hi > fence_floor else [])
             _mark("batch_stats")
-            committed = source.filter(committed_sql)
+            committed = events.filter(committed_sql)
             merge_list = sorted(set(tables) | set(truncates))
             _mark("plan_tables")
 
@@ -1028,11 +1030,20 @@ class ReplayEngine:
                 # per-table merges are independent (distinct table dirs,
                 # distinct snapshot logs) — run them as concurrent driver
                 # threads so their Spark jobs interleave instead of
-                # serializing one table's write behind another's
+                # serializing one table's write behind another's. Each
+                # call carries its own copy of the caller's Spark local
+                # properties (job group, description): pool threads do not
+                # inherit them, and one shared copy would let concurrent
+                # SQL executions overwrite each other's execution id.
                 from concurrent.futures import ThreadPoolExecutor
 
+                from pyspark import inheritable_thread_target
+
                 with ThreadPoolExecutor(min(len(merge_list), 8)) as pool:
-                    recs = list(pool.map(_one, merge_list))
+                    futs = [pool.submit(
+                        inheritable_thread_target(self.spark)(_one), t)
+                        for t in merge_list]
+                    recs = [f.result() for f in futs]
             else:
                 recs = [_one(t) for t in merge_list]
             merged = [r for r in recs if r]
@@ -1041,35 +1052,32 @@ class ReplayEngine:
             # max applied lsn this batch (even for tables with no DML)
             if batch_hi is not None:
                 batch_applied = max(batch_applied, int(batch_hi))
-            # a merge the table fence skipped ran no job: its Observation
-            # never fires and must not be read
-            if obs_q is not None and any(not r["skipped"] for r in merged):
-                m = obs_q.get["m"]
-            elif m is None and spill is not None:
-                # no merge job decoded the batch: the stats aggregate is
-                # its one job, and it writes the spill
-                m = _stats()["m"]
-            quarantined = None if m is None else int(m["quar"])
+            if single is not None and all(r["skipped"] for r in merged):
+                # no job decoded the batch (nothing committed, or the
+                # table fence skipped the merge): drain the decode once
+                # for its side outputs
+                with _kernel_aqe_off(self.spark):
+                    decoded.write.format("noop").mode("overwrite").save()
             _mark("merges")
 
-            # 7. carry-over: the decode tasks wrote the newly-pending rows
-            # as a fresh delta; commit it to the store meta (resolved xids
-            # tombstone). The store is cleared once nothing is pending.
-            n_pending = 0
-            if spill is not None:
-                self._pending_append(m, resolved, batch_idx, delta)
-                n_pending = int(m["pend"])
+            # 7. side outputs: count the dead letters from their footers
+            # and commit the pending delta to the store meta (resolved
+            # xids tombstone). The store is cleared once nothing is
+            # pending.
+            quarantined = sum(pq.ParquetFile(f).metadata.num_rows
+                              for f in _part_files(dead_dir))
+            if delta is not None:
+                n_pending = self._pending_append(resolved, batch_idx, delta)
             else:
+                n_pending = 0
                 self._pending_clear()
             _mark("pending_spill")
 
-            # 8. quarantine, metrics, engine state (atomic). A bounded-replay
-            # stop leaves the batch NOT fully applied — keep the cursors
+            # 8. metrics, engine state (atomic). A bounded-replay stop
+            # leaves the batch NOT fully applied — keep the cursors
             # (consumed seq, batch index) on it so a later resume
             # reprocesses it (the LSN fence makes that idempotent), exactly
             # the reference's restart-from-confirmed-LSN contract.
-            if quarantined is None:  # no job ran; nothing spills here
-                quarantined = decoded.filter("error IS NOT NULL").count()
             rec = {
                 "batch_idx": batch_idx,
                 "applied_lsn": batch_applied,
@@ -1081,11 +1089,7 @@ class ReplayEngine:
                 "phase_ms": phase_t,
             }
             if quarantined:
-                # a plain decode: the dead-letter job must not respill
-                qd = self._write_quarantine(decode_frames_df(frames, ctx),
-                                            batch_idx)
-                if qd:
-                    rec["quarantine_dir"] = qd
+                rec["quarantine_dir"] = dead_dir
             st["batch_idx"] = batch_idx + (0 if rec["stopped"] else 1)
             st["catalog"] = {
                 str(oid): [list(v) for v in versions]
@@ -1115,37 +1119,6 @@ class ReplayEngine:
 
     # ---------------------------------------------------------------- helpers
 
-    def _write_quarantine(self, events: DataFrame, batch_idx) -> str | None:
-        """Dead-letter persistence of decode-rejected frames: the engine
-        only COUNTED quarantined rows before, so a malformed frame (a
-        producer bug, a protocol drift) was diagnosable only as a number.
-        When WALSTREAM_QUARANTINE=1 (default), batches with rejects also
-        write the rejected rows — locator columns (seq, lsn, xid) plus the
-        decode error string — under <warehouse>/quarantine/, so an operator
-        can inspect, fix the producer, and re-extract the raw frames from
-        the retained WAL files by seq. Runs only when the reject count is
-        already known non-zero (zero cost on clean batches; one more decode
-        pass on error batches). The
-        reference's analog is the error event surfaced to the consumer
-        (decode error path); here the consumer is the lake, so rejects get
-        a durable side channel instead. Never fails the batch."""
-        if os.environ.get("WALSTREAM_QUARANTINE", "1") != "1":
-            return None
-        qdir = os.path.join(self.warehouse, "quarantine",
-                            f"b{batch_idx}-{uuid.uuid4().hex[:6]}")
-        try:
-            (events.filter("error IS NOT NULL")
-             .selectExpr("seq", "lsn", "xid", "event_type", "schema_name",
-                         "table_name", "relation_oid", "error")
-             .write.mode("overwrite").parquet(qdir))
-            return qdir
-        except Exception as e:  # diagnostics must never fail the batch
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "quarantine write failed: %s", e)
-            return None
-
     @staticmethod
     def _restamp_sql(ctx, xids, columns) -> list[str]:
         """Select list re-stamping carried pending rows with this batch's
@@ -1173,7 +1146,6 @@ class ReplayEngine:
             "commit_lsn": lsns(cl),
             "end_lsn": lsns(el),
             "commit_ts_us": lsns(ts),
-            "_carried": "true",
         }
         return [f"{sub[c]} AS {c}" if c in sub else f"`{c}`"
                 for c in columns]
@@ -1283,15 +1255,11 @@ class ReplayEngine:
                                                 ctx.xid_status)
                          if s == ST_COMMITTED}
         for d in (meta or {}).get("order", []):
-            if not now.intersection(meta["deltas"][d]):
+            if not now.intersection(map(int, meta["deltas"][d])):
                 continue
-            ddir = os.path.join(self.pending_dir, d)
-            for f in sorted(os.listdir(ddir)):
-                if not f.endswith(".parquet"):
-                    continue
+            for f in _part_files(os.path.join(self.pending_dir, d)):
                 for r in pq.read_table(
-                    os.path.join(ddir, f),
-                    columns=["seq", "xid", "truncate_tables"],
+                    f, columns=["seq", "xid", "truncate_tables"],
                     filters=[("event_type", "=", "truncate")],
                 ).to_pylist():
                     if r["xid"] in now:

@@ -1113,9 +1113,27 @@ def _decode_control_rows(
 # ---------------------------------------------------------------------------
 
 # The pending-store spill predicate: the apply path's event types (DML and
-# truncate) of transactions still open or prepared at the batch's end.
+# truncate) of transactions still open or prepared at the batch's end. An
+# open transaction's truncate must survive a micro-batch boundary exactly
+# like its DML, or a batch split between TRUNCATE and COMMIT drops it.
 _SPILL_TYPES = pa.array(["insert", "update", "delete", "truncate"])
 _SPILL_STATUS = pa.array(["open", "prepared"])
+# A dead letter: the decode error plus the columns that locate the rejected
+# frame in the retained WAL (re-extract the raw frame by ``seq``).
+DEAD_LETTER_SCHEMA = pa.schema([
+    EVENT_ARROW_SCHEMA.field(n) for n in (
+        "seq", "lsn", "xid", "event_type", "schema_name", "table_name",
+        "relation_oid", "error")])
+
+
+class SideOutputs(NamedTuple):
+    """Where each decode task writes its side outputs: rejected rows into
+    ``dead_letters``; with ``pending`` set, the pending-store rows
+    (``_pending_rows``, minus ``drop_xids``) into that delta dir."""
+
+    dead_letters: str
+    pending: str | None
+    drop_xids: tuple
 
 
 def _pending_rows(t: pa.Table, drop_xids=()) -> pa.Table:
@@ -1139,11 +1157,11 @@ def _pending_rows(t: pa.Table, drop_xids=()) -> pa.Table:
 
 
 def write_spill_part(t: pa.Table, spill_dir: str, part: int) -> str:
-    """Write one decode task's pending rows as ``part-{part}.parquet`` in
-    ``spill_dir``. The file lands under a dot-prefixed temp name (ignored
-    by Spark and by ``*.parquet`` listings) and is renamed into place, so
-    a retried or recomputed attempt of the same partition replaces it with
-    the same bytes."""
+    """Write one decode task's side-output rows as ``part-{part}.parquet``
+    in ``spill_dir``. The file lands under a dot-prefixed temp name
+    (ignored by Spark and by ``*.parquet`` listings) and is renamed into
+    place, so a retried or recomputed attempt of the same partition
+    replaces it with the same bytes."""
     import os
     import uuid
 
@@ -1161,34 +1179,48 @@ def write_spill_part(t: pa.Table, spill_dir: str, part: int) -> str:
     return path
 
 
-def decode_frames_df(frames_df, ctx: DecodeContext, spill=None):
+def decode_frames_df(frames_df, ctx: DecodeContext,
+                     side: SideOutputs | None = None):
     """frames DataFrame → ChangeEvent DataFrame via mapInArrow (narrow,
     no shuffle; whole-stage codegen resumes on the other side).
 
-    ``spill``: optional ``(dir, drop_xids)``, the pending-store delta of a
-    batch cut inside a transaction. Each decode task then also keeps its
-    ``_pending_rows`` and, once its input is exhausted, writes them with
-    ``write_spill_part`` — a side output of whichever job decodes the
-    batch, so the store costs no second decode. All rows still stream on
-    downstream."""
+    ``side``: optional ``SideOutputs`` of a replay batch. Each decode task
+    then also keeps its rejected rows (``DEAD_LETTER_SCHEMA``) and, with a
+    pending dir, its ``_pending_rows``; once its input is exhausted it
+    writes each non-empty set with ``write_spill_part`` — a side output of
+    whichever job decodes the batch, so neither costs a second decode. All
+    rows still stream on downstream."""
     from .. import ensure_shipped
 
     ensure_shipped(frames_df.sparkSession)
 
     def fn(batches):
-        held = []
+        dead, held = [], []
         for b in batches:
             t = decode_batch(b, ctx)
-            if spill is not None:
-                p = _pending_rows(t, spill[1])
-                if p.num_rows:
-                    held.append(p)
+            if side is not None:
+                err = t.column("error")
+                if err.null_count < len(err):
+                    import pyarrow.compute as pc
+
+                    dead.append(t.filter(pc.is_valid(err)).select(
+                        DEAD_LETTER_SCHEMA.names))
+                if side.pending is not None:
+                    p = _pending_rows(t, side.drop_xids)
+                    if p.num_rows:
+                        held.append(p)
             yield from t.to_batches()
-        if held:
+        if dead or held:
             from pyspark import TaskContext
 
-            write_spill_part(
-                pa.concat_tables(held).cast(EVENT_ARROW_SCHEMA), spill[0],
-                TaskContext.get().partitionId())
+            part = TaskContext.get().partitionId()
+            if dead:
+                write_spill_part(
+                    pa.concat_tables(dead).cast(DEAD_LETTER_SCHEMA),
+                    side.dead_letters, part)
+            if held:
+                write_spill_part(
+                    pa.concat_tables(held).cast(EVENT_ARROW_SCHEMA),
+                    side.pending, part)
 
     return frames_df.mapInArrow(fn, EVENT_SPARK_DDL)

@@ -26,7 +26,9 @@ from time import monotonic as _monotonic
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import FRAME_SPARK_DDL, ReplayEngine, _local_path
+from .engine import (
+    FRAME_SPARK_DDL, ReplayEngine, _local_path, tune_input_splits,
+)
 
 __all__ = ["FRAME_SPARK_DDL", "ingest_frames_batch", "start_stream"]
 
@@ -170,7 +172,7 @@ def ingest_frames_batch(engine: ReplayEngine, df: DataFrame,
     def batches():
         for chunk in chunks:
             paths = [s["path"] for s in chunk]
-            engine._tune_input_splits(paths)
+            tune_input_splits(engine.spark, paths)
             if len(chunks) == 1 and set(paths) == known:
                 batch_df = df  # common in-order case: the source's batch
             else:

@@ -680,9 +680,3 @@ def test_quarantine_dead_letter_rows_persisted(spark, tmp_path):
     assert [r["seq"] for r in rows2] == [3]
     assert_matches_golden(spark, eng2, {"repos": base}, frames2)
 
-
-def test_quarantine_disabled_by_env(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("WALSTREAM_QUARANTINE", "0")
-    base, b = wg.gen_malformed()
-    eng = run_engine(spark, str(tmp_path), {"repos": base}, b.to_table())
-    assert not os.path.isdir(os.path.join(str(tmp_path), "wh", "quarantine"))

@@ -13,7 +13,6 @@ KNOBS = {
     "WALSTREAM_CHANGELOG",
     "WALSTREAM_CONTROL_MAX_ROWS",
     "WALSTREAM_FOOTER_SPAN_MAX_FILES",
-    "WALSTREAM_QUARANTINE",
 }
 
 

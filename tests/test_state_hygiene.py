@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 
@@ -143,6 +144,9 @@ class _JobCounter(ReplayEngine):
     def __init__(self, spark, warehouse, monkeypatch):
         super().__init__(spark, warehouse)
         self.groups: dict[int, str] = {}
+        # job groups outlive the engine in the status tracker: name them
+        # by a fresh token, not id(self), which a later instance can reuse
+        self.run = uuid.uuid4().hex
         self.calls: list[tuple] = []
         # the session's concrete DataFrame class: it overrides the
         # methods of the public pyspark.sql.DataFrame
@@ -158,7 +162,7 @@ class _JobCounter(ReplayEngine):
 
     def process_batch(self, frames, batch_idx, st, **k):
         sc = self.spark.sparkContext
-        group = self.groups[batch_idx] = f"pb-{id(self)}-{batch_idx}"
+        group = self.groups[batch_idx] = f"pb-{self.run}-{batch_idx}"
         sc.setJobGroup(group, "process_batch")
         try:
             rec = super().process_batch(frames, batch_idx, st, **k)
@@ -178,11 +182,10 @@ class _JobCounter(ReplayEngine):
 
 def test_fence_skipped_batch_no_deadlock(spark, tmp_path):
     """Fresh engine state over an already-applied lake: the single-table
-    merge is skipped by the TABLE fence without running any Spark job, so
-    the reject-count Observation riding on that merge never fires and
-    must not be read (obs.get on a never-run plan blocks forever; the
-    original hang). The batch still reports its reject count and the
-    replay stays idempotent."""
+    merge is skipped by the TABLE fence without running any Spark job (a
+    reject-count Observation riding on that merge once blocked forever
+    here). The drain job decodes the batch instead, so the batch still
+    reports its reject count and the replay stays idempotent."""
     base, b = wg.gen_basic(n_base=40, n_txns=5, ops_per_txn=5)
     frames = b.to_table()
     fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
@@ -203,8 +206,8 @@ def test_fence_skipped_batch_no_deadlock(spark, tmp_path):
 
 def test_single_table_batch_one_job_no_cache(spark, tmp_path, monkeypatch):
     """A single-table batch of complete transactions is ONE Spark job —
-    decode, compaction and merge fused, the reject count riding as an
-    Observation — and never caches the decoded events."""
+    decode, compaction and merge fused, the dead letters a side output of
+    the decode — and never caches the decoded events."""
     base, b = wg.gen_basic(n_base=40, n_txns=5, ops_per_txn=5)
     frames = b.to_table()
     fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
@@ -222,7 +225,7 @@ def test_single_table_split_txn_batches_one_job_no_cache(spark, tmp_path,
     """Batches cut inside a transaction, with pending rows carried in from
     the previous batch: each runs exactly ONE Spark job — the decode task
     writes the newly-pending rows as a side output of the merge job, or of
-    the stats aggregate when nothing merges — and never caches."""
+    the drain job when nothing merges — and never caches."""
     base, b = wg.gen_basic(n_base=40, n_txns=4, ops_per_txn=30)
     frames = b.to_table()
     fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
@@ -247,19 +250,149 @@ def test_single_table_split_txn_batches_one_job_no_cache(spark, tmp_path,
 def test_two_table_batch_persists_once_and_releases(spark, tmp_path,
                                                     monkeypatch):
     """A catalog naming two tables caches the decoded events once per
-    batch (stats aggregate, per-table merges and spill read the cache)
-    and releases the cache before the batch returns."""
+    batch (the tables aggregate fills the cache, the per-table merges read
+    it) and releases the cache before the batch returns. Every batch runs
+    the aggregate job plus one job per merged table, all in the caller's
+    job group (the merge threads inherit it)."""
     base, b = wg.gen_mixed_dml(n_base=80, n_txns=12, ops_per_txn=8)
     frames = b.to_table()
     bases = {"repos": base.slice(0, 40), "repos_full": base.slice(40)}
     fd, wh = _stage(spark, tmp_path, bases, frames)
     eng = _JobCounter(spark, wh, monkeypatch)
     res = eng.replay_frames(fd, batch_frames=45)
-    n = len(res["records"])
+    recs = res["records"]
+    n = len(recs)
     assert n > 2
     assert eng.calls == [c for i in range(n) for c in
                          (("persist",), ("unpersist",), ("end", i))]
+    merged = {r["batch_idx"]: sum(not t["skipped"] for t in r["tables"])
+              for r in recs}
+    assert max(merged.values()) == 2, recs
+    assert eng.jobs() == {i: 1 + k for i, k in merged.items()}
 
+
+def test_single_table_batch_with_rejects_one_job(spark, tmp_path,
+                                                 monkeypatch):
+    """Rejected frames cost no extra job: a single-table batch with three
+    malformed frames runs ONE Spark job, and its decode tasks write the
+    three dead letters next to the merge."""
+    base, b = wg.gen_malformed()
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    eng = _JobCounter(spark, wh, monkeypatch)
+    res = eng.replay_frames(fd, batch_frames=100_000)
+    (rec,) = res["records"]
+    assert [t["skipped"] for t in rec["tables"]] == [False]
+    assert rec["quarantined"] == 3
+    qdir = rec["quarantine_dir"]
+    assert os.path.basename(qdir) == f"b0-s0-{frames.num_rows - 1}"
+    rows = spark.read.parquet(qdir).collect()
+    assert len(rows) == 3
+    assert all(r["error"] for r in rows)
+    assert eng.jobs() == {0: 1}
+    assert eng.calls == [("end", 0)]
+    _assert_golden(spark, eng, base, frames)
+
+
+def test_two_table_batch_dead_letters_written_once_by_aggregate(
+        spark, tmp_path, monkeypatch):
+    """A two-table batch with one garbage frame writes its dead letter in
+    the aggregate job that fills the cache: the file exists before the
+    first merge starts and the merges, which read the cache, leave it
+    untouched."""
+    base, b = wg.gen_mixed_dml(n_base=80, n_txns=6, ops_per_txn=8)
+    b.emit(b"Z\x01\x02\x03")
+    frames = b.to_table()
+    bases = {"repos": base.slice(0, 40), "repos_full": base.slice(40)}
+    fd, wh = _stage(spark, tmp_path, bases, frames)
+    at_merge = []
+
+    class Watching(_JobCounter):
+        def _merge_table(self, tname, *a, **k):
+            qroot = os.path.join(self.warehouse, "quarantine")
+            at_merge.append({
+                os.path.join(d, f): os.stat(os.path.join(qroot, d, f))
+                .st_ino
+                for d in os.listdir(qroot)
+                for f in os.listdir(os.path.join(qroot, d))})
+            return super()._merge_table(tname, *a, **k)
+
+    eng = Watching(spark, wh, monkeypatch)
+    res = eng.replay_frames(fd, batch_frames=100_000)
+    (rec,) = res["records"]
+    assert sorted(t["table"] for t in rec["tables"]) == ["repos",
+                                                         "repos_full"]
+    assert rec["quarantined"] == 1
+    qdir = rec["quarantine_dir"]
+    (f,) = os.listdir(qdir)
+    path = os.path.join(os.path.basename(qdir), f)
+    ino = os.stat(os.path.join(qdir, f)).st_ino
+    assert at_merge == [{path: ino}, {path: ino}]
+    (row,) = spark.read.parquet(qdir).collect()
+    assert row["seq"] == frames.num_rows - 1 and row["error"]
+    assert eng.jobs() == {0: 3}
+
+
+def test_retried_batch_rewrites_dead_letters_in_place(spark, tmp_path):
+    """A batch attempt that fails after its job and is retried rewrites
+    its dead-letter dir — same deterministic name, identical rows — and
+    leaves no orphan dir behind."""
+    from pg_walstream_spark.retry import RetryConfig
+
+    base, b = wg.gen_malformed()
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    first = []
+
+    class FailOnce(ReplayEngine):
+        def _save_state(self, st):
+            if not first:
+                qroot = os.path.join(self.warehouse, "quarantine")
+                (d,) = os.listdir(qroot)
+                first.append((d, _row_keys(spark.read.parquet(
+                    os.path.join(qroot, d)).collect())))
+                raise OSError("transient failure after the batch's job")
+            super()._save_state(st)
+
+    eng = FailOnce(spark, wh, retry_config=RetryConfig(
+        max_attempts=3, initial_delay_s=0.001))
+    res = eng.replay_frames(fd, batch_frames=5)
+    recs = res["records"]
+    assert recs[0]["retries"], recs[0]
+    (d0, rows0), = first
+    qroot = os.path.join(wh, "quarantine")
+    want = sorted(os.path.basename(r["quarantine_dir"]) for r in recs
+                  if r["quarantined"])
+    assert sorted(os.listdir(qroot)) == want
+    assert d0 in want
+    assert _row_keys(spark.read.parquet(
+        os.path.join(qroot, d0)).collect()) == rows0
+    assert sum(r["quarantined"] for r in recs) == 3
+    _assert_golden(spark, eng, base, frames)
+
+
+
+def test_stopped_batch_resumed_with_other_size_keeps_one_copy(spark,
+                                                              tmp_path):
+    """A bounded-replay stop keeps its batch index, and a resume with
+    another batch size re-decodes that batch under a different seq range:
+    its dead letters replace the stopped attempt's dir, so each reject is
+    on disk once."""
+    base, b = wg.gen_malformed()
+    frames = b.to_table()
+    fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
+    eng = ReplayEngine(spark, wh)
+    (stopped,) = eng.replay_frames(
+        fd, batch_frames=100, stop_at_lsn=b.commit_lsns[0])["records"]
+    assert stopped["stopped"] and stopped["quarantined"] == 3
+    recs = eng.replay_frames(fd, batch_frames=4)["records"]
+    assert [(r["batch_idx"], r["quarantined"]) for r in recs] == [(0, 1),
+                                                                 (1, 2)]
+    dirs = [r["quarantine_dir"] for r in recs]
+    assert sorted(os.listdir(os.path.join(wh, "quarantine"))) == sorted(
+        os.path.basename(d) for d in dirs)
+    assert spark.read.parquet(*dirs).count() == 3
+    _assert_golden(spark, eng, base, frames)
 
 def test_append_metrics_replaces_same_batch_on_retry():
     """An in-place batch retry re-enters with the same in-memory state;
@@ -282,9 +415,7 @@ def _spill_and_commit(eng, rows, batch_idx: int) -> None:
     spill_dir = os.path.join(eng.pending_dir, name)
     shutil.rmtree(spill_dir, ignore_errors=True)
     write_spill_part(rows, spill_dir, 0)
-    xids = sorted(set(rows.column("xid").to_pylist()))
-    eng._pending_append({"pend": rows.num_rows, "new_xids": xids}, set(),
-                        batch_idx, name)
+    eng._pending_append(set(), batch_idx, name)
 
 
 def _pending_event_rows(xids, key_prefix="p"):
@@ -458,16 +589,21 @@ def _row_keys(rows) -> list[str]:
 
 
 @pytest.mark.parametrize("case", ["two_phase", "stream_subabort",
-                                  "truncate_open", "origin_none"])
+                                  "truncate_open", "origin_none",
+                                  "malformed"])
 def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
                                                       monkeypatch, case):
     """After every batch cut inside a transaction, the delta its decode
     tasks wrote holds exactly the batch's decoded rows under the spill
     predicate — apply-path events of open or prepared transactions, minus
-    origin 'none' foreign transactions — computed here with Spark."""
+    origin 'none' foreign transactions — and its dead-letter dir holds
+    exactly the rejected rows, both computed here with Spark from a plain
+    decode. The store meta counts the delta's rows per xid."""
+    from collections import Counter
+
     import pg_walstream_spark.engine as E
     from pg_walstream_spark.operators.decode import (
-        EVENT_SPARK_DDL, decode_frames_df,
+        DEAD_LETTER_SCHEMA, EVENT_SPARK_DDL, decode_frames_df,
     )
     from pg_walstream_spark.operators.raw import filter_origin
     from pg_walstream_spark.options import ReplicationOptions
@@ -481,43 +617,60 @@ def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
         "truncate_open": (wg.gen_truncate, 20, None),
         # the ORIGIN frame and the foreign DML straddle a boundary
         "origin_none": (wg.gen_origin, 3, ReplicationOptions(origin="none")),
+        # garbage frames inside a transaction that spans three batches
+        "malformed": (lambda n_base: wg.gen_malformed(), 3, None),
     }[case]
     base, b = gen(n_base=30)
     frames = b.to_table()
     fd, wh = _stage(spark, tmp_path, {"repos": base}, frames)
-    spilled = []
+    decodes = []
     orig_decode = E.decode_frames_df
 
-    def recording_decode(frames_df, ctx, spill=None):
-        if spill is not None:
-            spilled.append((frames_df, ctx))
-        return orig_decode(frames_df, ctx, spill=spill)
+    def recording_decode(frames_df, ctx, side=None):
+        decodes.append((frames_df, ctx, side))
+        return orig_decode(frames_df, ctx, side=side)
 
     monkeypatch.setattr(E, "decode_frames_df", recording_decode)
     checked = []
 
     class Checking(ReplayEngine):
-        def _pending_append(self, m, resolved, batch_idx, name):
-            frames_df, ctx = spilled[-1]
-            pend = decode_frames_df(frames_df, ctx).filter(
-                f"{E._APPLY_SQL} AND txn_status IN ('open', 'prepared')")
+        def _pending_append(self, resolved, batch_idx, name):
+            frames_df, ctx, side = decodes[-1]
+            assert side.pending == os.path.join(self.pending_dir, name)
+            plain = decode_frames_df(frames_df, ctx)
+            pend = plain.filter(
+                "event_type IN ('insert', 'update', 'delete', 'truncate') "
+                "AND error IS NULL AND txn_status IN ('open', 'prepared')")
             want = pend
             if self.options.origin == "none" and ctx.has_origin:
                 want = filter_origin(pend, "none",
                                      foreign_xids=sorted(ctx.origin_xids))
-            ddir = os.path.join(self.pending_dir, name)
-            got = (self.spark.read.schema(EVENT_SPARK_DDL).parquet(ddir)
-                   .collect() if os.path.isdir(ddir) else [])
+            got = (self.spark.read.schema(EVENT_SPARK_DDL)
+                   .parquet(side.pending).collect()
+                   if os.path.isdir(side.pending) else [])
             want = want.collect()
             if pend.count() > len(want):
                 checked.append({"foreign_dropped"})
             assert _row_keys(got) == _row_keys(want), batch_idx
-            assert sorted({r["xid"] for r in want}) == sorted(
-                m["new_xids"] or [])
+            dead = plain.filter("error IS NOT NULL").select(
+                *DEAD_LETTER_SCHEMA.names).collect()
+            got_dead = (self.spark.read.parquet(side.dead_letters).collect()
+                        if os.path.isdir(side.dead_letters) else [])
+            assert _row_keys(got_dead) == _row_keys(dead), batch_idx
             checked.append({r["txn_status"] for r in want}
                            | {r["event_type"] for r in want}
-                           | {"streamed" for r in want if r["sub_xid"]})
-            return super()._pending_append(m, resolved, batch_idx, name)
+                           | {"streamed" for r in want if r["sub_xid"]}
+                           | {"dead_letter" for _ in dead})
+            n = super()._pending_append(resolved, batch_idx, name)
+            meta = self._pending_meta()
+            if meta is None:
+                assert n == 0
+            else:
+                assert n == self._load_pending().count() > 0
+                if want and name in meta["order"]:
+                    assert meta["deltas"][name] == dict(
+                        Counter(str(r["xid"]) for r in want))
+            return n
 
     eng = Checking(spark, wh, options=options)
     eng.replay_frames(fd, batch_frames=batch_frames)
@@ -531,7 +684,8 @@ def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
         assert lake.count() == 30 + 4
         return
     assert {"two_phase": "prepared", "stream_subabort": "streamed",
-            "truncate_open": "truncate"}[case] in seen, checked
+            "truncate_open": "truncate",
+            "malformed": "dead_letter"}[case] in seen, checked
     _assert_golden(spark, eng, base, frames)
 
 
