@@ -33,19 +33,28 @@ or Structured Streaming's foreachBatch — see ``streaming.py``):
    batch (the merge, the tables aggregate, or a drain job when neither
    ran) also write the batch's rejected rows into its dead-letter dir
    ``quarantine/b{batch_idx}-s{lo}-{hi}`` and, if a transaction is still
-   open or prepared, the newly-pending rows into a fresh delta dir of the
-   pending store. The driver reads the batch's counts from those files
-   with pyarrow (``quarantined`` from the dead-letter footers, the new
-   pending xids from the delta's ``xid`` column) and commits the store
-   meta. A single-table batch stays one Spark job.
+   open or prepared, the newly-pending rows into the batch's fresh delta
+   dir ``pending/delta_b{batch_idx}``. The driver reads the batch's
+   counts from those files with pyarrow (``quarantined`` from the
+   dead-letter footers, the new pending xids from the delta's ``xid``
+   column) and folds the delta into the pending-store meta, which is part
+   of the engine state. A single-table batch stays one Spark job.
 
 Both front ends drive batches through the same two steps here:
 ``frame_spans`` + ``admit_spans`` plan the contiguous run of frame files
 after the consumed seq (files past a seq gap are held, not applied), and
-``run_batches`` applies that run batch by batch. Resume: engine state
-(consumed seq ``max_seq``, batch index, catalog, open-txn carry) is
-persisted atomically per batch; a restart resumes at ``max_seq + 1``
-whatever the batch size, and the LSN fence makes reprocessing idempotent.
+``run_batches`` applies that run batch by batch.
+
+Resume: after its table commits, a batch makes ONE engine-side durable
+commit, the atomic write of the engine state (consumed seq ``max_seq``,
+batch index, catalog, open-txn carries, pending-store meta). A restart
+resumes at ``max_seq + 1`` whatever the batch size and recomputes any
+batch that did not commit from the state it began with; the LSN fence
+makes its table merges idempotent. A bounded-replay stop (``stop_at_lsn``)
+commits only what the fence protects: its merges (with the schema
+changes announced up to the stop), ``applied_lsn``, its metrics row and
+dead letters. Everything else stays as the batch began, so the resume
+recomputes the stopped batch from the same inputs.
 """
 
 from __future__ import annotations
@@ -99,6 +108,12 @@ def _part_files(d: str) -> list[str]:
         return []
     return sorted(os.path.join(d, f) for f in os.listdir(d)
                   if f.endswith(".parquet"))
+
+
+def _log_once(t: LakeTable, event: dict) -> None:
+    """Log lineage ``event`` on ``t`` unless its lineage already holds it."""
+    if event not in t.snapshot()["lineage"]:
+        t.log_event(event)
 
 
 def tune_input_splits(spark: SparkSession, paths) -> None:
@@ -184,6 +199,10 @@ def tune_input_splits(spark: SparkSession, paths) -> None:
 # batches. Keep the last N rows; older ones roll into aggregate counters.
 METRICS_CAP = 200
 
+# Past this many frame files the serial driver-side footer walk of
+# ``seq_spans_from_footers`` (~1 ms a file) yields to the parallel Spark scan.
+FOOTER_SPAN_MAX_FILES = 4096
+
 
 def seq_spans_from_footers(paths) -> list[dict] | None:
     """Per-file ``{path, lo, hi, n}`` for the frame files' ``seq`` column,
@@ -197,14 +216,13 @@ def seq_spans_from_footers(paths) -> list[dict] | None:
     count, so the in-file gap check keeps working. Files without usable
     statistics (foreign producers, stats disabled) return None and
     ``frame_spans`` falls back to the groupBy — as does a batch larger than
-    WALSTREAM_FOOTER_SPAN_MAX_FILES (default 4096): footer reads are
-    ~1 ms each but SERIAL on the driver, so past a few thousand files
-    the parallel Spark scan is the better plan.
+    FOOTER_SPAN_MAX_FILES: footer reads are ~1 ms each but SERIAL on the
+    driver, so past a few thousand files the parallel Spark scan is the
+    better plan.
     """
     import pyarrow.parquet as pq
 
-    cap = int(os.environ.get("WALSTREAM_FOOTER_SPAN_MAX_FILES", "4096"))
-    if len(paths) > cap:
+    if len(paths) > FOOTER_SPAN_MAX_FILES:
         return None
     spans: list[dict] = []
     for p in paths:
@@ -237,6 +255,18 @@ def seq_spans_from_footers(paths) -> list[dict] | None:
     return spans
 
 
+def _live_rows(pend: dict) -> dict[str, int]:
+    """Per-xid row counts of the live (untombstoned) xids of pending-store
+    meta ``pend``."""
+    dead = set(pend["dead_xids"])
+    out: dict[str, int] = {}
+    for d in pend["order"]:
+        for x, n in pend["deltas"][d].items():
+            if int(x) not in dead:
+                out[x] = out.get(x, 0) + n
+    return out
+
+
 def _append_metrics(st: dict, rec: dict) -> None:
     ml = st.setdefault("metrics", [])
     # an in-place batch retry (retry_call around process_batch) re-enters
@@ -263,9 +293,10 @@ _DML_SQL = "event_type IN ('insert', 'update', 'delete') AND error IS NULL"
 # format, metrics rollup shape, resume cursor). v4 = resume from the
 # consumed seq ``max_seq`` in every front end (v3 bounded replays resumed
 # by batch position, which v4 cannot translate). v5 = the pending meta
-# keeps per-xid row counts per delta (v4 kept xid lists). Unstamped
-# states are v3 or older.
-ENGINE_STATE_VERSION = 5
+# keeps per-xid row counts per delta (v4 kept xid lists). v6 = the pending
+# meta lives in the engine state as ``pending`` (v5 kept it in
+# ``pending/meta.json``). Unstamped states are v3 or older.
+ENGINE_STATE_VERSION = 6
 
 
 class StateVersionError(RuntimeError):
@@ -336,6 +367,7 @@ class ReplayEngine:
             return st
         return {"batch_idx": 0, "catalog": {}, "open_xid": None,
                 "applied_lsn": 0, "metrics": [],
+                "pending": {"order": [], "deltas": {}, "dead_xids": []},
                 "state_version": ENGINE_STATE_VERSION}
 
     def _save_state(self, st: dict) -> None:
@@ -444,143 +476,89 @@ class ReplayEngine:
     # (reference analog: the consumer's per-xid buffer grows incrementally,
     # examples/safe-transaction-consumer/src/main.rs:50-60). Now each batch
     # appends ONE delta holding only its newly-pending rows; resolved xids
-    # are tombstoned in a driver-side meta file and masked at read, deltas
-    # whose xids are all resolved are deleted outright, and the store is
-    # compacted (one filtered rewrite) only when the delta count exceeds
+    # are tombstoned in the store meta and masked at read, deltas whose
+    # xids are all resolved are dropped, and the store is compacted (one
+    # filtered rewrite) only when the delta count exceeds
     # PENDING_COMPACT_DELTAS — so per-batch spill cost tracks NEW pending
-    # volume, not total open-transaction volume.
+    # volume, not total open-transaction volume. The meta (``order`` of
+    # delta dirs, per-delta per-xid row ``deltas``, ``dead_xids``) is the
+    # engine state's ``pending`` entry and commits with it.
 
     PENDING_COMPACT_DELTAS = 8
 
-    def _pending_meta_path(self) -> str:
-        return os.path.join(self.pending_dir, "meta.json")
-
-    def _pending_meta(self) -> dict | None:
-        p = self._pending_meta_path()
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return None
-
-    def _load_pending(self) -> DataFrame | None:
-        meta = self._pending_meta()
-        if not meta or not meta["order"]:
+    def _load_pending(self, pend: dict) -> DataFrame | None:
+        """The live rows of the pending store described by meta ``pend``."""
+        if not pend["order"]:
             return None
-        paths = [os.path.join(self.pending_dir, d) for d in meta["order"]]
+        paths = [os.path.join(self.pending_dir, d) for d in pend["order"]]
         df = self.spark.read.schema(EVENT_SPARK_DDL).parquet(*paths)
-        dead = [int(x) for x in meta.get("dead_xids", [])]
-        if dead:
+        if pend["dead_xids"]:
             # rows of already-resolved xids still physically present in
             # partially-live deltas — applied (or discarded) in an earlier
             # batch; masked here until their delta is dropped or compacted
-            df = df.filter(~F.col("xid").isin(dead))
+            df = df.filter(~F.col("xid").isin(pend["dead_xids"]))
         return df
 
-    def _pending_clear(self) -> None:
-        if os.path.exists(self.pending_dir):
-            shutil.rmtree(self.pending_dir)
+    def _pending_append(self, pend: dict, resolved_xids: set[int],
+                        batch_idx: int, name: str | None) -> dict:
+        """The pending-store meta after batch ``batch_idx``: ``pend`` with
+        ``resolved_xids`` tombstoned and, if the batch's decode tasks wrote
+        newly-pending rows into the fresh dir ``name``
+        (``SideOutputs.pending``), that delta appended with its per-xid row
+        counts, read from its ``xid`` column with pyarrow. Runs no Spark
+        job except the compaction past PENDING_COMPACT_DELTAS.
 
-    def _pending_delta_name(self, meta: dict | None, batch_idx: int) -> str:
-        """The fresh delta dir a batch's pending rows land in. Its
-        generation is one past the committed meta's, so the committed meta
-        never references it: files a crashed attempt left there are
-        garbage, safe to delete and never loaded."""
-        gen = int((meta or {}).get("gen", 0)) + 1
-        return f"delta_b{batch_idx}_g{gen}"
-
-    def _pending_append(self, resolved_xids: set[int], batch_idx: int,
-                        name: str) -> int:
-        """Commit the batch's pending delta ``name`` to the store meta and
-        return the store's pending row count.
-
-        The batch's decode tasks already wrote its newly-pending rows into
-        the fresh dir ``name`` (``SideOutputs.pending``, a side output of
-        the job that decodes the batch). The meta keeps each delta's
-        per-xid row counts, read here from the delta's ``xid`` column with
-        pyarrow, so the pending count is the live xids' rows. Runs no Spark
-        job except the compaction past PENDING_COMPACT_DELTAS. A store left
-        without pending rows is cleared."""
+        Crash-safety: this writes only dirs named after ``batch_idx``,
+        which no committed state references (a batch that commits advances
+        the index), and deletes nothing. The new meta commits with the
+        engine state; ``_pending_sweep`` then deletes the dirs it dropped."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        meta = self._pending_meta() or {
-            "order": [], "deltas": {}, "dead_xids": [],
-        }
-        # Crash-safety: directory deletions happen only AFTER the
-        # meta.json write (as an unreferenced-dir sweep), and every write
-        # goes to a FRESH generation-suffixed dir — never to a dir the
-        # committed meta still references. Deleting (or overwriting, which
-        # deletes first) a referenced dir would open a window where a kill
-        # leaves meta pointing at a missing dir and every restart fails
-        # loading the store; fresh-name-then-sweep only leaves garbage
-        # dirs, removed by the next sweep.
-        gen = int(meta.get("gen", 0)) + 1
-        meta["gen"] = gen
         new_rows: dict[str, int] = {}
-        files = _part_files(os.path.join(self.pending_dir, name))
+        files = _part_files(os.path.join(self.pending_dir, name)) if name \
+            else []
         if files:
             vc = pc.value_counts(pq.read_table(files, columns=["xid"])
                                  .column("xid"))
             new_rows = {str(x): int(n) for x, n in zip(
                 vc.field("values").to_pylist(),
                 vc.field("counts").to_pylist()) if x is not None}
-        # bounded-replay stop / in-place batch retry → the batch
-        # reprocesses: drop the prior attempt's delta from meta (its dir
-        # survives until the post-commit sweep)
-        prefix = f"delta_b{batch_idx}"
-        for d in [d for d in meta["order"]
-                  if d == prefix or d.startswith(prefix + "_g")]:
-            meta["order"].remove(d)
-            del meta["deltas"][d]
         # tombstone resolved xids; drop deltas with no live xid left
-        dead = {int(x) for x in meta["dead_xids"]} | {
-            int(x) for x in resolved_xids
-        }
-        keep = []
-        for d in meta["order"]:
-            if {int(x) for x in meta["deltas"][d]} <= dead:
-                del meta["deltas"][d]
-            else:
-                keep.append(d)
-        meta["order"] = keep
+        dead = set(pend["dead_xids"]) | {int(x) for x in resolved_xids}
+        deltas = {d: pend["deltas"][d] for d in pend["order"]
+                  if not {int(x) for x in pend["deltas"][d]} <= dead}
         if new_rows:
-            meta["order"].append(name)
-            meta["deltas"][name] = new_rows
-        live_rows: dict[str, int] = {}
-        for d in meta["order"]:
-            for x, n in meta["deltas"][d].items():
-                if int(x) not in dead:
-                    live_rows[x] = live_rows.get(x, 0) + n
-        if not live_rows:
-            self._pending_clear()
-            return 0
-        live = {int(x) for d in meta["order"] for x in meta["deltas"][d]}
+            deltas[name] = new_rows
+        live = {int(x) for rows in deltas.values() for x in rows}
         # keep only tombstones that still mask physical rows
-        meta["dead_xids"] = sorted(dead & live)
-        if len(meta["order"]) > self.PENDING_COMPACT_DELTAS:
+        out = {"order": list(deltas), "deltas": deltas,
+               "dead_xids": sorted(dead & live)}
+        if len(deltas) > self.PENDING_COMPACT_DELTAS:
             # amortized compaction: one filtered rewrite replaces all deltas
-            paths = [os.path.join(self.pending_dir, d)
-                     for d in meta["order"]]
-            df = self.spark.read.schema(EVENT_SPARK_DDL).parquet(*paths)
-            if meta["dead_xids"]:
-                df = df.filter(~F.col("xid").isin(meta["dead_xids"]))
-            cname = f"compact_b{batch_idx}_g{gen}"
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.pending_dir, cname)
-            )
-            meta = {"order": [cname], "deltas": {cname: live_rows},
-                    "dead_xids": [], "gen": gen}
-        os.makedirs(self.pending_dir, exist_ok=True)
-        _atomic_write(self._pending_meta_path(), json.dumps(meta))
-        # delete AFTER the meta commit: everything not referenced by the
-        # new meta — this batch's dropped/compacted deltas plus any
-        # garbage a crash inside an earlier window left behind
-        referenced = set(meta["order"])
-        for entry in os.listdir(self.pending_dir):
-            p = os.path.join(self.pending_dir, entry)
-            if os.path.isdir(p) and entry not in referenced:
-                shutil.rmtree(p, ignore_errors=True)
-        return sum(live_rows.values())
+            cname = f"compact_b{batch_idx}"
+            self._load_pending(out).write.mode("overwrite").parquet(
+                os.path.join(self.pending_dir, cname))
+            out = {"order": [cname], "deltas": {cname: _live_rows(out)},
+                   "dead_xids": []}
+        return out
+
+    def _pending_sweep(self, pend: dict) -> None:
+        """Delete every pending dir the committed meta ``pend`` does not
+        reference: deltas it dropped or compacted away, and whatever an
+        attempt that never committed left behind. The store dir goes once
+        nothing is pending. Runs after the state save and never raises."""
+        if not pend["order"]:
+            shutil.rmtree(self.pending_dir, ignore_errors=True)
+            return
+        try:
+            entries = os.listdir(self.pending_dir)
+        except OSError:
+            return
+        for entry in entries:
+            if entry not in pend["order"]:
+                shutil.rmtree(os.path.join(self.pending_dir, entry),
+                              ignore_errors=True)
 
     # --------------------------------------------------------------- planning
 
@@ -907,11 +885,10 @@ class ReplayEngine:
         batch_hi = effective_stop if effective_stop is not None else hi_commit
         resolved = {int(x) for x, s in zip(ctx.xid_sorted, ctx.xid_status)
                     if s in (ST_COMMITTED, ST_ABORTED)}
-        meta = self._pending_meta()
-        carried = {int(x) for d in (meta or {}).get("order", [])
-                   for x in meta["deltas"][d]} - {
-            int(x) for x in (meta or {}).get("dead_xids", [])}
-        truncates = self._committed_truncates(ctx, meta, carried,
+        stopped = effective_stop is not None
+        pend = st["pending"]
+        carried = {int(x) for x in _live_rows(pend)}
+        truncates = self._committed_truncates(ctx, pend, carried,
                                               effective_stop, fence_floor)
         # xids whose rows stay pending past this batch: open or prepared
         # transactions of this batch (plain, streamed, truncate-only) plus
@@ -922,12 +899,14 @@ class ReplayEngine:
                       | carried) - resolved - {-1}
         # the side outputs of the job that decodes the batch: the dead
         # letters, and the pending delta of a batch cut inside a
-        # transaction (step 7). Both dirs are named before the job and
+        # transaction (step 7; a stopped batch keeps the store as it began,
+        # so it writes none). Both dirs are named before the job and
         # cleared of what an earlier attempt left there. A batch index is
         # reused only by a batch that supersedes its earlier attempts (a
         # retry, a crash before the state save, a bounded-replay stop
         # resumed with another batch size), so every dead-letter dir of
-        # this index goes.
+        # this index goes; and no committed state references this index's
+        # delta dir.
         qroot = os.path.join(self.warehouse, "quarantine")
         dead_dir = os.path.join(qroot, f"b{batch_idx}-s{int(lo)}-{int(hi)}")
         stale = []
@@ -935,8 +914,8 @@ class ReplayEngine:
             stale = [os.path.join(qroot, d) for d in os.listdir(qroot)
                      if d.startswith(f"b{batch_idx}-")]
         delta = spill_dir = None
-        if unresolved:
-            delta = self._pending_delta_name(meta, batch_idx)
+        if unresolved and not stopped:
+            delta = f"delta_b{batch_idx}"
             spill_dir = os.path.join(self.pending_dir, delta)
             stale.append(spill_dir)
         for d in stale:
@@ -948,14 +927,17 @@ class ReplayEngine:
                    if self.options.origin == "none" else ())
         side = SideOutputs(dead_dir, spill_dir, foreign)
 
-        # 3. schema evolution before merge
+        # 3. schema evolution before merge. A stopped batch leaves the
+        # changes announced after its stop commit to its resume: no
+        # transaction it applies can use them.
         for change in ctx.schema_changes:
-            self._apply_schema_change(change)
+            if not stopped or change["lsn"] <= effective_stop:
+                self._apply_schema_change(change)
 
         # 4. the batch's events: the decode kernel's rows plus the pending
         # store's rows re-stamped with this batch's dispositions.
         events = decoded = decode_frames_df(frames, ctx, side=side)
-        pending = self._load_pending()
+        pending = self._load_pending(pend)
         if pending is not None:
             pending = pending.selectExpr(
                 *self._restamp_sql(ctx, carried, events.columns))
@@ -969,10 +951,8 @@ class ReplayEngine:
                 )
             events = events.unionByName(pending)
 
-        # option-driven event shaping (the replay analog of the reference's
+        # origin 'none' (the replay analog of the reference's
         # START_REPLICATION options, src/stream.rs:1377-1446)
-        if not self.options.messages:
-            events = events.filter("event_type != 'message'")
         if self.options.origin == "none" and ctx.has_origin:
             from .operators.raw import filter_origin
 
@@ -1059,63 +1039,66 @@ class ReplayEngine:
                 with _kernel_aqe_off(self.spark):
                     decoded.write.format("noop").mode("overwrite").save()
             _mark("merges")
+        finally:
+            if single is None:
+                events.unpersist()
 
-            # 7. side outputs: count the dead letters from their footers
-            # and commit the pending delta to the store meta (resolved
-            # xids tombstone). The store is cleared once nothing is
-            # pending.
-            quarantined = sum(pq.ParquetFile(f).metadata.num_rows
-                              for f in _part_files(dead_dir))
-            if delta is not None:
-                n_pending = self._pending_append(resolved, batch_idx, delta)
-            else:
-                n_pending = 0
-                self._pending_clear()
-            _mark("pending_spill")
+        # 7. side outputs: count the dead letters from their footers and
+        # fold the pending delta into the store meta (resolved xids
+        # tombstone). A stopped batch keeps the store as it began.
+        quarantined = sum(pq.ParquetFile(f).metadata.num_rows
+                          for f in _part_files(dead_dir))
+        if not stopped:
+            pend = self._pending_append(pend, resolved, batch_idx, delta)
+        n_pending = sum(_live_rows(pend).values())
+        _mark("pending_spill")
 
-            # 8. metrics, engine state (atomic). A bounded-replay stop
-            # leaves the batch NOT fully applied — keep the cursors
-            # (consumed seq, batch index) on it so a later resume
-            # reprocesses it (the LSN fence makes that idempotent), exactly
-            # the reference's restart-from-confirmed-LSN contract.
-            rec = {
-                "batch_idx": batch_idx,
-                "applied_lsn": batch_applied,
-                "tables": merged,
-                "pending": n_pending,
-                "quarantined": quarantined,
-                "schema_changes": len(ctx.schema_changes),
-                "stopped": effective_stop is not None,
-                "phase_ms": phase_t,
-            }
-            if quarantined:
-                rec["quarantine_dir"] = dead_dir
-            st["batch_idx"] = batch_idx + (0 if rec["stopped"] else 1)
+        # 8. expiry, then the engine state: the batch's one durable commit
+        # and the last step here that can raise, so a retry or restart
+        # after any failure recomputes the batch from the state on disk. A
+        # bounded-replay stop commits only what the LSN fence protects
+        # (applied_lsn, its metrics row); its cursors (consumed seq, batch
+        # index), catalog, carries and pending store stay as the batch
+        # began, so a resume recomputes it from the same inputs — the
+        # reference's restart-from-confirmed-LSN contract.
+        rec = {
+            "batch_idx": batch_idx,
+            "applied_lsn": batch_applied,
+            "tables": merged,
+            "pending": n_pending,
+            "quarantined": quarantined,
+            "schema_changes": len(ctx.schema_changes),
+            "stopped": stopped,
+            "phase_ms": phase_t,
+        }
+        if quarantined:
+            rec["quarantine_dir"] = dead_dir
+        if not stopped:
+            st["batch_idx"] = batch_idx + 1
             st["catalog"] = {
                 str(oid): [list(v) for v in versions]
                 for oid, versions in ctx.catalog.items()
             }
             st["open_xid"] = ctx.open_xid_carry
             st["open_stream_xid"] = ctx.open_stream_carry
-            # sub-abort markers must outlive the batch while their top-level
-            # txns are still pending; once nothing is pending they are spent
+            # sub-abort markers must outlive the batch while their
+            # top-level txns are still pending; once nothing is pending
+            # they are spent
             st["aborted_subxids"] = (
                 [int(x) for x in ctx.aborted_subxids] if n_pending else []
             )
-            # origin marks of still-unresolved foreign txns survive the batch
+            # origin marks of still-unresolved foreign txns survive
             st["origin_xids"] = sorted(int(x) for x in ctx.origin_carry)
-            st["applied_lsn"] = batch_applied
-            if not rec["stopped"]:
-                st["max_seq"] = int(hi) if last is None else max(int(last),
-                                                                  int(hi))
-            _append_metrics(st, rec)
-            self._save_state(st)
-            self._maybe_expire(batch_idx)
-            _mark("state_save")
-            return rec
-        finally:
-            if single is None:
-                events.unpersist()
+            st["pending"] = pend
+            st["max_seq"] = int(hi) if last is None else max(int(last),
+                                                              int(hi))
+        st["applied_lsn"] = batch_applied
+        _append_metrics(st, rec)
+        self._maybe_expire(batch_idx)
+        self._save_state(st)
+        self._pending_sweep(st["pending"])
+        _mark("state_save")
+        return rec
 
     # ---------------------------------------------------------------- helpers
 
@@ -1162,7 +1145,8 @@ class ReplayEngine:
         (read-alias, no rewrite), DROP, widening type promotion. A table
         rename, non-widening type change, or key/replica-identity change
         is recorded as a loud ``schema_evolution_unsupported`` lineage
-        event instead of silently mis-mapping columns."""
+        event instead of silently mis-mapping columns. Idempotent: a batch
+        recomputed after a stop or a crash detects its changes again."""
         new = change["new"]
         old = change["old"]
         lsn = change.get("lsn")
@@ -1170,7 +1154,7 @@ class ReplayEngine:
         if old[2] != new[2]:
             t = self.table(old[2])
             if t.exists:
-                t.log_event({
+                _log_once(t, {
                     "event": "schema_evolution_unsupported",
                     "kind": "table_rename", "from": old[2], "to": new[2],
                     "lsn": lsn,
@@ -1206,7 +1190,7 @@ class ReplayEngine:
             keys = set(t.snapshot()["key_columns"])
             undroppable = [n for n in dropped if n in keys]
             if undroppable:
-                t.log_event({
+                _log_once(t, {
                     "event": "schema_evolution_unsupported",
                     "kind": "drop_key_column", "columns": undroppable,
                     "lsn": lsn,
@@ -1223,7 +1207,7 @@ class ReplayEngine:
                     n, _PG_TYPE_TO_SPARK.get(nt, "string"), lsn=lsn
                 )
             else:
-                t.log_event({
+                _log_once(t, {
                     "event": "schema_evolution_unsupported",
                     "kind": "type_change", "column": n,
                     "from_oid": int(ot), "to_oid": int(nt), "lsn": lsn,
@@ -1235,13 +1219,13 @@ class ReplayEngine:
             next((b for a, b in renames if a == k), k) for k in old_keys
         ]
         if sorted(new_keys) != sorted(new_keys_mapped):
-            t.log_event({
+            _log_once(t, {
                 "event": "schema_evolution_unsupported",
                 "kind": "key_change", "from": old_keys, "to": new_keys,
                 "lsn": lsn,
             })
 
-    def _committed_truncates(self, ctx, meta, carried: set[int],
+    def _committed_truncates(self, ctx, pend: dict, carried: set[int],
                              effective_stop, fence_floor: int) -> dict:
         """{table: (commit_lsn, seq, end_lsn)} of each table's last truncate
         committed past the fence, on the driver: this batch's TRUNCATE
@@ -1254,8 +1238,8 @@ class ReplayEngine:
         now = carried & {int(x) for x, s in zip(ctx.xid_sorted,
                                                 ctx.xid_status)
                          if s == ST_COMMITTED}
-        for d in (meta or {}).get("order", []):
-            if not now.intersection(map(int, meta["deltas"][d])):
+        for d in pend["order"]:
+            if not now.intersection(map(int, pend["deltas"][d])):
                 continue
             for f in _part_files(os.path.join(self.pending_dir, d)):
                 for r in pq.read_table(

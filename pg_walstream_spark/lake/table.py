@@ -92,24 +92,6 @@ def _append_lineage(lineage: list[dict], record: dict,
     return ([rollup] if rollup["n_rolled"] else []) + rest
 
 
-_AQE_EMPTY_RULE = ("org.apache.spark.sql.execution.adaptive."
-                   "AQEPropagateEmptyRelation")
-
-
-def _ensure_observation_safe_aqe(spark) -> None:
-    """AQE's empty-relation propagation replaces a runtime-empty final
-    stage with an empty LocalRelation, ERASING CollectMetrics nodes — an
-    Observation on such a plan never fires and ``obs.get`` asserts. A
-    delete-everything merge batch hits exactly this (written set empty at
-    runtime), so every session driving Observation-guarded jobs (the
-    engine's batch stats, ``rebucket``'s row count) excludes the rule."""
-    key = "spark.sql.adaptive.optimizer.excludedRules"
-    cur = spark.conf.get(key, None) or ""
-    rules = [r for r in cur.split(",") if r]
-    if _AQE_EMPTY_RULE not in rules:
-        spark.conf.set(key, ",".join(rules + [_AQE_EMPTY_RULE]))
-
-
 _AQE_KEY = "spark.sql.adaptive.enabled"
 _AQE_LOCK = threading.Lock()
 # id(session) -> [holders, session]: sessions whose AQE the kernel turned off
@@ -362,9 +344,10 @@ class LakeTable:
     def promote_column(self, name: str, new_type: str,
                        lsn: int | None = None) -> None:
         """Widening type promotion (int→bigint, float→double, …): metadata
-        only — the parquet reader up-casts old files at scan time."""
+        only — the parquet reader up-casts old files at scan time. A no-op
+        when the column is absent or already has ``new_type``."""
         snap = self.snapshot()
-        if not any(e[0] == name for e in snap["schema"]):
+        if not any(e[0] == name and e[1] != new_type for e in snap["schema"]):
             return
         snap["version"] += 1
         # changelog_files belong to the commit that wrote them; a
@@ -884,11 +867,11 @@ class LakeTable:
         ``applied_lsn`` and all other properties carry over unchanged, so
         replay fencing is unaffected.
 
-        Row conservation is enforced before commit: rows fed to the write
-        job (Observation) must equal the old snapshot's row count taken
-        from parquet footer statistics (driver-local metadata reads — an
-        anchor independent of the read path under test). A mismatch
-        abandons the new files and raises; CURRENT is untouched.
+        Row conservation is enforced before commit: the rows in the new
+        files must equal the old snapshot's rows, both counted from parquet
+        footers (driver-local metadata reads — an anchor independent of the
+        read path under test). A mismatch abandons the new files and
+        raises; CURRENT is untouched.
 
         Same-count calls are skipped unless there is schema history to
         compact away (rewriting N identical buckets is pure cost).
@@ -896,7 +879,6 @@ class LakeTable:
         concurrently with a replay into the same table.
         """
         import pyarrow.parquet as pq
-        from pyspark.sql import Observation
 
         n_buckets = int(n_buckets)
         if n_buckets < 1:
@@ -909,27 +891,20 @@ class LakeTable:
             return {"event": "rebucket", "skipped": True,
                     "n_buckets": old_n}
         t0 = time.monotonic()
-        n_before = 0
-        for fl in snap["files"].values():
-            for f in fl:
-                n_before += pq.ParquetFile(self._abs(f)).metadata.num_rows
+
+        def footer_rows(files: dict) -> int:
+            return sum(pq.ParquetFile(self._abs(f)).metadata.num_rows
+                       for fl in files.values() for f in fl)
+
+        n_before = footer_rows(snap["files"])
         new_version = snap["version"] + 1
-        df = self.read(spark)
-        obs = None
-        if n_before > 0:
-            # runtime-empty plans can lose CollectMetrics under AQE
-            # (see _ensure_observation_safe_aqe); a statically-empty
-            # table skips the observation entirely — its count is known
-            _ensure_observation_safe_aqe(spark)
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         files = self._write_buckets(
-            df.withColumn(
+            self.read(spark).withColumn(
                 "_bucket", self._bucket_expr(snap["key_columns"], n_buckets)
             ),
             snapshot_version=new_version,
         )
-        n_written = int(obs.get["n"]) if obs is not None else 0
+        n_written = footer_rows(files)
         if n_written != n_before:
             import glob as _glob
             import shutil

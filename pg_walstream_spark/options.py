@@ -10,7 +10,9 @@ command to build — the SAME options instead select decoder/engine behavior:
 - ``protocol_version`` → parser/kernel version (xid prefixes, v4 abort
   fields); ``streaming``/``two_phase`` require the versions that introduced
   them (v2 / v3), mirroring the reference's validation;
-- ``messages`` → whether MESSAGE events are delivered or dropped;
+- ``messages`` → rendered into START_REPLICATION (``to_option_string``)
+  so the server sends or withholds MESSAGE frames; the engine applies
+  committed DML only, so a MESSAGE never reaches a lake table either way;
 - ``binary`` → binary-mode tuple values accepted ('b' kind → bytea hex);
 - ``origin`` → 'none' filters foreign-origin transactions (operators.raw.
   filter_origin), 'any' passes them through;

@@ -76,7 +76,7 @@ def test_seq_spans_file_count_cap(tmp_path, monkeypatch):
     t = pa.table({"seq": pa.array([0], pa.int64())})
     p = os.path.join(str(tmp_path), "one.parquet")
     pq.write_table(t, p)
-    monkeypatch.setenv("WALSTREAM_FOOTER_SPAN_MAX_FILES", "2")
+    monkeypatch.setattr(engine_mod, "FOOTER_SPAN_MAX_FILES", 2)
     assert seq_spans_from_footers([p, p, p]) is None
     assert seq_spans_from_footers([p, p]) is not None
 

@@ -8,6 +8,7 @@ table state compared row-for-row with sha256(content) equality.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 import pyarrow as pa
@@ -45,10 +46,11 @@ def run_engine(spark, tmp_path, base_tables: dict[str, pa.Table],
 
 
 def assert_matches_golden(spark, eng: ReplayEngine, base_tables, frames,
-                          table: str = "repos", stop_at_lsn=None):
+                          table: str = "repos", stop_at_lsn=None,
+                          protocol_version: int = 2):
     golden_rows, golden_lsn = golden_final_state(
         {t: tbl for t, tbl in base_tables.items()}, frames, table=table,
-        stop_at_lsn=stop_at_lsn,
+        stop_at_lsn=stop_at_lsn, protocol_version=protocol_version,
     )
     lake = eng.table(table)
     got = [r.asDict() for r in lake.read(spark).collect()]
@@ -229,19 +231,117 @@ def test_e2e_bounded_replay(spark, tmp_path):
                           stop_at_lsn=stop)
 
 
-def test_e2e_bounded_then_resume(spark, tmp_path):
+def _carried_past_stop(protocol_version: int):
+    """A transaction carried out of batch 0 whose commit follows the stop
+    commit Z in batch 1: protocol 3 carries a prepared transaction
+    (BEGIN PREPARE, 6 inserts, PREPARE | Z, COMMIT PREPARED; 9-frame
+    batches), protocol 2 a streamed one (StreamStart, 4 inserts,
+    StreamStop | Z, StreamCommit; 7-frame batches). Z is a plain
+    3-insert transaction; the stop is its end LSN."""
+    from pg_walstream_spark.fixtures.repos import gen_repos_base
+    from pg_walstream_spark.protocol import encoder as e
+
+    base = gen_repos_base(25, 42)
+    b = wg.WalBuilder(7, protocol_version=protocol_version)
+    b.relation(wg.REPOS_OID, "repos", wg.REPOS_COLUMNS)
+
+    def row(org, i):
+        return wg.row_tuple({
+            "repo": f"{org}/carried", "path": f"{i}.py", "commit": "4" * 40,
+            "lang": "python", "content": f"{org} row {i}"})
+
+    xid = b.alloc_xid()
+    if protocol_version == 3:
+        p = b.lsn
+        b.emit(e.encode_begin_prepare(p, p + 1, 0, xid, "gid-carry"))
+        for i in range(6):
+            b.emit(e.encode_insert(wg.REPOS_OID, row("orgP", i)))
+        b.emit(e.encode_prepare(p, b.lsn + 30, 0, xid, "gid-carry"))
+        batch_frames = 9
+    else:
+        b.emit(e.encode_stream_start(xid, True))
+        for i in range(4):
+            b.emit(e.encode_insert(wg.REPOS_OID, row("orgS", i), xid=xid))
+        b.emit(e.encode_stream_stop())
+        batch_frames = 7
+    b.begin()
+    for i in range(3):
+        b.emit(e.encode_insert(wg.REPOS_OID, row("orgZ", i)))
+    stop = b.commit()
+    cl = b.lsn
+    if protocol_version == 3:
+        b.emit(e.encode_commit_prepared(cl, cl + 40, b.seq * 1_000, xid,
+                                        "gid-carry"))
+    else:
+        b.emit(e.encode_stream_commit(xid, cl, cl + 40, b.seq * 1_000))
+    b.commit_lsns.append(cl + 40)
+    return base, b, batch_frames, stop
+
+
+# the engine state a stopped batch leaves as the batch began
+_CARRY_KEYS = ("catalog", "open_xid", "open_stream_xid", "aborted_subxids",
+               "origin_xids", "pending", "max_seq", "batch_idx")
+
+
+@pytest.mark.parametrize("case", ["basic", "prepared_carry",
+                                  "streamed_carry"])
+def test_e2e_bounded_then_resume(spark, tmp_path, case):
     """stop_at_lsn, then a plain resume replay continues to the end —
     restart-from-confirmed-LSN (found via CLI drive; the stopped batch must
-    not advance the checkpoint cursor)."""
-    base, b = wg.gen_basic(n_base=40, n_txns=6, ops_per_txn=5)
+    not advance the checkpoint cursor). In the carry cases a transaction
+    pending from the previous batch commits after the stop commit: the
+    stopped batch must keep it pending, with every other carry, so the
+    resume applies it."""
+    protocol_version, batch_frames = 2, 10_000
+    if case == "basic":
+        base, b = wg.gen_basic(n_base=40, n_txns=6, ops_per_txn=5)
+        stop, applied = b.commit_lsns[2] + 1, b.commit_lsns[3]
+    else:
+        protocol_version = 3 if case == "prepared_carry" else 2
+        base, b, batch_frames, stop = _carried_past_stop(protocol_version)
+        applied = stop
     frames = b.to_table()
-    stop = b.commit_lsns[2] + 1
+    began = []
+
+    class Recording(ReplayEngine):
+        def process_batch(self, frames, batch_idx, st, **k):
+            began.append(json.loads(json.dumps(
+                {key: st.get(key) for key in _CARRY_KEYS})))
+            return super().process_batch(frames, batch_idx, st, **k)
+
+    frames_dir = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, frames_dir)
+    wh = os.path.join(str(tmp_path), "wh")
+    eng = Recording(spark, wh, protocol_version=protocol_version)
+    wg.write_base(base, os.path.join(str(tmp_path), "base.parquet"))
+    eng.bootstrap_table("repos", spark.read.parquet(
+        os.path.join(str(tmp_path), "base.parquet")), ["repo", "path"], 8)
+    recs = eng.replay_frames(frames_dir, batch_frames=batch_frames,
+                             stop_at_lsn=stop)["records"]
+    assert recs[-1]["stopped"]
+    assert eng.table("repos").applied_lsn() == applied
+    st = eng._load_state()
+    assert {key: st.get(key) for key in _CARRY_KEYS} == began[-1]
+    eng2 = ReplayEngine(spark, wh, protocol_version=protocol_version)
+    eng2.replay_frames(frames_dir, batch_frames=batch_frames)
+    assert_matches_golden(spark, eng2, {"repos": base}, frames,
+                          protocol_version=protocol_version)
+
+
+def test_stop_leaves_later_schema_change_to_resume(spark, tmp_path):
+    """A stop at the commit before a relation re-announcement adds no
+    column: the stopped batch applies only the schema changes its applied
+    transactions can see, and the resume adds the column."""
+    base, b = wg.gen_schema_evo(n_base=20)
+    frames = b.to_table()
     eng = run_engine(spark, str(tmp_path), {"repos": base}, frames,
-                     stop_at_lsn=stop)
-    assert eng.table("repos").applied_lsn() == b.commit_lsns[3]
-    eng2 = ReplayEngine(spark, eng.warehouse)
-    eng2.replay_frames(os.path.join(str(tmp_path), "frames"))
-    assert_matches_golden(spark, eng2, {"repos": base}, frames)
+                     stop_at_lsn=b.commit_lsns[0])
+    t = eng.table("repos")
+    assert t.applied_lsn() == b.commit_lsns[0]
+    assert "stars" not in [n for n, _ in t.snapshot()["schema"]]
+    eng.replay_frames(os.path.join(str(tmp_path), "frames"))
+    assert "stars" in [n for n, _ in t.snapshot()["schema"]]
+    assert_matches_golden(spark, eng, {"repos": base}, frames)
 
 
 def test_e2e_duplicate_batch_fenced(spark, tmp_path):
@@ -439,6 +539,32 @@ def test_schema_promotion_and_drop(spark, tmp_path):
     assert "junk" not in schema
     row = t.read(spark).collect()[0]
     assert row["stars"] == 7 and "junk" not in row.asDict()
+
+
+def test_schema_change_detected_again_is_noop(spark, tmp_path):
+    """A batch recomputed after a bounded-replay stop or a crash detects
+    its schema changes again: the second application of an add, a drop, a
+    widening promotion and an unsupported type change commits nothing."""
+    eng = ReplayEngine(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [("a", "b", 7, "gone", "x")],
+        "repo string, path string, stars int, junk string, commit string")
+    eng.bootstrap_table("repos", df, ["repo", "path"], 2)
+    old = (0, "public", "repos", "d",
+           ("repo", "path", "stars", "junk", "commit"), (1, 1, 0, 0, 0),
+           (25, 25, 23, 25, 25))
+    new = (5, "public", "repos", "d",
+           ("repo", "path", "stars", "commit", "lang"), (1, 1, 0, 0, 0),
+           (25, 25, 20, 23, 25))
+    change = {"old": old, "new": new, "lsn": 77}
+    t = eng.table("repos")
+    eng._apply_schema_change(change)
+    once = t.snapshot()
+    assert [e.get("event") for e in once["lineage"]] == [
+        "add_columns", "drop_columns", "promote_column",
+        "schema_evolution_unsupported"]
+    eng._apply_schema_change(change)
+    assert t.snapshot() == once
 
 
 @pytest.mark.parametrize("proto", [1, 2, 4])
@@ -675,7 +801,7 @@ def test_quarantine_dead_letter_rows_persisted(spark, tmp_path):
     assert (first["quarantined"], first["pending"]) == (0, 1)
     assert rec["quarantined"] == 1
     assert rec["pending"] == 0
-    assert eng2._pending_meta() is None
+    assert eng2._load_state()["pending"]["order"] == []
     rows2 = spark.read.parquet(rec["quarantine_dir"]).collect()
     assert [r["seq"] for r in rows2] == [3]
     assert_matches_golden(spark, eng2, {"repos": base}, frames2)

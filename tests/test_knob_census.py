@@ -12,7 +12,6 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "pg_walstream_spark"
 KNOBS = {
     "WALSTREAM_CHANGELOG",
     "WALSTREAM_CONTROL_MAX_ROWS",
-    "WALSTREAM_FOOTER_SPAN_MAX_FILES",
 }
 
 

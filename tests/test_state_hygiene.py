@@ -11,6 +11,7 @@ examples/safe-transaction-consumer/src/main.rs:50-60).
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import uuid
@@ -21,6 +22,7 @@ from pg_walstream_spark.engine import (
     METRICS_CAP,
     ReplayEngine,
     _append_metrics,
+    _live_rows,
 )
 from pg_walstream_spark.fixtures import wal_gen as wg
 from pg_walstream_spark.golden import golden_final_state
@@ -28,14 +30,15 @@ from pg_walstream_spark.lake.table import LINEAGE_CAP, _append_lineage
 
 
 def _replay_with_meta_trace(spark, tmp_path, base, frames, batch_frames):
-    """Replay while snapshotting the pending-store meta after each batch."""
+    """Replay while snapshotting the pending-store meta each batch commits
+    with the engine state."""
     fd = os.path.join(str(tmp_path), "frames")
     wg.write_frames(frames, fd, rows_per_file=500_000)
     metas = []
 
     class Spy(ReplayEngine):
         def _save_state(self, st):
-            metas.append(self._pending_meta())
+            metas.append(copy.deepcopy(st["pending"]))
             super()._save_state(st)
 
     eng = Spy(spark, os.path.join(str(tmp_path), "wh"))
@@ -44,6 +47,9 @@ def _replay_with_meta_trace(spark, tmp_path, base, frames, batch_frames):
     eng.bootstrap_table("repos", spark.read.parquet(bp), ["repo", "path"], 8)
     eng.replay_frames(fd, batch_frames=batch_frames)
     return eng, metas
+
+
+_EMPTY_STORE = {"order": [], "deltas": {}, "dead_xids": []}
 
 
 def _assert_golden(spark, eng, base, frames):
@@ -67,12 +73,13 @@ def test_pending_store_append_delta_lifecycle(spark, tmp_path):
     frames = b.to_table()
     eng, metas = _replay_with_meta_trace(spark, tmp_path, base, frames,
                                          batch_frames=10)
-    live = [m for m in metas if m and m["order"]]
+    live = [m for m in metas if m["order"]]
     assert live, "no batch carried pending deltas — fixture too coarse"
     # txns resolve within a batch or two of opening, so resolved deltas
     # must be dropped instead of accumulating
     assert max(len(m["order"]) for m in live) <= 3, live
-    assert eng._pending_meta() is None  # store cleared at drain
+    # store cleared at drain
+    assert eng._load_state()["pending"] == _EMPTY_STORE
     assert not os.path.exists(eng.pending_dir)
     _assert_golden(spark, eng, base, frames)
 
@@ -85,13 +92,13 @@ def test_pending_store_compacts_past_delta_cap(spark, tmp_path):
     frames = b.to_table()
     eng, metas = _replay_with_meta_trace(spark, tmp_path, base, frames,
                                          batch_frames=12)
-    live = [m for m in metas if m and m["order"]]
+    live = [m for m in metas if m["order"]]
     assert any(
         d.startswith("compact_") for m in live for d in m["order"]
     ), "delta cap never triggered compaction"
     cap = ReplayEngine.PENDING_COMPACT_DELTAS
     assert max(len(m["order"]) for m in live) <= cap + 1
-    assert eng._pending_meta() is None
+    assert eng._load_state()["pending"] == _EMPTY_STORE
     _assert_golden(spark, eng, base, frames)
 
 
@@ -404,18 +411,25 @@ def test_append_metrics_replaces_same_batch_on_retry():
     assert len(st["metrics"]) == 1
 
 
-def _spill_and_commit(eng, rows, batch_idx: int) -> None:
+def _spill_and_commit(eng, rows, batch_idx: int,
+                      resolved: set[int] = frozenset()) -> None:
     """One batch's pending-store steps: clear and write the fresh delta
-    (the decode task's side output), then the driver's meta commit."""
+    (the decode task's side output), fold it into the store meta, commit
+    the engine state, then sweep the dirs the meta no longer references."""
     import shutil
 
     from pg_walstream_spark.operators.decode import write_spill_part
 
-    name = eng._pending_delta_name(eng._pending_meta(), batch_idx)
+    st = eng._load_state()
+    name = f"delta_b{batch_idx}"
     spill_dir = os.path.join(eng.pending_dir, name)
     shutil.rmtree(spill_dir, ignore_errors=True)
     write_spill_part(rows, spill_dir, 0)
-    eng._pending_append(set(), batch_idx, name)
+    st["pending"] = eng._pending_append(st["pending"], resolved, batch_idx,
+                                        name)
+    st["batch_idx"] = batch_idx + 1
+    eng._save_state(st)
+    eng._pending_sweep(st["pending"])
 
 
 def _pending_event_rows(xids, key_prefix="p"):
@@ -437,42 +451,44 @@ def _pending_event_rows(xids, key_prefix="p"):
 
 def test_pending_store_replace_never_deletes_referenced_delta(
         spark, tmp_path, monkeypatch):
-    """In-place batch retry / stop-resume replaces a batch's delta: the
-    replacement must be written under a FRESH dir name while the committed
-    meta.json still references the old one — a kill between the write and
-    the meta commit must leave the store loadable (ADVICE r4: overwrite of
-    the referenced dir deletes it first, bricking every restart)."""
+    """A batch that resolves a carried transaction and leaves another
+    pending replaces the store's delta: the replacement is written under
+    the batch's own fresh dir while the committed state still references
+    the old one, and nothing is deleted before the state commits — a kill
+    at the state write must leave the store loadable (ADVICE r4: overwrite
+    of the referenced dir deletes it first, bricking every restart)."""
     import pytest
 
     import pg_walstream_spark.engine as E
 
     eng = E.ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
-    # one newly-pending row of open transaction 7
-    row = _pending_event_rows([7])
-    _spill_and_commit(eng, row, batch_idx=3)
-    meta1 = eng._pending_meta()
-    (d1,) = meta1["order"]
+    # batch 3: one newly-pending row of open transaction 7
+    _spill_and_commit(eng, _pending_event_rows([7]), batch_idx=3)
+    pend1 = eng._load_state()["pending"]
+    (d1,) = pend1["order"]
 
     orig = E._atomic_write
 
     def boom(path, data):
-        raise OSError("killed before meta commit")
+        raise OSError("killed before the state commit")
 
+    # batch 4 resolves 7 and leaves 8 pending; killed at the state write
+    row8 = _pending_event_rows([8])
     monkeypatch.setattr(E, "_atomic_write", boom)
     with pytest.raises(OSError):
-        _spill_and_commit(eng, row, batch_idx=3)  # retry, killed
+        _spill_and_commit(eng, row8, batch_idx=4, resolved={7})
     monkeypatch.setattr(E, "_atomic_write", orig)
     # committed meta survives AND the dir it references still exists
-    assert eng._pending_meta() == meta1
+    assert eng._load_state()["pending"] == pend1
     assert os.path.isdir(os.path.join(eng.pending_dir, d1))
-    assert eng._load_pending().count() == 1  # store loads fine
-    # a successful retry lands a fresh dir and sweeps the old one
-    _spill_and_commit(eng, row, batch_idx=3)
-    meta2 = eng._pending_meta()
-    (d2,) = meta2["order"]
+    assert eng._load_pending(pend1).count() == 1  # store loads fine
+    # the restarted batch lands its delta and sweeps the old one
+    _spill_and_commit(eng, row8, batch_idx=4, resolved={7})
+    pend2 = eng._load_state()["pending"]
+    (d2,) = pend2["order"]
     assert d2 != d1
     assert not os.path.isdir(os.path.join(eng.pending_dir, d1))
-    assert eng._load_pending().count() == 1
+    assert [r["xid"] for r in eng._load_pending(pend2).collect()] == [8]
 
 
 def test_spill_writer_retry_rewrites_identical_bytes(tmp_path):
@@ -481,7 +497,7 @@ def test_spill_writer_retry_rewrites_identical_bytes(tmp_path):
     from pg_walstream_spark.operators.decode import write_spill_part
 
     rows = _pending_event_rows([11, 12, 12])
-    d = os.path.join(str(tmp_path), "delta_b0_g1")
+    d = os.path.join(str(tmp_path), "delta_b0")
     p = write_spill_part(rows, d, 3)
     first = open(p, "rb").read()
     assert write_spill_part(rows, d, 3) == p
@@ -493,13 +509,14 @@ class _Killed(RuntimeError):
     """A process kill: permanent to the batch retry, so the batch dies."""
 
 
-def test_kill_between_table_commit_and_pending_meta(spark, tmp_path,
-                                                    monkeypatch):
+def test_kill_between_table_commit_and_state_save(spark, tmp_path,
+                                                  monkeypatch):
     """The pending rows land in the fresh delta BEFORE the table commit.
-    Kill the batch after its table commit but before ``pending/meta.json``:
-    the restarted engine re-runs the batch, the table fence skips its
-    merge, and its one job (the stats aggregate) rewrites the delta; the
-    store loads and the final state is golden."""
+    Kill the batch after its table commit but before the engine state
+    (which holds the pending-store meta) is written: the restarted engine
+    re-runs the batch, the table fence skips its merge, and its one job
+    (the drain) rewrites the delta; the store loads and the final state
+    is golden."""
     import pytest
 
     import pg_walstream_spark.engine as E
@@ -519,8 +536,8 @@ def test_kill_between_table_commit_and_pending_meta(spark, tmp_path,
     orig = E._atomic_write
 
     def boom(path, data):
-        if path == eng._pending_meta_path() and current == [kill_at]:
-            raise _Killed("killed before the pending meta commit")
+        if path == eng.state_path and current == [kill_at]:
+            raise _Killed("killed before the state save")
         orig(path, data)
 
     monkeypatch.setattr(E, "_atomic_write", boom)
@@ -536,7 +553,7 @@ def test_kill_between_table_commit_and_pending_meta(spark, tmp_path,
     class Restarted(_JobCounter):
         def process_batch(self, frames, batch_idx, st, **k):
             rec = super().process_batch(frames, batch_idx, st, **k)
-            pend = self._load_pending()
+            pend = self._load_pending(st["pending"])
             loads[batch_idx] = None if pend is None else pend.count()
             return rec
 
@@ -565,11 +582,10 @@ def test_garbage_in_fresh_delta_dir_never_loads(spark, tmp_path):
 
     class Planting(ReplayEngine):
         def process_batch(self, frames, batch_idx, st, **k):
-            name = self._pending_delta_name(self._pending_meta(), batch_idx)
-            write_spill_part(garbage, os.path.join(self.pending_dir, name),
-                             99)
+            write_spill_part(garbage, os.path.join(
+                self.pending_dir, f"delta_b{batch_idx}"), 99)
             rec = super().process_batch(frames, batch_idx, st, **k)
-            for d in (self._pending_meta() or {}).get("order", []):
+            for d in st["pending"]["order"]:
                 seen.append(d)
                 assert "part-99.parquet" not in os.listdir(
                     os.path.join(self.pending_dir, d))
@@ -634,7 +650,10 @@ def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
     checked = []
 
     class Checking(ReplayEngine):
-        def _pending_append(self, resolved, batch_idx, name):
+        def _pending_append(self, meta, resolved, batch_idx, name):
+            if name is None:  # the batch wrote no delta
+                return super()._pending_append(meta, resolved, batch_idx,
+                                               name)
             frames_df, ctx, side = decodes[-1]
             assert side.pending == os.path.join(self.pending_dir, name)
             plain = decode_frames_df(frames_df, ctx)
@@ -661,16 +680,16 @@ def test_pending_delta_matches_decode_spill_predicate(spark, tmp_path,
                            | {r["event_type"] for r in want}
                            | {"streamed" for r in want if r["sub_xid"]}
                            | {"dead_letter" for _ in dead})
-            n = super()._pending_append(resolved, batch_idx, name)
-            meta = self._pending_meta()
-            if meta is None:
+            out = super()._pending_append(meta, resolved, batch_idx, name)
+            n = sum(_live_rows(out).values())
+            if not out["order"]:
                 assert n == 0
             else:
-                assert n == self._load_pending().count() > 0
-                if want and name in meta["order"]:
-                    assert meta["deltas"][name] == dict(
+                assert n == self._load_pending(out).count() > 0
+                if want and name in out["order"]:
+                    assert out["deltas"][name] == dict(
                         Counter(str(r["xid"]) for r in want))
-            return n
+            return out
 
     eng = Checking(spark, wh, options=options)
     eng.replay_frames(fd, batch_frames=batch_frames)
@@ -719,8 +738,8 @@ def test_version_preflight_rejects_stale_state_dir(spark, tmp_path):
     with pytest.raises(E.StateVersionError, match="version 0"):
         E.ReplayEngine(spark, wh)._load_state()
 
-    # ...also with an older pending layout (delta content without the
-    # append-delta meta.json manifest) next to it
+    # ...also with an older pending layout (delta content no state meta
+    # references) next to it
     pend = os.path.join(wh, "pending")
     os.makedirs(os.path.join(pend, "delta-000"), exist_ok=True)
     with open(os.path.join(pend, "delta-000", "part-0.parquet"), "wb") as f:
