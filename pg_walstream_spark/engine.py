@@ -67,11 +67,13 @@ import uuid
 
 import numpy as np
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .lake.table import LakeTable, _atomic_write, _kernel_aqe_off
 from .operators.compact import _qs, dml_images
 from .options import ReplicationOptions
+from .retry import PermanentError
 from .operators.decode import (
     CONTROL_TAGS,
     EVENT_SPARK_DDL,
@@ -116,17 +118,18 @@ def _log_once(t: LakeTable, event: dict) -> None:
         t.log_event(event)
 
 
-def tune_input_splits(spark: SparkSession, paths) -> None:
-    """Size parquet input splits to the replay input so the decode scan
-    gets ~2 tasks per core.
+# the split settings ``tune_input_splits`` writes (``run_batches`` restores)
+_SPLIT_CONF = ("spark.sql.files.maxPartitionBytes",
+               "spark.sql.files.openCostInBytes")
 
-    Frame files are written a few MB each; Spark's default split packing
-    (maxPartitionBytes=128 MB, openCostInBytes=4 MB) bundles a whole
-    250 MB batch into ~4 splits, capping the decode stage at ~4 tasks
-    REGARDLESS of cores — the dominant scaling loss at small core counts.
-    Decode is CPU-bound per byte, so a couple of waves per core smooths
-    per-task decode skew without paying per-task fixed costs. No-op for
-    non-local paths (cluster deployments size this via submit conf)."""
+
+def tune_input_splits(spark: SparkSession, paths) -> None:
+    """Size parquet input splits so the decode scan runs ONE wave, at most
+    one task per core: each Python task pays a fixed stage entry of
+    ~0.25 s before any data moves (4 vCPUs, Spark 4.1), more than a second
+    wave saves in decode skew. Writes the session conf, which
+    ``run_batches`` restores. No-op for non-local paths (cluster
+    deployments size this via submit conf)."""
     import glob as _glob
 
     sizes = []
@@ -146,13 +149,10 @@ def tune_input_splits(spark: SparkSession, paths) -> None:
 
     # Pick maxPartitionBytes by SIMULATING Spark's split packing (sort
     # desc, close a partition when adding the next split would exceed the
-    # cap) and scoring the resulting stage: wave quantization — a task
-    # count that leaves the last wave half-empty idles those cores for a
-    # whole wave — against per-task fixed cost (~50 ms scheduling + Arrow
-    # setup; one-task-per-file measured 40% slower). File granularity
-    # makes this discrete: "total/(2*cores)" regularly packs into e.g. 10
-    # bins at 4 cores (a 2.5-wave stage at 83% utilization) when a
-    # slightly larger cap gives 8 bins at 100%.
+    # cap) and growing the cap until it makes at most `cores` splits: file
+    # granularity makes this discrete, total/cores alone regularly packs
+    # into cores + 1. At cap >= total + len(sizes) * oc everything is one
+    # split, so the loop ends.
     oc = 256 << 10
     desc = sorted(sizes, reverse=True)
 
@@ -165,33 +165,12 @@ def tune_input_splits(spark: SparkSession, paths) -> None:
             cur += s + oc
         return nbins
 
-    best = None
-    for waves in (2, 3, 4):
-        t_target = waves * cores
-        if t_target > len(sizes):
-            continue
-        cap = max(total // t_target, max(desc))
-        # grow the cap until the packing fits the target task count (the
-        # remainder otherwise spills into an extra, mostly-empty wave)
-        for _ in range(8):
-            n = _bins(cap)
-            if n <= t_target:
-                break
-            cap = int(cap * 1.15)
-        n = _bins(cap)
-        w = -(-n // cores)
-        util = n / (w * cores)
-        # ~50 ms fixed cost per task vs ~linear scan time per byte: favor
-        # full waves first, then fewer tasks
-        score = (util, -w, -n)
-        if best is None or score > best[0]:
-            best = (score, cap)
-    if best is None:
-        cap = max(8 << 20, min(128 << 20, total // max(cores * 2, 1)))
-    else:
-        cap = max(4 << 20, min(256 << 20, best[1]))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(cap)))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(oc))
+    cap = max(total // cores, desc[0])
+    while _bins(cap) > cores:
+        cap = int(cap * 1.15) + 1
+    cap = max(4 << 20, min(256 << 20, cap))
+    for k, v in zip(_SPLIT_CONF, (cap, oc)):
+        spark.conf.set(k, str(v))
 
 
 # Engine state is re-read/rewritten every batch: an unbounded per-batch
@@ -630,54 +609,64 @@ class ReplayEngine:
 
         sidecar = os.path.isdir(control_dir)
         records = []
-        for frames, lo, hi in batches:
-            consumed = st.get("max_seq")
-            if consumed is not None:
-                if hi <= consumed:
-                    continue
-                lo = max(lo, int(consumed) + 1)
-            batch = frames.filter(f"seq BETWEEN {int(lo)} AND {int(hi)}")
-            control_rows = None
-            if sidecar:
-                control_rows = pq.read_table(
-                    control_dir, columns=["seq", "wal_start", "data"],
-                    filters=[("seq", ">=", lo), ("seq", "<=", hi)],
-                ).sort_by("seq").to_pylist()
-            # transient failures (FS hiccups, executor loss surfacing as a
-            # job failure) retry the WHOLE batch under a backoff budget —
-            # safe because the LSN fence makes partial re-application a
-            # no-op; permanent ones (ProtocolError floods, schema
-            # hard-miss) raise immediately with their diagnostics
-            # (the reference's src/retry.rs:36-62 + src/error.rs:221-245)
-            idx = int(st["batch_idx"])
-            before = copy.deepcopy(st)
-            retries: list[dict] = []
+        # the batch generator sizes the decode splits in the session conf
+        # (tune_input_splits); the caller gets its own values back
+        saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONF}
+        try:
+            for frames, lo, hi in batches:
+                consumed = st.get("max_seq")
+                if consumed is not None:
+                    if hi <= consumed:
+                        continue
+                    lo = max(lo, int(consumed) + 1)
+                batch = frames.filter(f"seq BETWEEN {int(lo)} AND {int(hi)}")
+                control_rows = None
+                if sidecar:
+                    control_rows = pq.read_table(
+                        control_dir, columns=["seq", "wal_start", "data"],
+                        filters=[("seq", ">=", lo), ("seq", "<=", hi)],
+                    ).sort_by("seq").to_pylist()
+                # transient failures (FS hiccups, executor loss surfacing as a
+                # job failure) retry the WHOLE batch under a backoff budget —
+                # safe because the LSN fence makes partial re-application a
+                # no-op; permanent ones (ProtocolError floods, schema
+                # hard-miss) raise immediately with their diagnostics
+                # (the reference's src/retry.rs:36-62 + src/error.rs:221-245)
+                idx = int(st["batch_idx"])
+                before = copy.deepcopy(st)
+                retries: list[dict] = []
 
-            def attempt():
-                # a failed attempt may already have advanced the in-memory
-                # state (catalog, open-txn carry, cursor: all set just
-                # before the state save); retrying on top of it would
-                # replay the batch against its own end state
-                st.clear()
-                st.update(copy.deepcopy(before))
-                return self.process_batch(
-                    batch, idx, st, seq_range=(lo, hi),
-                    stop_at_lsn=stop_at_lsn, control_rows=control_rows,
+                def attempt():
+                    # a failed attempt may already have advanced the in-memory
+                    # state (catalog, open-txn carry, cursor: all set just
+                    # before the state save); retrying on top of it would
+                    # replay the batch against its own end state
+                    st.clear()
+                    st.update(copy.deepcopy(before))
+                    return self.process_batch(
+                        batch, idx, st, seq_range=(lo, hi),
+                        stop_at_lsn=stop_at_lsn, control_rows=control_rows,
+                    )
+
+                rec = retry_call(
+                    attempt,
+                    self.retry_config,
+                    on_retry=lambda n, delay, exc: retries.append(
+                        {"attempt": n, "delay_s": round(delay, 3),
+                         "error": f"{type(exc).__name__}: {exc}"[:200]}
+                    ),
                 )
-
-            rec = retry_call(
-                attempt,
-                self.retry_config,
-                on_retry=lambda n, delay, exc: retries.append(
-                    {"attempt": n, "delay_s": round(delay, 3),
-                     "error": f"{type(exc).__name__}: {exc}"[:200]}
-                ),
-            )
-            if retries:
-                rec["retries"] = retries
-            records.append(rec)
-            if rec["stopped"]:
-                break
+                if retries:
+                    rec["retries"] = retries
+                records.append(rec)
+                if rec["stopped"]:
+                    break
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    self.spark.conf.unset(k)
+                else:
+                    self.spark.conf.set(k, v)
         return records
 
     # ----------------------------------------------------------------- replay
@@ -697,9 +686,6 @@ class ReplayEngine:
         import time as _time
 
         setup_ms = {}
-        _t = _time.monotonic()
-        tune_input_splits(self.spark, [frames_path])
-        setup_ms["tune"] = int((_time.monotonic() - _t) * 1000)
         _t = _time.monotonic()
         all_frames = self.spark.read.schema(FRAME_SPARK_DDL).parquet(
             frames_path)
@@ -749,13 +735,17 @@ class ReplayEngine:
             # batch size repeats the batches an uninterrupted run would
             # have applied; run_batches skips and clamps at the cursor
             end = max(s["hi"] for s in process)
-            batches = (
-                (all_frames, a, min(a + batch_frames - 1, end))
+
+            def batches():
+                # split sizing is session conf: set it only once a batch
+                # runs, inside run_batches, which restores it
+                tune_input_splits(self.spark, [frames_path])
                 for a in range(min(s["lo"] for s in spans), end + 1,
-                               batch_frames)
-            )
+                               batch_frames):
+                    yield all_frames, a, min(a + batch_frames - 1, end)
+
             records = self.run_batches(
-                st, batches, frames_path.rstrip("/") + "_control",
+                st, batches(), frames_path.rstrip("/") + "_control",
                 stop_at_lsn=stop_at_lsn)
         if not records:  # nothing applied: persist the held set here
             self._save_state(st)
@@ -1003,7 +993,7 @@ class ReplayEngine:
             def _one(tname):
                 return self._merge_table(
                     tname, committed, truncates.get(tname), batch_idx,
-                    fence_floor, ctx, batch_hi,
+                    fence_floor, ctx, batch_hi, seq_range=(lo, hi),
                 )
 
             if len(merge_list) > 1:
@@ -1270,11 +1260,13 @@ class ReplayEngine:
 
     def _merge_table(self, tname: str, committed: DataFrame,
                      truncate_pos, batch_idx: int, fence_floor: int, ctx,
-                     lsn_hi=None):
+                     lsn_hi=None, *, seq_range: tuple[int, int]):
         """One table's share of a batch, applied by the
         bucket-co-located merge kernel (``LakeTable.merge_bucketed``): it
         reads only the buckets its change rows hash to, the old-key bucket
-        of a key-changing update included."""
+        of a key-changing update included. A value its typed column
+        cannot hold (ANSI ``CAST_INVALID_INPUT`` in ``dml_images``)
+        re-raises as a ``PermanentError`` naming the table and batch."""
         t = self.table(tname)
         cond = f"table_name = {_qs(tname)} AND end_lsn > {int(fence_floor)}"
         if truncate_pos is not None:
@@ -1314,10 +1306,21 @@ class ReplayEngine:
             return None
         images = dml_images(ev, key_cols, data_cols,
                             aliases=snap.get("aliases"), key_types=key_types)
-        rec = t.merge_bucketed(
-            self.spark, images, applied_lsn=int(lsn_hi),
-            batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
-            truncate_first=truncate_pos is not None,
-        )
+        try:
+            rec = t.merge_bucketed(
+                self.spark, images, applied_lsn=int(lsn_hi),
+                batch_id=f"b{batch_idx}-{uuid.uuid4().hex[:6]}",
+                truncate_first=truncate_pos is not None,
+            )
+        except PySparkException as exc:
+            if exc.getCondition() != "CAST_INVALID_INPUT":
+                raise
+            casts = ", ".join(f"{n} {ty}" for n, ty in snap["schema"]
+                              if ty != "string")
+            raise PermanentError(
+                f"table {tname!r}, batch {batch_idx} (seq {list(seq_range)}, "
+                f"up to LSN {int(lsn_hi)} over applied LSN "
+                f"{t.applied_lsn()}): {str(exc).split('. ')[0]}; typed "
+                f"columns: {casts}") from exc
         rec["table"] = tname
         return rec

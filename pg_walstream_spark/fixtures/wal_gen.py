@@ -866,11 +866,9 @@ def write_frames(table: pa.Table, path: str, rows_per_file: int = 100_000):
         # several row groups per file: Spark's scan splits files at byte
         # offsets but a split only carries the row groups whose midpoint
         # falls inside it, so one jumbo row group makes the whole file the
-        # split granularity — the decode stage then can't bin the input
-        # into task counts that divide the core count (measured: 49
-        # one-group files pack into 10 bins at 4 cores, a 2.5-wave stage
-        # that idles half the cores in the last wave). ~5k-row groups give
-        # ~1 MB split granularity, which a real frame pump would also use
+        # split granularity and the decode stage can't spread it over the
+        # cores. ~5k-row groups give ~1 MB split granularity, which a real
+        # frame pump would also use
         pq.write_table(chunk, fp, row_group_size=5_000)
         # STRICTLY increasing mtimes in WAL order: Structured Streaming's
         # file source orders files by modification time with ties broken

@@ -717,6 +717,45 @@ def test_e2e_integer_keyed_table(spark, tmp_path):
         t.read(spark).select("id").distinct().count()
 
 
+def test_malformed_typed_value_fails_loudly(spark, tmp_path):
+    """A wire value its typed column cannot hold ('abc' in an int column)
+    fails the batch's ANSI CAST. The error is permanent (no retry budget
+    burnt) and names the table, the batch seq range, the LSNs and the
+    column types, and the table keeps its last applied state."""
+    from pg_walstream_spark.protocol import encoder as e
+    from pg_walstream_spark.retry import PermanentError
+
+    oid = 7002
+    b = wg.WalBuilder(5)
+    b.relation(oid, "stock", [(1, "id", 20, -1), (0, "qty", 23, -1)])
+    b.begin()
+    b.emit(e.encode_insert(oid, (("t", b"1"), ("t", b"7"))))
+    b.commit()
+    b.begin()
+    b.emit(e.encode_insert(oid, (("t", b"2"), ("t", b"abc"))))
+    b.commit()
+    frames = b.to_table()
+    frames_dir = os.path.join(str(tmp_path), "frames")
+    wg.write_frames(frames, frames_dir)
+    eng = ReplayEngine(spark, os.path.join(str(tmp_path), "wh"))
+    eng.bootstrap_table(
+        "stock", spark.createDataFrame([(0, 5)], "id bigint, qty int"),
+        ["id"], n_buckets=4)
+    with pytest.raises(PermanentError) as ei:
+        eng.replay_frames(frames_dir)
+    msg = str(ei.value)
+    last = frames.num_rows - 1
+    assert "'stock'" in msg
+    assert f"seq [0, {last}]" in msg
+    assert f"LSN {b.commit_lsns[-1]}" in msg
+    assert "applied LSN 0" in msg
+    assert "id bigint, qty int" in msg
+    assert "CAST_INVALID_INPUT" in msg and "'abc'" in msg
+    t = eng.table("stock")
+    assert t.applied_lsn() == 0
+    assert [(r["id"], r["qty"]) for r in t.read(spark).collect()] == [(0, 5)]
+
+
 def test_e2e_keepalive_frames(spark, tmp_path):
     """Heartbeat 'k' frames interleaved before/inside/between transactions
     plus a trailing run past the last commit (reference
