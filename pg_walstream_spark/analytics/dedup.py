@@ -28,6 +28,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import worker_task
+
 
 def shingles(col: str = "text", n: int = 3):
     """Ordered char n-grams of lower(col) — matches the DuckDB oracle's
@@ -304,7 +306,7 @@ def minhash_signature_arrow(docs: DataFrame, k: int = 128,
     ddl = f"{id_col} long, " + ", ".join(f"h{j} long" for j in range(k))
     if with_shingle_codes:
         ddl += ", sh_codes array<long>"
-    return docs.select(id_col, text_col).mapInArrow(fn, ddl)
+    return docs.select(id_col, text_col).mapInArrow(worker_task(fn), ddl)
 
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 12, bands: int = 4,
@@ -466,7 +468,7 @@ def simhash_pieces(docs: DataFrame, n_pieces: int = 4, piece_bits: int = 16,
 
     ddl = f"{id_col} long, " + ", ".join(
         f"p{p} long" for p in range(n_pieces))
-    return docs.select(id_col, text_col).mapInArrow(fn, ddl)
+    return docs.select(id_col, text_col).mapInArrow(worker_task(fn), ddl)
 
 
 def _simhash_band_candidates(sig: DataFrame, n_pieces: int = 4,
@@ -595,7 +597,8 @@ def simhash_hamming_pairs(docs: DataFrame, max_hamming: int = 3,
                 "hamming": _pa.array(ham[keep]),
             })
 
-    out = cand.mapInArrow(verify_fn, "id_a long, id_b long, hamming int")
+    out = cand.mapInArrow(worker_task(verify_fn),
+                          "id_a long, id_b long, hamming int")
     res = _eager_release(out, sig)
     if res is out:
         return res  # distributed result may recompute — keep the bundle
@@ -761,7 +764,7 @@ def ngram_jaccard_lsh_pairs(docs: DataFrame, threshold: float = 0.65,
                 })
 
         out = (
-            cand.mapInArrow(rescore_fn,
+            cand.mapInArrow(worker_task(rescore_fn),
                             "id_a long, id_b long, jaccard double")
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         )

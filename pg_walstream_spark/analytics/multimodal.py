@@ -20,6 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import worker_task
+
 MEDIA_SCHEMA_DDL = (
     "media_id long, payload binary, meta struct<mime:string, n_bytes:long, "
     "source:string>"
@@ -191,7 +193,7 @@ def synth_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # single-file source: spread the (3-int-column) geometry rows so the
     # encode and the chained decode stages run core-parallel
     src = src.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return src.mapInPandas(fn, "media_id long, payload binary")
+    return src.mapInPandas(worker_task(fn), "media_id long, payload binary")
 
 
 def image_decode_stats(media: DataFrame) -> DataFrame:
@@ -219,7 +221,7 @@ def image_decode_stats(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(
-        fn,
+        worker_task(fn),
         "media_id long, width int, height int, sum_r long, sum_g long, "
         "sum_b long",
     )
@@ -264,7 +266,8 @@ def byte_histogram_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
                 }
             )
 
-    return df.select("media_id", "payload").mapInPandas(fn, FEATURES_DDL)
+    return df.select("media_id", "payload").mapInPandas(
+        worker_task(fn), FEATURES_DDL)
 
 
 def byte_histogram_counts(df: DataFrame, n_bins: int = 16) -> DataFrame:
@@ -284,7 +287,8 @@ def byte_histogram_counts(df: DataFrame, n_bins: int = 16) -> DataFrame:
                 }
             )
 
-    return df.select("media_id", "payload").mapInPandas(fn, COUNTS_DDL)
+    return df.select("media_id", "payload").mapInPandas(
+        worker_task(fn), COUNTS_DDL)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 256) -> DataFrame:
@@ -349,7 +353,7 @@ def image_resize_stats(media: DataFrame, out_w: int = 16,
             yield pd.DataFrame(out)
 
     return media.mapInPandas(
-        fn,
+        worker_task(fn),
         "media_id long, width int, height int, sum_r long, sum_g long, "
         "sum_b long",
     )
@@ -432,7 +436,7 @@ def synth_audio(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             })
 
     src = src.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return src.mapInPandas(fn, "media_id long, payload binary")
+    return src.mapInPandas(worker_task(fn), "media_id long, payload binary")
 
 
 def audio_decode_stats(media: DataFrame) -> DataFrame:
@@ -461,7 +465,7 @@ def audio_decode_stats(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(
-        fn,
+        worker_task(fn),
         "media_id long, n_samples int, sample_rate int, amp_sum long, "
         "energy long, rising_crossings long",
     )
@@ -498,4 +502,4 @@ def audio_resample_stats(media: DataFrame, out_n: int = 512) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(
-        fn, "media_id long, n_out int, amp_sum long, energy long")
+        worker_task(fn), "media_id long, n_out int, amp_sum long, energy long")

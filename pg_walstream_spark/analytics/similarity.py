@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import worker_task
 from .dedup import _eager_release
 
 
@@ -322,7 +323,7 @@ def lsh_buckets_arrow(emb: DataFrame, n_planes: int = 12, bands: int = 16,
             })
 
     return emb.select(id_col, vec_col).mapInArrow(
-        fn, "id long, band int, bucket long"
+        worker_task(fn), "id long, band int, bucket long"
     )
 
 
@@ -420,7 +421,8 @@ def ann_lsh_pairs_arrow(emb: DataFrame, threshold: float = 0.95,
             })
 
     out = (
-        cand.mapInArrow(rescore_fn, "id_a long, id_b long, cos_raw double")
+        cand.mapInArrow(worker_task(rescore_fn),
+                        "id_a long, id_b long, cos_raw double")
         .withColumn("cos", F.round(F.col("cos_raw"), 6))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")

@@ -125,11 +125,13 @@ _SPLIT_CONF = ("spark.sql.files.maxPartitionBytes",
 
 def tune_input_splits(spark: SparkSession, paths) -> None:
     """Size parquet input splits so the decode scan runs ONE wave, at most
-    one task per core: each Python task pays a fixed stage entry of
-    ~0.25 s before any data moves (4 vCPUs, Spark 4.1), more than a second
-    wave saves in decode skew. Writes the session conf, which
-    ``run_batches`` restores. No-op for non-local paths (cluster
-    deployments size this via submit conf)."""
+    one task per core: each Python task pays a fixed stage entry before
+    any data moves, and a second wave pays it again. A fresh worker's
+    first task reads every zip directory on its path, ~0.2-0.3 s (4 vCPUs,
+    Spark 4.1, Python 3.11); ``worker_task`` spares its later tasks that
+    re-read. Writes the session conf, which ``run_batches`` restores.
+    No-op for non-local paths (cluster deployments size this via submit
+    conf)."""
     import glob as _glob
 
     sizes = []

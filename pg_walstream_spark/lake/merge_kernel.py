@@ -58,6 +58,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
+from .. import worker_task
+
 __all__ = [
     "ROW_GROUP_BYTES", "STATS_DDL", "compact_images_arrow",
     "make_merge_kernel", "partition_salts", "spark_type_to_arrow",
@@ -535,4 +537,4 @@ def make_merge_kernel(bucket_files: dict[str, list[str]],
         if rows:
             yield pa.RecordBatch.from_pylist(rows, schema=_STATS_SCHEMA)
 
-    return fn
+    return worker_task(fn)

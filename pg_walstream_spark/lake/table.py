@@ -705,7 +705,8 @@ class LakeTable:
         ensure_shipped(spark)
 
         # one wave, at most one task per core: each Python task pays a
-        # ~0.25 s stage entry before any data moves (4 vCPUs, Spark 4.1).
+        # stage entry before any data moves (a fresh worker's first task
+        # re-reads its zip directories; see ``tune_input_splits``).
         # A divisor of n_buckets lets the salted routing below spread the
         # buckets exactly evenly; below 2/3 of the target (a prime count
         # walks down to 1 task) keep the target and route by plain hash

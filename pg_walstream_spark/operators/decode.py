@@ -27,6 +27,7 @@ from typing import NamedTuple
 import numpy as np
 import pyarrow as pa
 
+from .. import worker_task
 from ..protocol import PyWalParser, ProtocolError, constants as c
 
 # ---------------------------------------------------------------------------
@@ -1223,4 +1224,4 @@ def decode_frames_df(frames_df, ctx: DecodeContext,
                     pa.concat_tables(held).cast(EVENT_ARROW_SCHEMA),
                     side.pending, part)
 
-    return frames_df.mapInArrow(fn, EVENT_SPARK_DDL)
+    return frames_df.mapInArrow(worker_task(fn), EVENT_SPARK_DDL)

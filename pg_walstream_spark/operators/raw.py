@@ -23,6 +23,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import worker_task
 from .decode import _be64, _binary_buffers
 
 RAW_SPARK_DDL = "seq long, raw binary"
@@ -79,7 +80,7 @@ def split_xlogdata(raw_df: DataFrame) -> DataFrame:
         for b in batches:
             yield from _split_batch(b).to_batches()
 
-    return raw_df.mapInArrow(fn, FRAME_OUT_DDL)
+    return raw_df.mapInArrow(worker_task(fn), FRAME_OUT_DDL)
 
 
 def parse_keepalive(raw_df: DataFrame) -> DataFrame:
@@ -109,7 +110,7 @@ def parse_keepalive(raw_df: DataFrame) -> DataFrame:
                 }
             ).to_batches()
 
-    return raw_df.mapInArrow(fn, KEEPALIVE_DDL)
+    return raw_df.mapInArrow(worker_task(fn), KEEPALIVE_DDL)
 
 
 _ORIGIN_DROP_TYPES = ("insert", "update", "delete", "truncate")

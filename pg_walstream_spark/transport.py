@@ -40,6 +40,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 
+from . import ensure_shipped, worker_task
 from .operators.decode import EVENT_SPARK_DDL
 
 CODEC_VERSION = 1
@@ -545,6 +546,7 @@ def decode_batch(payloads: pa.Array) -> pa.RecordBatch:
 
 def encode_events(events_df):
     """events (EVENT_SPARK_DDL) → ``(seq long, payload binary)``."""
+    ensure_shipped(events_df.sparkSession)
 
     def fn(batches):
         for batch in batches:
@@ -554,7 +556,7 @@ def encode_events(events_df):
                                   ("payload", pa.binary())]),
             )
 
-    return events_df.mapInArrow(fn, "seq long, payload binary")
+    return events_df.mapInArrow(worker_task(fn), "seq long, payload binary")
 
 
 def decode_events(payload_df):
@@ -563,9 +565,10 @@ def decode_events(payload_df):
     surface loudly, not silently shrink the event set (the codec's other
     validation, version byte and trailing-bytes, is loud for the same
     reason)."""
+    ensure_shipped(payload_df.sparkSession)
 
     def fn(batches):
         for batch in batches:
             yield decode_batch(batch.column("payload"))
 
-    return payload_df.mapInArrow(fn, EVENT_SPARK_DDL)
+    return payload_df.mapInArrow(worker_task(fn), EVENT_SPARK_DDL)
